@@ -345,30 +345,64 @@ def cells_for_bbox(
     return t, cells_for_bbox_at_tier(bbox, t, closed=closed, bounds=bounds)
 
 
-def neighbor_cells(lon: float, lat: float, tier: int, ring: int = 1) -> np.ndarray:
+def neighbor_cells(lon, lat, tier, ring: int = 1, bounds=None):
     """Cells within ``ring`` grid steps of the point's cell at ``tier``.
 
     The kNN ring-expansion primitive (cf. OrthodromicDistancePartitioner.java:95-140:
-    neighboring partitions added by expanding the point's envelope). Lon wraps,
-    lat clamps.
+    neighboring partitions added by expanding the point's envelope). In the
+    world frame lon wraps; under custom ``bounds`` it clamps (a projected
+    frame has no seam); lat always clamps.
+
+    Scalar arguments return the sorted unique cells.  Array arguments (one
+    entry per query; ``tier`` may be an array too) return ``(row, cell)``
+    arrays: every ring cell of query ``row``, each (row, cell) once.
     """
-    r = 1 << tier
-    cx = int(grid_coord(norm_lon(np.float64(lon)), tier))
-    cy = int(grid_coord(norm_lat(np.float64(lat)), tier))
-    xs = np.arange(cx - ring, cx + ring + 1, dtype=np.int64) % r  # lon wraps
-    ys = np.arange(cy - ring, cy + ring + 1, dtype=np.int64)
-    ys = ys[(ys >= 0) & (ys < r)]  # lat clamps
-    gx, gy = np.meshgrid(np.unique(xs), ys)
-    return np.unique(interleave(gx.ravel(), gy.ravel()))
+    scalar = np.ndim(lon) == 0 and np.ndim(lat) == 0 and np.ndim(tier) == 0
+    lon = np.atleast_1d(np.asarray(lon, dtype=np.float64))
+    lat = np.atleast_1d(np.asarray(lat, dtype=np.float64))
+    tier = np.broadcast_to(np.asarray(tier, dtype=np.int64), lon.shape)
+    r = np.int64(1) << tier
+    rd = r.astype(np.float64)
+    cx = np.clip(np.floor(norm_lon(lon, bounds) * rd).astype(np.int64), 0, r - 1)
+    cy = np.clip(np.floor(norm_lat(lat, bounds) * rd).astype(np.int64), 0, r - 1)
+    steps = np.arange(-ring, ring + 1, dtype=np.int64)
+    dx, dy = (a.ravel() for a in np.meshgrid(steps, steps))
+    rows = np.repeat(np.arange(lon.size, dtype=np.int64), dx.size)
+    rr = r[rows]
+    nx = cx[rows] + np.tile(dx, lon.size)
+    ny = cy[rows] + np.tile(dy, lon.size)
+    if bounds is None:
+        nx = nx % rr  # lon wraps
+    keep = (nx >= 0) & (nx < rr) & (ny >= 0) & (ny < rr)
+    rows, cell = rows[keep], interleave(nx[keep], ny[keep])
+    if scalar:
+        return np.unique(cell)
+    if bounds is None and (r <= 2 * ring).any():
+        # a grid narrower than the ring wraps onto a column twice — one
+        # (row, cell) each
+        uniq = np.unique(np.stack([rows, cell], axis=1), axis=0)
+        return uniq[:, 0], uniq[:, 1]
+    return rows, cell
 
 
-def tier_for_distance(max_distance_deg: float, max_tier: int = MAX_TIER) -> int:
-    """Coarsest-cell tier whose cell side (in the smaller lat axis: 180/2^t)
-    is >= max_distance, so a 3x3 neighbor ring fully covers the radius."""
-    t = max_tier
-    while t > 0 and 180.0 / (1 << t) < max_distance_deg:
-        t -= 1
-    return t
+def tier_for_distance(max_distance, max_tier: int = MAX_TIER, bounds=None):
+    """Coarsest-cell tier whose cell side (in the smaller axis: 180/2^t in
+    the world frame, the smaller span of custom ``bounds`` otherwise) is
+    >= max_distance, so a 3x3 neighbor ring fully covers the radius.
+
+    Exact: the side is a power-of-two scaling of the span, so each test
+    is a single correctly-rounded comparison.  A radius <= 0 or NaN (a
+    NULL radius) pins to ``max_tier``.  Vectorized: an array of radii
+    returns an int64 array of tiers."""
+    span = 180.0
+    if bounds is not None:
+        span = min(float(bounds[2]) - float(bounds[0]), float(bounds[3]) - float(bounds[1]))
+    d = np.asarray(max_distance, dtype=np.float64)
+    sides = np.ldexp(span, -np.arange(max_tier + 1))
+    # sides fall with t, so the tiers whose side fits form a prefix
+    t = np.maximum((sides >= d[..., None]).sum(axis=-1) - 1, 0)
+    t = np.where(np.isnan(d), max_tier, t).astype(np.int64)
+    return int(t) if t.ndim == 0 else t
 
 
 def trim_cells_to_geom(

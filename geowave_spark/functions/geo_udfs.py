@@ -22,6 +22,8 @@ semantics).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -335,14 +337,23 @@ def st_relate_wkt(wkt_a: pd.Series, wkt_b: pd.Series, pattern: pd.Series) -> pd.
     vectorized group kernels."""
     from .. import georelate
 
+    # a NULL pattern answers NULL; a malformed one fails the batch ONCE,
+    # naming the pattern, before any geometry work
+    pnull = pd.isna(pattern).to_numpy()
+    pats = pattern.to_numpy()
+    for p in set(pats[~pnull]):
+        if not _DE9IM_PATTERN_RE.fullmatch(p):
+            raise ValueError(
+                f"st_relate: DE-9IM pattern must be 9 characters from "
+                f"T, F, *, 0, 1, 2; got {p!r}"
+            )
     codes, uniques = pd.factorize(wkt_b)
     out = np.zeros(len(wkt_a), dtype=bool)
     lnull = pd.isna(wkt_a).to_numpy()
     left = wkt_a.to_numpy()
-    pats = pattern.to_numpy()
     for u, wb in enumerate(uniques):
         gb = geom.geometry_from_wkt(wb)
-        idx = np.nonzero((codes == u) & ~lnull)[0]
+        idx = np.nonzero((codes == u) & ~lnull & ~pnull)[0]
         if not idx.size:
             continue
         # vectorized fast path: many POINT lefts vs one area geometry (the
@@ -363,21 +374,19 @@ def st_relate_wkt(wkt_a: pd.Series, wkt_b: pd.Series, pattern: pd.Series) -> pd.
         for i in idx:
             m = georelate.relate_pair(geom.geometry_from_wkt(left[i]), gb)
             out[i] = georelate.relate_matches(m, pats[i])
-    return pd.Series(out)
+    return pd.Series(out).astype(object).where(~pnull, None)
 
 
-_POINT_WKT_RE = None
+_DE9IM_PATTERN_RE = re.compile(r"[TF*012]{9}", re.IGNORECASE)
+_FLOAT = r"([-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?)"
+# strict numbers: a malformed token such as ``1-2`` must not match (it
+# would reach float() and raise a bare ValueError) — it falls back to the
+# general WKT parser, whose error names the text
+_POINT_WKT_RE = re.compile(rf"^\s*POINT\s*\(\s*{_FLOAT}\s+{_FLOAT}\s*\)\s*$")
 
 
 def _parse_points(wkts: np.ndarray):
     """(k,2) float array if EVERY wkt is a simple POINT, else None."""
-    global _POINT_WKT_RE
-    if _POINT_WKT_RE is None:
-        import re
-
-        _POINT_WKT_RE = re.compile(
-            r"^\s*POINT\s*\(\s*(-?[\d.eE+-]+)\s+(-?[\d.eE+-]+)\s*\)\s*$"
-        )
     pts = np.empty((len(wkts), 2), dtype=np.float64)
     for i, w in enumerate(wkts):
         m = _POINT_WKT_RE.match(w)

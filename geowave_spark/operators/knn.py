@@ -7,20 +7,31 @@ OrthodromicDistancePartitioner.java:95-140) as one declarative plan:
 
     per query: tier t s.t. cell side >= max_distance   (so a 3x3 ring
                provably covers the search radius — no iteration needed)
-    explode the 9 ring cells (lon wraps, lat clamps)   — ALL Column math
+    the 9 ring cells (lon wraps, lat clamps)
     equi-join with image cells at the same tiers       (packed long key)
     planar distance refine (pure SQL sqrt — no Python)
     row_number() over (partition by query order by dist, id) <= k
 
-Everything is JVM-side column arithmetic: per-row tiers, ring cells and
-Morton interleave are built from pow/floor/bit ops, so the whole candidate
-generation stays in whole-stage codegen.  maxDistance + maxNeighbors
-semantics exactly as NNMapReduce.java:168-169,199.
+The query side is small and broadcast, so it is planned on the driver
+(SIGMOD 2021, *To Partition, or Not to Partition*): one Arrow read of the
+queries, their tiers and rings from the numpy twins
+``cells.tier_for_distance`` / ``cells.neighbor_cells``, and the ring goes
+back as an Arrow-built LocalRelation — no tier-collect job and no
+Python-worker pass on a query frame per action.  The big x big path
+(``broadcast_queries=False``, DBSCAN's self-join) keeps the ring as
+JVM-side Column math, so neither side ever reaches the driver.  The point
+side is JVM Column arithmetic in both: Morton keys from bit ops, inside
+whole-stage codegen.  maxDistance + maxNeighbors semantics exactly as
+NNMapReduce.java:168-169,199.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -35,49 +46,33 @@ def _tier_offsets_expr() -> Column:
 def _tier_expr(maxd: Column, bounds=None) -> Column:
     """Coarsest tier whose cell side >= max_distance (world: 180/2^t; a
     custom ``bounds`` frame uses its smaller axis span, so the 3x3 ring
-    still provably covers the radius in a projected CRS).
+    still provably covers the radius in a projected CRS) — the Column twin
+    of ``cells.tier_for_distance``, equal to it for every radius.
 
-    Degenerate radii are legal and must not poison the driver-side tier
-    collect: max_distance <= 0 (eps=0 DBSCAN means exact-duplicate
-    neighbors) and NULL (no match possible — the dist <= NULL refine
-    drops every pair) both pin to MAX_TIER instead of producing a NULL
-    tier (NULL would make TIER_OFFSETS[None] / sorted([None, 5]) throw
-    an unrelated-looking TypeError on the driver)."""
+    The sides fall with t, so the tier is the count of tiers 1..MAX_TIER
+    whose (exact, power-of-two-scaled) side still fits the radius; no
+    log2 rounding can move a radius that is itself a side.  Degenerate
+    radii are legal and must not poison the driver-side tier collect:
+    max_distance <= 0 (eps=0 DBSCAN means exact-duplicate neighbors), NaN
+    and NULL (no match possible — the dist <= NULL refine drops every
+    pair) all pin to MAX_TIER instead of producing a NULL tier."""
     span = 180.0
     if bounds is not None:
         span = min(
             float(bounds[2]) - float(bounds[0]), float(bounds[3]) - float(bounds[1])
         )
-    t = F.floor(F.log2(F.lit(span) / maxd)).cast("int")
-    bounded = F.least(F.greatest(t, F.lit(0)), F.lit(cells.MAX_TIER))
+    t = sum(
+        F.when(maxd <= F.lit(math.ldexp(span, -i)), F.lit(1)).otherwise(F.lit(0))
+        for i in range(1, cells.MAX_TIER + 1)
+    )
     return F.when(
-        maxd.isNull() | (maxd <= 0), F.lit(cells.MAX_TIER)
-    ).otherwise(bounded)
+        maxd.isNull() | F.isnan(maxd) | (maxd <= 0), F.lit(cells.MAX_TIER)
+    ).otherwise(t)
 
 
-def distance_candidates(
-    points: DataFrame,
-    queries: DataFrame,
-    point_id: str = "image_id",
-    query_id: str = "query_id",
-    maxd_col: str = "max_distance",
-    q_lon: str = "lon",
-    q_lat: str = "lat",
-    p_lon: str = "lon",
-    p_lat: str = "lat",
-    broadcast_queries: bool = True,
-    extra_query_cols: list[str] | None = None,
-    bounds=None,
-) -> DataFrame:
-    """All (query_id, point_id, dist) pairs with dist <= max_distance —
-    the unranked within-distance join (cell-ring candidates + exact
-    refine).  knn_join adds the top-k window; DBSCAN uses this directly.
-
-    ``bounds``: custom per-dimension index bounds (x0, y0, x1, y1) for a
-    projected CRS (SpatialDimensionalityTypeProvider.java:107-124) — the
-    ring clamps instead of wrapping (no antimeridian in a projected
-    frame) and distances stay planar in the CRS's own units."""
-    extra = extra_query_cols or []
+def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bounds):
+    """(query, ring cell) rows as Column math — the big x big path, where
+    the query side is itself a distributed table."""
     q = queries.withColumn("_tier", _tier_expr(F.col(maxd_col), bounds))
     # per-row grid resolution r = 2^tier (exact in double up to 2^31)
     q = q.withColumn("_r", F.pow(F.lit(2.0), F.col("_tier").cast("double")).cast("long"))
@@ -114,8 +109,75 @@ def distance_candidates(
         .withColumnRenamed(q_lon, "_q_lon")
         .withColumnRenamed(q_lat, "_q_lat")
     )
-
     tiers = sorted(r[0] for r in q.select("_tier").distinct().collect())
+    return q.drop("_tier"), tiers
+
+
+def _local_ring(spark, qt: pa.Table, query_id, maxd_col, q_lon, q_lat, extra, bounds):
+    """The same ring rows planned on the driver from the collected query
+    side; returns (LocalRelation, tiers, query ids unique?)."""
+    def f64(c):
+        return qt.column(c).cast(pa.float64()).to_numpy(zero_copy_only=False)
+
+    lon, lat, maxd = f64(q_lon), f64(q_lat), f64(maxd_col)
+    # a NULL/NaN position or radius can match nothing (dist <= NULL drops
+    # every pair) — such rows get no ring at all
+    idx = np.nonzero(np.isfinite(lon) & np.isfinite(lat) & ~np.isnan(maxd))[0]
+    tier = cells.tier_for_distance(maxd[idx], bounds=bounds)
+    rows, cell = cells.neighbor_cells(lon[idx], lat[idx], tier, bounds=bounds)
+    src = pa.array(idx[rows])
+    # carried columns keep their Arrow (= Spark) types; the refine compares
+    # against the original lon/lat/radius values, as the Column path does
+    names = [query_id, "_q_lon", "_q_lat", maxd_col, "key", *extra]
+    arrays = [qt.column(c).take(src) for c in (query_id, q_lon, q_lat, maxd_col)]
+    arrays.append(pa.array(cells.pack_key(tier[rows], cell), pa.int64()))
+    arrays += [qt.column(c).take(src) for c in extra]
+    ring = spark.createDataFrame(pa.Table.from_arrays(arrays, names=names))
+    unique = pc.count_distinct(qt.column(query_id), mode="all").as_py() == qt.num_rows
+    return ring, sorted(set(tier.tolist())), unique
+
+
+def distance_candidates(
+    points: DataFrame,
+    queries: DataFrame | pa.Table,
+    point_id: str = "image_id",
+    query_id: str = "query_id",
+    maxd_col: str = "max_distance",
+    q_lon: str = "lon",
+    q_lat: str = "lat",
+    p_lon: str = "lon",
+    p_lat: str = "lat",
+    broadcast_queries: bool = True,
+    extra_query_cols: list[str] | None = None,
+    bounds=None,
+) -> DataFrame:
+    """All (query_id, point_id, dist) pairs with dist <= max_distance —
+    the unranked within-distance join (cell-ring candidates + exact
+    refine).  knn_join adds the top-k window; DBSCAN uses this directly.
+
+    ``broadcast_queries=True`` (the default) reads the query side ONCE to
+    the driver (Arrow), plans every query's tier and 3x3 ring there, and
+    broadcasts the ring as a LocalRelation.  ``queries`` may then also be
+    a pyarrow Table already on the driver (knn_adaptive's rounds pass
+    their open queries this way).  ``False`` keeps the ring as Column
+    math and sort-merge joins it: the path for a query side as large as
+    the point side.
+
+    ``bounds``: custom per-dimension index bounds (x0, y0, x1, y1) for a
+    projected CRS (SpatialDimensionalityTypeProvider.java:107-124) — the
+    ring clamps instead of wrapping (no antimeridian in a projected
+    frame) and distances stay planar in the CRS's own units."""
+    extra = extra_query_cols or []
+    if broadcast_queries:
+        if not isinstance(queries, pa.Table):
+            used = dict.fromkeys([query_id, q_lon, q_lat, maxd_col, *extra])
+            queries = queries.select(*used).toArrow()
+        q, tiers, unique = _local_ring(
+            points.sparkSession, queries, query_id, maxd_col, q_lon, q_lat, extra, bounds
+        )
+    else:
+        q, tiers = _column_ring(queries, query_id, maxd_col, q_lon, q_lat, extra, bounds)
+        unique = False
     if not tiers:
         # empty query side → empty result with the contract schema (an
         # empty partition/day must not crash dbscan/knn pipelines)
@@ -154,12 +216,13 @@ def distance_candidates(
     dx = F.col("_p_lon") - F.col("_q_lon")
     dy = F.col("_p_lat") - F.col("_q_lat")
     dist = F.sqrt(dx * dx + dy * dy)
-    return (
-        cand.withColumn("dist", dist)
-        .filter(F.col("dist") <= F.col(maxd_col))
-        .dropDuplicates([query_id, point_id])  # ring cells can overlap after wrap
-        .select(query_id, point_id, "dist", *extra)
-    )
+    cand = cand.withColumn("dist", dist).filter(F.col("dist") <= F.col(maxd_col))
+    if not unique:
+        # one query id per ring cell and one key per point and tier make
+        # every pair unique already; a repeated query id (or the Column
+        # ring, whose ids are not known) can still repeat a pair
+        cand = cand.dropDuplicates([query_id, point_id])
+    return cand.select(query_id, point_id, "dist", *extra)
 
 
 def knn_join(
@@ -210,49 +273,48 @@ def knn_adaptive(
     per round, run the within-distance candidate join at radius d for the
     still-unfilled queries; a query is COMPLETE once it has >= k neighbors
     with dist <= d (the ring provably covers radius d, so no unseen point
-    can be closer); otherwise d *= 4 and only the unfilled queries rejoin —
-    the driver-side loop touches only the tiny query side, the point table
-    is re-scanned per round (bounded by O(log(max/init)) rounds).
+    can be closer); otherwise d *= 4 and only the unfilled queries rejoin
+    (bounded by O(log(max/init)) rounds).
+
+    The query side is read once (Arrow) and every round is planned on the
+    driver: one ``distance_candidates`` call on the open queries, then ONE
+    collect of their per-query top-k rows.  Completeness is decided on
+    the driver from those rows, so a round costs no checkpoint, count or
+    anti-join job, and the answer — at most k rows per query — returns as
+    a LocalRelation that no later action recomputes.  The point table is
+    re-scanned per round.
 
     Output: (query_id, point_id, dist, rank) with rank <= k, ties by id.
     """
-    remaining = queries.select(F.col(query_id), F.col(q_lon), F.col(q_lat))
-    results = None
+    remaining = queries.select(query_id, q_lon, q_lat).toArrow()
+    w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
+    results = []
     d = float(init_distance)
     while True:
-        q = remaining.withColumn("max_distance", F.lit(d))
+        q = remaining.append_column(
+            "max_distance", pa.array(np.full(remaining.num_rows, d), pa.float64())
+        )
         cand = distance_candidates(
             points, q, point_id, query_id, "max_distance", q_lon, q_lat, p_lon, p_lat
         )
-        w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
-        # checkpoint the per-round top-k: the loop's own counts/anti-join
-        # execute it once, and WITHOUT the checkpoint the caller's final
-        # action would re-run every round's full candidate join a second
-        # time (round-3 review) — this also truncates lineage growth
         topk = (
             cand.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
-            .localCheckpoint()
+            .select(query_id, point_id, "dist", "rank")
+            .toArrow()
         )
-        counts = topk.groupBy(query_id).agg(F.count(F.lit(1)).alias("_n"))
-        done_qids = counts.filter(F.col("_n") >= k).select(query_id)
-        done = topk.join(done_qids, query_id, "left_semi").select(
-            query_id, point_id, "dist", "rank"
+        vc = pc.value_counts(topk[query_id])
+        done_ids = vc.field("values").filter(pc.greater_equal(vc.field("counts"), k))
+        done = pc.is_in(topk[query_id], value_set=done_ids)
+        # at the cap: emit whatever the final round found for leftovers too
+        results.append(topk if d >= max_distance else topk.filter(done))
+        remaining = remaining.filter(
+            pc.invert(pc.is_in(remaining[query_id], value_set=done_ids))
         )
-        results = done if results is None else results.unionByName(done)
-        # completed queries drop out via anti-join — no driver round-trip of
-        # ids, and localCheckpoint truncates the per-round lineage growth
-        remaining = remaining.join(done_qids, query_id, "left_anti").localCheckpoint()
-        if d >= max_distance or remaining.limit(1).count() == 0:
-            # at the cap: emit whatever the final round found for leftovers
-            if d >= max_distance:
-                leftovers = topk.join(done_qids, query_id, "left_anti").select(
-                    query_id, point_id, "dist", "rank"
-                )
-                results = results.unionByName(leftovers)
+        if d >= max_distance or remaining.num_rows == 0:
             break
         d = min(d * 4.0, float(max_distance))
-    return results
+    return points.sparkSession.createDataFrame(pa.concat_tables(results))
 
 
 def knn_geometry(

@@ -99,11 +99,9 @@ def cell_range_predicate(
     # 64-term OR into a handful of BETWEENs — smaller pushed predicate,
     # compact codegen (and n_ranges now really counts ranges)
     ranges = cells.ranges_for_cover(cover)
-    pred = None
-    for lo_c, hi_c in ranges:
-        lo, hi = lo_c << shift, ((hi_c + 1) << shift) - 1
-        p = F.col(col).between(lo, hi)
-        pred = p if pred is None else (pred | p)
+    pred = sqlcells.ranges_pred(
+        col, [(lo_c << shift, ((hi_c + 1) << shift) - 1) for lo_c, hi_c in ranges]
+    )
     return pred, len(ranges)
 
 
@@ -170,11 +168,7 @@ def hilbert_range_lookup(
         for b in cells.split_bbox_query(bbox)  # incl. the +180 seam column
         for r in hilbert.hilbert_query_ranges(b, tier)
     ]
-    df = spark.read.parquet(path)
-    pred = F.lit(False)
-    for lo, hi in ranges:
-        pred = pred | F.col("hd").between(lo, hi)
-    out = df.filter(pred)
+    out = spark.read.parquet(path).filter(sqlcells.ranges_pred("hd", ranges))
     if not loose:
         out = out.filter(sqlcells.bbox_refine_pred(F.col(lon_col), F.col(lat_col), bbox))
     return out
@@ -231,11 +225,7 @@ def s2_range_lookup(
     from .. import cells_s2
 
     ranges = cells_s2.query_ranges(bbox, level)
-    df = spark.read.parquet(path)
-    pred = F.lit(False)
-    for lo, hi in ranges:
-        pred = pred | F.col("s2").between(lo, hi)
-    out = df.filter(pred)
+    out = spark.read.parquet(path).filter(sqlcells.ranges_pred("s2", ranges))
     if not loose:
         out = out.filter(sqlcells.bbox_refine_pred(F.col(lon_col), F.col(lat_col), bbox))
     return out
@@ -322,10 +312,7 @@ def _xz_ranges_pred(bbox: tuple[float, float, float, float], col: str = "xz"):
         qy0 = float(cells.norm_lat(np.float64(b[1])))
         qy1 = float(cells.norm_lat(np.float64(b[3])))
         ranges.extend(cells_xz.xz_query_ranges(qx0, qy0, qx1, qy1, max_ranges=64))
-    pred = F.lit(False)
-    for lo, hi in ranges:
-        pred = pred | F.col(col).between(lo, hi)
-    return pred
+    return sqlcells.ranges_pred(col, ranges)
 
 
 def write_indexed_hier(
@@ -740,16 +727,6 @@ def st_subbin_range_lookup(
         if bx1 == 180.0 and bx0 > -180.0 and sgx0 > 0:
             xy_boxes.append((0, sgy0, 0, sgy1))
 
-    def _or_fold(ps: list):
-        # balanced reduction: a left-deep 500-term OR chain overflows the
-        # Column-node converter stack; a log-depth tree never does
-        while len(ps) > 1:
-            nxt = [a | b for a, b in zip(ps[::2], ps[1::2])]
-            if len(ps) % 2:
-                nxt.append(ps[-1])
-            ps = nxt
-        return ps[0]
-
     bin_preds = []
     for bid, bs, be in _bin_starts(t0_us, t1_us, unit):
         span = float(be - bs)
@@ -762,10 +739,10 @@ def st_subbin_range_lookup(
                 (sgx0, sgy0, gt0), (sgx1, sgy1, gt1), bits, budget
             )
         ]
-        rp = _or_fold([F.col("_stkey").between(lo, hi) for lo, hi in ranges])
-        bin_preds.append((F.col("_bin") == bid) & rp)
-    pred = _or_fold(bin_preds)
-    df = spark.read.parquet(path).filter(pred)
+        bin_preds.append(f"(`_bin` = {int(bid)}L AND {sqlcells.ranges_sql('_stkey', ranges)})")
+    # one SQL expression (balanced ORs, see sqlcells.or_sql): one call
+    # into the JVM instead of several per range
+    df = spark.read.parquet(path).filter(F.expr(sqlcells.or_sql(bin_preds)))
     if not loose:
         eus = st.epoch_us_expr(ts_col)
         df = df.filter((eus >= t0_us) & (eus <= t1_us)).filter(

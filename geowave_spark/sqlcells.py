@@ -118,52 +118,59 @@ def cell_expr(lon: Column, lat: Column, tier: int = MAX_TIER, bounds=None) -> Co
 _SPREAD_STEPS = [(16, _M16), (8, _M8), (4, _M4), (2, _M2), (1, _M1)]
 
 
+def _dbl(v: float) -> str:
+    """A double literal as SQL text (a bare ``180.0`` would be DECIMAL)."""
+    return f"({float(v)!r}D)"
+
+
+def _norm_sql(c: str, lo: float, span: float, wrap: bool) -> str:
+    """SQL twin of norm_lon / norm_lat: wrapped (world lon) or clamped."""
+    x = f"(({c} - {_dbl(lo)}) / {_dbl(span)})"
+    if wrap:
+        return f"({x} - FLOOR({x}))"
+    return f"LEAST(GREATEST({x}, {_dbl(0.0)}), {_dbl(1.0)})"
+
+
 def add_cell_column(
     df, lon_col: str = "lon", lat_col: str = "lat", tier: int = MAX_TIER,
     out: str = "_cell31", bounds=None,
 ):
-    """Stepwise Morton cell computation via named intermediate columns.
+    """Stepwise Morton cell computation, one projection per spread step.
 
     Each spread step references the PREVIOUS step's attribute instead of
     copying its expression subtree, so whole-stage codegen sees a linear
     chain (Catalyst's CollapseProject keeps non-cheap multi-referenced
     aliases un-inlined).  This is what keeps the 10^12-row key-generation
-    stage inside a single compiled WholeStageCodegen span.
+    stage inside a single compiled WholeStageCodegen span.  The steps are
+    SQL text, six projections in all — a few driver→JVM calls where a
+    Column per operator costs hundreds.  Bit-identical to
+    ``cell_expr`` / ``cells.latlon_to_cell``.
     """
-    from pyspark.sql import functions as F  # local alias for clarity
+    if bounds is None:
+        nx = _norm_sql(sql_ident(lon_col), -180.0, 360.0, wrap=True)
+        ny = _norm_sql(sql_ident(lat_col), -90.0, 180.0, wrap=False)
+    else:
+        nx = _norm_sql(sql_ident(lon_col), bounds[0], float(bounds[2] - bounds[0]), wrap=False)
+        ny = _norm_sql(sql_ident(lat_col), bounds[1], float(bounds[3] - bounds[1]), wrap=False)
+    r = 1 << tier
+
+    def grid(n):
+        g = f"CAST(FLOOR({n} * {_dbl(r)}) AS BIGINT)"
+        return f"(LEAST(GREATEST({g}, 0), {r - 1}) & {0xFFFFFFFF})"
+
+    def spread(c, sh, m):
+        return f"(({c} | shiftleft({c}, {sh})) & {m})"
 
     # temp names carry the output name so the helper is re-entrant and can
     # never clobber a caller's column that happens to be called _gx etc.
-    gx, gy = f"_{out}_gx", f"_{out}_gy"
-    df = df.withColumn(gx, grid_coord(norm_lon(F.col(lon_col), bounds), tier))
-    df = df.withColumn(gy, grid_coord(norm_lat(F.col(lat_col), bounds), tier))
-    return interleave_columns(df, gx, gy, out).drop(gx, gy)
-
-
-def interleave_columns(df, gx_col: str, gy_col: str, out: str):
-    """Stepwise Morton interleave of two EXISTING grid-coordinate columns
-    into ``out`` (same linear-codegen trick as add_cell_column; the inline
-    :func:`interleave` expression duplicates each operand subtree 32x,
-    which blows the JVM 64KB method limit when the operands are themselves
-    large expressions — e.g. the extent joins' reference-point cell)."""
-    from pyspark.sql import functions as F
-
-    temps = []
-    finals = []
-    for prefix, src in ((f"_{out}_px", gx_col), (f"_{out}_py", gy_col)):
-        cur = f"{prefix}0"
-        df = df.withColumn(cur, F.col(src).bitwiseAND(F.lit(0xFFFFFFFF)))
-        temps.append(cur)
-        for i, (sh, m) in enumerate(_SPREAD_STEPS, start=1):
-            nxt = f"{prefix}{i}"
-            df = df.withColumn(
-                nxt, (F.col(cur).bitwiseOR(F.shiftleft(F.col(cur), sh))).bitwiseAND(F.lit(m))
-            )
-            temps.append(nxt)
-            cur = nxt
-        finals.append(cur)
-    df = df.withColumn(out, F.col(finals[0]).bitwiseOR(F.shiftleft(F.col(finals[1]), 1)))
-    return df.drop(*temps)
+    px, py = f"_{out}_px", f"_{out}_py"
+    qx, qy = sql_ident(px), sql_ident(py)
+    df = df.withColumns({px: F.expr(grid(nx)), py: F.expr(grid(ny))})
+    for sh, m in _SPREAD_STEPS[:-1]:
+        df = df.withColumns({px: F.expr(spread(qx, sh, m)), py: F.expr(spread(qy, sh, m))})
+    sh, m = _SPREAD_STEPS[-1]
+    df = df.withColumns({out: F.expr(f"{spread(qx, sh, m)} | shiftleft({spread(qy, sh, m)}, 1)")})
+    return df.drop(px, py)
 
 
 def cell_at_tier_expr(cell31: Column, to_tier: int, from_tier: int = MAX_TIER) -> Column:
@@ -208,6 +215,39 @@ def extent_intersects_pred(x0: Column, y0: Column, x1: Column, y1: Column, bbox)
             (x0 <= F.lit(bx1)) & (x1 >= F.lit(bx0)) & (y0 <= F.lit(by1)) & (y1 >= F.lit(by0))
         )
     return pred
+
+
+def sql_ident(name: str) -> str:
+    """A column name as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def or_sql(terms: list[str]) -> str:
+    """Balanced OR of SQL predicate texts.  Log-depth parentheses keep the
+    parsed tree shallow for any term count: a left-deep chain of a few
+    hundred ORs overflows the Column-node converter stack."""
+    if not terms:
+        return "false"
+    while len(terms) > 1:
+        nxt = [f"({a} OR {b})" for a, b in zip(terms[::2], terms[1::2])]
+        if len(terms) % 2:
+            nxt.append(terms[-1])
+        terms = nxt
+    return terms[0]
+
+
+def ranges_sql(col: str, ranges) -> str:
+    """``col`` inside any inclusive (lo, hi) range, as SQL text."""
+    c = sql_ident(col)
+    return or_sql([f"{c} BETWEEN {int(lo)}L AND {int(hi)}L" for lo, hi in ranges])
+
+
+def ranges_pred(col: str, ranges) -> Column:
+    """Sargable any-of-ranges predicate built as ONE SQL expression — one
+    driver→JVM call however many ranges, where a Column-per-range OR
+    costs several calls per range (tens of thousands for a budgeted
+    spatio-temporal cover)."""
+    return F.expr(ranges_sql(col, ranges))
 
 
 def tier_of_key(key: Column) -> Column:

@@ -15,6 +15,19 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope="module", autouse=True)
+def _clear_spark_cache():
+    """Each module leaves an empty cache behind: a relation one module
+    cached must not show up in another module's plans (a cached relation
+    changes plan strings and stage counts).  Never starts Spark itself."""
+    yield
+    from pyspark.sql import SparkSession
+
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        active.catalog.clearCache()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

@@ -25,7 +25,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def events(spark):
     from geowave_spark import entry_queries as eq
 
-    return eq._events(spark, SF_DIR).cache()
+    ev = eq._events(spark, SF_DIR).cache()
+    yield ev
+    ev.unpersist()
 
 
 def _ids(df):

@@ -7,6 +7,8 @@ from __future__ import annotations
 import os
 import sys
 
+import pytest
+
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geowave_spark import entry_queries as eq
@@ -119,3 +121,35 @@ def test_relate_sql_functions(spark):
         "'POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))') AS x"
     ).collect()[0]
     assert r["m"] is True and r["x"] == "F0FFFF212"
+
+
+def test_relate_null_and_malformed_pattern(spark):
+    """A NULL DE-9IM pattern answers NULL (not a len(None) crash in the
+    Arrow worker); a wrong-length or foreign-letter pattern fails with an
+    error that names it."""
+    from geowave_spark.functions.sqlregistry import register_sql_udfs
+
+    register_sql_udfs(spark)
+    poly = "'POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))'"
+    rows = spark.sql(
+        f"SELECT id, st_relate('POINT (1 1)', {poly}, p) AS m FROM VALUES "
+        "(1, CAST(NULL AS STRING)), (2, 't********') AS t(id, p)"
+    ).collect()
+    assert {r["id"]: r["m"] for r in rows} == {1: None, 2: True}
+    for bad in ("T*F", "TXF**F***"):
+        with pytest.raises(Exception, match="DE-9IM pattern must be 9 characters"):
+            spark.sql(f"SELECT st_relate('POINT (1 1)', {poly}, '{bad}') AS m").collect()
+
+
+def test_parse_points_rejects_malformed_numbers():
+    """The POINT fast path takes only well-formed numbers: a token like
+    ``1-2`` sends the batch to the general WKT path instead of raising a
+    bare ValueError from float()."""
+    import numpy as np
+
+    from geowave_spark.functions.geo_udfs import _parse_points
+
+    got = _parse_points(np.array(["POINT (1.5 -2e3)", " POINT(+.5 3.)"], dtype=object))
+    assert got.tolist() == [[1.5, -2000.0], [0.5, 3.0]]
+    assert _parse_points(np.array(["POINT (1-2 3)"], dtype=object)) is None
+    assert _parse_points(np.array(["POINT (1 2)", "POINT (1e 2)"], dtype=object)) is None

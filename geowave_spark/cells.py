@@ -176,7 +176,8 @@ def _grid_range(
     one id at tier t (TieredSFCIndexStrategyTest.java:140-168).
 
     ``closed=True`` keeps the boundary cell open (plain floor — the same
-    convention as the Column-math covers in sqlcells/_extent_cells): a
+    convention as the Column-math covers in
+    spatial_join._extent_multitier_keys): a
     QUERY-side cover must meet partners that only touch the extent's upper
     edge, which live in the next cell.
     """

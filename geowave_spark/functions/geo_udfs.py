@@ -67,32 +67,46 @@ def cover_keys(
     """
     out = []
     for wkt in wkts:
-        p = geom.geometry_from_wkt(wkt)
-        bbox = _ring_bbox(p, buffer, bounds)
-        tier, cs = cells.cells_for_bbox(
-            bbox, max_dup=max_cells, closed=closed, bounds=bounds
+        tier, cs = _geometry_cover(
+            geom.geometry_from_wkt(wkt), max_cells, buffer, trim, closed, bounds
         )
-        if trim and not buffer and cs.size > 3:
-            # drop covering cells that miss the true geometry; for unwrapped
-            # antimeridian polygons also test the +360-shifted copy
-            lon0, lat0, lon1, lat1 = cells.cell_to_bounds(cs, tier, bounds=bounds)
-            keep = p.intersects_boxes(lon0, lat0, lon1, lat1)
-            if bounds is None and p.bbox[2] > 180.0:
-                keep |= p.intersects_boxes(lon0 + 360.0, lat0, lon1 + 360.0, lat1)
-            cs = cs[keep]
         out.append(cells.pack_key(tier, cs).tolist())
     return pd.Series(out, index=wkts.index)
 
 
+def _geometry_cover(
+    p, max_cells: int = cells.JOIN_MAX_CELLS, buffer: float = 0.0,
+    trim: bool = True, closed: bool = False, bounds=None,
+) -> tuple[int, np.ndarray]:
+    """One parsed geometry → (tier, covering cells): the body of
+    :func:`cover_keys`, for callers that already hold the geometry."""
+    bbox = _ring_bbox(p, buffer, bounds)
+    tier, cs = cells.cells_for_bbox(
+        bbox, max_dup=max_cells, closed=closed, bounds=bounds
+    )
+    if trim and not buffer and cs.size > 3:
+        # drop covering cells that miss the true geometry; for unwrapped
+        # antimeridian polygons also test the +360-shifted copy
+        lon0, lat0, lon1, lat1 = cells.cell_to_bounds(cs, tier, bounds=bounds)
+        keep = p.intersects_boxes(lon0, lat0, lon1, lat1)
+        if bounds is None and p.bbox[2] > 180.0:
+            keep |= p.intersects_boxes(lon0 + 360.0, lat0, lon1 + 360.0, lat1)
+        cs = cs[keep]
+    return tier, cs
+
+
 def _eval_per_polygon(
     wkts: pd.Series, lon: pd.Series, lat: pd.Series, fn, null_value: float = 0.0,
-    wrap: bool = True,
+    wrap: bool = True, wrap_boxes: bool = False,
 ) -> np.ndarray:
     """Group a candidate batch by polygon and evaluate vectorized.
 
     NULL geometries factorize to code -1 and keep ``null_value`` —
     predicates pass 0.0 (False: a null polygon relates to nothing);
-    distances pass NaN so a null never reads as distance 0."""
+    distances pass NaN so a null never reads as distance 0.
+
+    ``wrap`` retests unwrapped antimeridian polygons (bbox x1 > 180) at
+    lon + 360; ``wrap_boxes`` retests every box that way too."""
     res = np.full(len(wkts), null_value, dtype=np.float64)
     lon_v = lon.to_numpy(dtype=np.float64)
     lat_v = lat.to_numpy(dtype=np.float64)
@@ -101,7 +115,7 @@ def _eval_per_polygon(
         idx = np.nonzero(codes == u)[0]
         p = geom.geometry_from_wkt(w)
         v = fn(p, lon_v[idx], lat_v[idx])
-        if wrap and p.bbox[2] > 180.0:  # unwrapped antimeridian polygon
+        if wrap and (p.bbox[2] > 180.0 or (wrap_boxes and p.is_box())):
             v2 = fn(p, lon_v[idx] + 360.0, lat_v[idx])
             v = np.minimum(v, v2) if v.dtype != bool else (v | v2)
         res[idx] = v
@@ -134,8 +148,12 @@ def st_distance_point_nowrap(wkts: pd.Series, lon: pd.Series, lat: pd.Series) ->
 
 @F.pandas_udf(T.DoubleType())
 def st_distance_point(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+    # a box is measured against the point's lon + 360 copy as well, the
+    # rule of the broadcast join's JVM box refine and of both DuckDB
+    # oracles: a point at lon -179.8 can be within 0.5 of a box ending at 179.99
     got = _eval_per_polygon(
-        wkts, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan
+        wkts, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan,
+        wrap_boxes=True,
     )
     return pd.Series(got)
 

@@ -61,8 +61,10 @@ def register_sql_udfs(spark: SparkSession) -> None:
     def _dwithin(wkt: pd.Series, lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
         import numpy as np
 
+        # the same box rule as st_distance_point (lon + 360 retest)
         d = geo_udfs._eval_per_polygon(
-            wkt, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan
+            wkt, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan,
+            wrap_boxes=True,
         )
         # SQL numeric literals arrive as DECIMAL objects; NaN <= Decimal
         # raises decimal.InvalidOperation — compare in float64 (NaN→False)

@@ -12,7 +12,20 @@ we collapse the whole thing into ONE Catalyst plan:
     equi-join on the single long key   (broadcast if small, else forced
                                         sort-merge with AQE skew + salting)
     exact predicate refine (Arrow pandas UDF, or pure SQL for boxes)
-    dropDuplicates per (point, polygon)      (DedupeFilter semantics)
+    dropDuplicates per (point, polygon) only when a seam split can emit a
+    pair twice                               (DedupeFilter semantics)
+
+Every tiered join takes the same five decisions through one helper each:
+* extent keying — `_extent_multitier_keys`: span-based own tier plus every
+  coarser partner tier, cover re-derived per tier (Column math);
+* seam split — `_seam_split`: envelopes crossing +180 become two in-range
+  images (none under custom ``bounds``);
+* tier discovery — `_tier_pass`: one localCheckpoint and one aggregate
+  per side for the tier set and the split flag;
+* driver cover — `_cover_rows`: the broadcast side's cells, one WKT parse
+  per geometry, with coarser-tier truncations when asked;
+* candidate filter — `_candidate_filter`: meet tier, envelope overlap,
+  containment-necessary envelopes and the PBSM reference point.
 
 Semantics preserved (verified against the brute-force oracle, the same test
 design as GeoWaveSparkSpatialJoinIT.java:227-254):
@@ -42,11 +55,14 @@ Scale design (100 TB point side):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .. import cells, sqlcells
+from .. import cells, geom, sqlcells
 from ..functions import geo_udfs
+
+_BOX = ("x0", "y0", "x1", "y1")
 
 # broadcast the polygon side when it has at most this many rows (each
 # polygon explodes to <= 80 covering cells; 100k x ~100B cells ~ 1GB upper
@@ -119,41 +135,63 @@ def polygon_cover_local(
     small side locally with numpy: no Spark job, no Python workers, and the
     cover is computed exactly once.
 
-    Returns (cell_rows, tiers): cell_rows =
-    (key, polygon_id, wkt, x0, y0, x1, y1, is_box) per covering cell.
+    Returns (cell_rows, tiers) as :func:`_cover_rows` does; covers are
+    trimmed to the geometry unless buffered.
     """
-    import pandas as pd
+    return _cover_rows(rows, max_cells=max_cells, buffer=buffer, bounds=bounds)
 
-    from .. import geom
 
-    wkts = pd.Series([w for _, w in rows])
-    # query-side covers are ALWAYS boundary-CLOSED: a point lying exactly
-    # on a polygon edge that coincides with a cell line floors into the
-    # NEXT cell (e.g. point lon=0 on a polygon with x1=0), and a dwithin
-    # partner at exactly distance `radius` past the buffered bbox's upper
-    # edge does the same — the open (exact-fit insert rule) cover would
-    # drop their candidate cell even though the boundary-inclusive refine
-    # accepts the pair.  Trim still removes cells the true geometry
-    # doesn't touch (closed cell rectangles keep edge contact).
-    keys_per_poly = geo_udfs.cover_keys(
-        wkts, max_cells=max_cells, buffer=buffer, trim=not buffer, closed=True,
-        bounds=bounds,
-    )
+def _cover_rows(
+    rows: list[tuple[str, str]],
+    max_cells: int = cells.JOIN_MAX_CELLS,
+    buffer: float = 0.0,
+    trim: bool = True,
+    bounds=None,
+    coarser: bool = False,
+) -> tuple[list[tuple], list[int]]:
+    """The broadcast side's covering cells, shared by every broadcast join.
+
+    Each WKT is parsed once.  Its cover is the adaptive-tier cover of its
+    bbox (buffered by ``buffer``), trimmed to the cells the geometry
+    touches when ``trim`` and unbuffered.  ``coarser=True`` adds the cover
+    truncated to every coarser tier (reprojectToTier, coarser direction;
+    np.unique keeps the (id, key) rows unique), so that a partner whose
+    own tier is coarser meets the geometry there.
+
+    Covers are ALWAYS boundary-CLOSED: a point lying exactly on a polygon
+    edge that coincides with a cell line floors into the NEXT cell (e.g.
+    point lon=0 on a polygon with x1=0), and a dwithin partner at exactly
+    distance `radius` past the buffered bbox's upper edge does the same —
+    the open (exact-fit insert rule) cover would drop their candidate cell
+    even though the boundary-inclusive refine accepts the pair.  Trim still
+    removes cells the true geometry doesn't touch (closed cell rectangles
+    keep edge contact).
+
+    Returns (cell_rows, tiers): cell_rows =
+    (key, id, wkt, x0, y0, x1, y1, is_box, tier) per covering cell, with
+    the geometry's own (unbuffered) bbox and own cover tier; tiers = the
+    sorted distinct own tiers.  A geometry with an empty cover has no rows.
+    """
     out: list[tuple] = []
     tiers: set[int] = set()
-    import numpy as np
-
-    for (pid, wkt), keys in zip(rows, keys_per_poly):
-        p = geom.geometry_from_wkt(wkt)
-        x0, y0, x1, y1 = p.bbox
-        isb = p.is_box()
-        for k in keys:
-            out.append((int(k), pid, wkt, float(x0), float(y0), float(x1), float(y1), bool(isb)))
-        if len(keys):
-            tiers.update(cells.unpack_key(np.asarray(keys))[0].tolist())
+    for gid, wkt in rows:
+        g = geom.geometry_from_wkt(wkt)
+        tp, cover = geo_udfs._geometry_cover(
+            g, max_cells=max_cells, buffer=buffer, trim=trim, closed=True,
+            bounds=bounds,
+        )
+        if not cover.size:
+            continue
+        tiers.add(tp)
+        x0, y0, x1, y1 = (float(v) for v in g.bbox)
+        isb = bool(g.is_box())
+        for t in range(tp, -1 if coarser else tp - 1, -1):
+            tc = cover if t == tp else np.unique(cells.cell_at_tier(cover, tp, t))
+            out.extend(
+                (k, gid, wkt, x0, y0, x1, y1, isb, tp)
+                for k in cells.pack_key(t, tc).tolist()
+            )
     return out, sorted(tiers)
-
-
 
 
 def _box_contains_pred(lon: Column, lat: Column, bounds=None) -> Column:
@@ -323,7 +361,7 @@ def _broadcast_join(
         # box refine needs only the bbox — no WKT in the broadcast at all
         right = F.broadcast(
             spark.createDataFrame(
-                [(k, pid, x0, y0, x1, y1) for k, pid, _w, x0, y0, x1, y1, _b in box_rows],
+                [(k, pid, x0, y0, x1, y1) for k, pid, _w, x0, y0, x1, y1, *_ in box_rows],
                 "key long, polygon_id string, x0 double, y0 double, x1 double, y1 double",
             ).withColumnRenamed("polygon_id", polygon_id)
         )
@@ -374,79 +412,25 @@ def _shuffle_join(
     splitting.
 
     Scale design: the ONLY Python on the polygon side is the per-row WKT →
-    bbox extraction (st_bbox); tier assignment, cell explosion and key
-    packing are whole-stage-codegen Column math, so a 10^8-polygon side
-    runs at scan speed.  Points sit at the finest tier, so a pair always
-    meets at the polygon's tier — each polygon emits its own-tier cells
-    only, and each point emits one key per DISTINCT polygon tier (<= 32,
-    discovered via a tiny aggregate, TieredSpatialJoin.java:173-207).
+    bbox extraction (st_bbox); the seam split, tier assignment, cell
+    explosion and key packing are whole-stage-codegen Column math, so a
+    10^8-polygon side runs at scan speed.  Points sit at the finest tier,
+    so a pair always meets at the polygon's tier — each polygon emits its
+    own-tier cells only, and each point emits one key per DISTINCT polygon
+    tier (<= 32, discovered via a tiny aggregate,
+    TieredSpatialJoin.java:173-207).  Building the plan runs one
+    localCheckpoint and one aggregate.
     """
-    lb = polygons.select(polygon_id, wkt_col).withColumn(
-        "_bb", geo_udfs.st_bbox(F.col(wkt_col))
-    ).select(
-        polygon_id,
-        F.col(wkt_col),
-        (F.col("_bb.x0") - buffer).alias("_px0"),
-        (F.col("_bb.y0") - buffer).alias("_py0"),
-        (F.col("_bb.x1") + buffer).alias("_px1"),
-        (F.col("_bb.y1") + buffer).alias("_py1"),
-    ).localCheckpoint()  # ONE bbox-UDF pass feeding the wrap-split branches
-    # antimeridian: unwrapped bboxes (x1 > 180, or x0 < -180 after
-    # buffering) split into two in-range sub-extents BEFORE tiering
-    # (LongitudeDefinition wrap semantics); the exact refine already tests
-    # the +360-shifted copy, so recall and exactness both hold
-    keep = ["_px0", "_py0", "_px1", "_py1"]
-    others = [c for c in lb.columns if c not in keep]
-    if bounds is not None:
-        # custom bounds: clamped normalization, no antimeridian seam — the
-        # whole side passes through unsplit (the wrap branches below see an
-        # empty frame and short-circuit)
-        norm, lb = lb, lb.filter(F.lit(False))
-    else:
-        norm = lb.filter((F.col("_px1") <= 180.0) & (F.col("_px0") >= -180.0))
-    # full-wrap rule first (cells.split_bbox_antimeridian semantics): a
-    # bbox overflowing BOTH edges (world-spanning polygon + buffer) must
-    # become one world box — it would otherwise land in BOTH the hi and
-    # lo branches with an out-of-range bound surviving in two of the four
-    # images, collapsing its cover to a seam sliver and dropping pairs
-    both = lb.filter((F.col("_px1") > 180.0) & (F.col("_px0") < -180.0))
-    hi = lb.filter((F.col("_px1") > 180.0) & (F.col("_px0") >= -180.0))
-    lo = lb.filter((F.col("_px0") < -180.0) & (F.col("_px1") <= 180.0))
-    wrap_split = not (hi.isEmpty() and lo.isEmpty() and both.isEmpty())
-    if not wrap_split:
-        lb2 = norm
-    else:
-        lb2 = (
-            norm
-            .unionByName(hi.select(*others, "_px0", "_py0", F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(hi.select(*others, F.lit(-180.0).alias("_px0"), "_py0",
-                                   (F.col("_px1") - 360.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(lo.select(*others, F.lit(-180.0).alias("_px0"), "_py0", "_px1", "_py1")
-                         .select(*lb.columns))
-            .unionByName(lo.select(*others, (F.col("_px0") + 360.0).alias("_px0"), "_py0",
-                                   F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-            .unionByName(both.select(*others, F.lit(-180.0).alias("_px0"), "_py0",
-                                     F.lit(180.0).alias("_px1"), "_py1")
-                         .select(*lb.columns))
-        )
-    pc = _extent_cells(
-        lb2, polygon_id, "_px0", "_py0", "_px1", "_py1", extra_cols=(wkt_col,),
-        bounds=bounds,
+    pb, bbox = _with_bbox(polygons, polygon_id, wkt_col)
+    pc, tiers, any_split = _tier_pass(
+        _seam_split(pb, bbox, "_r", pad=buffer, bounds=bounds, keep=(polygon_id, wkt_col)),
+        "_r", bounds,
     )
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    poly_cells = pc.withColumn(
-        "key", (F.element_at(offs, F.col("_te") + 1) + F.col("_cell")).cast("long")
-    ).localCheckpoint()  # materialized once; ContextCleaner-reclaimed
-
-    # tier discovery: distinct TIERS (<= 32 rows after map-side partial
-    # agg), never the distinct keys
-    tiers = sorted(r[0] for r in poly_cells.select("_te").distinct().collect())
     if not tiers:
-        return pts.select(point_id).limit(0).crossJoin(polygons.select(polygon_id).limit(0))
-    poly_cells = poly_cells.drop("_te", "_cell", "_px0", "_py0", "_px1", "_py1")
+        return _empty_pairs(pts, point_id, polygons, polygon_id)
+    poly_cells = _extent_multitier_keys(
+        pc, polygon_id, "_r", [], extra_cols=(wkt_col,), bounds=bounds
+    ).select(polygon_id, wkt_col, "key")
 
     pt_keys = pts.select(point_id, lon_col, lat_col, "_cell31").withColumn(
         "key", F.explode(_point_keys_expr(tiers))
@@ -472,9 +456,9 @@ def _shuffle_join(
         joined = _refine_general(joined, predicate, radius, lon_col, lat_col, wkt_col, bounds)
     out = joined.select(point_id, polygon_id)
     # points meet each polygon at most once (one cell per tier) — dedupe is
-    # only needed when a wrapped polygon was split into two sub-extents
-    # whose covers can share a coarse cell
-    return out.dropDuplicates([point_id, polygon_id]) if wrap_split else out
+    # only needed when a wrapped polygon was split into two images whose
+    # covers can share a cell
+    return out.dropDuplicates([point_id, polygon_id]) if any_split else out
 
 
 def tiered_extent_join(
@@ -507,128 +491,128 @@ def tiered_extent_join(
       extent additionally emits its cells truncated to each polygon tier
       < te, covering the tp < te direction;
     * equi-join on the packed key, exact bbox-intersects refine
-      (boundary-inclusive, JTS-intersects semantics), global dedupe.
+      (boundary-inclusive, JTS-intersects semantics) and the PBSM
+      reference point, which emits each pair exactly once
+      (`_candidate_filter`).
 
     Output: (extent_id, polygon_id).  Verified against the brute-force
     bbox-intersect oracle — the same test design as the reference's
     GeoWaveSparkSpatialJoinIT brute-force comparison.
     """
-    import numpy as np
-
-    from .. import geom
-
     spark = extents.sparkSession
     if not probe_broadcastable(polygons, wkt_col):
         # build-side guard (same as geometry_join's): never materialize an
         # unbounded polygon side on the driver — derive its bboxes and
         # route to the BIG×BIG shuffle twin, whose output contract
         # (bbox-intersect pairs, same id columns) matches this join's
-        pb = polygons.withColumn("_b", geo_udfs.st_bbox(F.col(wkt_col))).select(
-            F.col(polygon_id),
-            F.col("_b.x0").alias("_rx0"), F.col("_b.y0").alias("_ry0"),
-            F.col("_b.x1").alias("_rx1"), F.col("_b.y1").alias("_ry1"),
-        )
+        pb, _ = _with_bbox(polygons, polygon_id, wkt_col)
         return tiered_extent_join_shuffle(
             extents, pb, left_id=extent_id, right_id=polygon_id,
-            lcols=(x0, y0, x1, y1), rcols=("_rx0", "_ry0", "_rx1", "_ry1"),
+            lcols=(x0, y0, x1, y1), rcols=tuple(f"_bb.{n}" for n in _BOX),
         )
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
-    if not rows:
-        return extents.select(extent_id).limit(0).crossJoin(polygons.select(polygon_id).limit(0))
-
-    # polygon side: cover at its adaptive tier + truncations to every
-    # coarser tier (reprojectToTier, coarser direction); per-tier
-    # np.unique makes (pid, key) rows unique, and carrying the polygon's
-    # OWN tier enables the meet-tier restriction below
-    poly_rows: list[tuple] = []
-    poly_tiers: set[int] = set()
-    for pid, wkt in rows:
-        p = geom.geometry_from_wkt(wkt)
-        bx0, by0, bx1, by1 = p.bbox
-        # closed=True: query-side cover keeps boundary cells, matching the
-        # Column-side plain-floor covers and the reference point — with the
-        # insert convention (closed=False) a polygon whose upper edge sits
-        # exactly on a cell line (e.g. x1 = 0) could NEVER meet an extent
-        # touching it there, at any tier (missed pair, boundary-inclusive
-        # bbox-intersects contract)
-        tp, cover = cells.cells_for_bbox(
-            (bx0, by0, bx1, by1), max_dup=cells.JOIN_MAX_CELLS, closed=True
-        )
-        poly_tiers.add(tp)
-        for t in range(tp, -1, -1):
-            tc = np.unique(cells.cell_at_tier(cover, tp, t))
-            for k in cells.pack_key(t, tc).tolist():
-                poly_rows.append((int(k), pid, int(tp), float(bx0), float(by0), float(bx1), float(by1)))
+    # polygon side: full bbox cover (untrimmed — the reference point below
+    # is a bbox-intersection corner) at its adaptive tier + truncations to
+    # every coarser tier (reprojectToTier, coarser direction), each row
+    # carrying the polygon's OWN tier for the meet-tier restriction
+    cell_rows, poly_tiers = _cover_rows(rows, trim=False, coarser=True)
+    if not poly_tiers:
+        return _empty_pairs(extents, extent_id, polygons, polygon_id)
     right = F.broadcast(
         spark.createDataFrame(
-            poly_rows,
-            "key long, _pid string, _ptp int, _px0 double, _py0 double, _px1 double, _py1 double",
+            [(k, pid, tp, x0_, y0_, x1_, y1_)
+             for k, pid, _w, x0_, y0_, x1_, y1_, _b, tp in cell_rows],
+            "key long, _pid string, _rte int, _rx0 double, _ry0 double, _rx1 double, _ry1 double",
         ).withColumnRenamed("_pid", polygon_id)
     )
-
     # extent side: own-tier cover + covers re-derived at each coarser
-    # polygon tier ((id, key) rows unique by construction)
-    ec = extents.withColumn("_te", _extent_tier_expr(x0, y0, x1, y1))
-    ex_keys = _extent_multitier_keys(ec, extent_id, x0, y0, x1, y1, sorted(poly_tiers))
-
-    j = ex_keys.join(right, "key")
-    # exactly-once emission (PBSM reference point, as in the shuffle twin):
-    # a pair meets only at min(own tiers), in the one cell containing the
-    # bbox intersection's lower-left corner — no pair-level dropDuplicates
-    j = j.filter(F.col("_kt") == F.least(F.col("_te"), F.col("_ptp")))
-    refine = (
-        (F.col(x0) <= F.col("_px1")) & (F.col(x1) >= F.col("_px0"))
-        & (F.col(y0) <= F.col("_py1")) & (F.col(y1) >= F.col("_py0"))
+    # polygon tier ((id, key) rows unique by construction); the candidate
+    # filter emits each pair exactly once — no pair-level dropDuplicates
+    lk = _extent_multitier_keys(
+        _prefixed(extents, extent_id, (x0, y0, x1, y1), "_l"), extent_id, "_l", poly_tiers
     )
-    j = j.filter(refine)
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col(x0), F.col("_px0")),
-        F.greatest(F.col(y0), F.col("_py0")),
-    )
-    return j.select(extent_id, polygon_id)
+    return _candidate_filter(lk.join(right, "key")).select(extent_id, polygon_id)
 
 
-def _extent_cells(
-    df: DataFrame, id_col: str, x0: str, y0: str, x1: str, y1: str,
-    extra_cols: tuple[str, ...] = (),
-    bounds=None,
+def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str) -> DataFrame:
+    """The empty (left_id, right_id) result, typed like a real one."""
+    return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
+
+
+def _prefixed(df: DataFrame, id_col: str, bbox_cols, p: str) -> DataFrame:
+    """(id, {p}x0, {p}y0, {p}x1, {p}y1) from the caller's bbox columns."""
+    return df.select(id_col, *[F.col(c).alias(f"{p}{n}") for c, n in zip(bbox_cols, _BOX)])
+
+
+def _with_bbox(df: DataFrame, id_col: str, wkt_col: str, bbox_cols=None):
+    """(frame, [x0, y0, x1, y1] Columns): the caller's envelope columns
+    when given, else one Arrow st_bbox pass over the WKT."""
+    if bbox_cols is not None:
+        return df, [F.col(c) for c in bbox_cols]
+    df = df.select(id_col, wkt_col).withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
+    return df, [F.col(f"_bb.{n}") for n in _BOX]
+
+
+def _seam_split(
+    df: DataFrame, bbox, p: str, pad: float = 0.0, bounds=None, keep=(),
 ) -> DataFrame:
-    """Extent rows → (id, x0..y1, _te, _cell) at the span-based adaptive
-    tier (<= 4 cells per row) — pure Column math shared by both extent-join
-    paths."""
-    ex = df.withColumn("_te", _extent_tier_expr(x0, y0, x1, y1, bounds))
-    ex = ex.withColumn("_r", F.pow(F.lit(2.0), F.col("_te").cast("double")).cast("long"))
-    rl = F.col("_r").cast("double")
-    # norm_lon_upper on BOTH lon bounds (same seam rule as
-    # _extent_multitier_keys): identical to norm_lon everywhere except
-    # exactly +180, where the wrap would put the lower bound in cell 0
-    # while the upper clamps to r-1 — a degenerate x0=x1=180 box would
-    # otherwise explode a sequence over the whole 2^31-cell row
-    gx0 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x0), bounds) * rl), F.lit(0)), F.col("_r") - 1).cast("long")
-    gy0 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y0), bounds) * rl), F.lit(0)), F.col("_r") - 1).cast("long")
-    gx1 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x1), bounds) * rl), gx0), F.col("_r") - 1).cast("long")
-    gy1 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y1), bounds) * rl), gy0), F.col("_r") - 1).cast("long")
-    return (
-        ex.withColumn("_gx0", gx0).withColumn("_gx1", gx1)
-        .withColumn("_gy0", gy0).withColumn("_gy1", gy1)
-        .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
-        .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
-        .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
-        .select(id_col, x0, y0, x1, y1, "_te", "_cell", *extra_cols)
+    """Envelopes (``bbox`` Columns, padded by ``pad``) → in-range images
+    {p}x0..{p}y1, one row per image, numbered by ``_seg``; ``keep`` names
+    the columns carried along.
+
+    LongitudeDefinition wrap semantics: an envelope crossing +180 splits
+    into [x0, 180] (_seg 0) and [-180, x1 - 360] (_seg 1), so its cover
+    reaches both sides of the seam; the exact refines test the point's
+    lon + 360 (the pairwise kernels the right geometry's -360 image), so
+    recall and exactness both hold.  An envelope crossing -180 clamps: the
+    refines shift only that one way, so no pair exists across that edge
+    to keep — and a world-spanning envelope (both edges) clamps to ONE
+    world image.  Custom ``bounds`` (a projected frame) have no seam: one
+    unclamped row each.
+    """
+    x0, y0, x1, y1 = bbox
+    x0, y0, x1, y1 = x0 - pad, y0 - pad, x1 + pad, y1 + pad
+    if bounds is not None:
+        seg, lo, hi = F.lit(0), x0, x1
+    else:
+        split = (x1 > 180.0) & (x0 > -180.0)
+        df = df.withColumn(
+            "_seg",
+            F.explode(F.when(split, F.array(F.lit(0), F.lit(1))).otherwise(F.array(F.lit(0)))),
+        )
+        seg, east = F.col("_seg"), F.col("_seg") == 1
+        lo = F.when(east, F.lit(-180.0)).otherwise(F.greatest(x0, F.lit(-180.0)))
+        hi = F.when(east, x1 - 360.0).otherwise(F.least(x1, F.lit(180.0)))
+    return df.select(
+        *keep, seg.alias("_seg"), lo.alias(f"{p}x0"), y0.alias(f"{p}y0"),
+        hi.alias(f"{p}x1"), y1.alias(f"{p}y1"),
     )
 
 
-def _extent_tier_expr(x0: str, y0: str, x1: str, y1: str, bounds=None) -> Column:
-    """Span-based adaptive tier for an extent row (same rule as
-    `_extent_cells` — tier t is the finest grid whose cell >= the extent's
-    span, so the cover is always <= 2x2 cells)."""
+def _tier_pass(df: DataFrame, p: str, bounds=None) -> tuple[DataFrame, list[int], bool]:
+    """Tag each envelope {p}x0..{p}y1 with its own tier {p}te, materialize
+    the side once (localCheckpoint: MEMORY_AND_DISK, ContextCleaner-
+    reclaimed) so the bbox UDF runs once, and read back in ONE aggregate
+    its distinct tiers (<= 32 rows after map-side partial aggregation) and
+    whether any envelope was seam-split (``_seg`` > 0).
+
+    Returns (materialized side, sorted tiers, any split)."""
+    df = df.withColumn(f"{p}te", _extent_tier_expr(p, bounds)).localCheckpoint()
+    aggs = [F.collect_set(f"{p}te")]
+    if "_seg" in df.columns:
+        aggs.append(F.max("_seg"))
+    row = df.agg(*aggs).first()
+    return df, sorted(row[0] or []), len(row) > 1 and bool(row[1])
+
+
+def _extent_tier_expr(p: str, bounds=None) -> Column:
+    """Span-based adaptive tier of the envelope {p}x0..{p}y1: tier t is
+    the finest grid whose cell >= the extent's span, so the cover is
+    always <= 2x2 cells (see `_extent_multitier_keys`)."""
     wx = 360.0 if bounds is None else float(bounds[2] - bounds[0])
     wy = 180.0 if bounds is None else float(bounds[3] - bounds[1])
-    sx = (F.col(x1) - F.col(x0)) / F.lit(wx)
-    sy = (F.col(y1) - F.col(y0)) / F.lit(wy)
+    sx = (F.col(f"{p}x1") - F.col(f"{p}x0")) / F.lit(wx)
+    sy = (F.col(f"{p}y1") - F.col(f"{p}y0")) / F.lit(wy)
     span = F.greatest(sx, sy, F.lit(0.0))
     return (
         F.when(span <= 0.0, F.lit(cells.MAX_TIER))
@@ -638,49 +622,67 @@ def _extent_tier_expr(x0: str, y0: str, x1: str, y1: str, bounds=None) -> Column
     )
 
 
+def _with_tier_scale(df: DataFrame) -> DataFrame:
+    """Grid size at the emission tier: _rd = 2^_kt (double), _rm = last
+    grid index."""
+    df = df.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
+    return df.withColumn("_rm", F.col("_rd").cast("long") - 1)
+
+
+def _grid(norm: Column, lo: Column) -> Column:
+    """Grid coordinate of a normalized position at tier _kt, clamped to
+    [lo, last index] (needs `_with_tier_scale`)."""
+    return F.least(F.greatest(F.floor(norm * F.col("_rd")), lo), F.col("_rm")).cast("long")
+
+
 def _extent_multitier_keys(
-    ex: DataFrame, id_col: str, x0: str, y0: str, x1: str, y1: str,
-    partner_tiers: list[int],
+    ex: DataFrame, id_col: str, p: str, partner_tiers: list[int],
     extra_cols: tuple[str, ...] = (),
+    bounds=None,
 ) -> DataFrame:
-    """Extent rows (pre-tagged with own tier ``_te``) → one row per
-    (extent, emission tier, covering cell), where the emission tiers are
-    the row's OWN tier plus every strictly-coarser tier present on the
-    partner side, and the cell cover is computed DIRECTLY at each emission
-    tier.
+    """Extent rows (envelope {p}x0..{p}y1) → one row per (extent, emission
+    tier, covering cell) — the one Column extent keyer of every tiered
+    join.  The emission tiers are the row's OWN tier {p}te (added here
+    when absent) plus every strictly-coarser tier present on the partner
+    side; an empty ``partner_tiers`` emits own-tier cells only.  The cover
+    is computed DIRECTLY at each emission tier.
 
     Because the cover is re-derived per tier (not truncated from the own-
     tier cover), (id, key) rows are unique by construction — two own-tier
     cells can never collapse onto the same coarse key twice.  This is what
-    makes the downstream reference-point join emission exact with NO
-    dropDuplicates (see `tiered_extent_join_shuffle`).
+    makes the downstream reference-point emission exact with NO
+    dropDuplicates (see `_candidate_filter`).
 
-    Output columns: id, x0..y1, extras, _te (own tier), _kt (emission
-    tier), _cell (Z-order cell at _kt), key (tier-packed long).
+    Output columns: id, {p}x0..{p}y1, extras, {p}te (own tier), _kt
+    (emission tier), _cell (Z-order cell at _kt), key (tier-packed long).
     """
-    tier_arr = F.array(*[F.lit(int(t)) for t in sorted(set(partner_tiers))])
-    emit = F.array_append(F.filter(tier_arr, lambda t: t < F.col("_te")), F.col("_te"))
-    ex = ex.withColumn("_kt", F.explode(emit))
-    ex = ex.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    ex = ex.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    rd, rm = F.col("_rd"), F.col("_rm")
+    te = f"{p}te"
+    if te not in ex.columns:
+        ex = ex.withColumn(te, _extent_tier_expr(p, bounds))
+    if partner_tiers:
+        tier_arr = F.array(*[F.lit(int(t)) for t in sorted(set(partner_tiers))])
+        emit = F.array_append(F.filter(tier_arr, lambda t: t < F.col(te)), F.col(te))
+    else:
+        emit = F.array(F.col(te))
+    ex = _with_tier_scale(ex.withColumn("_kt", F.explode(emit)))
+    x0, y0, x1, y1 = (F.col(f"{p}{n}") for n in _BOX)
     # norm_lon_upper on BOTH bounds: identical to norm_lon everywhere
     # except exactly +180, where the wrap would put the lower bound in
     # cell 0 while the upper clamps to r-1 — a degenerate seam box would
     # otherwise cover the whole row (2^31 cells at the point tier)
-    gx0 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x0)) * rd), F.lit(0)), rm).cast("long")
-    gy0 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y0)) * rd), F.lit(0)), rm).cast("long")
-    ex = ex.withColumn("_gx0", gx0).withColumn("_gy0", gy0)
-    gx1 = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(F.col(x1)) * rd), F.col("_gx0")), rm).cast("long")
-    gy1 = F.least(F.greatest(F.floor(sqlcells.norm_lat(F.col(y1)) * rd), F.col("_gy0")), rm).cast("long")
+    ex = (
+        ex.withColumn("_gx0", _grid(sqlcells.norm_lon_upper(x0, bounds), F.lit(0)))
+        .withColumn("_gy0", _grid(sqlcells.norm_lat(y0, bounds), F.lit(0)))
+    )
     offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
     return (
-        ex.withColumn("_gx1", gx1).withColumn("_gy1", gy1)
+        ex.withColumn("_gx1", _grid(sqlcells.norm_lon_upper(x1, bounds), F.col("_gx0")))
+        .withColumn("_gy1", _grid(sqlcells.norm_lat(y1, bounds), F.col("_gy0")))
         .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
         .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
         .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
         .withColumn("key", (F.element_at(offs, F.col("_kt") + 1) + F.col("_cell")).cast("long"))
-        .select(id_col, x0, y0, x1, y1, "_te", "_kt", "_cell", "key", *extra_cols)
+        .select(id_col, *[f"{p}{n}" for n in _BOX], *extra_cols, te, "_kt", "_cell", "key")
     )
 
 
@@ -705,28 +707,56 @@ def _ref_point_filter(j: DataFrame, px: Column, py: Column) -> DataFrame:
     each large normalization expression exactly once, so the whole filter
     stays inside whole-stage codegen even when the optimizer folds it into
     the join condition."""
-    rd, rm = F.col("_rd"), F.col("_rm")
-    gxp = F.least(F.greatest(F.floor(sqlcells.norm_lon_upper(px) * rd), F.lit(0)), rm).cast("long")
-    gyp = F.least(F.greatest(F.floor(sqlcells.norm_lat(py) * rd), F.lit(0)), rm).cast("long")
+    j = _with_tier_scale(j)
+    gxp = _grid(sqlcells.norm_lon_upper(px), F.lit(0))
+    gyp = _grid(sqlcells.norm_lat(py), F.lit(0))
     return j.filter(
         (gxp == sqlcells.compact_x(F.col("_cell")))
         & (gyp == sqlcells.compact_y(F.col("_cell")))
     )
 
 
-def _extent_keys(ex_cells: DataFrame, partner_tiers: list[int]) -> DataFrame:
-    """Keys = own-tier cell + truncations to each coarser partner tier."""
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    own_key = F.element_at(offs, F.col("_te") + 1) + F.col("_cell")
-    trunc = [
-        F.when(
-            F.col("_te") > t,
-            F.lit(int(cells.TIER_OFFSETS[t])) + F.expr(f"shiftrightunsigned(_cell, 2 * (_te - {t}))"),
-        )
-        for t in sorted(partner_tiers)
-    ]
-    keys = F.array_compact(F.array(own_key.cast("long"), *[k.cast("long") for k in trunc]))
-    return ex_cells.withColumn("key", F.explode(keys)).drop("_te", "_cell")
+def _candidate_filter(
+    j: DataFrame, predicate: str = "intersects", seam: Column | None = None,
+    ref_point: bool = True,
+) -> DataFrame:
+    """The one candidate filter of the extent and geometry joins, over
+    joined rows with envelopes _lx0.._ly1 / _rx0.._ry1, own tiers _lte /
+    _rte and the join cell (_kt, _cell):
+
+    * meet tier: a pair's single meet tier is min(own tiers) — keys at any
+      common coarser tier are dropped here, keys at finer tiers never
+      matched;
+    * envelope overlap, plus for the containment family the stronger
+      NECESSARY envelope condition (within(l,r) ⇒ bbox(l) ⊆ bbox(r),
+      covers/contains ⇒ ⊇, equals ⇒ equal envelopes) — it prunes most
+      candidates before the Arrow refine ever sees them;
+    * ``ref_point``: the PBSM reference point keeps each candidate pair in
+      exactly one (tier, cell) — no pair-level dropDuplicates.
+
+    ``seam`` flags rows whose envelopes are not comparable in plain
+    coordinates (an unwrapped antimeridian geometry, x1 > 180): they skip
+    both envelope tests and are left to the exact refine, and a pair that
+    meets only the right geometry's -360 image takes its reference corner
+    against that image, so seam pairs are neither dropped nor duplicated.
+    """
+    boxes = _box_predicates()
+
+    def tested(cond: Column) -> Column:
+        return cond if seam is None else cond | seam
+
+    keep = (F.col("_kt") == F.least(F.col("_lte"), F.col("_rte"))) & tested(boxes["intersects"])
+    if predicate in ("within", "covers", "contains", "equals"):
+        keep = keep & tested(boxes[predicate])
+    j = j.filter(keep)
+    if not ref_point:
+        return j
+    l0, m0, l1, _ = (F.col(f"_l{n}") for n in _BOX)
+    r0, s0, _, _ = (F.col(f"_r{n}") for n in _BOX)
+    px = F.greatest(l0, r0)
+    if seam is not None:
+        px = F.when(seam & (l1 < r0), F.greatest(l0, r0 - 360.0)).otherwise(px)
+    return _ref_point_filter(j, px, F.greatest(m0, s0))
 
 
 def tiered_extent_join_shuffle(
@@ -742,7 +772,7 @@ def tiered_extent_join_shuffle(
     key — the reference's full TieredSpatialJoin shape where neither side
     broadcasts (per-tier cogroups folded into one equi-join).
 
-    Tier discovery runs on BOTH sides (two tiny distinct aggregates —
+    Tier discovery runs on BOTH sides (one tiny aggregate each —
     TieredSpatialJoin.java:173-207 does the same with collectAsync), then
     each side emits its bbox cover at its own tier plus at every coarser
     tier PRESENT ON THE PARTNER side (cover re-derived per tier, so
@@ -753,46 +783,13 @@ def tiered_extent_join_shuffle(
     dropDuplicates (the reference pays a DedupeFilter + distinct here;
     at 10^8+ output pairs that distinct is the dominant shuffle).
     """
-    lx0, ly0, lx1, ly1 = lcols
-    rx0, ry0, rx1, ry1 = rcols
-    # localCheckpoint (MEMORY_AND_DISK, ContextCleaner-reclaimed): each
-    # side's bbox+tier projection computes once and serves both tier
-    # discovery and key generation
-    lc = left.select(left_id, lx0, ly0, lx1, ly1).withColumn(
-        "_te", _extent_tier_expr(lx0, ly0, lx1, ly1)).localCheckpoint()
-    rc = right.select(right_id, rx0, ry0, rx1, ry1).withColumn(
-        "_te", _extent_tier_expr(rx0, ry0, rx1, ry1)).localCheckpoint()
-    l_tiers = sorted(r[0] for r in lc.select("_te").distinct().collect())
-    r_tiers = sorted(r[0] for r in rc.select("_te").distinct().collect())
+    lc, l_tiers, _ = _tier_pass(_prefixed(left, left_id, lcols, "_l"), "_l")
+    rc, r_tiers, _ = _tier_pass(_prefixed(right, right_id, rcols, "_r"), "_r")
     if not l_tiers or not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-
-    lk = (
-        _extent_multitier_keys(lc, left_id, lx0, ly0, lx1, ly1, r_tiers)
-        .withColumnsRenamed({lx0: "_lx0", ly0: "_ly0", lx1: "_lx1", ly1: "_ly1", "_te": "_lte"})
-    )
-    rk = (
-        _extent_multitier_keys(rc, right_id, rx0, ry0, rx1, ry1, l_tiers)
-        .withColumnsRenamed({rx0: "_rx0", ry0: "_ry0", rx1: "_rx1", ry1: "_ry1", "_te": "_rte"})
-        .drop("_kt", "_cell")
-    )
-    j = lk.join(rk, "key")
-    # a pair's single meet tier is min(own tiers): keys at any common
-    # coarser tier are dropped here, keys at finer tiers never matched
-    j = j.filter(F.col("_kt") == F.least(F.col("_lte"), F.col("_rte")))
-    refine = (
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    )
-    j = j.filter(refine)
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col("_lx0"), F.col("_rx0")),
-        F.greatest(F.col("_ly0"), F.col("_ry0")),
-    )
-    return j.select(left_id, right_id)
+        return _empty_pairs(left, left_id, right, right_id)
+    lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
+    rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
+    return _candidate_filter(lk.join(rk, "key")).select(left_id, right_id)
 
 
 def semi_join_matches(points: DataFrame, pairs: DataFrame, point_id: str = "image_id") -> DataFrame:
@@ -839,12 +836,13 @@ def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
     return j.filter(_PAIRWISE_UDF[predicate](la, ra))
 
 
-def _box_box_predicate(predicate: str):
+def _box_predicates() -> dict[str, Column]:
     """JVM Column twin of each predicate for axis-aligned box × box pairs
     (exact interval algebra — the geometry IS its bbox).  Columns:
-    left (_lx0.._ly1), right (_rx0.._ry1, unbuffered)."""
-    l0, m0, l1, m1 = (F.col(c) for c in ("_lx0", "_ly0", "_lx1", "_ly1"))
-    r0, s0, r1, s1 = (F.col(c) for c in ("_rx0", "_ry0", "_rx1", "_ry1"))
+    left (_lx0.._ly1), right (_rx0.._ry1).  For any geometries the
+    containment-family entries are NECESSARY envelope conditions."""
+    l0, m0, l1, m1 = (F.col(f"_l{n}") for n in _BOX)
+    r0, s0, r1, s1 = (F.col(f"_r{n}") for n in _BOX)
     ix = (l0 <= r1) & (r0 <= l1) & (m0 <= s1) & (s0 <= m1)
     interiors = (l0 < r1) & (r0 < l1) & (m0 < s1) & (s0 < m1)
     l_cov_r = (l0 <= r0) & (m0 <= s0) & (l1 >= r1) & (m1 >= s1)
@@ -858,7 +856,7 @@ def _box_box_predicate(predicate: str):
         "contains": l_cov_r,  # positive-area boxes: covers == contains
         "equals": (l0 == r0) & (m0 == s0) & (l1 == r1) & (m1 == s1),
         "crosses": F.lit(False),  # area × area never crosses
-    }.get(predicate)
+    }
 
 
 def geometry_join(
@@ -910,17 +908,13 @@ def geometry_join(
     * left (big) side: bbox via one Arrow-batched UDF, span-based adaptive
       tier (<= 4 cells, pure Column math), keys at its own tier plus
       truncations to each coarser right-side tier;
-    * equi-join on the packed key → JVM bbox prefilter → exact pairwise
-      refine (st_intersects_wkt / st_distance_wkt, candidate pairs only)
-      → dedupe (DedupeFilter semantics — extents meet in multiple cells).
+    * equi-join on the packed key → JVM candidate filter (meet tier,
+      envelopes) → exact pairwise refine (st_intersects_wkt /
+      st_distance_wkt, candidate pairs only) → dedupe (DedupeFilter
+      semantics — extents meet in multiple cells).
 
     Output: (left_id, right_id) pairs.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .. import geom
-
     if predicate not in GEOMETRY_JOIN_PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     buffer = radius if predicate == "dwithin" else 0.0
@@ -936,147 +930,54 @@ def geometry_join(
             left_bbox_cols=left_bbox_cols,
         )
     rows = [(r[0], r[1]) for r in right.select(right_id, right_wkt).collect()]
-    if not rows:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-
-    covers = geo_udfs.cover_keys(
-        pd.Series([w for _, w in rows]),
-        max_cells=max_cells, buffer=buffer,
-        # exactly-once emission needs FULL bbox covers: the PBSM reference
-        # point is a bbox-intersection corner, which a geometry-trimmed
-        # cover may not contain
-        trim=not buffer and not exactly_once,
-        # boundary-closed cover: a right geometry whose upper edge lies
-        # exactly on a cell line still meets left extents touching it from
-        # the next cell (the Column-math left cover is already closed).
-        # Buffered (dwithin) covers need this too: a partner at EXACTLY
-        # distance `radius` on a cell line past the buffered bbox's upper
-        # edge lands in the next cell, and the refine's <= would accept it.
-        closed=True,
+    # boundary-closed covers (see _cover_rows) + truncations to every
+    # coarser tier; exactly-once emission needs FULL bbox covers: the PBSM
+    # reference point is a bbox-intersection corner, which a
+    # geometry-trimmed cover may not contain
+    cell_rows, r_tiers = _cover_rows(
+        rows, max_cells=max_cells, buffer=buffer, trim=not exactly_once, coarser=True
     )
-    cell_rows: list[tuple] = []
-    r_tiers: set[int] = set()
-    for (rid, wkt), keys in zip(rows, covers):
-        g = geom.geometry_from_wkt(wkt)
-        bx0, by0, bx1, by1 = g.bbox
-        # this right geometry IS its bbox (axis-aligned box, no holes, in
-        # range): box×box candidates can refine JVM-side (interval algebra)
-        rbox = bool(g.is_box() and bx1 <= 180.0)
-        keys = np.asarray(keys, dtype=np.int64)
-        if not keys.size:
-            continue
-        tp, cover = cells.unpack_key(keys)
-        tp = int(tp[0])
-        r_tiers.add(tp)
-        for t in range(tp, -1, -1):
-            tc = np.unique(cells.cell_at_tier(cover, tp, t))
-            for k in cells.pack_key(t, tc).tolist():
-                cell_rows.append(
-                    (int(k), rid, float(bx0 - buffer), float(by0 - buffer),
-                     float(bx1 + buffer), float(by1 + buffer), rbox, tp)
-                )
     if not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-
+        return _empty_pairs(left, left_id, right, right_id)
+    # right bboxes pre-buffered for dwithin; _rbox: this right geometry IS
+    # its bbox (axis-aligned box, no holes, in range), so box×box
+    # candidates can refine JVM-side (interval algebra)
+    b = buffer
+    right_rows = [
+        (k, rid, x0 - b, y0 - b, x1 + b, y1 + b, isb and x1 <= 180.0, tp)
+        for k, rid, _w, x0, y0, x1, y1, isb, tp in cell_rows
+    ]
     right_cells = F.broadcast(
         spark.createDataFrame(
-            cell_rows,
-            "key long, _rid string, _rx0 double, _ry0 double, _rx1 double, _ry1 double, _rbox boolean, _rtp int",
+            right_rows,
+            "key long, _rid string, _rx0 double, _ry0 double, _rx1 double, _ry1 double, _rbox boolean, _rte int",
         )
     )
     right_wkts = F.broadcast(
         spark.createDataFrame(list(rows), "_rid string, _rwkt string")
     )
 
-    if left_bbox_cols is not None:
-        bx0, by0, bx1, by1 = left_bbox_cols
-        lb = left.select(
-            left_id,
-            F.col(left_wkt).alias("_lwkt"),
-            F.col(bx0).alias("_lx0"), F.col(by0).alias("_ly0"),
-            F.col(bx1).alias("_lx1"), F.col(by1).alias("_ly1"),
-        )
-    else:
-        lb = left.select(left_id, left_wkt).withColumn(
-            "_bb", geo_udfs.st_bbox(F.col(left_wkt))
-        ).select(
-            left_id,
-            F.col(left_wkt).alias("_lwkt"),
-            F.col("_bb.x0").alias("_lx0"), F.col("_bb.y0").alias("_ly0"),
-            F.col("_bb.x1").alias("_lx1"), F.col("_bb.y1").alias("_ly1"),
-        )
-    ec = lb.withColumn("_te", _extent_tier_expr("_lx0", "_ly0", "_lx1", "_ly1"))
-    lk = _extent_multitier_keys(
-        ec, left_id, "_lx0", "_ly0", "_lx1", "_ly1", sorted(r_tiers),
-        extra_cols=("_lwkt",),
+    lb, bbox = _with_bbox(left, left_id, left_wkt, left_bbox_cols)
+    lb = lb.select(
+        left_id, F.col(left_wkt).alias("_lwkt"),
+        *[c.alias(f"_l{n}") for c, n in zip(bbox, _BOX)],
+    )
+    lk = _extent_multitier_keys(lb, left_id, "_l", r_tiers, extra_cols=("_lwkt",))
+    # the meet-tier rule cuts the cross-tier duplicate candidates BEFORE
+    # the Arrow refine with zero extra exchange (a measured dedupe-exchange
+    # here costs more than the duplicate refines it saves); only the <= 4
+    # same-tier multi-cell duplicates remain for the cheap post-refine
+    # dropDuplicates — or none, with the reference point (exactly_once).
+    # Either side unwrapped across the antimeridian (x1 > 180): envelopes
+    # are not comparable in plain coordinates, exactness comes from the
+    # pairwise refine, which tests the right geometry's -360 image
+    j = _candidate_filter(
+        lk.join(right_cells, "key"), predicate,
+        seam=(F.col("_rx1") > 180.0) | (F.col("_lx1") > 180.0),
+        ref_point=exactly_once,
     )
 
-    j = lk.join(right_cells, "key")
-    # meet-tier filter (the shuffle twin's exactly-once-per-tier rule): a
-    # true pair always shares a key at tier min(left own, right own) — a
-    # geometry point inside the bbox overlap keys a trimmed right cell
-    # whose ancestor both sides emit.  This cuts the cross-tier duplicate
-    # candidates BEFORE the Arrow refine with zero extra exchange (a
-    # measured dedupe-exchange here costs more than the duplicate refines
-    # it saves); only the <= 4 same-tier multi-cell duplicates remain for
-    # the cheap post-refine dropDuplicates.
-    j = j.filter(F.col("_kt") == F.least(F.col("_te"), F.col("_rtp")))
-    # JVM bbox prefilter (right bbox pre-buffered for dwithin); unwrapped
-    # antimeridian right geometries (x1 > 180) skip it — exactness comes
-    # from the pairwise refine which tests the +360 copy
-    prefilter = (
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    ) | (F.col("_rx1") > 180.0)
-    j = j.filter(prefilter)
-    # containment-family predicates admit a stronger JVM-side NECESSARY
-    # envelope condition than plain overlap (within(l,r) ⇒ bbox(l) ⊆
-    # bbox(r), covers/contains(l,r) ⇒ bbox(l) ⊇ bbox(r), equals ⇒ equal
-    # envelopes) — it prunes most candidates before the Arrow refine ever
-    # sees them.  Unwrapped antimeridian right geometries keep the escape.
-    l_in_r = (
-        (F.col("_lx0") >= F.col("_rx0")) & (F.col("_lx1") <= F.col("_rx1"))
-        & (F.col("_ly0") >= F.col("_ry0")) & (F.col("_ly1") <= F.col("_ry1"))
-    )
-    r_in_l = (
-        (F.col("_lx0") <= F.col("_rx0")) & (F.col("_lx1") >= F.col("_rx1"))
-        & (F.col("_ly0") <= F.col("_ry0")) & (F.col("_ly1") >= F.col("_ry1"))
-    )
-    necessary = {
-        "within": l_in_r,
-        "covers": r_in_l,
-        "contains": r_in_l,
-        "equals": l_in_r & r_in_l,
-    }.get(predicate)
-    if necessary is not None and not buffer:
-        # either side unwrapped across the antimeridian → envelopes are not
-        # comparable in plain coordinates; leave those to the exact refine
-        j = j.filter(necessary | (F.col("_rx1") > 180.0) | (F.col("_lx1") > 180.0))
-
-    if exactly_once:
-        # PBSM reference-point emission BEFORE the refine: every candidate
-        # pair survives in exactly the one (tier, cell) containing the
-        # lower-left corner of bbox(l) ∩ bbox(r) (right bbox pre-buffered
-        # for dwithin) — no dropDuplicates anywhere in the plan.
-        # Unwrapped antimeridian right geometries (_rx1 > 180, cover split
-        # across the seam by _split_for_cover): when the pair overlaps the
-        # plain copy in x, the plain corner is the witness cell (wrapped-
-        # side duplicates fail the equality); when it meets ONLY the
-        # wrapped copy, the corner is taken against the -360-shifted right
-        # bbox — both cases land in exactly one shared candidate cell, so
-        # seam pairs are neither dropped nor duplicated (review r5 fix;
-        # tests/test_geometry_join.py::test_exactly_once_antimeridian).
-        j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-        j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-        wrapped_only = (F.col("_rx1") > 180.0) & (F.col("_lx1") < F.col("_rx0"))
-        px = F.when(
-            wrapped_only, F.greatest(F.col("_lx0"), F.col("_rx0") - 360.0)
-        ).otherwise(F.greatest(F.col("_lx0"), F.col("_rx0")))
-        j = _ref_point_filter(
-            j, px, F.greatest(F.col("_ly0"), F.col("_ry0"))
-        )
-
-    box_pred = _box_box_predicate(predicate) if left_is_box and not buffer else None
+    box_pred = _box_predicates().get(predicate) if left_is_box else None
     if box_pred is not None:
         # box×box candidates never touch Python OR the WKT column: the
         # interval-algebra predicate refines them inside the same codegen
@@ -1088,7 +989,7 @@ def geometry_join(
         )
         if not exactly_once:
             j_box = j_box.dropDuplicates([left_id, right_id])
-        if all(r[6] for r in cell_rows):  # every right geometry is a box
+        if all(r[6] for r in right_rows):  # every right geometry is a box
             return j_box
         j_gen = _pairwise_refine(
             j.filter(~F.col("_rbox")).join(right_wkts, "_rid"), predicate, radius
@@ -1117,7 +1018,6 @@ def geometry_join_shuffle(
     right_id: str = "right_id",
     left_wkt: str = "wkt",
     right_wkt: str = "wkt",
-    carry_wkt: bool = False,
     left_bbox_cols: tuple[str, str, str, str] | None = None,
 ) -> DataFrame:
     """BIG × BIG geometry join: both sides bbox'd (one Arrow UDF each),
@@ -1128,143 +1028,47 @@ def geometry_join_shuffle(
     dwithin buffers the LEFT bbox by radius before tiering (sufficient:
     any pair within r overlaps after one side's expansion).
 
-    ``carry_wkt``: False (default) keeps the keyed shuffle NARROW (ids +
-    bboxes only), dedupes candidate id pairs first, then joins the WKTs
+    The keyed shuffle stays NARROW (ids + bboxes only): candidate id pairs
+    come out unique (deduped only after a seam split), then the WKTs join
     back by id for the refine — measured faster already at 60-byte WKTs
     (BENCH.md), and the gap widens with geometry size since the text is
-    never duplicated into covering-cell rows.  True rides the WKT through
-    the single keyed shuffle (fewer joins; fine for tiny geometry sets).
+    never duplicated into covering-cell rows.
 
     ``left_bbox_cols``: precomputed left envelopes — skips the WKT→bbox
     Arrow pass (same contract as geometry_join).
 
     Unwrapped antimeridian WKTs (x1 > 180, the LongitudeDefinition
     convention) are handled like the broadcast path: the envelope is SPLIT
-    into its [-180,180] images ([x0,180] plus [-180, x1-360]) so the cell
-    cover reaches both sides of the wrap; exactness then comes from the
-    pairwise refine, which also evaluates the -360-shifted image.
+    into its [-180,180] images (`_seam_split`) so the cell cover reaches
+    both sides of the wrap; exactness then comes from the pairwise refine,
+    which also evaluates the -360-shifted image.  The containment-family
+    envelope conditions are tested on the images: a pair related by a
+    containment predicate has one pair of images that satisfies them.
     """
     if predicate not in GEOMETRY_JOIN_PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
     buffer = radius if predicate == "dwithin" else 0.0
 
-    def bboxed(df, id_col, wkt_col, prefix, pad, bbox_cols=None):
-        if bbox_cols is not None:
-            x0c, y0c, x1c, y1c = (F.col(c) for c in bbox_cols)
-            b = df.select(id_col, wkt_col, *bbox_cols)
-        else:
-            b = df.select(id_col, wkt_col).withColumn(
-                "_bb", geo_udfs.st_bbox(F.col(wkt_col))
-            )
-            x0c, y0c, x1c, y1c = (F.col(f"_bb.{c}") for c in ("x0", "y0", "x1", "y1"))
-        # antimeridian-crossing envelopes (x1 > 180) split into two
-        # in-range images; everything else keeps one row (_seg = 0).
-        # dwithin padding below -180 is clamped, not wrapped: the pairwise
-        # kernel is planar, so no cross-meridian match exists there to keep
-        b = b.withColumn(
-            "_seg",
-            F.explode(
-                F.when((x1c + pad) > 180.0, F.array(F.lit(0), F.lit(1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        wrapped = F.col("_seg") == 1
-        return b.select(
-            id_col,
-            "_seg",
-            ((x1c + pad) > 180.0).alias(f"{prefix}split"),
-            F.col(wkt_col).alias(f"{prefix}wkt"),
-            F.when(wrapped, F.lit(-180.0))
-            .otherwise(F.greatest(x0c - pad, F.lit(-180.0)))
-            .alias(f"{prefix}x0"),
-            (y0c - pad).alias(f"{prefix}y0"),
-            F.when(wrapped, x1c + pad - 360.0)
-            .otherwise(F.least(x1c + pad, F.lit(180.0)))
-            .alias(f"{prefix}x1"),
-            (y1c + pad).alias(f"{prefix}y1"),
-        )
+    def side(df, id_col, wkt_col, p, pad, bbox_cols=None):
+        df, bbox = _with_bbox(df, id_col, wkt_col, bbox_cols)
+        keep = (id_col, F.col(wkt_col).alias(f"{p}wkt"))
+        return _tier_pass(_seam_split(df, bbox, p, pad=pad, keep=keep), p)
 
-    lb = bboxed(left, left_id, left_wkt, "_l", buffer, left_bbox_cols)
-    rb = bboxed(right, right_id, right_wkt, "_r", 0.0)
-    l_extra = ("_lwkt",) if carry_wkt else ()
-    r_extra = ("_rwkt",) if carry_wkt else ()
-    lc = lb.withColumn(
-        "_te", _extent_tier_expr("_lx0", "_ly0", "_lx1", "_ly1")
-    ).localCheckpoint()
-    rc = rb.withColumn(
-        "_te", _extent_tier_expr("_rx0", "_ry0", "_rx1", "_ry1")
-    ).localCheckpoint()
-    # one pass per side: own-tier set for the symmetric truncation AND
-    # whether any antimeridian split happened (split envelopes are the one
-    # case where a pair can be emitted from two different segment pairs)
-    lrow = lc.agg(F.collect_set("_te"), F.max("_seg")).first()
-    rrow = rc.agg(F.collect_set("_te"), F.max("_seg")).first()
-    l_tiers, r_tiers = sorted(lrow[0] or []), sorted(rrow[0] or [])
+    lc, l_tiers, l_split = side(left, left_id, left_wkt, "_l", buffer, left_bbox_cols)
+    rc, r_tiers, r_split = side(right, right_id, right_wkt, "_r", 0.0)
     if not l_tiers or not r_tiers:
-        return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
-    any_split = bool(lrow[1]) or bool(rrow[1])
-    lk = _extent_multitier_keys(
-        lc, left_id, "_lx0", "_ly0", "_lx1", "_ly1", r_tiers,
-        extra_cols=l_extra + ("_lsplit",),
-    ).withColumnRenamed("_te", "_lte")
-    rk = (
-        _extent_multitier_keys(
-            rc, right_id, "_rx0", "_ry0", "_rx1", "_ry1", l_tiers,
-            extra_cols=r_extra + ("_rsplit",),
-        )
-        .withColumnRenamed("_te", "_rte")
-        .drop("_kt", "_cell")
-    )
-    j = lk.join(rk, "key")
-    j = j.filter(F.col("_kt") == F.least(F.col("_lte"), F.col("_rte")))
-    j = j.filter(
-        (F.col("_lx0") <= F.col("_rx1")) & (F.col("_lx1") >= F.col("_rx0"))
-        & (F.col("_ly0") <= F.col("_ry1")) & (F.col("_ly1") >= F.col("_ry0"))
-    )
-    # containment-family necessary envelope conditions (same pruning as the
-    # broadcast path): within(l,r) ⇒ bbox(l) ⊆ bbox(r) etc.  Only valid on
-    # UNSPLIT envelopes — an antimeridian-split geometry's per-image boxes
-    # are not its full envelope, so split rows skip straight to the refine
-    l_in_r = (
-        (F.col("_lx0") >= F.col("_rx0")) & (F.col("_lx1") <= F.col("_rx1"))
-        & (F.col("_ly0") >= F.col("_ry0")) & (F.col("_ly1") <= F.col("_ry1"))
-    )
-    r_in_l = (
-        (F.col("_lx0") <= F.col("_rx0")) & (F.col("_lx1") >= F.col("_rx1"))
-        & (F.col("_ly0") <= F.col("_ry0")) & (F.col("_ly1") >= F.col("_ry1"))
-    )
-    necessary = {
-        "within": l_in_r,
-        "covers": r_in_l,
-        "contains": r_in_l,
-        "equals": l_in_r & r_in_l,
-    }.get(predicate)
-    if necessary is not None and not buffer:
-        j = j.filter(necessary | F.col("_lsplit") | F.col("_rsplit"))
-    # PBSM reference point: each candidate (envelope, envelope) pair
-    # survives in exactly one (tier, cell) — candidate pairs are unique
-    # WITHOUT any dropDuplicates shuffle unless a split occurred
-    j = j.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    j = j.withColumn("_rm", F.col("_rd").cast("long") - 1)
-    j = _ref_point_filter(
-        j,
-        F.greatest(F.col("_lx0"), F.col("_rx0")),
-        F.greatest(F.col("_ly0"), F.col("_ry0")),
-    )
-    if not carry_wkt:
-        # narrow path: candidate id pairs (already unique unless split),
-        # then join the geometry text back by id for the refine (the WKT
-        # lookups dedupe by id: split antimeridian envelopes carry the
-        # same WKT on both _seg rows)
-        pairs = j.select(left_id, right_id)
-        if any_split:
-            pairs = pairs.dropDuplicates([left_id, right_id])
-        j = pairs.join(
-            lb.select(left_id, "_lwkt").dropDuplicates([left_id]), left_id
-        ).join(rb.select(right_id, "_rwkt").dropDuplicates([right_id]), right_id)
-    j = _pairwise_refine(j, predicate, radius)
-    out = j.select(left_id, right_id)
-    return out if not (carry_wkt and any_split) else out.dropDuplicates([left_id, right_id])
+        return _empty_pairs(left, left_id, right, right_id)
+    lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
+    rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
+    pairs = _candidate_filter(lk.join(rk, "key"), predicate).select(left_id, right_id)
+    if l_split or r_split:
+        # two images of one geometry can each pass the reference point
+        pairs = pairs.dropDuplicates([left_id, right_id])
+    # the geometry text joins back by id from each side's first image
+    j = pairs.join(
+        lc.filter(F.col("_seg") == 0).select(left_id, "_lwkt"), left_id
+    ).join(rc.filter(F.col("_seg") == 0).select(right_id, "_rwkt"), right_id)
+    return _pairwise_refine(j, predicate, radius).select(left_id, right_id)
 
 
 def brute_force_join(

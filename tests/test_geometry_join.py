@@ -282,21 +282,52 @@ def test_knn_adaptive_many_queries(spark):
 
 
 def test_geometry_join_shuffle_narrow_wkt_path(spark):
-    """carry_wkt=False (narrow keyed shuffle, WKT joined back by id)
-    produces identical pairs to the default path."""
+    """The shuffle path (narrow keyed shuffle, WKT joined back by id after
+    the candidate filter) returns the broadcast path's pairs, for
+    intersects and for dwithin."""
     segs = _event_segments(spark)
     right = spark.createDataFrame(_geoms_mixed(), ["right_id", "wkt"])
-    wide = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, carry_wkt=True).collect()))
-    narrow = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, carry_wkt=False).collect()))
-    assert wide == narrow and len(narrow) > 0
-    # dwithin too
-    wide_d = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, predicate="dwithin", radius=1.0, carry_wkt=True).collect()))
-    narrow_d = sorted(map(tuple, spatial_join.geometry_join_shuffle(
-        segs, right, predicate="dwithin", radius=1.0, carry_wkt=False).collect()))
-    assert wide_d == narrow_d and len(narrow_d) > 0
+    for predicate, radius in [("intersects", 0.0), ("dwithin", 1.0)]:
+        bc = sorted(map(tuple, spatial_join.geometry_join(
+            segs, right, predicate=predicate, radius=radius).collect()))
+        sh = sorted(map(tuple, spatial_join.geometry_join_shuffle(
+            segs, right, predicate=predicate, radius=radius).collect()))
+        assert sh == bc and len(sh) > 0, predicate
+
+
+def test_shuffle_containment_predicates_across_the_seam(spark):
+    """within / covers / contains / equals on geometries crossing +180:
+    the shuffle path tests the containment envelope conditions on each
+    seam image, and must still return every pair the exact kernel accepts
+    (brute force: cross join + the same pairwise refine), like the
+    broadcast path."""
+    left = spark.createDataFrame(
+        [("seam", "POLYGON ((178 0, 182 0, 182 2, 178 2, 178 0))"),
+         ("west_in", "POLYGON ((-179.5 0.5, -178.5 0.5, -178.5 1.5, -179.5 1.5, -179.5 0.5))"),
+         ("east_in", "POLYGON ((179 0.5, 179.5 0.5, 179.5 1, 179 1, 179 0.5))"),
+         ("same", "POLYGON ((177 -1, 183 -1, 183 3, 177 3, 177 -1))"),
+         ("cover", "POLYGON ((170 -5, 190 -5, 190 5, 170 5, 170 -5))"),
+         ("line", "LINESTRING (179.2 0.2, 181 1.5)")],
+        ["left_id", "wkt"],
+    )
+    right = spark.createDataFrame(
+        [("R1", "POLYGON ((177 -1, 183 -1, 183 3, 177 3, 177 -1))"),
+         ("R2", "POLYGON ((-179.8 0.2, -178 0.2, -178 1.8, -179.8 1.8, -179.8 0.2))"),
+         ("R3", "POLYGON ((179.1 0.1, 180.9 0.1, 180.9 1.9, 179.1 1.9, 179.1 0.1))")],
+        ["right_id", "wkt"],
+    )
+    cross = left.select("left_id", F.col("wkt").alias("_lwkt")).crossJoin(
+        right.select("right_id", F.col("wkt").alias("_rwkt")))
+    for predicate in ("within", "covers", "contains", "equals", "intersects"):
+        want = sorted(map(tuple, spatial_join._pairwise_refine(
+            cross, predicate, 0.0).select("left_id", "right_id").collect()))
+        sh = sorted(map(tuple, spatial_join.geometry_join_shuffle(
+            left, right, predicate=predicate).collect()))
+        bc = sorted(map(tuple, spatial_join.geometry_join(
+            left, right, predicate=predicate).collect()))
+        assert sh == want and bc == want, (predicate, sh, bc, want)
+        if predicate != "equals":
+            assert want, predicate
 
 
 def test_shuffle_dwithin_near_antimeridian_keeps_same_side_matches(spark):
@@ -454,7 +485,8 @@ def test_geometry_join_routes_oversized_build_to_shuffle(spark, monkeypatch):
 def test_tiered_extent_join_routes_oversized_build_to_shuffle(spark, monkeypatch):
     """Regression (r2 review): tiered_extent_join collected the polygon
     side unguarded; it now probes the build side and routes oversized
-    builds to tiered_extent_join_shuffle with identical results."""
+    builds to tiered_extent_join_shuffle.  Both routes return exactly the
+    closed-form bbox-intersect pairs."""
     ex = spark.createDataFrame(
         [(f"e{i}", i * 1.0, 0.0, i * 1.0 + 0.8, 0.8) for i in range(25)],
         ["extent_id", "x0", "y0", "x1", "y1"],
@@ -469,11 +501,18 @@ def test_tiered_extent_join_routes_oversized_build_to_shuffle(spark, monkeypatch
         ],
         ["polygon_id", "wkt"],
     )
+    # closed-form bbox-intersect oracle (boundary-inclusive): extent i is
+    # [i, i + 0.8] x [0, 0.8], polygon j is [j + 0.5, j + 1.2] x [0.2, 0.9]
+    oracle = sorted(
+        (f"e{i}", f"p{j}")
+        for i in range(25) for j in range(25)
+        if i <= j + 1.2 and i + 0.8 >= j + 0.5
+    )
     expect = sorted(map(tuple, spatial_join.tiered_extent_join(ex, polys).collect()))
-    assert expect  # non-trivial workload
+    assert expect == oracle
     monkeypatch.setattr(spatial_join, "BROADCAST_MAX_POLYGONS", 5)
     routed = sorted(map(tuple, spatial_join.tiered_extent_join(ex, polys).collect()))
-    assert routed == expect
+    assert routed == oracle
 
 
 def test_exactly_once_plan_matches_default(spark):

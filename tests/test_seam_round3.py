@@ -1,12 +1,15 @@
 """Round-3 review regressions: +180 seam reachability, world-spanning
 shuffle-join bboxes, degenerate seam extents, empty-polygon carry_cols,
-and wrapped spatio-temporal lookups."""
+and wrapped spatio-temporal lookups; seam polygons on both point-join
+paths against the brute-force oracle."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -83,6 +86,74 @@ def test_shuffle_join_world_spanning_buffered_bbox(spark):
         ).collect()
     )
     assert got == [1, 2, 3]
+
+
+# seam box (unwrapped, x1 > 180), a box ending just west of +180, the
+# world box, a west-edge box and an unwrapped seam triangle
+_SEAM_POLYGONS = [
+    ("seam_box", "POLYGON ((175 -10, 185 -10, 185 10, 175 10, 175 -10))"),
+    ("east_box", "POLYGON ((177.93 -52.62, 179.99 -52.62, 179.99 -52.54, "
+                 "177.93 -52.54, 177.93 -52.62))"),
+    ("world_box", "POLYGON ((-180 30, 180 30, 180 32, -180 32, -180 30))"),
+    ("west_box", "POLYGON ((-180 -30, -176 -30, -176 -20, -180 -20, -180 -30))"),
+    ("seam_tri", "POLYGON ((175 40, 185 40, 180 50, 175 40))"),
+]
+
+
+def _seam_points(spark):
+    """Random points, denser near the seam, plus hand-placed ones: the
+    point at lon -179.8 near east_box, and points on each side of +-180."""
+    rng = np.random.RandomState(20261017)
+    lon = np.concatenate([rng.uniform(-180, 180, 1500), rng.uniform(-180, -170, 400),
+                          rng.uniform(170, 180, 400)])
+    lat = rng.uniform(-60, 60, lon.size)
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    rows += [(10_000, -179.80, -52.25), (10_001, 179.9, 0.0), (10_002, -179.9, 0.0),
+             (10_003, -178.0, 42.0), (10_004, -177.0, 31.0), (10_005, 178.5, -25.0)]
+    return spark.createDataFrame(rows, "image_id long, lon double, lat double")
+
+
+@pytest.mark.parametrize("predicate,radius", [("intersects", 0.0), ("dwithin", 0.5), ("dwithin", 3.0)])
+def test_seam_polygons_match_brute_force_on_both_paths(spark, predicate, radius):
+    """Both point-join paths (broadcast and shuffle, salted or not) return
+    exactly the brute-force pairs for seam, world and west-edge polygons.
+    The broadcast path's box refine measures dwithin against the point's
+    lon + 360 copy for every box; the Arrow kernel must do the same, or
+    the paths disagree near -180 (point (-179.80, -52.25) vs east_box)."""
+    pts = _seam_points(spark)
+    polys = spark.createDataFrame(_SEAM_POLYGONS, "polygon_id string, wkt string")
+    want = sorted(map(tuple, spatial_join.brute_force_join(
+        pts, polys, predicate=predicate, radius=radius).collect()))
+    assert want
+    if predicate == "dwithin" and radius == 0.5:
+        assert (10_000, "east_box") in want
+    for broadcast in (True, False):
+        for salt in (0, 3):
+            got = sorted(map(tuple, spatial_join.tiered_spatial_join(
+                pts, polys, predicate=predicate, radius=radius,
+                broadcast_polygons=broadcast, salt=salt,
+            ).collect()))
+            assert got == want, (broadcast, salt)
+
+
+def test_shuffle_join_build_runs_three_jobs(spark):
+    """Planning the shuffle path (bbox pass, seam split, tier discovery)
+    runs one localCheckpoint and one aggregate: at most 3 Spark jobs."""
+    pts = _seam_points(spark)
+    polys = spark.createDataFrame(_SEAM_POLYGONS, "polygon_id string, wkt string")
+    sc = spark.sparkContext
+    for predicate, radius in [("intersects", 0.0), ("dwithin", 3.0)]:
+        group = f"shuffle-join-build-{predicate}"
+        sc.setJobGroup(group, "shuffle join build job count")
+        try:
+            out = spatial_join.tiered_spatial_join(
+                pts, polys, predicate=predicate, radius=radius, broadcast_polygons=False
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= 3, (predicate, n_jobs)
+        assert out.count() > 0
 
 
 def test_geometry_join_degenerate_seam_extent(spark):

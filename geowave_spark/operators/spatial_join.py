@@ -101,10 +101,7 @@ def add_point_cols(
 ) -> DataFrame:
     """Ensure lon/lat columns exist (derived from phash if absent) and add
     the finest-tier Morton cell — all JVM-side."""
-    if lon_col not in df.columns:
-        df = df.withColumn(lon_col, sqlcells.lon_from_phash(F.col(phash_col))).withColumn(
-            lat_col, sqlcells.lat_from_phash(F.col(phash_col))
-        )
+    df = sqlcells._with_phash_coords(df, lon_col, lat_col, phash_col)
     return sqlcells.add_cell_column(
         df, lon_col, lat_col, cells.MAX_TIER, "_cell31", bounds=bounds
     )

@@ -126,9 +126,8 @@ def st_range_query(
     )
     if not loose:
         out = out.filter((eus >= t0_us) & (eus <= t1_us))
-    # return the CALLER's schema: drop the helper key columns this function
-    # added (range_lookup's own drop guard sees _cell31 as pre-existing
-    # because add_st_cols added it first, so it would leak through)
+    # return the CALLER's schema: drop the helper key columns add_st_cols
+    # added
     return range_lookup(out, bbox, lon_col=lon_col, lat_col=lat_col, loose=loose).drop(*added)
 
 

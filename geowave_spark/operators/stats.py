@@ -11,12 +11,12 @@ Spark twins of the reference's ingest-maintained statistics and query paths:
 * ``subsample_cells`` — fixed-resolution render subsampling: keep one row
   per coarse SFC cell (NativeEntryIteratorWrapper.java:47-58,160-166) as
   ``groupBy(coarse_cell).agg(min(id))``.
-* ``range_lookup`` — bbox query via driver-side cell-cover computation
-  pushed down as a sargable cell filter + exact bbox refine — the
-  DataStore.query range-planning path (TieredSFCIndexStrategy
-  .getQueryRanges:109-158) re-expressed as Catalyst filters that reach the
-  Parquet/Iceberg scan (PushedFilters), then min-max/partition pruning does
-  what the KV range scan did.
+* ``range_lookup`` — bbox query over any point frame; a frame with a
+  stored ``cell`` column delegates to the one stored-cell lookup
+  (``sources.indexed.range_filter_frame``: the DataStore.query
+  range-planning path, TieredSFCIndexStrategy.getQueryRanges:109-158, as
+  a Catalyst filter that reaches the Parquet/Iceberg scan), any other
+  frame is an exact bbox filter.
 """
 
 from __future__ import annotations
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cells, sqlcells
+from .. import sqlcells
 from .spatial_join import add_point_cols
 
 
@@ -99,45 +99,30 @@ def subsample_cells(
 def range_lookup(
     points: DataFrame,
     bbox: tuple[float, float, float, float],
-    max_cells: int = 256,
     lon_col: str = "lon",
     lat_col: str = "lat",
     loose: bool = False,
 ) -> DataFrame:
-    """All point rows inside bbox, planned like the reference's range query:
+    """All point rows inside bbox (lon/lat derived from ``phash`` when
+    absent).
 
-    1. driver-side: adaptive cell cover of the bbox (numpy, closed-form) —
-       the analog of getQueryRanges' per-tier SFC range decomposition;
-    2. when the table carries a STORED ``cell`` column (the indexed layout,
-       sources/indexed.py), the cover becomes a sargable range predicate
-       that reaches the parquet scan (PushedFilters → row-group pruning) —
-       the true equivalent of the reference's KV range scan;
-    3. exact bbox refine in plain SQL comparisons (skipped when loose=True,
-       the IndexOnlySpatialQuery semantics).
+    A frame with a STORED ``cell`` column (the indexed layout,
+    sources/indexed.py) goes through the shared stored-cell lookup,
+    ``indexed.range_filter_frame``: a sargable cell-range predicate that
+    reaches the parquet scan, then the exact antimeridian-aware refine
+    (skipped when loose=True, the IndexOnlySpatialQuery semantics).
 
-    For tables WITHOUT a stored cell column the cell predicate is skipped:
-    filtering on a freshly computed cell cannot prune the scan, and
-    pushing a multi-reference predicate down through the cell-computation
-    projection chain makes Catalyst re-inline the definition per reference
+    A frame without one gets the exact bbox refine only, loose or not:
+    a freshly computed cell cannot prune the scan, and a predicate on it
+    makes Catalyst re-inline the cell projection chain per reference
     (exponential optimizer blowup — observed, not hypothetical).
     """
-    pts = add_point_cols(points, lon_col, lat_col)
-    has_index = "cell" in points.columns
-    if has_index:
-        # one shared implementation of the boundary-closed cover → range
-        # predicate (sources/indexed.cell_range_predicate) — the seam /
-        # closed-edge conventions live in exactly one place
-        from ..sources.indexed import cell_range_predicate
+    pts = sqlcells._with_phash_coords(points, lon_col, lat_col)
+    if "cell" in pts.columns:
+        from ..sources.indexed import range_filter_frame
 
-        pred, _ = cell_range_predicate(bbox, max_cells=max_cells, col="cell")
-        pts = pts.filter(pred if pred is not None else F.lit(False))
-    # loose (IndexOnlySpatialQuery) skips only the EXACT refine — it still
-    # requires an index pre-filter; without a stored cell column the bbox
-    # filter IS the scan filter and must apply regardless
-    if not loose or not has_index:
-        pts = pts.filter(sqlcells.bbox_refine_pred(F.col(lon_col), F.col(lat_col), bbox))
-    # the helper _cell31 column is internal — return the caller's schema
-    return pts.drop("_cell31") if "_cell31" not in points.columns else pts
+        return range_filter_frame(pts, bbox, lon_col, lat_col, loose)
+    return pts.filter(sqlcells.bbox_refine_pred(F.col(lon_col), F.col(lat_col), bbox))
 
 
 def write_stats_table(

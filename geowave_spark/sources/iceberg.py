@@ -31,7 +31,6 @@ import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from . import indexed
 
@@ -100,13 +99,7 @@ def write_indexed_iceberg(
             "ICEBERG_SESSION_CONF"
         )
     out = indexed.with_cell_column(df, lon_col, lat_col, phash_col)
-    (
-        out.repartitionByRange(n_files, F.col("cell"))
-        .sortWithinPartitions("cell")
-        .writeTo(table)
-        .using("iceberg")
-        .createOrReplace()
-    )
+    indexed._sorted_layout(out, n_files, "cell").writeTo(table).using("iceberg").createOrReplace()
     spark.sql(write_ordered_ddl(table))
 
 
@@ -170,14 +163,7 @@ class IndexedStore:
         file-level pruning from the pinned sort order).  ``lon_col`` /
         ``lat_col`` mirror write()'s overrides — a store written with
         custom coordinate columns is queried with the same names."""
-        if self.iceberg:
-            return indexed.range_filter_frame(
-                self.spark.table(self.location), bbox, lon_col, lat_col, loose
-            )
-        return indexed.range_lookup_indexed(
-            self.spark, self.location, bbox,
-            lon_col=lon_col, lat_col=lat_col, loose=loose,
-        )
+        return indexed.range_filter_frame(self.read(), bbox, lon_col, lat_col, loose)
 
     def fingerprint(self) -> str:
         """Checkpoint fingerprint: snapshot id (Iceberg) or content hash

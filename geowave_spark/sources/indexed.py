@@ -1,18 +1,25 @@
-"""Cell-indexed table layout — the storage-side index.
+"""Cell-indexed table layouts — the storage-side index.
 
 The reference's core trick is that the KV row key IS the spatial index, so
 range scans touch only matching tablets (SURVEY.md §1.1).  The columnar
-equivalent: store the SFC cell as a column, range-partition files by cell,
-and sort rows within files — then Parquet/Iceberg min-max statistics prune
-row groups for any sargable cell predicate, and Catalyst shows the filter
-as PushedFilters at the scan.  On Iceberg this is `ALTER TABLE ... WRITE
-ORDERED BY (cell)`; here plain parquet demonstrates the identical plan.
+equivalent: store the SFC key as a column, range-partition files by it and
+sort rows within files (``_sorted_layout``, the one layout rule every
+writer here, the maintained store and the Iceberg writer share) — then
+Parquet/Iceberg min-max statistics prune row groups for any sargable key
+predicate, and Catalyst shows the filter as PushedFilters at the scan.  A
+bbox query is key-range scans plus one exact refine.
 
-Design choice: the stored column is the FINEST-tier cell (31 bits/dim).
+Layouts: Z-order ``cell`` (``write_indexed``; projected CRSs via
+``write_indexed_crs``), Hilbert ``hd``, spherical ``s2``, XZ ``xz`` for
+extents, the mixed point+extent ``(kind, code)`` layout, and the
+spatio-temporal ``(_bin, _stkey)`` layout with sub-bin time keying.
+
+Design choice: the stored ``cell`` is the FINEST-tier cell (31 bits/dim).
 Coarser-tier lookups rewrite to range predicates on it — a tier-t cell c
 covers exactly [c << 2*(31-t), (c+1) << 2*(31-t)) — so one stored column
 serves every tier, exactly like the reference's common SFC prefix ordering
-(TieredSFCIndexStrategy tier prefixes).
+(TieredSFCIndexStrategy tier prefixes).  Every point-in-bbox lookup over a
+stored ``cell`` goes through ``range_filter_frame``.
 """
 
 from __future__ import annotations
@@ -50,11 +57,16 @@ def with_cell_column(
 ) -> DataFrame:
     """Add the finest-tier cell column (JVM-only bit math).  ``bounds``:
     custom per-dimension frame for projected CRSs (clamped, no wrap)."""
-    if lon_col not in df.columns and phash_col:
-        df = df.withColumn(lon_col, sqlcells.lon_from_phash(F.col(phash_col))).withColumn(
-            lat_col, sqlcells.lat_from_phash(F.col(phash_col))
-        )
+    df = sqlcells._with_phash_coords(df, lon_col, lat_col, phash_col)
     return sqlcells.add_cell_column(df, lon_col, lat_col, cells.MAX_TIER, "cell", bounds=bounds)
+
+
+def _sorted_layout(df: DataFrame, n_files: int, *keys: str) -> DataFrame:
+    """The stored-layout rule every writer shares: range-partition by the
+    key columns across ``n_files`` files, sort by them within each file —
+    so parquet/Iceberg min-max statistics prune on any key range.  The
+    caller picks the sink (parquet overwrite, append run, Iceberg table)."""
+    return df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
 
 
 def write_indexed(
@@ -69,12 +81,7 @@ def write_indexed(
     """Write a cell-indexed copy: range-partitioned by cell across files,
     sorted by cell within files → min-max pruning on any cell range."""
     out = with_cell_column(df, lon_col, lat_col, phash_col, bounds=bounds)
-    (
-        out.repartitionByRange(n_files, F.col("cell"))
-        .sortWithinPartitions("cell")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "cell").write.mode("overwrite").parquet(path)
 
 
 def cell_range_predicate(
@@ -125,22 +132,14 @@ def write_indexed_hilbert(
     query-side pruning is pure predicate pushdown)."""
     from .. import hilbert
 
-    if lon_col not in df.columns and phash_col:
-        df = df.withColumn(lon_col, sqlcells.lon_from_phash(F.col(phash_col))).withColumn(
-            lat_col, sqlcells.lat_from_phash(F.col(phash_col))
-        )
+    df = sqlcells._with_phash_coords(df, lon_col, lat_col, phash_col)
 
     @F.pandas_udf(T.LongType())
     def _hd(lon: pd.Series, lat: pd.Series) -> pd.Series:
         return pd.Series(hilbert.latlon_to_hilbert(lon.to_numpy(), lat.to_numpy(), tier))
 
     out = df.withColumn("hd", _hd(F.col(lon_col), F.col(lat_col)))
-    (
-        out.repartitionByRange(n_files, F.col("hd"))
-        .sortWithinPartitions("hd")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "hd").write.mode("overwrite").parquet(path)
 
 
 def hilbert_range_lookup(
@@ -195,17 +194,9 @@ def write_indexed_s2(
     layout)."""
     from .. import cells_s2
 
-    if lon_col not in df.columns and phash_col:
-        df = df.withColumn(lon_col, sqlcells.lon_from_phash(F.col(phash_col))).withColumn(
-            lat_col, sqlcells.lat_from_phash(F.col(phash_col))
-        )
+    df = sqlcells._with_phash_coords(df, lon_col, lat_col, phash_col)
     out = cells_s2.add_s2_cell_column(df, lon_col, lat_col, level, out="s2")
-    (
-        out.repartitionByRange(n_files, F.col("s2"))
-        .sortWithinPartitions("s2")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "s2").write.mode("overwrite").parquet(path)
 
 
 def s2_range_lookup(
@@ -266,12 +257,7 @@ def write_indexed_extents(
     """
     _xz = xz_code_udf()
     out = df.withColumn("xz", _xz(F.col(x0), F.col(y0), F.col(x1), F.col(y1)))
-    (
-        out.repartitionByRange(n_files, F.col("xz"))
-        .sortWithinPartitions("xz")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "xz").write.mode("overwrite").parquet(path)
 
 
 def xz_range_lookup(
@@ -348,12 +334,7 @@ def write_indexed_hier(
     pts_part = df.filter(is_point).withColumn("kind", F.lit(0)).withColumn("code", pt_code)
     ext_part = df.filter(~is_point).withColumn("kind", F.lit(1)).withColumn("code", xz_code)
     out = pts_part.unionByName(ext_part)
-    (
-        out.repartitionByRange(n_files, F.col("kind"), F.col("code"))
-        .sortWithinPartitions("kind", "code")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "kind", "code").write.mode("overwrite").parquet(path)
 
 
 def hier_range_lookup(
@@ -416,11 +397,14 @@ def range_filter_frame(
     loose: bool = False,
     bounds=None,
 ) -> DataFrame:
-    """The shared filter+refine body over an ALREADY-LOADED cell-indexed
-    frame — one implementation for the parquet and Iceberg read paths
-    (IndexedStore.range_lookup), so range-decomposition fixes apply to
-    both.  With custom ``bounds`` (projected CRS) the refine is a plain
-    closed interval — no antimeridian wrap exists in a projected frame."""
+    """Points in ``bbox`` from an ALREADY-LOADED frame with a stored
+    ``cell`` column: the one cell-range filter + exact refine behind every
+    stored point lookup (range_lookup_indexed, IndexedStore.range_lookup
+    on parquet and Iceberg, maintenance.lookup_store, stats.range_lookup
+    on an indexed frame), so cover and seam fixes apply to all of them.
+    The world-frame refine is antimeridian-aware; with custom ``bounds``
+    (projected CRS) it is a plain closed interval — no antimeridian wrap
+    exists in a projected frame."""
     pred, _ = cell_range_predicate(bbox, bounds=bounds)
     out = df.filter(pred)
     if not loose:
@@ -596,34 +580,14 @@ def write_indexed_st(
         f"date_trunc('{trunc}', {ts_col}) + INTERVAL 1 {trunc})"
     )
     frac = (eus - start).cast("double") / (nxt - start).cast("double")
-    gt = F.least(
-        F.greatest(F.floor(frac * F.lit(float(1 << bits[2]))).cast("long"), F.lit(0)),
-        F.lit((1 << bits[2]) - 1),
-    )
-    gx = F.least(
-        F.greatest(
-            F.floor(sqlcells.norm_lon(F.col(lon_col)) * F.lit(float(1 << bits[0]))).cast("long"),
-            F.lit(0),
-        ),
-        F.lit((1 << bits[0]) - 1),
-    )
-    gy = F.least(
-        F.greatest(
-            F.floor(sqlcells.norm_lat(F.col(lat_col)) * F.lit(float(1 << bits[1]))).cast("long"),
-            F.lit(0),
-        ),
-        F.lit((1 << bits[1]) - 1),
-    )
+    gx = sqlcells.grid_coord(sqlcells.norm_lon(F.col(lon_col)), bits[0])
+    gy = sqlcells.grid_coord(sqlcells.norm_lat(F.col(lat_col)), bits[1])
+    gt = sqlcells.grid_coord(frac, bits[2])
     out = (
         df.withColumn("_bin", st.time_bin_expr(ts_col, unit))
         .withColumn("_stkey", cells3.st_key_expr(gx, gy, gt, bits))
     )
-    (
-        out.repartitionByRange(n_files, F.col("_bin"), F.col("_stkey"))
-        .sortWithinPartitions("_bin", "_stkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _sorted_layout(out, n_files, "_bin", "_stkey").write.mode("overwrite").parquet(path)
 
 
 def _bin_starts(t0_us: int, t1_us: int, unit: str):
@@ -702,15 +666,7 @@ def st_subbin_range_lookup(
     from ..operators import spatiotemporal as st
 
     bits = cells3.ST_BIAS[bias]
-    x0, y0, x1, y1 = bbox
     rx, ry, rt = (1 << b for b in bits)
-
-    def nlon(v):
-        x = (v + 180.0) / 360.0
-        return x - math.floor(x)
-
-    def nlat(v):
-        return min(max((v + 90.0) / 180.0, 0.0), 1.0)
 
     # antimeridian-aware spatial sub-boxes (wrapped/unwrapped bboxes would
     # otherwise invert gx0 > gx1 and decompose to ZERO ranges — the same
@@ -719,10 +675,10 @@ def st_subbin_range_lookup(
     # still cannot reach
     xy_boxes = []
     for bx0, by0, bx1, by1 in cells.split_bbox_antimeridian(bbox):
-        sgx0 = max(0, int(math.floor(nlon(bx0) * rx)) - 1)
-        sgx1 = min(rx - 1, int(math.floor((1.0 if bx1 == 180.0 else nlon(bx1)) * rx)) + 1)
-        sgy0 = max(0, int(math.floor(nlat(by0) * ry)) - 1)
-        sgy1 = min(ry - 1, int(math.floor(nlat(by1) * ry)) + 1)
+        sgx0 = max(0, int(math.floor(cells.norm_lon(bx0) * rx)) - 1)
+        sgx1 = min(rx - 1, int(math.floor(cells.norm_lon_upper(bx1) * rx)) + 1)
+        sgy0 = max(0, int(math.floor(cells.norm_lat(by0) * ry)) - 1)
+        sgy1 = min(ry - 1, int(math.floor(cells.norm_lat(by1) * ry)) + 1)
         xy_boxes.append((sgx0, sgy0, sgx1, sgy1))
         if bx1 == 180.0 and bx0 > -180.0 and sgx0 > 0:
             xy_boxes.append((0, sgy0, 0, sgy1))

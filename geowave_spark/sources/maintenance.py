@@ -9,20 +9,26 @@ tablet server, so the engine ships the maintenance operators explicitly
 — the missing piece that makes the stored layout (sources/indexed.py)
 usable for CONTINUOUS ingest at 100 TB rather than one-shot bulk loads:
 
-- ``write_store``   initial bulk write → generation-0 base run
+- ``write_store``   initial bulk write → generation-0 base run (the
+                    one-shot ``indexed.write_indexed`` layout)
 - ``append_store``  a new batch → its own range-partitioned, sorted
                     delta run (never rewrites existing data; commits by
                     atomic manifest swap)
 - ``read_store``    scan base + live deltas; every run is sorted by
                     cell, so parquet row-group min-max pruning applies
                     per run and pushed cell-range predicates stay sargable
+- ``lookup_store``  bbox lookup over ``read_store`` — the shared
+                    ``indexed.range_filter_frame`` with the manifest's
+                    key columns and bounds
 - ``compact_store`` merge all live runs into a new base generation
-  (BEHAVIOR CHANGE r5: ``vacuum`` now defaults to False — compaction only
-  swaps the manifest; call ``vacuum_store`` explicitly, or pass
-  ``vacuum=True`` when no reader can hold the previous manifest)
                     (split points re-derived from the merged
-                    distribution), swap the manifest atomically, then
-                    drop the dead runs
+                    distribution) and swap the manifest atomically; the
+                    dead runs stay on disk until ``vacuum_store`` (or
+                    ``vacuum=True`` when no reader can hold the previous
+                    manifest)
+
+Every run is written with the same layout rule as the one-shot store
+(``indexed._sorted_layout``: range-partition by cell, sort within files).
 
 Correctness model: readers resolve the manifest once per query; the
 manifest is a single JSON file replaced via os.replace (POSIX-atomic), so
@@ -50,7 +56,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .indexed import cell_range_predicate, ensure_parallelism, with_cell_column, write_indexed
+from .indexed import (
+    _sorted_layout, ensure_parallelism, range_filter_frame, with_cell_column, write_indexed,
+)
 
 _MANIFEST = "_manifest.json"
 
@@ -130,13 +138,9 @@ def append_store(df: DataFrame, root: str, n_files: int = 8) -> dict:
     # name (the counter only advances at commit) — clear it, then write
     _drop_orphan(root, run, m)
     out = with_cell_column(df, k["lon_col"], k["lat_col"], k["phash_col"], bounds=bounds)
-    (
-        out.repartitionByRange(n_files, F.col("cell"))
-        .sortWithinPartitions("cell")
-        .write.mode("errorifexists")
-        .parquet(os.path.join(root, run))
-    )
-    stats = _run_stats(df.sparkSession.read.parquet(os.path.join(root, run)))
+    path = os.path.join(root, run)
+    _sorted_layout(out, n_files, "cell").write.mode("errorifexists").parquet(path)
+    stats = _run_stats(df.sparkSession.read.parquet(path))
     m["deltas"].append(run)
     m["next_delta"] += 1
     m["runs"][run] = stats
@@ -192,18 +196,15 @@ def read_store(spark: SparkSession, root: str) -> DataFrame:
 
 def lookup_store(
     spark: SparkSession, root: str, bbox: tuple[float, float, float, float],
-    max_cells: int = 64,
 ) -> DataFrame:
-    """Cell-range lookup across all live runs (pushed per-run, pruned by
-    each run's sorted row groups), exact bbox refine on top."""
-    m = _read_manifest(root)
-    bounds = tuple(m["key"]["bounds"]) if m["key"]["bounds"] else None
-    pred, _ = cell_range_predicate(bbox, max_cells=max_cells, bounds=bounds)
-    df = read_store(spark, root).filter(pred)
-    lon, lat = m["key"]["lon_col"], m["key"]["lat_col"]
-    return df.filter(
-        (F.col(lon) >= bbox[0]) & (F.col(lon) <= bbox[2])
-        & (F.col(lat) >= bbox[1]) & (F.col(lat) <= bbox[3])
+    """Points in ``bbox`` across all live runs: the shared stored-cell
+    lookup (indexed.range_filter_frame) over the manifest's key columns
+    and bounds — pushed per run, pruned by each run's sorted row groups,
+    antimeridian-aware in the world frame."""
+    k = _read_manifest(root)["key"]
+    bounds = tuple(k["bounds"]) if k["bounds"] else None
+    return range_filter_frame(
+        read_store(spark, root), bbox, k["lon_col"], k["lat_col"], bounds=bounds
     )
 
 
@@ -255,12 +256,8 @@ def compact_store(
     new_base = f"base_g{gen}"
     _drop_orphan(root, new_base, m)
     df = spark.read.parquet(*[os.path.join(root, r) for r in old_runs])
-    (
-        df.repartitionByRange(n_files, F.col("cell"))
-        .sortWithinPartitions("cell")
-        .write.mode("errorifexists")
-        .parquet(os.path.join(root, new_base))
-    )
+    path = os.path.join(root, new_base)
+    _sorted_layout(df, n_files, "cell").write.mode("errorifexists").parquet(path)
     olds = [m["runs"][r] for r in old_runs]
     nonempty = [s for s in olds if s["rows"]]
     stats = {

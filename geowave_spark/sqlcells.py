@@ -278,6 +278,20 @@ def lat_from_phash(phash: Column) -> Column:
     return lo.cast("double") / F.lit(4294967296.0) * F.lit(180.0) - F.lit(90.0)
 
 
+def _with_phash_coords(
+    df, lon_col: str = "lon", lat_col: str = "lat", phash_col: str | None = "phash"
+):
+    """``df`` with lon/lat derived from ``phash_col`` when ``lon_col`` is
+    absent — the one place the point layouts and joins fill in image
+    coordinates; a frame that already has ``lon_col`` (or no phash column
+    to derive from) passes through unchanged."""
+    if lon_col in df.columns or not phash_col:
+        return df
+    return df.withColumn(lon_col, lon_from_phash(F.col(phash_col))).withColumn(
+        lat_col, lat_from_phash(F.col(phash_col))
+    )
+
+
 # ---------------------------------------------------------------------------
 # Tile pyramid math (KDE grid convention: level ℓ → 2^(ℓ+1) × 2^ℓ grid,
 # KDERunner.java:234-238) — JVM-side

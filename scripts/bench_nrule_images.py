@@ -33,9 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def run_once(cpus: int, n: int, passes: int = 2, work_mult: int = 1) -> dict:
-    from pyspark.sql import functions as F
-
-    from geowave_spark import sqlcells
+    from geowave_spark.api import SpatialFrame
     from geowave_spark.operators import spatial_join, tiling
     from geowave_spark.session import get_spark
     from geowave_spark.sources import images
@@ -53,10 +51,8 @@ def run_once(cpus: int, n: int, passes: int = 2, work_mult: int = 1) -> dict:
             # launch, broadcast) would otherwise dominate the 1-core leg
             # and understate parallel efficiency
             t0 = time.monotonic()
-            df = spark.read.parquet(path).select(
-                "image_id",
-                sqlcells.lon_from_phash(F.col("phash")).alias("lon"),
-                sqlcells.lat_from_phash(F.col("phash")).alias("lat"),
+            df = SpatialFrame.from_images(spark.read.parquet(path)).df.select(
+                "image_id", "lon", "lat"
             )
             for _k in range(work_mult):
                 pairs = spatial_join.tiered_spatial_join(

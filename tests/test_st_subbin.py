@@ -124,3 +124,61 @@ def test_budgeted_ranges_are_superset():
         return s
 
     assert cover(tight) <= cover(loose)
+
+
+def test_written_st_keys_match_scalar_twin(spark, tmp_path):
+    """The stored (_bin, _stkey) of write_indexed_st equals the numpy /
+    driver twins — cells.grid_coord over cells.norm_lon / norm_lat and
+    the in-bin time fraction, packed by cells3.st_key_scalar — for every
+    bias and for month and year bins, on the edge rows where the key math
+    clamps, wraps or sits on a bin boundary."""
+    import datetime
+
+    import numpy as np
+    from pyspark.sql import types as T
+
+    from geowave_spark import cells
+
+    dt = datetime.datetime
+    us = datetime.timedelta(microseconds=1)
+    rows = [
+        (1, -180.0, -90.0, dt(2024, 1, 1)),                  # year + month bin start
+        (2, 180.0, 90.0, dt(2025, 1, 1) - us),               # 1 µs before next year
+        (3, 179.99999999999997, 0.0, dt(2024, 3, 1) - us),  # 1 µs before next month
+        (4, 0.0, 45.5, dt(2024, 3, 1)),                      # month bin start
+        (5, -179.999, -89.999, dt(2023, 6, 15, 12, 34, 56, 789012)),
+        (6, 179.999, 89.999, dt(2023, 12, 31, 23, 59, 59, 999999)),
+    ]
+    schema = T.StructType([
+        T.StructField("event_id", T.LongType()),
+        T.StructField("lon", T.DoubleType()),
+        T.StructField("lat", T.DoubleType()),
+        T.StructField("ts", T.TimestampNTZType()),
+    ])
+    df = spark.createDataFrame(rows, schema)
+    epoch = dt(1970, 1, 1)
+
+    def bin_of(t, unit):
+        if unit == "year":
+            return t.year, dt(t.year, 1, 1), dt(t.year + 1, 1, 1)
+        nxt = dt(t.year + (t.month == 12), t.month % 12 + 1, 1)
+        return t.year * 100 + t.month, dt(t.year, t.month, 1), nxt
+
+    for unit in ("month", "year"):
+        for bias, bits in cells3.ST_BIAS.items():
+            path = str(tmp_path / f"st_{unit}_{bias}")
+            indexed.write_indexed_st(df, path, n_files=2, unit=unit, bias=bias)
+            got = {
+                r["event_id"]: (r["_bin"], r["_stkey"])
+                for r in spark.read.parquet(path).collect()
+            }
+            want = {}
+            for i, lon, lat, t in rows:
+                bid, start, nxt = bin_of(t, unit)
+                eus, s_us, n_us = ((x - epoch) // us for x in (t, start, nxt))
+                frac = np.float64(eus - s_us) / np.float64(n_us - s_us)
+                gx = int(cells.grid_coord(cells.norm_lon(lon), bits[0]))
+                gy = int(cells.grid_coord(cells.norm_lat(lat), bits[1]))
+                gt = int(cells.grid_coord(frac, bits[2]))
+                want[i] = (bid, cells3.st_key_scalar(gx, gy, gt, bits))
+            assert got == want, (unit, bias)

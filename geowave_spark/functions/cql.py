@@ -71,16 +71,15 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_GEOM_OPS = {
-    "INTERSECTS": "st_intersects_wkt",
-    "DISJOINT": "st_disjoint_wkt",
-    "WITHIN": "st_within_wkt",
-    "CONTAINS": "st_contains_wkt",
-    "TOUCHES": "st_touches_wkt",
-    "CROSSES": "st_crosses_wkt",
-    "OVERLAPS": "st_overlaps_wkt",
-    "EQUALS": "st_equals_wkt",
-}
+from .. import sqlcells
+from . import geo_udfs
+
+# the ECQL geometry operations: each is the predicate-table row of the
+# same name (functions/geo_udfs.PREDICATES)
+_GEOM_OPS = (
+    "INTERSECTS", "DISJOINT", "WITHIN", "CONTAINS", "TOUCHES", "CROSSES",
+    "OVERLAPS", "EQUALS",
+)
 
 # GeoTools property functions (modules/library/main filter functions) the
 # parser accepts inside arithmetic expressions — each maps to one Catalyst
@@ -424,42 +423,25 @@ class _Parser:
         self.take("comma")
         y1 = self.number()
         self.take("rp")
-        g = self.geometry
-        if isinstance(g, tuple):
-            lon, lat = g
-            lat_ok = (F.col(lat) >= y0) & (F.col(lat) <= y1)
-            # unwrapped antimeridian boxes match through the ±360 image,
-            # like the WKT-path kernel — the two paths must agree.  First
-            # canonicalize the x0 < -180 spellings into the engine's
-            # x1 > 180 convention (a box ENTIRELY below -180 is just its
-            # +360 image — without this, `lon <= x1` matched nothing and
-            # the straddle branch over-selected up to lon 180)
-            if x1 < -180.0 or (x0 < -180.0 <= x1):
-                x0, x1 = x0 + 360.0, x1 + 360.0
-            if x1 > 180.0:
-                lon_ok = (F.col(lon) >= x0) | (F.col(lon) <= x1 - 360.0)
-            else:
-                lon_ok = (F.col(lon) >= x0) & (F.col(lon) <= x1)
-                self._con = ((x0, y0, x1, y1), None)
-            return lon_ok & lat_ok
-        from . import geo_udfs
-
         if x1 < -180.0 or (x0 < -180.0 <= x1):
             # canonicalize the x0 < -180 unwrapped form into the engine's
             # x1 > 180 convention (the pairwise kernel only retests the
             # -360 image of x1 > 180 geometries), so both BBOX paths and
             # the join refine agree on antimeridian boxes
             x0, x1 = x0 + 360.0, x1 + 360.0
+        if x1 <= 180.0:  # straddle boxes stay unconstrained (index-safe)
+            self._con = ((x0, y0, x1, y1), None)
+        if isinstance(self.geometry, tuple):
+            # the stored-cell refine's point-in-bbox rule: exact per-interval
+            # tests over the box's in-range images
+            lon, lat = self.geometry
+            return sqlcells.bbox_refine_pred(F.col(lon), F.col(lat), (x0, y0, x1, y1))
         wkt = (
             f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))"
         )
-        if x1 <= 180.0:  # straddle boxes stay unconstrained (index-safe)
-            self._con = ((x0, y0, x1, y1), None)
         return geo_udfs.st_intersects_wkt(self.geom_column(prop), F.lit(wkt))
 
     def geom_pred(self, op: str) -> Column:
-        from . import geo_udfs
-
         self.take("lp")
         prop = self.take("word")
         self.take("comma")
@@ -467,14 +449,12 @@ class _Parser:
         self.take("rp")
         if op != "DISJOINT":  # a DISJOINT match can lie anywhere
             self._con = (_wkt_envelope(wkt), None)
-        fn = getattr(geo_udfs, _GEOM_OPS[op])
+        fn = geo_udfs.PREDICATES[op.lower()].udf
         return fn(self.geom_column(prop), F.lit(wkt))
 
     def dwithin_pred(self, beyond: bool = False) -> Column:
         """DWITHIN (distance <= d) and its ECQL complement BEYOND
         (distance > d) — same argument shape."""
-        from . import geo_udfs
-
         self.take("lp")
         prop = self.take("word")
         self.take("comma")
@@ -499,30 +479,19 @@ class _Parser:
         d = geo_udfs.st_distance_wkt(self.geom_column(prop), F.lit(wkt))
         return (d > F.lit(dist)) if beyond else (d <= F.lit(dist))
 
-    # canonical DE-9IM patterns that ARE single named predicates (JTS
-    # RelateOp docs); arbitrary patterns would need a full matrix kernel
-    _RELATE_PATTERNS = {
-        "T*F**F***": "st_within_wkt",
-        "T*****FF*": "st_contains_wkt",
-        "T*F**FFF*": "st_equals_wkt",
-        "FF*FF****": "st_disjoint_wkt",
-    }
-
     def relate_pred(self) -> Column:
-        """RELATE(prop, wkt, 'DE-9IM'): full GeoTools parity (r4 verdict
-        ask #4).  The canonical single-predicate patterns map to the
-        kernel's named vectorized ops (and contribute their envelope to
-        index-constraint extraction); every OTHER 9-char mask evaluates
-        through the general matrix evaluator (georelate.relate_pair via
-        geo_udfs.st_relate_wkt — the JTS RelateOp analog
-        CQLQueryFilter.java reaches for arbitrary patterns).
+        """RELATE(prop, wkt, 'DE-9IM'): full GeoTools parity.  A pattern
+        that IS a named predicate (the predicate table's DE-9IM masks: the
+        canonical four, JTS RelateOp docs) runs that predicate's vectorized
+        UDF; every OTHER 9-char mask evaluates through the general matrix
+        evaluator (georelate.relate_pair via geo_udfs.st_relate_wkt — the
+        JTS RelateOp analog CQLQueryFilter.java reaches for arbitrary
+        patterns).
 
-        A general pattern demanding interior-interior contact
-        ('T'/'0'/'1'/'2' at cell [0,0]) still yields the envelope
-        constraint — interiors can only meet inside both envelopes — so
-        the index planner prunes for the common masks too."""
-        from . import geo_udfs
-
+        A pattern demanding interior-interior contact ('T'/'0'/'1'/'2' at
+        cell [0,0]) yields the envelope constraint — interiors can only
+        meet inside both envelopes — so the index planner prunes for the
+        common masks too."""
         self.take("lp")
         prop = self.take("word")
         self.take("comma")
@@ -534,16 +503,13 @@ class _Parser:
             raise CQLError(
                 f"RELATE pattern {pat!r} is not a valid 9-char DE-9IM mask"
             )
-        fn = self._RELATE_PATTERNS.get(pat)
-        if fn is not None:
-            if fn != "st_disjoint_wkt":
-                self._con = (_wkt_envelope(wkt), None)
-            return getattr(geo_udfs, fn)(self.geom_column(prop), F.lit(wkt))
         if pat[0] in "T012":
             self._con = (_wkt_envelope(wkt), None)
-        return geo_udfs.st_relate_wkt(
-            self.geom_column(prop), F.lit(wkt), F.lit(pat)
-        )
+        args = (self.geom_column(prop), F.lit(wkt))
+        for p in geo_udfs.PREDICATES.values():
+            if p.mask == pat:
+                return p.udf(*args)
+        return geo_udfs.st_relate_wkt(*args, F.lit(pat))
 
     def wkt_literal(self) -> str:
         """WKT inside CQL is unquoted: TYPE ( ... ) — consume tokens

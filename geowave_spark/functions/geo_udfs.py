@@ -1,35 +1,46 @@
 """Arrow-batched pandas UDFs — the ONLY Python that touches data at scale.
 
-Three UDF families, mirroring the reference's division of labor:
+Two families, mirroring the reference's division of labor:
 
-* ``cover_keys_udf`` — polygon/extent → packed (tier,cell) covering keys,
-  the insert path of TieredSFCIndexStrategy.getInsertionIds (:167-206,
-  334-396) with the join's 80-cell cap (GeoWaveIndexedRDD.java:193), the
-  >3-cell geometry trim (RDDUtils.trimIndexIds:158-184) and distance-join
-  buffering (TieredSpatialJoin.java:142-165, GeomWithinDistance.getBufferAmount).
+* Covering keys — :func:`cover_keys` / ``_geometry_cover``: polygon/extent
+  → packed (tier,cell) covering keys, the insert path of
+  TieredSFCIndexStrategy.getInsertionIds (:167-206, 334-396) with the
+  join's 80-cell cap (GeoWaveIndexedRDD.java:193), the >3-cell geometry
+  trim (RDDUtils.trimIndexIds:158-184) and distance-join buffering
+  (TieredSpatialJoin.java:142-165, GeomWithinDistance.getBufferAmount).
   Runs on the SMALL side only (polygons); the big point side never leaves
   the JVM (see sqlcells.py).
-* ``predicate_udf`` / ``distance_udf`` — exact geometry refinement, the
-  equivalent of SpatialQueryFilter.accept (:259-302) / GeomWithinDistance
-  (:43-45).  Vectorized per distinct polygon within each Arrow batch;
-  polygons are interned via lru_cache like the reference's GeometryImage
-  prepared-geometry interning (SpatialQueryFilter.java:353-367).
+* Exact refine — the equivalent of SpatialQueryFilter.accept (:259-302)
+  and of the operations GeomFunctionRegistry registers.  One table,
+  :data:`PREDICATES`, holds every geometry function: its UDF, its per-pair
+  kernel (``geom.*_pair``), its vectorized group kernel, its NULL result
+  and, for the four canonical patterns, its DE-9IM mask.  ``cql``,
+  ``spatial_join`` and ``sqlregistry`` look predicates up there.  Every
+  UDF runs the one batch loop ``_per_geometry``: rows group by the
+  repeated geometry, which is parsed once (``geometry_from_wkt`` interns
+  it like the reference's GeometryImage, SpatialQueryFilter.java:353-367).
+  The box fast paths and the joins' JVM candidate filter share one
+  interval algebra, ``_box_relation``.
 
-Antimeridian polygons arrive in UNWRAPPED coords (lon may exceed +180); the
-refine tests each point at lon and lon+360 (LongitudeDefinition split-bin
-semantics).
+Antimeridian geometries arrive in UNWRAPPED coords (lon may exceed +180):
+the point refines also test each point at lon + 360, the pairwise ones the
+geometry's -360 image (LongitudeDefinition split-bin semantics).
 """
 
 from __future__ import annotations
 
+import operator
 import re
+from collections.abc import Callable
+from functools import lru_cache
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import cells, geom
+from .. import cells, geom, georelate
 
 
 def _ring_bbox(p, buffer: float, bounds=None) -> tuple[float, float, float, float]:
@@ -95,476 +106,395 @@ def _geometry_cover(
     return tier, cs
 
 
-def _eval_per_polygon(
-    wkts: pd.Series, lon: pd.Series, lat: pd.Series, fn, null_value: float = 0.0,
-    wrap: bool = True, wrap_boxes: bool = False,
+# --- the one per-geometry batch loop ----------------------------------------
+
+def _per_geometry(
+    keys: pd.Series, cols: tuple, kernel, null, skip=None, image=None, combine=None,
 ) -> np.ndarray:
-    """Group a candidate batch by polygon and evaluate vectorized.
+    """The batch loop under every geometry UDF.
 
-    NULL geometries factorize to code -1 and keep ``null_value`` —
-    predicates pass 0.0 (False: a null polygon relates to nothing);
-    distances pass NaN so a null never reads as distance 0.
+    Rows are grouped by ``keys``, the WKT that repeats within a batch (the
+    join's broadcast side, a CQL literal): each distinct geometry is parsed
+    once and ``kernel(g, *cols[rows])`` evaluates all of its rows in one
+    call.  Rows with a NULL key, or flagged in ``skip`` (a NULL on the
+    other side), keep ``null``: False for predicates (a null relates to
+    nothing), NaN for distances (a null is never distance 0), None for
+    matrices.
 
-    ``wrap`` retests unwrapped antimeridian polygons (bbox x1 > 180) at
-    lon + 360; ``wrap_boxes`` retests every box that way too."""
-    res = np.full(len(wkts), null_value, dtype=np.float64)
-    lon_v = lon.to_numpy(dtype=np.float64)
-    lat_v = lat.to_numpy(dtype=np.float64)
-    codes, uniques = pd.factorize(wkts)
+    World-frame seam (LongitudeDefinition split-bin semantics): when
+    ``image(g, *args)`` returns the arguments for the geometry's other
+    image across the antimeridian, the kernel also runs on them and
+    ``combine`` (or / min / and) merges the two results."""
+    codes, uniques = pd.factorize(keys)
+    if skip is not None:
+        codes = np.where(skip, -1, codes)
+    order = np.argsort(codes, kind="stable")
+    starts = np.searchsorted(codes[order], np.arange(len(uniques) + 1))
+    out = np.full(len(keys), null)
     for u, w in enumerate(uniques):
-        idx = np.nonzero(codes == u)[0]
-        p = geom.geometry_from_wkt(w)
-        v = fn(p, lon_v[idx], lat_v[idx])
-        if wrap and (p.bbox[2] > 180.0 or (wrap_boxes and p.is_box())):
-            v2 = fn(p, lon_v[idx] + 360.0, lat_v[idx])
-            v = np.minimum(v, v2) if v.dtype != bool else (v | v2)
-        res[idx] = v
-    return res
-
-
-@F.pandas_udf(T.BooleanType())
-def st_contains_point(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    got = _eval_per_polygon(wkts, lon, lat, lambda p, x, y: p.contains(x, y))
-    return pd.Series(got.astype(bool))
-
-
-# no-wrap twins for custom-bounds (projected CRS) frames, where the
-# bbox[2] > 180 heuristic above would misread metre coordinates as
-# unwrapped antimeridian geometry
-@F.pandas_udf(T.BooleanType())
-def st_contains_point_nowrap(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    got = _eval_per_polygon(wkts, lon, lat, lambda p, x, y: p.contains(x, y), wrap=False)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.DoubleType())
-def st_distance_point_nowrap(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    got = _eval_per_polygon(
-        wkts, lon, lat, lambda p, x, y: p.distance(x, y), null_value=float("nan"),
-        wrap=False,
-    )
-    return pd.Series(got, dtype=np.float64)
-
-
-@F.pandas_udf(T.DoubleType())
-def st_distance_point(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
-    # a box is measured against the point's lon + 360 copy as well, the
-    # rule of the broadcast join's JVM box refine and of both DuckDB
-    # oracles: a point at lon -179.8 can be within 0.5 of a box ending at 179.99
-    got = _eval_per_polygon(
-        wkts, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan,
-        wrap_boxes=True,
-    )
-    return pd.Series(got)
-
-
-# --- pairwise geometry × geometry (GeomFunctionRegistry.java:26-42) ---------
-
-def _group_vectorized(
-    wkt_a: pd.Series, wkt_b: pd.Series, scalar_fn, group_fn, null_value: float = 0.0
-) -> np.ndarray:
-    """Factorize by the RIGHT geometry (the join's broadcast side repeats
-    heavily in each batch, like _eval_per_polygon) and evaluate each group
-    with a vectorized kernel where the left class allows; per-pair
-    fallback otherwise.
-
-    Unwrapped antimeridian right geometries (bbox x1 > 180) are ALSO
-    evaluated as their -360-shifted image and the results combined
-    (or / min) — the pairwise twin of _eval_per_polygon's +360 retest
-    (LongitudeDefinition split-bin semantics)."""
-    codes, uniques = pd.factorize(wkt_b)
-    left = wkt_a.to_numpy()
-    out = np.full(len(wkt_a), null_value, dtype=np.float64)
-    # NULL on either side keeps null_value (False for predicates, NaN for
-    # distance) — a null right factorizes to code -1, null lefts are
-    # masked out of every group so the WKT parser never sees None
-    lnull = pd.isna(wkt_a).to_numpy()
-    for u, wb in enumerate(uniques):
-        idx = np.nonzero((codes == u) & ~lnull)[0]
+        idx = order[starts[u]:starts[u + 1]]
         if not idx.size:
             continue
-        gb = geom.geometry_from_wkt(wb)
-        v = group_fn(gb, left[idx], scalar_fn)
-        if gb.bbox[2] > 180.0:
-            v2 = group_fn(geom.translate_lon(gb, -360.0), left[idx], scalar_fn)
-            v = np.minimum(v, v2) if v.dtype != bool else (v | v2)
+        args = (geom.geometry_from_wkt(w), *(c[idx] for c in cols))
+        v = kernel(*args)
+        other = None if image is None else image(*args)
+        if other is not None:
+            v = combine(v, kernel(*other))
         out[idx] = v
     return out
 
 
-def _intersects_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=bool)
-    box_idx = [i for i, g in enumerate(gs) if isinstance(g, geom.Polygon) and g.is_box()]
-    if box_idx:
-        # box-left fast path — the exact intersects_pair decomposition,
-        # vectorized over the box rows: box corners in gb, gb vertices in
-        # box, exact segment touch/cross (row-wise kernel)
-        arr = np.array([gs[i].bbox for i in box_idx], dtype=np.float64)
-        x0, y0, x1, y1 = arr[:, 0], arr[:, 1], arr[:, 2], arr[:, 3]
-        hit = np.zeros(len(box_idx), dtype=bool)
-        if geom._has_area(gb):  # mirrors intersects_pair's area-gated check
-            for cx, cy in ((x0, y0), (x1, y0), (x1, y1), (x0, y1)):
-                hit |= gb.contains(cx, cy)
-        vb = gb.vertices()
-        hit |= (
-            (vb[None, :, 0] >= x0[:, None]) & (vb[None, :, 0] <= x1[:, None])
-            & (vb[None, :, 1] >= y0[:, None]) & (vb[None, :, 1] <= y1[:, None])
-        ).any(axis=1)
-        edges = np.empty((len(box_idx) * 4, 4), dtype=np.float64)
-        corners = [(x0, y0, x1, y0), (x1, y0, x1, y1), (x1, y1, x0, y1), (x0, y1, x0, y0)]
-        for e, (ex1, ey1, ex2, ey2) in enumerate(corners):
-            edges[e::4] = np.stack([ex1, ey1, ex2, ey2], axis=1)
-        hit |= geom.segments_touch_rowwise(edges, gb.segments()).reshape(-1, 4).any(axis=1)
-        out[box_idx] = hit
-    seg_idx = [
-        i for i, g in enumerate(gs) if isinstance(g, geom.LineString) and len(g.coords) == 2
-    ]
-    if seg_idx:
-        # single-segment-left fast path: row-wise segment kernel + endpoint
-        # containment (exactly intersects_pair's decomposition for lines)
-        A = np.array([gs[i].coords.ravel() for i in seg_idx], dtype=np.float64)
-        hit = geom.segments_touch_rowwise(A, gb.segments())
-        if geom._has_area(gb):
-            hit = hit | gb.contains(A[:, 0], A[:, 1]) | gb.contains(A[:, 2], A[:, 3])
-        out[seg_idx] = hit
-    excl = set(box_idx).union(seg_idx)
-    for i in range(len(gs)):
-        if i not in excl:
-            out[i] = scalar_fn(gs[i], gb)
-    return out
+def _unwrapped(g) -> bool:
+    """An unwrapped antimeridian geometry: its bbox reaches past +180."""
+    return g.bbox[2] > 180.0
 
 
-def _distance_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=np.float64)
-    seg_idx = [
-        i for i, g in enumerate(gs) if isinstance(g, geom.LineString) and len(g.coords) == 2
-    ]
-    if seg_idx:
-        A = np.array([gs[i].coords.ravel() for i in seg_idx], dtype=np.float64)
-        touching = geom.segments_touch_rowwise(A, gb.segments())
-        if geom._has_area(gb):
-            touching = touching | gb.contains(A[:, 0], A[:, 1]) | gb.contains(A[:, 2], A[:, 3])
-        d = geom.segments_dist_rowwise(A, gb.segments())
-        out[seg_idx] = np.where(touching, 0.0, d)
-    excl = set(seg_idx)
-    for i in range(len(gs)):
-        if i not in excl:
-            out[i] = scalar_fn(gs[i], gb)
-    return out
+def _right_image(g, *lefts):
+    return (geom.translate_lon(g, -360.0), *lefts) if _unwrapped(g) else None
 
 
-@F.pandas_udf(T.BooleanType())
-def st_intersects_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-intersects over two WKT columns (GeomIntersects.java:21).
-    Grouped by the right geometry with vectorized box/segment fast paths;
-    exactness vs the per-pair kernel pinned in tests."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.intersects_pair, _intersects_group)
-    return pd.Series(got.astype(bool))
+def _udf(name: str, fn, rtype):
+    """``fn`` as a pandas UDF named ``name``, the name plans show."""
+    fn.__name__ = fn.__qualname__ = name
+    return F.pandas_udf(fn, rtype)
 
 
-@F.pandas_udf(T.DoubleType())
-def st_distance_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """Planar JTS-distance over two WKT columns (GeomDistance.java:14-23)."""
-    got = _group_vectorized(
-        wkt_a, wkt_b, geom.distance_pair, _distance_group, null_value=np.nan
-    )
-    return pd.Series(got, dtype=np.float64)
+def _point_udf(name: str, kernel, null, combine=None, wrap=None):
+    """(wkt, lon, lat) UDF: ``kernel(g, lon, lat)`` per distinct geometry.
+    When ``wrap(g)`` holds, each point's lon + 360 copy is tested too."""
+
+    def image(g, x, y):
+        return (g, x + 360.0, y) if wrap is not None and wrap(g) else None
+
+    def st(wkts: pd.Series, lon: pd.Series, lat: pd.Series) -> pd.Series:
+        cols = (lon.to_numpy(dtype=np.float64), lat.to_numpy(dtype=np.float64))
+        return pd.Series(_per_geometry(wkts, cols, kernel, null, image=image, combine=combine))
+
+    return _udf(name, st, T.BooleanType() if null is False else T.DoubleType())
 
 
-def _within_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    """left-WITHIN-gb group kernel: when gb is a closed box, coverage is
-    one vectorized interval test per group.  JTS `within` additionally
-    needs interior contact: a left bbox STRICTLY inside the open box
-    implies it (and any positive-area left implies it when covered), so
-    only boundary-touching lower-dim candidates take the scalar
-    interiors refine — a measure-zero family on real data.  Non-box gb
-    falls back to the scalar kernel per pair."""
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=bool)
-    if isinstance(gb, geom.Polygon) and gb.is_box():
-        bx0, by0, bx1, by1 = gb.bbox
-        arr = np.array([g.bbox for g in gs], dtype=np.float64)
-        fits = (
-            (arr[:, 0] >= bx0) & (arr[:, 1] >= by0)
-            & (arr[:, 2] <= bx1) & (arr[:, 3] <= by1)
-        )
-        strict = (
-            (arr[:, 0] > bx0) & (arr[:, 1] > by0)
-            & (arr[:, 2] < bx1) & (arr[:, 3] < by1)
-        )
-        for i in np.nonzero(fits & ~strict)[0]:
-            if geom._dim(gs[i]) < 2:
-                fits[i] = geom.interiors_intersect_pair(gs[i], gb)
-        return fits
+def _parsed(kernel):
+    """Kernel over left WKTs from a kernel over their parsed geometries."""
+    return lambda gb, left, *rest: kernel(gb, [geom.geometry_from_wkt(w) for w in left], *rest)
+
+
+def _pairwise_udf(name: str, group, null, combine):
+    """(wkt_a, wkt_b) UDF: ``group(b, lefts)`` per distinct right geometry,
+    the -360 image of an unwrapped antimeridian right merged by
+    ``combine``.  A NULL on either side keeps ``null``."""
+    kernel = _parsed(group)
+
+    def st(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
+        return pd.Series(_per_geometry(
+            wkt_b, (wkt_a.to_numpy(),), kernel, null, skip=pd.isna(wkt_a).to_numpy(),
+            image=_right_image, combine=combine,
+        ))
+
+    return _udf(name, st, T.BooleanType() if null is False else T.DoubleType())
+
+
+# --- one box algebra ----------------------------------------------------------
+
+def _box_covers(a, b, strict: bool = False):
+    """Box a covers box b, or, ``strict``, b lies in a's open interior.
+
+    Boxes are (x0, y0, x1, y1) of numpy arrays, floats or Spark Columns:
+    every operator used here exists on all three, so the numpy fast paths
+    and the JVM candidate filter share this one interval algebra."""
+    lt = operator.lt if strict else operator.le
+    return lt(a[0], b[0]) & lt(a[1], b[1]) & lt(b[2], a[2]) & lt(b[3], a[3])
+
+
+def _box_meets(a, b, strict: bool = False):
+    """Closed boxes a and b intersect, or, ``strict``, their interiors do."""
+    lt = operator.lt if strict else operator.le
+    return lt(a[0], b[2]) & lt(b[0], a[2]) & lt(a[1], b[3]) & lt(b[1], a[3])
+
+
+def _box_relation(name: str, a, b):
+    """Predicate ``name`` of box a against box b, exact when both are
+    axis-aligned boxes (the geometry IS its bbox); None when ``name`` has no
+    interval form.  For any geometries, the containment family (within,
+    covers, contains, equals) gives NECESSARY envelope conditions."""
+    if name == "intersects":
+        return _box_meets(a, b)
+    if name == "touches":
+        return _box_meets(a, b) & ~_box_meets(a, b, strict=True)
+    if name == "overlaps":
+        return _box_meets(a, b, strict=True) & ~_box_covers(a, b) & ~_box_covers(b, a)
+    if name == "within":
+        return _box_covers(b, a)
+    if name in ("covers", "contains"):  # positive-area boxes: covers == contains
+        return _box_covers(a, b)
+    if name == "equals":
+        return _box_covers(a, b) & _box_covers(b, a)
+    return None
+
+
+# --- group kernels: vectorized fast paths over one right geometry -------------
+
+def _is_box(g) -> bool:
+    return isinstance(g, geom.Polygon) and g.is_box()
+
+
+# left selections: (which lefts, the (k, 4) row each contributes)
+_BOXES = (_is_box, lambda g: g.bbox)
+_SEGMENTS = (
+    lambda g: isinstance(g, geom.LineString) and len(g.coords) == 2,
+    lambda g: g.coords.ravel(),
+)
+_ALL = (lambda g: True, lambda g: g.bbox)
+
+
+def _group(scalar, null, fast=()):
+    """Group kernel (right geometry gb, left geometries) -> results.  Each
+    fast path ``(when, lefts, fn)`` applies when ``when`` is None or
+    ``when(gb)``, and evaluates the lefts it selects with one vectorized
+    ``fn(gb, rows, geometries)``; every other left takes ``scalar``."""
+
+    def group(gb, gs):
+        out = np.full(len(gs), null)
+        todo = np.ones(len(gs), dtype=bool)
+        for when, (pick, row), fn in fast:
+            if when is not None and not when(gb):
+                continue
+            sel = [i for i in np.nonzero(todo)[0] if pick(gs[i])]
+            if sel:
+                rows = np.array([row(gs[i]) for i in sel], dtype=np.float64)
+                out[sel] = fn(gb, rows, [gs[i] for i in sel])
+                todo[sel] = False
+        for i in np.nonzero(todo)[0]:
+            out[i] = scalar(gs[i], gb)
+        return out
+
+    return group
+
+
+def _box_left_intersects(gb, A, _gs):
+    """intersects_pair's decomposition, vectorized over box lefts: box
+    corners in gb, gb vertices in a box, box edges touching gb."""
+    x0, y0, x1, y1 = A.T
+    hit = np.zeros(len(A), dtype=bool)
+    if geom._has_area(gb):  # mirrors intersects_pair's area-gated check
+        for cx, cy in ((x0, y0), (x1, y0), (x1, y1), (x0, y1)):
+            hit |= gb.contains(cx, cy)
+    v = gb.vertices()
+    hit |= _box_covers(tuple(A.T[:, :, None]), (v[:, 0], v[:, 1], v[:, 0], v[:, 1])).any(axis=1)
+    ring = np.stack([x0, y0, x1, y0, x1, y1, x0, y1, x0, y0], axis=1).reshape(-1, 5, 2)
+    edges = np.concatenate([ring[:, :-1], ring[:, 1:]], axis=2).reshape(-1, 4)
+    return hit | geom.segments_touch_rowwise(edges, gb.segments()).reshape(-1, 4).any(axis=1)
+
+
+def _segment_intersects(gb, A, _gs):
+    """Single-segment lefts: row-wise segment touch plus endpoint
+    containment, intersects_pair's decomposition for lines."""
+    hit = geom.segments_touch_rowwise(A, gb.segments())
+    if geom._has_area(gb):
+        hit = hit | gb.contains(A[:, 0], A[:, 1]) | gb.contains(A[:, 2], A[:, 3])
+    return hit
+
+
+def _segment_distance(gb, A, gs):
+    d = geom.segments_dist_rowwise(A, gb.segments())
+    return np.where(_segment_intersects(gb, A, gs), 0.0, d)
+
+
+def _within_box(gb, A, gs):
+    """Every left against a box gb: coverage is one interval test.  JTS
+    within also needs interior contact: a left bbox strictly inside the
+    open box implies it (and a covered positive-area left has it), so only
+    boundary-touching lower-dimension lefts take the scalar interiors
+    refine, a measure-zero family on real data."""
+    b, lb = gb.bbox, tuple(A.T)
+    fits = _box_covers(b, lb)
+    for i in np.nonzero(fits & ~_box_covers(b, lb, strict=True))[0]:
+        if geom._dim(gs[i]) < 2:
+            fits[i] = geom.interiors_intersect_pair(gs[i], gb)
+    return fits
+
+
+def _box_box(name: str):
+    """Box lefts against a box gb: the exact interval algebra."""
+    return lambda gb, A, _gs: _box_relation(name, tuple(A.T), gb.bbox)
+
+
+def _segment_crosses_box(gb, A, _gs):
+    """Single-segment lefts against a box gb: a proper edge crossing or a
+    strictly-inside witness (an endpoint, the midpoint, or the midpoint of
+    the Liang-Barsky clip, which sees a corner-to-corner diagonal), and not
+    covered by the closed box — the scalar crosses_pair(line, area)
+    decomposition."""
+    b = gb.bbox
+    x0, y0, x1, y1 = A.T
+    proper = geom.segments_proper_cross_rowwise(A, gb.segments())
+    strict = geom.segment_box_clip_mid_strict(A, *b)
+    for px, py in ((x0, y0), (x1, y1), ((x0 + x1) / 2.0, (y0 + y1) / 2.0)):
+        strict |= _box_covers(b, (px, py, px, py), strict=True)
+    seg_box = (np.minimum(x0, x1), np.minimum(y0, y1), np.maximum(x0, x1), np.maximum(y0, y1))
+    return (proper | strict) & ~_box_covers(b, seg_box)
+
+
+# --- DE-9IM ---------------------------------------------------------------------
+
+_DE9IM_PATTERN_RE = re.compile(r"[TF*012]{9}", re.IGNORECASE)
+
+
+@lru_cache(maxsize=4096)
+def _relate_match(matrix: str, pattern: str) -> bool:
+    return georelate.relate_matches(matrix, pattern)
+
+
+def _relate_matrices(gb, gs) -> np.ndarray:
+    """DE-9IM matrix of each left against gb.  POINT lefts against an area
+    take the vectorized classifier, which also places a point in an
+    unwrapped antimeridian area's -360 image (the world-frame rule of the
+    named predicates); every other left is one relate_pair call in plain
+    coordinates."""
+    out = np.empty(len(gs), dtype=object)
+    pts = [i for i, g in enumerate(gs) if isinstance(g, geom.Point)] if geom._dim(gb) == 2 else []
+    if pts:
+        xy = np.array([(gs[i].x, gs[i].y) for i in pts], dtype=np.float64)
+        out[pts] = georelate.point_vs_area_matrices(xy, gb)
     for i, g in enumerate(gs):
-        out[i] = scalar_fn(g, gb)
+        if out[i] is None:
+            out[i] = georelate.relate_pair(g, gb)
     return out
 
 
-def _covers_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    """left-COVERS-gb group kernel: a box left covers gb iff gb's bbox
-    fits inside it (closed convex box) — vectorized; other left classes
-    fall back to the scalar kernel."""
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=bool)
-    gx0, gy0, gx1, gy1 = gb.bbox
-    box_idx = [i for i, g in enumerate(gs) if isinstance(g, geom.Polygon) and g.is_box()]
-    if box_idx:
-        arr = np.array([gs[i].bbox for i in box_idx], dtype=np.float64)
-        out[box_idx] = (
-            (arr[:, 0] <= gx0) & (arr[:, 1] <= gy0)
-            & (arr[:, 2] >= gx1) & (arr[:, 3] >= gy1)
-        )
-    excl = set(box_idx)
-    for i in range(len(gs)):
-        if i not in excl:
-            out[i] = scalar_fn(gs[i], gb)
-    return out
-
-
-def _scalar_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    out = np.zeros(len(left_wkts), dtype=bool)
-    for i, w in enumerate(left_wkts):
-        out[i] = scalar_fn(geom.geometry_from_wkt(w), gb)
-    return out
-
-
-@F.pandas_udf(T.BooleanType())
-def st_within_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """A within B (JTS-strict: coveredBy AND interior contact)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.within_pair, _within_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_covers_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """A covers B (GeomCovers/GeomContains family, boundary-inclusive)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.covers_pair, _covers_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_relate_wkt(wkt_a: pd.Series, wkt_b: pd.Series, pattern: pd.Series) -> pd.Series:
-    """Arbitrary DE-9IM mask match (JTS RelateOp / GeoTools relate parity —
-    CQLQueryFilter.java accepts any 9-char pattern).  Arrow-batched; the
-    right geometry factorizes per batch (broadcast sides repeat heavily),
-    the matrix is computed per pair by georelate.relate_pair.  This is the
-    fidelity path, not a join hot path — the named predicates keep their
-    vectorized group kernels."""
-    from .. import georelate
-
+def _st_relate(wkt_a: pd.Series, wkt_b: pd.Series, pattern: pd.Series) -> pd.Series:
+    """Arbitrary DE-9IM mask match (JTS RelateOp / GeoTools relate parity;
+    CQLQueryFilter.java accepts any 9-char pattern).  The fidelity path,
+    not a join hot path: the named predicates keep their group kernels."""
     # a NULL pattern answers NULL; a malformed one fails the batch ONCE,
     # naming the pattern, before any geometry work
     pnull = pd.isna(pattern).to_numpy()
-    pats = pattern.to_numpy()
-    for p in set(pats[~pnull]):
+    for p in set(pattern.to_numpy()[~pnull]):
         if not _DE9IM_PATTERN_RE.fullmatch(p):
             raise ValueError(
                 f"st_relate: DE-9IM pattern must be 9 characters from "
                 f"T, F, *, 0, 1, 2; got {p!r}"
             )
-    codes, uniques = pd.factorize(wkt_b)
-    out = np.zeros(len(wkt_a), dtype=bool)
-    lnull = pd.isna(wkt_a).to_numpy()
-    left = wkt_a.to_numpy()
-    for u, wb in enumerate(uniques):
-        gb = geom.geometry_from_wkt(wb)
-        idx = np.nonzero((codes == u) & ~lnull & ~pnull)[0]
-        if not idx.size:
-            continue
-        # vectorized fast path: many POINT lefts vs one area geometry (the
-        # point-table-filtered-by-query-polygon workload) — only three
-        # matrices are possible, classified by two vectorized kernels; the
-        # <=3 distinct (matrix, pattern) matches evaluate once each
-        pts = _parse_points(left[idx])
-        if pts is not None and geom._dim(gb) == 2:
-            mats = georelate.point_vs_area_matrices(pts, gb)
-            upat = pats[idx]
-            memo: dict[tuple, bool] = {}
-            for j, (m, p) in enumerate(zip(mats, upat)):
-                k = (m, p)
-                if k not in memo:
-                    memo[k] = georelate.relate_matches(m, p)
-                out[idx[j]] = memo[k]
-            continue
-        for i in idx:
-            m = georelate.relate_pair(geom.geometry_from_wkt(left[i]), gb)
-            out[i] = georelate.relate_matches(m, pats[i])
-    return pd.Series(out).astype(object).where(~pnull, None)
+
+    def kernel(gb, gs, pats):
+        mats = _relate_matrices(gb, gs)
+        return np.array([_relate_match(m, p) for m, p in zip(mats, pats)], dtype=bool)
+
+    got = _per_geometry(
+        wkt_b, (wkt_a.to_numpy(), pattern.to_numpy()), _parsed(kernel), False,
+        skip=pd.isna(wkt_a).to_numpy() | pnull,
+    )
+    return pd.Series(got).astype(object).where(~pnull, None)
 
 
-_DE9IM_PATTERN_RE = re.compile(r"[TF*012]{9}", re.IGNORECASE)
-_FLOAT = r"([-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?)"
-# strict numbers: a malformed token such as ``1-2`` must not match (it
-# would reach float() and raise a bare ValueError) — it falls back to the
-# general WKT parser, whose error names the text
-_POINT_WKT_RE = re.compile(rf"^\s*POINT\s*\(\s*{_FLOAT}\s+{_FLOAT}\s*\)\s*$")
-
-
-def _parse_points(wkts: np.ndarray):
-    """(k,2) float array if EVERY wkt is a simple POINT, else None."""
-    pts = np.empty((len(wkts), 2), dtype=np.float64)
-    for i, w in enumerate(wkts):
-        m = _POINT_WKT_RE.match(w)
-        if m is None:
-            return None
-        pts[i, 0] = float(m.group(1))
-        pts[i, 1] = float(m.group(2))
-    return pts
-
-
-@F.pandas_udf(T.StringType())
-def st_relate_matrix_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
+def _st_relate_matrix(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
     """The 9-char DE-9IM matrix itself (JTS Geometry.relate(g) analog)."""
-    from .. import georelate
-
-    codes, uniques = pd.factorize(wkt_b)
-    out = np.empty(len(wkt_a), dtype=object)
-    lnull = pd.isna(wkt_a).to_numpy()
-    left = wkt_a.to_numpy()
-    for u, wb in enumerate(uniques):
-        gb = geom.geometry_from_wkt(wb)
-        for i in np.nonzero((codes == u) & ~lnull)[0]:
-            out[i] = georelate.relate_pair(geom.geometry_from_wkt(left[i]), gb)
-    return pd.Series(out)
+    return pd.Series(_per_geometry(
+        wkt_b, (wkt_a.to_numpy(),), _parsed(_relate_matrices), None,
+        skip=pd.isna(wkt_a).to_numpy(),
+    ))
 
 
-@F.pandas_udf(T.BooleanType())
-def st_equals_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """Topological equality (GeomEquals)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.equals_pair, _scalar_group)
-    return pd.Series(got.astype(bool))
+# --- the predicate table ---------------------------------------------------------
+
+class _Pred(NamedTuple):
+    """One geometry function: SQL registers ``udf`` as ``st_<name>``."""
+
+    name: str
+    udf: Callable
+    scalar: Callable | None = None  # per-pair kernel (left, right) -> value
+    group: Callable | None = None  # (right geometry, left geometries) -> array
+    null: object = False  # the result for a NULL geometry
+    mask: str | None = None  # the DE-9IM pattern this predicate IS
 
 
-def _box_interval_group(gb, left_wkts: np.ndarray, scalar_fn, box_formula):
-    """Shared box×box fast path: when gb is a closed box and a left geometry
-    is a box, the predicate reduces to exact interval algebra —
-    ``box_formula(a, b)`` vectorized over the left boxes; everything else
-    falls back to the scalar kernel."""
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=bool)
-    excl: set[int] = set()
-    if isinstance(gb, geom.Polygon) and gb.is_box():
-        box_idx = [i for i, g in enumerate(gs) if isinstance(g, geom.Polygon) and g.is_box()]
-        if box_idx:
-            a = np.array([gs[i].bbox for i in box_idx], dtype=np.float64)
-            out[box_idx] = box_formula(a, np.array(gb.bbox, dtype=np.float64))
-            excl = set(box_idx)
-    for i in range(len(gs)):
-        if i not in excl:
-            out[i] = scalar_fn(gs[i], gb)
-    return out
+def _pred(name: str, scalar, *fast, null=False, combine=np.logical_or, mask=None, group=None):
+    """The row of the pairwise predicate ``name`` and its UDF
+    ``st_<name>_wkt``; its group kernel is ``group``, or else ``fast``
+    paths over ``scalar``."""
+    group = group or _group(scalar, null, fast)
+    return _Pred(
+        name, _pairwise_udf(f"st_{name}_wkt", group, null, combine), scalar, group, null, mask
+    )
 
 
-def _box_touches(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    ix = (a[:, 0] <= b[2]) & (b[0] <= a[:, 2]) & (a[:, 1] <= b[3]) & (b[1] <= a[:, 3])
-    interiors = (a[:, 0] < b[2]) & (b[0] < a[:, 2]) & (a[:, 1] < b[3]) & (b[1] < a[:, 3])
-    return ix & ~interiors
+_intersects = _group(
+    geom.intersects_pair, False,
+    [(None, _BOXES, _box_left_intersects), (None, _SEGMENTS, _segment_intersects)],
+)
 
 
-def _box_overlaps(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    interiors = (a[:, 0] < b[2]) & (b[0] < a[:, 2]) & (a[:, 1] < b[3]) & (b[1] < a[:, 3])
-    a_cov_b = (a[:, 0] <= b[0]) & (a[:, 1] <= b[1]) & (a[:, 2] >= b[2]) & (a[:, 3] >= b[3])
-    b_cov_a = (b[0] <= a[:, 0]) & (b[1] <= a[:, 1]) & (b[2] >= a[:, 2]) & (b[3] >= a[:, 3])
-    return interiors & ~a_cov_b & ~b_cov_a
+def _contains_pt(p, x, y):
+    return p.contains(x, y)
 
 
-def _box_contains(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    # positive-area b inside closed a always shares interior → covers==contains
-    return (a[:, 0] <= b[0]) & (a[:, 1] <= b[1]) & (a[:, 2] >= b[2]) & (a[:, 3] >= b[3])
+def _distance_pt(p, x, y):
+    return p.distance(x, y)
 
 
-def _touches_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    return _box_interval_group(gb, left_wkts, scalar_fn, _box_touches)
+# The exact refine family: SpatialQueryFilter.accept (:259-302) plus the
+# operations GeomFunctionRegistry registers (:26-42).  cql, spatial_join
+# and sqlregistry look predicates up here.
+PREDICATES: dict[str, _Pred] = {p.name: p for p in (
+    # JTS-intersects (GeomIntersects.java:21), boundary inclusive
+    _pred("intersects", geom.intersects_pair, group=_intersects),
+    # planar JTS-distance (GeomDistance.java:14-23)
+    _pred("distance", geom.distance_pair, (None, _SEGMENTS, _segment_distance),
+          null=np.nan, combine=np.minimum),
+    # JTS-strict within: covered by, with interior contact
+    _pred("within", geom.within_pair, (_is_box, _ALL, _within_box), mask="T*F**F***"),
+    # boundary-inclusive covers (GeomCovers)
+    _pred("covers", geom.covers_pair, (None, _BOXES, _box_box("covers"))),
+    # covers with interior contact (GeomContains)
+    _pred("contains", geom.contains_pair, (_is_box, _BOXES, _box_box("contains")),
+          mask="T*****FF*"),
+    # boundary contact only (GeomTouches)
+    _pred("touches", geom.touches_pair, (_is_box, _BOXES, _box_box("touches"))),
+    # interiors meet in a lower-dimension set (GeomCrosses)
+    _pred("crosses", geom.crosses_pair, (_is_box, _SEGMENTS, _segment_crosses_box)),
+    # same-dimension interior overlap, neither covering the other
+    _pred("overlaps", geom.overlaps_pair, (_is_box, _BOXES, _box_box("overlaps"))),
+    # topological equality (GeomEquals)
+    _pred("equals", geom.equals_pair, mask="T*F**FFF*"),
+    # NOT intersects (GeomDisjoint): as a join, the anti-join output.  Both
+    # seam images must be disjoint, and a NULL stays False: a null must not
+    # read as disjoint from everything through the negation
+    _pred("disjoint", geom.disjoint_pair, group=lambda gb, gs: ~_intersects(gb, gs),
+          combine=np.logical_and, mask="FF*FF****"),
+    # any DE-9IM mask; NULL for a NULL pattern
+    _Pred("relate", _udf("st_relate_wkt", _st_relate, T.BooleanType())),
+    _Pred("relate_matrix", _udf("st_relate_matrix_wkt", _st_relate_matrix, T.StringType()),
+          georelate.relate_pair, _relate_matrices, None),
+    # point × geometry, the point join's refine: an unwrapped antimeridian
+    # geometry also meets each point's lon + 360 copy; distance_point does
+    # that for every box as well, the rule of the broadcast join's JVM box
+    # refine and of both DuckDB oracles (a point at lon -179.8 can be
+    # within 0.5 of a box ending at 179.99)
+    _Pred("contains_point", _point_udf(
+        "st_contains_point", _contains_pt, False, np.logical_or, _unwrapped)),
+    _Pred("distance_point", _point_udf(
+        "st_distance_point", _distance_pt, np.nan, np.minimum,
+        lambda g: _unwrapped(g) or g.is_box()), null=np.nan),
+)}
 
-
-def _overlaps_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    return _box_interval_group(gb, left_wkts, scalar_fn, _box_overlaps)
-
-
-def _contains_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    return _box_interval_group(gb, left_wkts, scalar_fn, _box_contains)
-
-
-def _crosses_group(gb, left_wkts: np.ndarray, scalar_fn) -> np.ndarray:
-    """crosses group kernel: single-segment lefts against a box gb reduce
-    to vectorized row-wise kernels (proper edge crossing OR a strict-inside
-    witness sample, and not covered by the closed box) — exactly the
-    scalar crosses_pair(line, area) decomposition; others fall back."""
-    gs = [geom.geometry_from_wkt(w) for w in left_wkts]
-    out = np.zeros(len(gs), dtype=bool)
-    excl: set[int] = set()
-    if isinstance(gb, geom.Polygon) and gb.is_box():
-        bx0, by0, bx1, by1 = gb.bbox
-        seg_idx = [
-            i for i, g in enumerate(gs) if isinstance(g, geom.LineString) and len(g.coords) == 2
-        ]
-        if seg_idx:
-            A = np.array([gs[i].coords.ravel() for i in seg_idx], dtype=np.float64)
-            proper = geom.segments_proper_cross_rowwise(A, gb.segments())
-            mx, my = (A[:, 0] + A[:, 2]) / 2.0, (A[:, 1] + A[:, 3]) / 2.0
-            strict = np.zeros(len(seg_idx), dtype=bool)
-            for px, py in ((A[:, 0], A[:, 1]), (A[:, 2], A[:, 3]), (mx, my)):
-                strict |= (px > bx0) & (px < bx1) & (py > by0) & (py < by1)
-            # clip-midpoint witness (Liang-Barsky): a segment entering the
-            # box corner-to-corner has NO proper edge crossing and its
-            # global midpoint may sit on the boundary, yet the midpoint of
-            # its clipped sub-segment is strictly interior — the vectorized
-            # twin of the scalar kernel's _cut_midpoints witnesses
-            strict |= geom.segment_box_clip_mid_strict(A, bx0, by0, bx1, by1)
-            covered = (
-                (A[:, 0] >= bx0) & (A[:, 0] <= bx1) & (A[:, 1] >= by0) & (A[:, 1] <= by1)
-                & (A[:, 2] >= bx0) & (A[:, 2] <= bx1) & (A[:, 3] >= by0) & (A[:, 3] <= by1)
-            )
-            out[seg_idx] = (proper | strict) & ~covered
-            excl = set(seg_idx)
-    for i in range(len(gs)):
-        if i not in excl:
-            out[i] = scalar_fn(gs[i], gb)
-    return out
-
-
-@F.pandas_udf(T.BooleanType())
-def st_touches_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-touches: boundary contact only (GeomTouches)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.touches_pair, _touches_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_crosses_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-crosses: interiors meet in a lower-dimension set (GeomCrosses)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.crosses_pair, _crosses_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_overlaps_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-overlaps: same-dimension interior overlap, neither covering the
-    other (GeomOverlaps)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.overlaps_pair, _overlaps_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_contains_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-contains: covers with interior contact (GeomContains)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.contains_pair, _contains_group)
-    return pd.Series(got.astype(bool))
-
-
-@F.pandas_udf(T.BooleanType())
-def st_disjoint_wkt(wkt_a: pd.Series, wkt_b: pd.Series) -> pd.Series:
-    """JTS-disjoint = NOT intersects (GeomDisjoint).  As a join this is
-    the anti-join output, not a cell equi-join predicate.  NULL geometry
-    on either side yields False (a null relates to nothing — it must not
-    read as 'disjoint from everything' through the negation)."""
-    got = _group_vectorized(wkt_a, wkt_b, geom.intersects_pair, _intersects_group)
-    res = ~got.astype(bool)
-    res[(pd.isna(wkt_a) | pd.isna(wkt_b)).to_numpy()] = False
-    return pd.Series(res)
+st_intersects_wkt = PREDICATES["intersects"].udf
+st_distance_wkt = PREDICATES["distance"].udf
+st_within_wkt = PREDICATES["within"].udf
+st_covers_wkt = PREDICATES["covers"].udf
+st_contains_wkt = PREDICATES["contains"].udf
+st_touches_wkt = PREDICATES["touches"].udf
+st_crosses_wkt = PREDICATES["crosses"].udf
+st_overlaps_wkt = PREDICATES["overlaps"].udf
+st_equals_wkt = PREDICATES["equals"].udf
+st_disjoint_wkt = PREDICATES["disjoint"].udf
+st_relate_wkt = PREDICATES["relate"].udf
+st_relate_matrix_wkt = PREDICATES["relate_matrix"].udf
+st_contains_point = PREDICATES["contains_point"].udf
+st_distance_point = PREDICATES["distance_point"].udf
+# no-wrap twins for custom-bounds (projected CRS) frames, where the
+# bbox x1 > 180 test would misread metre coordinates as unwrapped
+# antimeridian geometry
+st_contains_point_nowrap = _point_udf("st_contains_point_nowrap", _contains_pt, False)
+st_distance_point_nowrap = _point_udf("st_distance_point_nowrap", _distance_pt, np.nan)
 
 
 _BBOX_SCHEMA = T.StructType(

@@ -7,8 +7,7 @@ PackBits, predictor 2).  fmt="jpeg" is the REAL baseline ITU T.81 codec
 (jpegcodec.py — JFIF markers, Annex K tables, Huffman entropy coding,
 4:4:4/4:2:0), satisfying the BASELINE.json per-row invariant
 ("decoded-pixel allclose, PSNR>=40dB for lossy") against an actual lossy
-format; jpeg decode sniffs the payload so legacy GWDC stand-in bytes
-(fmt "dct", the pre-real-codec tables) still decode.
+format.
 
 All functions take/return HxWx3 uint8 numpy arrays.  They run inside
 Arrow-batched pandas UDFs (see sources/images.py and functions/geo_udfs.py);
@@ -139,77 +138,6 @@ def decode_png(data: bytes) -> np.ndarray:
         prev = _unfilter(int(raw[r, 0]), raw[r, 1:], prev, 3)
         out[r] = prev
     return out.reshape(h, w, 3)
-
-
-# ---------------------------------------------------------------------------
-# "JPEG" stand-in: 8x8 DCT + uniform quantization + zlib (LOSSY, deterministic)
-# ---------------------------------------------------------------------------
-
-_MAGIC = b"GWDC"  # geowave-spark DCT codec
-_Q = 5.0  # uniform quant step → RMSE ≈ q/sqrt(12) ≈ 1.44 → PSNR ≈ 45 dB
-
-
-def _dct_matrix(n: int = 8) -> np.ndarray:
-    k = np.arange(n)
-    m = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
-    m[0] = np.sqrt(1.0 / n)
-    return m
-
-
-_D = _dct_matrix()
-
-
-def _blockify(chan: np.ndarray) -> tuple[np.ndarray, int, int]:
-    h, w = chan.shape
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    pad = np.zeros((ph, pw), np.float64)
-    pad[:h, :w] = chan
-    pad[h:, :w] = chan[-1:, :]  # edge-replicate padding
-    pad[:, w:] = pad[:, w - 1 : w]
-    blocks = pad.reshape(ph // 8, 8, pw // 8, 8).transpose(0, 2, 1, 3)
-    return blocks, ph, pw
-
-
-def encode_dct(arr: np.ndarray, q: float = _Q) -> bytes:
-    """Deterministic lossy encode (JPEG STAND-IN — see module docstring)."""
-    h, w, _ = arr.shape
-    coeffs = []
-    for c in range(3):
-        blocks, ph, pw = _blockify(arr[:, :, c].astype(np.float64) - 128.0)
-        # broadcast matmul over the (bh, bw) block grid — identical
-        # contraction to einsum("ij,bcjk,lk->bcil", D, blocks, D) but ~20x
-        # faster on small images (einsum's path overhead dominates there)
-        f = (_D @ blocks) @ _D.T
-        quant = np.round(f / q)
-        if abs(quant).max() > np.iinfo(np.int16).max:
-            # the payload stores int16 coefficients; a too-small q would
-            # silently WRAP the DC terms (corrupting blocks with no error)
-            raise ValueError(
-                f"encode_dct: q={q} too small for int16 coefficient storage "
-                f"(max |coeff| {int(abs(quant).max())}); use q >= "
-                f"{abs(f).max() / np.iinfo(np.int16).max:.4f}"
-            )
-        coeffs.append(quant.astype(np.int16))
-    payload = zlib.compress(np.concatenate([c.ravel() for c in coeffs]).tobytes(), 6)
-    head = _MAGIC + struct.pack("<HHf", w, h, q)
-    return head + payload
-
-
-def decode_dct(data: bytes) -> np.ndarray:
-    if data[:4] != _MAGIC:
-        raise ValueError("not a GWDC payload")
-    w, h, q = struct.unpack_from("<HHf", data, 4)
-    ph, pw = (h + 7) & ~7, (w + 7) & ~7
-    nb = (ph // 8) * (pw // 8) * 64
-    flat = np.frombuffer(zlib.decompress(data[12:]), dtype=np.int16).astype(np.float64)
-    out = np.empty((h, w, 3), np.uint8)
-    for c in range(3):
-        f = flat[c * nb : (c + 1) * nb].reshape(ph // 8, pw // 8, 8, 8) * q
-        # inverse transform as broadcast matmul (see encode_dct note)
-        blocks = (_D.T @ f) @ _D
-        img = blocks.transpose(0, 2, 1, 3).reshape(ph, pw) + 128.0
-        out[:, :, c] = np.clip(np.round(img[:h, :w]), 0, 255).astype(np.uint8)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -421,20 +349,14 @@ def _encode_jpeg(arr: np.ndarray) -> bytes:
 
 
 def _decode_jpeg(data: bytes) -> np.ndarray:
-    """fmt="jpeg" decode with payload sniffing: real JFIF/JPEG (SOI magic)
-    via the baseline T.81 decoder; legacy GWDC payloads (tables written
-    before the real codec landed) via the stand-in decoder."""
-    if data[:2] == b"\xff\xd8":
-        from . import jpegcodec
+    from . import jpegcodec
 
-        return jpegcodec.decode_jpeg(data)
-    return decode_dct(data)
+    return jpegcodec.decode_jpeg(data)
 
 
-_ENCODERS = {"png": encode_png, "bmp": encode_bmp, "jpeg": _encode_jpeg,
-             "dct": encode_dct}
+_ENCODERS = {"png": encode_png, "bmp": encode_bmp, "jpeg": _encode_jpeg}
 _DECODERS = {"png": decode_png, "bmp": decode_bmp, "jpeg": _decode_jpeg,
-             "dct": decode_dct, "tiff": decode_tiff}
+             "tiff": decode_tiff}
 LOSSLESS = {"png", "bmp"}
 
 

@@ -1,6 +1,6 @@
 """Real baseline JPEG codec, from the public ITU-T T.81 spec, pure numpy.
 
-Replaces the GWDC stand-in as the engine's lossy codec for fmt="jpeg":
+The engine's lossy codec for fmt="jpeg":
 encoder and decoder are both from scratch (no libjpeg/PIL in this
 container), implementing baseline sequential DCT — JFIF headers, Annex K
 quantization tables scaled by the IJG quality rule, Annex K Huffman
@@ -135,10 +135,11 @@ _ZIGZAG = _zigzag_order()  # zigzag k → natural idx
 _UNZIGZAG = np.argsort(_ZIGZAG)  # natural idx → zigzag k
 
 
-def _dct_matrix() -> np.ndarray:
-    k = np.arange(8)
-    m = np.sqrt(2.0 / 8) * np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / 16)
-    m[0] = np.sqrt(1.0 / 8)
+def _dct_matrix(n: int = 8) -> np.ndarray:
+    """Orthonormal n-point DCT-II basis."""
+    k = np.arange(n)
+    m = np.sqrt(2.0 / n) * np.cos(np.pi * (2 * k[None, :] + 1) * k[:, None] / (2 * n))
+    m[0] = np.sqrt(1.0 / n)
     return m
 
 

@@ -41,9 +41,10 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup
 from . import imagecodec as codec
+from . import jpegcodec
 
-# orthonormal 32-point DCT-II basis (same construction as the codec's 8x8)
-_D32 = codec._dct_matrix(32)
+# orthonormal 32-point DCT-II basis (the JPEG codec's 8x8 construction)
+_D32 = jpegcodec._dct_matrix(32)
 _LUMA = np.array([0.299, 0.587, 0.114])
 
 

@@ -10,9 +10,16 @@ and its SqlQueryRunner swaps the naive cross-join plan for the tiered join
 (SqlQueryRunner.java:90-303 — via logical-plan regex surgery).  Our
 equivalents:
 
-* :func:`register_sql_udfs` — the predicate family as named SQL functions
-  over (wkt, lon, lat), so any Spark SQL string can use them (the honest
-  cross-join path — correct, O(n·m), the test oracle);
+* :func:`register_sql_udfs` — every row of the predicate table
+  (``geo_udfs.PREDICATES``) as ``st_<name>``: the named predicates,
+  ``st_distance``, ``st_relate`` / ``st_relate_matrix`` over two WKT
+  columns, ``st_contains_point`` / ``st_distance_point`` over
+  (wkt, lon, lat); plus ``st_dwithin`` and ``st_dwithin_point``, the
+  table's distance kernels compared with a radius.  Any Spark SQL string
+  can use them (the honest cross-join path — correct, O(n·m), the test
+  oracle).  :data:`SQL_UDFS` lists each name with its SQL result type;
+  a NULL geometry gives the table's NULL result (False, or NULL for
+  distances and matrices), a malformed WKT an error naming the text;
 * :func:`spatial_join_sql` — the structured fast path: the caller names
   the two views and the predicate and gets the tiered-join plan, instead
   of regex-rewriting SQL text (which the reference itself documents as
@@ -27,102 +34,39 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators import spatial_join
+from . import geo_udfs
 
-SQL_UDFS = {
-    "st_contains_point": "boolean",
-    "st_distance_point": "double",
-    "st_dwithin_point": "boolean",
-    "st_intersects": "boolean",
-    "st_distance": "double",
-    "st_dwithin": "boolean",
-    "st_covers": "boolean",
-    "st_within": "boolean",
-    "st_equals": "boolean",
-    "st_contains": "boolean",
-    "st_touches": "boolean",
-    "st_crosses": "boolean",
-    "st_overlaps": "boolean",
-    "st_disjoint": "boolean",
-    "st_relate": "boolean",
-    "st_relate_matrix": "string",
+# SQL numeric literals arrive as DECIMAL objects, and NaN <= Decimal raises
+# decimal.InvalidOperation: both dwithin forms compare in float64, where a
+# NULL geometry's NaN distance (never 0.0, which would make a NULL
+# geometry "within distance" of everything) compares False
+
+
+@F.pandas_udf(T.BooleanType())
+def _dwithin(wkt: pd.Series, lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
+    d = geo_udfs.st_distance_point.func(wkt, lon, lat).to_numpy()
+    return pd.Series(d <= radius.astype("float64").to_numpy())
+
+
+@F.pandas_udf(T.BooleanType())
+def _dwithin_wkt(wa: pd.Series, wb: pd.Series, radius: pd.Series) -> pd.Series:
+    d = geo_udfs.st_distance_wkt.func(wa, wb).to_numpy()
+    return pd.Series(d <= radius.astype("float64").to_numpy())
+
+
+_UDFS = {
+    **{f"st_{name}": p.udf for name, p in geo_udfs.PREDICATES.items()},
+    "st_dwithin": _dwithin_wkt,
+    "st_dwithin_point": _dwithin,
 }
+SQL_UDFS = {name: udf.returnType.simpleString() for name, udf in _UDFS.items()}
 
 
 def register_sql_udfs(spark: SparkSession) -> None:
-    """Register the geometry predicate family for SQL use.
-
-    Names mirror the reference's registry semantics for the point workload:
-    st_contains_point(wkt, lon, lat), st_distance_point(wkt, lon, lat),
-    st_dwithin_point(wkt, lon, lat, radius).
-    """
-    from . import geo_udfs
-
-    @F.pandas_udf(T.BooleanType())
-    def _dwithin(wkt: pd.Series, lon: pd.Series, lat: pd.Series, radius: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # the same box rule as st_distance_point (lon + 360 retest)
-        d = geo_udfs._eval_per_polygon(
-            wkt, lon, lat, lambda p, x, y: p.distance(x, y), null_value=np.nan,
-            wrap_boxes=True,
-        )
-        # SQL numeric literals arrive as DECIMAL objects; NaN <= Decimal
-        # raises decimal.InvalidOperation — compare in float64 (NaN→False)
-        return pd.Series(d <= radius.astype("float64").to_numpy())
-
-    # register the canonical decorated UDFs directly — one body each, no
-    # drift-prone re-wrapped copies (round-3 review)
-    spark.udf.register("st_contains_point", geo_udfs.st_contains_point)
-    spark.udf.register("st_distance_point", geo_udfs.st_distance_point)
-    spark.udf.register("st_dwithin_point", _dwithin)
-
-    # geometry × geometry family over two WKT columns — the full
-    # GeomIntersects / GeomDistance / GeomWithinDistance registry
-    # (GeomFunctionRegistry.java:26-42), LINESTRING/MULTI* included
-    from .geo_udfs import st_distance_wkt, st_intersects_wkt
-
-    @F.pandas_udf(T.BooleanType())
-    def _dwithin_wkt(wa: pd.Series, wb: pd.Series, radius: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from .geo_udfs import _distance_group, _group_vectorized
-        from .. import geom
-
-        # NaN for NULL geometries (NaN <= r is False) — the 0.0 default
-        # fill would make a NULL geometry "within distance" of EVERYTHING
-        d = _group_vectorized(wa, wb, geom.distance_pair, _distance_group, null_value=np.nan)
-        # DECIMAL radius literals vs NaN raise in decimal — float64 compare
-        return pd.Series(d <= radius.astype("float64").to_numpy())
-
-    from .geo_udfs import (
-        st_contains_wkt,
-        st_covers_wkt,
-        st_crosses_wkt,
-        st_disjoint_wkt,
-        st_equals_wkt,
-        st_overlaps_wkt,
-        st_touches_wkt,
-        st_within_wkt,
-    )
-
-    spark.udf.register("st_intersects", st_intersects_wkt)
-    spark.udf.register("st_distance", st_distance_wkt)
-    spark.udf.register("st_dwithin", _dwithin_wkt)
-    spark.udf.register("st_covers", st_covers_wkt)
-    spark.udf.register("st_within", st_within_wkt)
-    spark.udf.register("st_equals", st_equals_wkt)
-    # interior-aware remainder of the registered 9-op family
-    # (UDFRegistrySPI.java:16-27)
-    spark.udf.register("st_contains", st_contains_wkt)
-    spark.udf.register("st_touches", st_touches_wkt)
-    spark.udf.register("st_crosses", st_crosses_wkt)
-    spark.udf.register("st_overlaps", st_overlaps_wkt)
-    # r5: arbitrary DE-9IM masks + the raw matrix (JTS relate parity)
-    from .geo_udfs import st_relate_matrix_wkt, st_relate_wkt
-
-    spark.udf.register("st_relate", st_relate_wkt)
-    spark.udf.register("st_relate_matrix", st_relate_matrix_wkt)
-    spark.udf.register("st_disjoint", st_disjoint_wkt)
+    """Register the geometry function family (:data:`SQL_UDFS`) for SQL
+    use."""
+    for name, udf in _UDFS.items():
+        spark.udf.register(name, udf)
 
 
 _SPATIAL_SQL_RE = (

@@ -32,7 +32,13 @@ from functools import lru_cache
 
 import numpy as np
 
-_NUM = r"[-+]?\d*\.?\d+(?:[eE][-+]?\d+)?"
+# one strict decimal ordinate: ``1-2`` or ``1x1`` is malformed, never two
+# numbers or a silently dropped vertex
+_NUM = r"[-+]?(?:\d+\.?\d*|\.\d+)(?:[eE][-+]?\d+)?"
+# one coordinate list: tuples of 2-4 ordinates (Z and M are dropped)
+_TUPLE = rf"{_NUM}(?:\s+{_NUM}){{1,3}}"
+_COORDS_RE = re.compile(rf"\s*{_TUPLE}(?:\s*,\s*{_TUPLE})*\s*")
+_LIST_RE = re.compile(r"\(([^()]*)\)")
 
 
 class Polygon:
@@ -1136,12 +1142,33 @@ def distance_pair(ga, gb) -> float:
 # WKT
 # ---------------------------------------------------------------------------
 
-def _parse_ring(txt: str) -> np.ndarray:
-    pts = re.findall(rf"({_NUM})\s+({_NUM})", txt)
-    arr = np.array(pts, dtype=np.float64)
-    if not np.array_equal(arr[0], arr[-1]):
-        arr = np.vstack([arr, arr[:1]])
-    return arr
+def _coord_lists(txt: str, wkt: str, n: int | None = None) -> list[np.ndarray]:
+    """The innermost parenthesised coordinate lists of ``txt`` as (k, 2)
+    arrays — at least one, exactly ``n`` when given — validated against
+    the strict grammar; malformed input raises a ValueError naming the
+    WKT text."""
+    lists = _LIST_RE.findall(txt)
+    if not lists or (n is not None and len(lists) != n) or not all(
+        map(_COORDS_RE.fullmatch, lists)
+    ):
+        raise ValueError(f"malformed WKT: {wkt[:80]!r}")
+    return [_xy(c) for c in lists]
+
+
+def _xy(coords: str) -> np.ndarray:
+    """A validated coordinate list → (k, 2) array of its x and y."""
+    v = coords.replace(",", " ").split()
+    if len(v) == 2 * (coords.count(",") + 1):  # every tuple is plain x y
+        return np.array(v, dtype=np.float64).reshape(-1, 2)
+    return np.array([t.split()[:2] for t in coords.split(",")], dtype=np.float64)
+
+
+def _polygon(txt: str, wkt: str) -> Polygon:
+    """Rings of one polygon's text, each closed (first == last point)."""
+    return Polygon([
+        r if np.array_equal(r[0], r[-1]) else np.vstack([r, r[:1]])
+        for r in _coord_lists(txt, wkt)
+    ])
 
 
 @lru_cache(maxsize=4096)
@@ -1151,17 +1178,7 @@ def polygon_from_wkt(wkt: str) -> Polygon:
     w = wkt.strip()
     if not w.upper().startswith("POLYGON"):
         raise ValueError(f"unsupported WKT (POLYGON only): {w[:40]}")
-    rings = [
-        _parse_ring(m.group(1))
-        for m in re.finditer(r"\(([^()]+)\)", w)
-    ]
-    return Polygon(rings)
-
-
-def _parse_path(txt: str) -> np.ndarray:
-    """Coordinate list → (n,2) array, NOT closed (for linestrings)."""
-    pts = re.findall(rf"({_NUM})\s+({_NUM})", txt)
-    return np.array(pts, dtype=np.float64)
+    return _polygon(w, w)
 
 
 @lru_cache(maxsize=4096)
@@ -1173,27 +1190,26 @@ def geometry_from_wkt(wkt: str):
     reference's one-ConstraintSet-per-part handling
     (GeometryUtils.basicConstraintsFromGeometry:154-213).  Interned via
     lru_cache like the reference's prepared-geometry GeometryImage
-    interning (SpatialQueryFilter.java:353-367).
+    interning (SpatialQueryFilter.java:353-367).  Malformed coordinates
+    raise a ValueError naming the text.
     """
     w = wkt.strip()
     u = w.upper()
     if u.startswith("POINT"):
-        pts = _parse_path(w)
-        return Point(pts[0, 0], pts[0, 1])
+        (c,) = _coord_lists(w, w, 1)
+        if len(c) != 1:
+            raise ValueError(f"malformed WKT: {w[:80]!r}")
+        return Point(c[0, 0], c[0, 1])
     if u.startswith("MULTILINESTRING"):
-        parts = [
-            LineString(_parse_path(m.group(1)))
-            for m in re.finditer(r"\(([^()]+)\)", w)
-        ]
-        return MultiGeometry(parts)
+        return MultiGeometry([LineString(c) for c in _coord_lists(w, w)])
     if u.startswith("LINESTRING"):
-        return LineString(_parse_path(w))
+        return LineString(_coord_lists(w, w, 1)[0])
     if u.startswith("MULTIPOLYGON"):
         # split on outer-level polygon groups: '((...), (...))' blocks
-        parts = [
-            Polygon([_parse_ring(rm.group(1)) for rm in re.finditer(r"\(([^()]+)\)", pg.group(0))])
-            for pg in re.finditer(r"\(\s*\([^)]*\)(?:\s*,\s*\([^)]*\))*\s*\)", w[len("MULTIPOLYGON"):])
-        ]
+        blocks = re.finditer(r"\(\s*\([^)]*\)(?:\s*,\s*\([^)]*\))*\s*\)", w[len("MULTIPOLYGON"):])
+        parts = [_polygon(pg.group(0), w) for pg in blocks]
+        if not parts:
+            raise ValueError(f"malformed WKT: {w[:80]!r}")
         return MultiGeometry(parts)
     if u.startswith("POLYGON"):
         return polygon_from_wkt(w)

@@ -335,10 +335,19 @@ def point_vs_area_matrices(pts: np.ndarray, gb) -> np.ndarray:
     query polygon).  A point has empty boundary, so only three matrices
     are possible; two vectorized kernels (exact on-segment + boundary-
     inclusive containment, the same primitives relate_pair uses) classify
-    every point at once instead of one relate_pair call per row."""
-    S = G._nondeg_segments(gb)
-    on = _on_any_segment(pts, S)
-    closed = gb.contains(pts[:, 0], pts[:, 1])
+    every point at once instead of one relate_pair call per row.
+
+    An area whose bbox reaches past +180 (an unwrapped antimeridian
+    geometry) is also tried as its -360 image: each point is classified
+    against the first image whose closure holds it — the world-frame rule
+    the engine's named-predicate UDFs apply."""
+    images = [gb] + ([G.translate_lon(gb, -360.0)] if gb.bbox[2] > 180.0 else [])
+    on = np.zeros(len(pts), dtype=bool)
+    closed = np.zeros(len(pts), dtype=bool)
+    for g in images:
+        hit = g.contains(pts[:, 0], pts[:, 1]) & ~closed
+        on |= hit & _on_any_segment(pts, G._nondeg_segments(g))
+        closed |= hit
     out = np.where(on, "F0FFFF212", np.where(closed, "0FFFFF212", "FF0FFF212"))
     return out.astype(object)
 

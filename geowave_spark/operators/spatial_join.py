@@ -737,14 +737,13 @@ def _candidate_filter(
     meets only the right geometry's -360 image takes its reference corner
     against that image, so seam pairs are neither dropped nor duplicated.
     """
-    boxes = _box_predicates()
-
-    def tested(cond: Column) -> Column:
+    def tested(name: str) -> Column:
+        cond = _box_predicate(name)
         return cond if seam is None else cond | seam
 
-    keep = (F.col("_kt") == F.least(F.col("_lte"), F.col("_rte"))) & tested(boxes["intersects"])
+    keep = (F.col("_kt") == F.least(F.col("_lte"), F.col("_rte"))) & tested("intersects")
     if predicate in ("within", "covers", "contains", "equals"):
-        keep = keep & tested(boxes[predicate])
+        keep = keep & tested(predicate)
     j = j.filter(keep)
     if not ref_point:
         return j
@@ -809,51 +808,26 @@ GEOMETRY_JOIN_PREDICATES = (
     "touches", "crosses", "overlaps", "equals",
 )
 
-_PAIRWISE_UDF = {
-    "within": lambda la, ra: geo_udfs.st_within_wkt(la, ra),
-    "covers": lambda la, ra: geo_udfs.st_covers_wkt(la, ra),
-    "contains": lambda la, ra: geo_udfs.st_contains_wkt(la, ra),
-    "touches": lambda la, ra: geo_udfs.st_touches_wkt(la, ra),
-    "crosses": lambda la, ra: geo_udfs.st_crosses_wkt(la, ra),
-    "overlaps": lambda la, ra: geo_udfs.st_overlaps_wkt(la, ra),
-    "equals": lambda la, ra: geo_udfs.st_equals_wkt(la, ra),
-}
-
-
 def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
-    """Shared exact pairwise refine over (_lwkt, _rwkt) candidate columns —
-    the full registered UDF family (GeomFunctionRegistry.java:26-42):
-    intersects / dwithin / within / covers / contains / touches / crosses /
-    overlaps / equals, each left-vs-right."""
+    """Shared exact pairwise refine over (_lwkt, _rwkt) candidate columns:
+    the predicate table's UDF (GeomFunctionRegistry.java:26-42), left vs
+    right; dwithin is distance <= radius."""
     la, ra = F.col("_lwkt"), F.col("_rwkt")
-    if predicate == "intersects":
-        return j.filter(geo_udfs.st_intersects_wkt(la, ra))
     if predicate == "dwithin":
         return j.filter(geo_udfs.st_distance_wkt(la, ra) <= F.lit(float(radius)))
-    return j.filter(_PAIRWISE_UDF[predicate](la, ra))
+    return j.filter(geo_udfs.PREDICATES[predicate].udf(la, ra))
 
 
-def _box_predicates() -> dict[str, Column]:
-    """JVM Column twin of each predicate for axis-aligned box × box pairs
-    (exact interval algebra — the geometry IS its bbox).  Columns:
-    left (_lx0.._ly1), right (_rx0.._ry1).  For any geometries the
-    containment-family entries are NECESSARY envelope conditions."""
-    l0, m0, l1, m1 = (F.col(f"_l{n}") for n in _BOX)
-    r0, s0, r1, s1 = (F.col(f"_r{n}") for n in _BOX)
-    ix = (l0 <= r1) & (r0 <= l1) & (m0 <= s1) & (s0 <= m1)
-    interiors = (l0 < r1) & (r0 < l1) & (m0 < s1) & (s0 < m1)
-    l_cov_r = (l0 <= r0) & (m0 <= s0) & (l1 >= r1) & (m1 >= s1)
-    r_cov_l = (r0 <= l0) & (s0 <= m0) & (r1 >= l1) & (s1 >= m1)
-    return {
-        "intersects": ix,
-        "touches": ix & ~interiors,
-        "overlaps": interiors & ~l_cov_r & ~r_cov_l,
-        "within": r_cov_l,
-        "covers": l_cov_r,
-        "contains": l_cov_r,  # positive-area boxes: covers == contains
-        "equals": (l0 == r0) & (m0 == s0) & (l1 == r1) & (m1 == s1),
-        "crosses": F.lit(False),  # area × area never crosses
-    }
+def _box_predicate(predicate: str) -> Column | None:
+    """JVM Column twin of ``predicate`` for box × box candidate rows, left
+    (_lx0.._ly1) against right (_rx0.._ry1): geo_udfs' interval algebra
+    over Columns.  None when the predicate has no interval form
+    (dwithin).  For any geometries the containment-family entries are
+    NECESSARY envelope conditions."""
+    if predicate == "crosses":
+        return F.lit(False)  # area × area never crosses
+    left, right = (tuple(F.col(f"{p}{n}") for n in _BOX) for p in ("_l", "_r"))
+    return geo_udfs._box_relation(predicate, left, right)
 
 
 def geometry_join(
@@ -974,7 +948,7 @@ def geometry_join(
         ref_point=exactly_once,
     )
 
-    box_pred = _box_predicates().get(predicate) if left_is_box else None
+    box_pred = _box_predicate(predicate) if left_is_box else None
     if box_pred is not None:
         # box×box candidates never touch Python OR the WKT column: the
         # interval-algebra predicate refines them inside the same codegen

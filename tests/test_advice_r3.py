@@ -1,9 +1,9 @@
 """Round-3 advisor regression cases: concave-hole cover witnesses,
-dashed-line coverage gaps, corner-diagonal crosses on the vectorized path,
-and closed covers for buffered (dwithin) joins.
+dashed-line coverage gaps and closed covers for buffered (dwithin) joins
+(the corner-diagonal crosses case lives in test_geom_relate.py).
 
 Each case is the exact family the round-2 review flagged — kept as
-permanent regressions because all four are measure-zero on random
+permanent regressions because all of them are measure-zero on random
 fixtures and only ever show up on constructed geometry.
 """
 
@@ -18,7 +18,6 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geowave_spark import geom
-from geowave_spark.functions import geo_udfs
 
 W = geom.geometry_from_wkt
 
@@ -79,26 +78,6 @@ def test_line_covers_dashed_line_gap():
     assert geom.covers_pair(W("LINESTRING (0 0, 4 0)"), W("LINESTRING (1 0, 3 0)"))
     # dash covered by the full line
     assert geom.covers_pair(gb, ga)
-
-
-def test_crosses_corner_diagonal_vectorized_matches_scalar():
-    """Segment entering a box corner-to-corner: no proper edge crossing,
-    global midpoint ON the boundary — only the clip-midpoint witness sees
-    the interior passage.  Scalar and group kernels must agree."""
-    box = W("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
-    cases = {
-        "LINESTRING (-1 -1, 3 3)": True,   # corner-to-corner diagonal
-        "LINESTRING (-1 1, 2 1)": False,   # rides the top edge (touch)
-        "LINESTRING (-1 -1, 0 0)": False,  # stops at the corner
-        "LINESTRING (-1 0.5, 2 0.5)": True,
-        "LINESTRING (0.2 0.2, 0.8 0.8)": False,  # fully inside (covered)
-        "LINESTRING (5 5, 6 6)": False,
-    }
-    wkts = np.array(list(cases))
-    got = geo_udfs._crosses_group(box, wkts, geom.crosses_pair)
-    for wkt, want in cases.items():
-        assert geom.crosses_pair(W(wkt), box) == want, wkt
-    assert got.tolist() == list(cases.values())
 
 
 def test_segment_box_clip_mid_strict_kernel():

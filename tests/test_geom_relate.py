@@ -217,8 +217,9 @@ def test_line_covers_line_witness():
 
 
 def test_group_kernels_match_scalar():
-    """The vectorized box×box / segment×box group kernels used by the
-    pairwise UDFs must agree with the scalar predicates pair-for-pair."""
+    """Every vectorized group kernel of the predicate table (box×box,
+    segment×box, box-left, point×area fast paths, each with its scalar
+    fallback) must agree with the row's scalar kernel pair-for-pair."""
     from geowave_spark.functions import geo_udfs
 
     rng = np.random.RandomState(3)
@@ -240,17 +241,16 @@ def test_group_kernels_match_scalar():
         x0, y0 = rng.uniform(-8, 6, 2)
         dx, dy = rng.uniform(-4, 4, 2)
         segs.append(f"LINESTRING ({x0:.3f} {y0:.3f}, {x0 + dx:.3f} {y0 + dy:.3f})")
-    gb = box(-2, -2, 3, 3)
-    left = np.array(boxes + segs, dtype=object)
-    for group_fn, scalar_fn in (
-        (geo_udfs._touches_group, geom.touches_pair),
-        (geo_udfs._overlaps_group, geom.overlaps_pair),
-        (geo_udfs._contains_group, geom.contains_pair),
-        (geo_udfs._crosses_group, geom.crosses_pair),
-    ):
-        got = group_fn(gb, left, scalar_fn)
-        want = np.array([scalar_fn(W(w), gb) for w in left])
-        assert (got == want).all(), scalar_fn.__name__
+    pts = [f"POINT ({x} {y})" for x, y in rng.randint(-4, 5, (30, 2))]
+    left = [W(w) for w in boxes + segs + pts]
+    rights = [box(-2, -2, 3, 3), W("POLYGON ((0 0, 4 0, 2 3, 0 0))"), W("LINESTRING (-3 -3, 4 2)")]
+    rows = [p for p in geo_udfs.PREDICATES.values() if p.group is not None and p.scalar is not None]
+    assert len(rows) == 11  # the ten named predicates and the matrix
+    for p in rows:
+        for gb in rights:
+            got = p.group(gb, left)
+            want = np.array([p.scalar(g, gb) for g in left])
+            assert (got == want).all(), (p.name, gb.bbox)
 
 
 def test_closed_cover_includes_boundary_cell():
@@ -309,3 +309,24 @@ def test_equals_multipart_canonicalization():
     assert not geom.equals_pair(a, W("MULTILINESTRING ((0 0, 1 1), (2 2, 3 4))"))
     assert not geom.equals_pair(a, W("LINESTRING (0 0, 1 1)"))
     assert geom.equals_pair(W("LINESTRING (0 0, 1 1)"), W("LINESTRING (1 1, 0 0)"))
+
+
+def test_crosses_corner_diagonal_vectorized_matches_scalar():
+    """Segment entering a box corner-to-corner: no proper edge crossing,
+    global midpoint ON the boundary — only the clip-midpoint witness sees
+    the interior passage.  Scalar and group kernels must agree."""
+    from geowave_spark.functions import geo_udfs
+
+    box = W("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))")
+    cases = {
+        "LINESTRING (-1 -1, 3 3)": True,   # corner-to-corner diagonal
+        "LINESTRING (-1 1, 2 1)": False,   # rides the top edge (touch)
+        "LINESTRING (-1 -1, 0 0)": False,  # stops at the corner
+        "LINESTRING (-1 0.5, 2 0.5)": True,
+        "LINESTRING (0.2 0.2, 0.8 0.8)": False,  # fully inside (covered)
+        "LINESTRING (5 5, 6 6)": False,
+    }
+    got = geo_udfs.PREDICATES["crosses"].group(box, [W(w) for w in cases])
+    for wkt, want in cases.items():
+        assert geom.crosses_pair(W(wkt), box) == want, wkt
+    assert got.tolist() == list(cases.values())

@@ -226,19 +226,15 @@ def test_vectorized_refine_equals_scalar_kernel():
     wa = pd.Series([p[0] for p in pairs])
     wb = pd.Series([p[1] for p in pairs])
 
-    from geowave_spark.functions.geo_udfs import (
-        _distance_group,
-        _group_vectorized,
-        _intersects_group,
-    )
+    from geowave_spark.functions.geo_udfs import st_distance_wkt, st_intersects_wkt
 
-    got_i = _group_vectorized(wa, wb, geom.intersects_pair, _intersects_group)
+    got_i = st_intersects_wkt.func(wa, wb).to_numpy()
     want_i = [geom.intersects_pair(geom.geometry_from_wkt(a), geom.geometry_from_wkt(b))
               for a, b in pairs]
     for k, (gi, wi) in enumerate(zip(got_i.astype(bool), want_i)):
         assert gi == wi, f"intersects mismatch at {pairs[k]}: {gi} vs {wi}"
 
-    got_d = _group_vectorized(wa, wb, geom.distance_pair, _distance_group)
+    got_d = st_distance_wkt.func(wa, wb).to_numpy()
     want_d = [geom.distance_pair(geom.geometry_from_wkt(a), geom.geometry_from_wkt(b))
               for a, b in pairs]
     for k, (gd, wd) in enumerate(zip(got_d, want_d)):

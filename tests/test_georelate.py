@@ -470,3 +470,24 @@ def test_segment_segment_matrix_vs_closed_form(seed):
         want = _seg_seg_matrix_oracle(A, B)
         got = R(wkt(A), wkt(B))
         assert got == want, (A, B, got, want)
+
+
+def test_relate_point_seam_image_matches_named_predicates():
+    """A POINT against an unwrapped antimeridian area (bbox x1 > 180) is
+    classified against whichever image holds it — the rule of the named
+    predicates — so RELATE with a canonical mask (routed to within) and a
+    general mask agree on the same pair."""
+    import pandas as pd
+
+    from geowave_spark.functions import geo_udfs
+
+    poly = "POLYGON ((170 0, 190 0, 190 10, 170 10, 170 0))"
+    a = pd.Series(["POINT (-175 5)", "POINT (175 5)", "POINT (-170 5)", "POINT (0 5)"])
+    b = pd.Series([poly] * len(a))
+    mats = geo_udfs.st_relate_matrix_wkt.func(a, b).tolist()
+    assert mats == ["0FFFFF212", "0FFFFF212", "F0FFFF212", "FF0FFF212"]
+    within = geo_udfs.st_within_wkt.func(a, b).tolist()
+    for pattern in ("T*F**F***", "T*F**F**2"):
+        got = geo_udfs.st_relate_wkt.func(a, b, pd.Series([pattern] * len(a))).tolist()
+        assert got == within == [True, True, False, False], pattern
+    assert georelate.point_vs_area_matrices(np.array([[-175.0, 5.0]]), W(poly)).tolist() == ["0FFFFF212"]

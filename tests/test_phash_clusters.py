@@ -69,7 +69,7 @@ def test_clusters_match_union_find_oracle(spark):
     rows.append(
         {
             "image_id": "zdupC",
-            "bytes": codec.encode_dct(arr),
+            "bytes": codec.encode_image(arr, "jpeg"),
             "w": arr.shape[1],
             "h": arr.shape[0],
             "fmt": "jpeg",

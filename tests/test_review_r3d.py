@@ -1,6 +1,6 @@
-"""Round-3 fourth-batch review regressions: NULL geometry semantics,
-run_spatial_sql guards, short audio clips, visibility whitespace,
-checkpoint crash tolerance, PSNR metadata validation."""
+"""Round-3 fourth-batch review regressions: run_spatial_sql guards, short
+audio clips, visibility whitespace, checkpoint crash tolerance, PSNR
+metadata validation."""
 
 from __future__ import annotations
 
@@ -12,33 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def test_null_wkt_semantics(spark):
-    """NULL geometries: predicates are False (never 'distance 0' TRUE),
-    distances are NULL, and a null LEFT geometry must not crash the
-    pairwise kernels."""
-    df = spark.createDataFrame(
-        [
-            (1, "POINT (1 1)", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"),
-            (2, None, "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"),
-            (3, "POINT (1 1)", None),
-        ],
-        "id long, a string, b string",
-    )
-    from geowave_spark.functions import geo_udfs as g
-
-    rows = {r["id"]: r for r in df.select(
-        "id",
-        g.st_intersects_wkt(F.col("a"), F.col("b")).alias("ix"),
-        g.st_distance_wkt(F.col("a"), F.col("b")).alias("d"),
-        g.st_disjoint_wkt(F.col("a"), F.col("b")).alias("dj"),
-        g.st_distance_point(F.col("b"), F.lit(1.0), F.lit(1.0)).alias("dp"),
-    ).collect()}
-    assert rows[1]["ix"] is True and rows[1]["d"] == 0.0 and rows[1]["dj"] is False
-    assert rows[2]["ix"] is False and rows[2]["d"] is None and rows[2]["dj"] is False
-    assert rows[3]["ix"] is False and rows[3]["d"] is None and rows[3]["dj"] is False
-    assert rows[3]["dp"] is None  # null polygon: no distance, never 0.0
 
 
 def test_run_spatial_sql_uppercase_dwithin(spark, sf_dir):

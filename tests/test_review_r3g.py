@@ -81,15 +81,6 @@ def test_mosaic_derived_footprint_unclamped(spark):
     assert txs == {0, 15}
 
 
-def test_encode_dct_small_q_raises():
-    arr = np.full((8, 8, 3), 255, np.uint8)
-    with pytest.raises(ValueError, match="too small"):
-        codec.encode_dct(arr, q=0.01)
-    # and a sane q still round-trips above the PSNR floor
-    data = codec.encode_dct(arr)
-    assert codec.decode_dct(data).shape == (8, 8, 3)
-
-
 def test_row_range_histogram_excludes_nulls(spark):
     df = spark.createDataFrame(
         [(int(v),) for v in np.arange(1000)] + [(None,)] * 500,

@@ -1,6 +1,6 @@
-"""Round-3 eighth-batch review regressions: SQL UDF NULL semantics,
-run_spatial_sql rewrite guards, API column wiring, CQL BBOX wrap,
-sampling determinism under NULL/duplicate keys, visibility strictness."""
+"""Round-3 eighth-batch review regressions: run_spatial_sql rewrite
+guards, API column wiring, CQL BBOX wrap, sampling determinism under
+NULL/duplicate keys, visibility strictness."""
 
 from __future__ import annotations
 
@@ -14,17 +14,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from geowave_spark.functions import cql, sqlregistry, visibility
 from geowave_spark.operators import sampling
-
-
-def test_sql_st_dwithin_null_geometry_is_false(spark):
-    sqlregistry.register_sql_udfs(spark)
-    df = spark.createDataFrame(
-        [("POINT (0 0)", "POINT (0 0)"), (None, "POINT (0 0)"), ("POINT (0 0)", None)],
-        "a string, b string",
-    )
-    df.createOrReplaceTempView("_nulldw")
-    got = spark.sql("SELECT st_dwithin(a, b, 10.0) AS hit FROM _nulldw").collect()
-    assert [r["hit"] for r in got] == [True, False, False]
 
 
 @pytest.fixture()
@@ -82,15 +71,29 @@ def test_spatialframe_tile_counts_custom_cols(spark):
 
 
 def test_cql_bbox_tuple_path_antimeridian(spark):
+    """Every x0 <= x1 seam form of BBOX selects the same rows on the
+    (lon, lat) path, on the WKT path and in a world-frame oracle: a point
+    matches when some 360° image of its lon lies in [x0, x1]."""
+    pts = [(1, -179.0, 5.0), (2, -172.0, 5.0), (3, 175.0, 5.0), (4, 0.0, 5.0), (5, -175.0, 0.0)]
     df = spark.createDataFrame(
-        [(1, -175.0, 0.0), (2, 175.0, 0.0), (3, 0.0, 0.0)],
-        "id long, lon double, lat double",
+        [(i, x, y, f"POINT ({x} {y})") for i, x, y in pts],
+        "id long, lon double, lat double, wkt string",
     )
-    got = sorted(
-        r["id"]
-        for r in cql.cql_filter(df, "BBOX(geom, 170, -10, 190, 10)", geometry=("lon", "lat")).collect()
-    )
-    assert got == [1, 2]  # the wrapped image matches, like the WKT kernel
+    for box in (
+        (170.0, -10.0, 190.0, 10.0),  # straddles +180
+        (185.0, 0.0, 190.0, 10.0),  # wholly past +180
+        (-190.0, 0.0, -170.0, 10.0),  # straddles -180
+        (-195.0, 0.0, -185.0, 10.0),  # wholly below -180
+    ):
+        x0, y0, x1, y1 = box
+        expr = f"BBOX(wkt, {x0}, {y0}, {x1}, {y1})"
+        want = [
+            i for i, x, y in pts
+            if y0 <= y <= y1 and any(x0 <= x + k * 360.0 <= x1 for k in (-1, 0, 1))
+        ]
+        lonlat = sorted(r["id"] for r in cql.cql_filter(df, expr, geometry=("lon", "lat")).collect())
+        wkt = sorted(r["id"] for r in cql.cql_filter(df, expr, geometry="wkt").collect())
+        assert lonlat == wkt == want, (box, lonlat, wkt, want)
 
 
 def test_hash_sample_rate1_keeps_null_keys(spark):

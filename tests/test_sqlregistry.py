@@ -5,6 +5,7 @@ design)."""
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 import pytest
@@ -142,14 +143,88 @@ def test_relate_null_and_malformed_pattern(spark):
 
 
 def test_parse_points_rejects_malformed_numbers():
-    """The POINT fast path takes only well-formed numbers: a token like
-    ``1-2`` sends the batch to the general WKT path instead of raising a
-    bare ValueError from float()."""
-    import numpy as np
+    """POINT parsing takes only well-formed numbers: a token like ``1-2``
+    or ``1e`` raises a ValueError naming the text, never a bare float()
+    error or a silently different point."""
+    from geowave_spark import geom
 
-    from geowave_spark.functions.geo_udfs import _parse_points
+    got = [geom.geometry_from_wkt(w) for w in ("POINT (1.5 -2e3)", " POINT(+.5 3.)")]
+    assert [(g.x, g.y) for g in got] == [(1.5, -2000.0), (0.5, 3.0)]
+    for bad in ("POINT (1-2 3)", "POINT (1e 2)"):
+        with pytest.raises(ValueError, match=re.escape(bad)):
+            geom.geometry_from_wkt(bad)
 
-    got = _parse_points(np.array(["POINT (1.5 -2e3)", " POINT(+.5 3.)"], dtype=object))
-    assert got.tolist() == [[1.5, -2000.0], [0.5, 3.0]]
-    assert _parse_points(np.array(["POINT (1-2 3)"], dtype=object)) is None
-    assert _parse_points(np.array(["POINT (1 2)", "POINT (1e 2)"], dtype=object)) is None
+
+# every registered SQL function's arguments: w = WKT, n = number,
+# p = DE-9IM pattern (two WKTs unless listed)
+_SQL_ARGS = {
+    "st_contains_point": "wnn",
+    "st_distance_point": "wnn",
+    "st_dwithin_point": "wnnn",
+    "st_dwithin": "wwn",
+    "st_relate": "wwp",
+}
+_VALID = {"n": "1.0", "p": "'T********'"}
+_VALID_WKT = ("'POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))'", "'POINT (1 1)'")
+_GARBAGE_WKT = (
+    "NOT WKT", "POINT (1-2 3)", "POINT (1)", "POLYGON ((0 0, 1 0, 1x1, 0 1, 0 0))",
+)
+# the valid call: the (0 0)-(2 2) box against POINT (1 1), radius 1
+_VALID_RESULT = {
+    "st_intersects": True, "st_distance": 0.0, "st_dwithin": True, "st_within": False,
+    "st_covers": True, "st_contains": True, "st_touches": False, "st_crosses": False,
+    "st_overlaps": False, "st_equals": False, "st_disjoint": False, "st_relate": True,
+    "st_relate_matrix": "0F2FF1FF2", "st_contains_point": True, "st_distance_point": 0.0,
+    "st_dwithin_point": True,
+}
+
+
+def _null_rule(name: str, kind: str):
+    """The documented result of a NULL argument: the predicate table's
+    NULL value (False for predicates, NULL for distances and matrices);
+    dwithin compares a NULL distance or radius as False; a NULL pattern
+    makes st_relate NULL."""
+    from geowave_spark.functions import geo_udfs
+
+    if name == "st_relate" and kind == "p":
+        return None
+    if name.startswith("st_dwithin"):
+        return False
+    null = geo_udfs.PREDICATES[name[len("st_"):]].null
+    return null if null is False else None
+
+
+@pytest.mark.parametrize("name", sorted(sqlregistry.SQL_UDFS))
+def test_sql_surface_null_and_garbage(spark, name):
+    """Every function register_sql_udfs registers, called with NULL in
+    each argument, gives its NULL rule; called with malformed WKT in each
+    WKT argument, it fails with an error naming the input — never a bare
+    TypeError or IndexError from an Arrow worker."""
+    sqlregistry.register_sql_udfs(spark)
+    kinds = _SQL_ARGS.get(name, "ww")
+    wkts = iter(_VALID_WKT)
+    valid = [next(wkts) if k == "w" else _VALID[k] for k in kinds]
+
+    def with_arg(i, v):
+        return f"{name}({', '.join(valid[:i] + [v] + valid[i + 1:])})"
+
+    nulls = [
+        with_arg(i, f"CAST(NULL AS {'DOUBLE' if k == 'n' else 'STRING'})")
+        for i, k in enumerate(kinds)
+    ]
+    row = spark.sql(
+        f"SELECT {name}({', '.join(valid)}) AS ok, "
+        + ", ".join(f"{c} AS n{i}" for i, c in enumerate(nulls))
+    ).first()
+    assert row["ok"] == _VALID_RESULT[name]
+    for i, k in enumerate(kinds):
+        assert row[f"n{i}"] is _null_rule(name, k), (name, i)
+    for i, k in enumerate(kinds):
+        if k != "w":
+            continue
+        for bad in _GARBAGE_WKT:
+            with pytest.raises(Exception) as err:
+                spark.sql(f"SELECT {with_arg(i, repr(bad))} AS v").collect()
+            text = str(err.value)
+            assert bad in text, (name, i, bad)
+            assert "TypeError" not in text and "IndexError" not in text, (name, i, bad)

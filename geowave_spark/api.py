@@ -43,9 +43,10 @@ class SpatialFrame:
     @classmethod
     def from_images(cls, images: DataFrame, id_col: str = "image_id") -> "SpatialFrame":
         """Image table (input_hint schema): deterministic point from phash."""
-        df = images.withColumn("lon", sqlcells.lon_from_phash(F.col("phash"))).withColumn(
-            "lat", sqlcells.lat_from_phash(F.col("phash"))
-        )
+        df = images.withColumns({
+            "lon": F.expr(sqlcells.lon_from_phash("`phash`")),
+            "lat": F.expr(sqlcells.lat_from_phash("`phash`")),
+        })
         return cls(df, id_col)
 
     @classmethod

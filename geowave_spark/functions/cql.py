@@ -423,6 +423,11 @@ class _Parser:
         self.take("comma")
         y1 = self.number()
         self.take("rp")
+        if x0 > x1:
+            # a reversed box is the wrapped box from x0 east to x1: read it
+            # as its x1 + 360 unwrapped form, so the (lon, lat) path, the
+            # WKT path and the index constraint all see one box
+            x1 += 360.0
         if x1 < -180.0 or (x0 < -180.0 <= x1):
             # canonicalize the x0 < -180 unwrapped form into the engine's
             # x1 > 180 convention (the pairwise kernel only retests the

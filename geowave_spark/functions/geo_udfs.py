@@ -96,11 +96,13 @@ def _geometry_cover(
         bbox, max_dup=max_cells, closed=closed, bounds=bounds
     )
     if trim and not buffer and cs.size > 3:
-        # drop covering cells that miss the true geometry; for unwrapped
-        # antimeridian polygons also test the +360-shifted copy
+        # drop covering cells that miss the true geometry; for polygons
+        # reaching the antimeridian also test the +360-shifted copy (a
+        # geometry ending exactly at +180 keeps its seam column 0, where
+        # points at lon ±180 lie)
         lon0, lat0, lon1, lat1 = cells.cell_to_bounds(cs, tier, bounds=bounds)
         keep = p.intersects_boxes(lon0, lat0, lon1, lat1)
-        if bounds is None and p.bbox[2] > 180.0:
+        if bounds is None and p.bbox[2] >= 180.0:
             keep |= p.intersects_boxes(lon0 + 360.0, lat0, lon1 + 360.0, lat1)
         cs = cs[keep]
     return tier, cs
@@ -147,6 +149,11 @@ def _per_geometry(
 def _unwrapped(g) -> bool:
     """An unwrapped antimeridian geometry: its bbox reaches past +180."""
     return g.bbox[2] > 180.0
+
+
+def _point_wraps(g) -> bool:
+    """The point refines also test lon + 360 against this geometry."""
+    return _unwrapped(g) or g.is_box()
 
 
 def _right_image(g, *lefts):
@@ -198,9 +205,10 @@ def _pairwise_udf(name: str, group, null, combine):
 def _box_covers(a, b, strict: bool = False):
     """Box a covers box b, or, ``strict``, b lies in a's open interior.
 
-    Boxes are (x0, y0, x1, y1) of numpy arrays, floats or Spark Columns:
-    every operator used here exists on all three, so the numpy fast paths
-    and the JVM candidate filter share this one interval algebra."""
+    Boxes are (x0, y0, x1, y1) of numpy arrays, floats, Spark Columns or
+    SQL text (spatial_join._Sql): every operator used here exists on all
+    four, so the numpy fast paths and the JVM candidate filter share this
+    one interval algebra."""
     lt = operator.lt if strict else operator.le
     return lt(a[0], b[0]) & lt(a[1], b[1]) & lt(b[2], a[2]) & lt(b[3], a[3])
 
@@ -465,15 +473,14 @@ PREDICATES: dict[str, _Pred] = {p.name: p for p in (
     _Pred("relate_matrix", _udf("st_relate_matrix_wkt", _st_relate_matrix, T.StringType()),
           georelate.relate_pair, _relate_matrices, None),
     # point × geometry, the point join's refine: an unwrapped antimeridian
-    # geometry also meets each point's lon + 360 copy; distance_point does
-    # that for every box as well, the rule of the broadcast join's JVM box
-    # refine and of both DuckDB oracles (a point at lon -179.8 can be
-    # within 0.5 of a box ending at 179.99)
+    # geometry, and every box, also meets each point's lon + 360 copy — the
+    # rule of the broadcast join's JVM box refine and of both DuckDB
+    # oracles (a point at lon -180 lies in a box ending at 180; a point at
+    # lon -179.8 is within 0.5 of a box ending at 179.99)
     _Pred("contains_point", _point_udf(
-        "st_contains_point", _contains_pt, False, np.logical_or, _unwrapped)),
+        "st_contains_point", _contains_pt, False, np.logical_or, _point_wraps)),
     _Pred("distance_point", _point_udf(
-        "st_distance_point", _distance_pt, np.nan, np.minimum,
-        lambda g: _unwrapped(g) or g.is_box()), null=np.nan),
+        "st_distance_point", _distance_pt, np.nan, np.minimum, _point_wraps), null=np.nan),
 )}
 
 st_intersects_wkt = PREDICATES["intersects"].udf

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import cells, sqlcells
 from ..functions import geo_udfs
-from .spatial_join import add_point_cols
+from .spatial_join import _point_keys, add_point_cols
 
 def _tier_offsets_expr() -> Column:
     return F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
@@ -76,15 +76,16 @@ def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bo
     q = queries.withColumn("_tier", _tier_expr(F.col(maxd_col), bounds))
     # per-row grid resolution r = 2^tier (exact in double up to 2^31)
     q = q.withColumn("_r", F.pow(F.lit(2.0), F.col("_tier").cast("double")).cast("long"))
-    qx = F.least(
-        F.greatest(F.floor(sqlcells.norm_lon(F.col(q_lon), bounds) * F.col("_r").cast("double")), F.lit(0)),
-        F.col("_r") - 1,
-    ).cast("long")
-    qy = F.least(
-        F.greatest(F.floor(sqlcells.norm_lat(F.col(q_lat), bounds) * F.col("_r").cast("double")), F.lit(0)),
-        F.col("_r") - 1,
-    ).cast("long")
-    q = q.withColumn("_qx", qx).withColumn("_qy", qy)
+
+    def grid(norm: str) -> Column:
+        return F.expr(
+            f"CAST(LEAST(GREATEST(FLOOR({norm} * CAST(`_r` AS DOUBLE)), 0), `_r` - 1) AS BIGINT)"
+        )
+
+    q = q.withColumns({
+        "_qx": grid(sqlcells.norm_lon(sqlcells.sql_ident(q_lon), bounds)),
+        "_qy": grid(sqlcells.norm_lat(sqlcells.sql_ident(q_lat), bounds)),
+    })
     # 3x3 ring: lon wraps (pmod) in the world frame, clamps under custom
     # bounds (no antimeridian in a projected frame); lat always clamps
     nx = (
@@ -102,7 +103,7 @@ def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bo
         .withColumn(
             "key",
             F.element_at(_tier_offsets_expr(), F.col("_tier") + 1)
-            + sqlcells.interleave(F.col("_nx"), F.col("_ny")),
+            + F.expr(sqlcells.interleave("`_nx`", "`_ny`")),
         )
         .dropDuplicates([query_id, "key"])
         .select(query_id, q_lon, q_lat, maxd_col, "_tier", "key", *extra)
@@ -190,18 +191,9 @@ def distance_candidates(
         )
 
     pts = add_point_cols(points, p_lon, p_lat, bounds=bounds)
-    pts = pts.withColumn(
-        "key",
-        F.explode(
-            F.array(
-                *[
-                    F.lit(int(cells.TIER_OFFSETS[t]))
-                    + sqlcells.cell_at_tier_expr(F.col("_cell31"), t)
-                    for t in tiers
-                ]
-            )
-        ),
-    ).select(point_id, F.col(p_lon).alias("_p_lon"), F.col(p_lat).alias("_p_lat"), "key")
+    pts = _point_keys(
+        pts, tiers, point_id, F.col(p_lon).alias("_p_lon"), F.col(p_lat).alias("_p_lat")
+    )
 
     if broadcast_queries:
         cand = pts.join(F.broadcast(q), "key")

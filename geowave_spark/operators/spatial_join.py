@@ -5,9 +5,10 @@ Spark-first re-expression of the reference's TieredSpatialJoin
 runs a driver-side loop over tiers with per-tier cogroups and RDD unions;
 we collapse the whole thing into ONE Catalyst plan:
 
-    polygons --driver-side numpy cover (broadcast path) OR one Arrow
-              bbox pass + Column span tiering (shuffle path)--> packed keys
-    points   --Column bit math--> packed key per polygon tier  (JVM side)
+    polygons --driver-side numpy cover, an Arrow-built LocalRelation
+              (broadcast path) OR one Arrow bbox pass + SQL span tiering
+              (shuffle path)--> packed keys
+    points   --SQL bit math--> packed key per polygon tier  (JVM side)
              --explode over the tier list (typically 1-5 tiers)
     equi-join on the single long key   (broadcast if small, else forced
                                         sort-merge with AQE skew + salting)
@@ -17,7 +18,7 @@ we collapse the whole thing into ONE Catalyst plan:
 
 Every tiered join takes the same five decisions through one helper each:
 * extent keying — `_extent_multitier_keys`: span-based own tier plus every
-  coarser partner tier, cover re-derived per tier (Column math);
+  coarser partner tier, cover re-derived per tier (SQL text);
 * seam split — `_seam_split`: envelopes crossing +180 become two in-range
   images (none under custom ``bounds``);
 * tier discovery — `_tier_pass`: one localCheckpoint and one aggregate
@@ -26,6 +27,11 @@ Every tiered join takes the same five decisions through one helper each:
   per geometry, with coarser-tier truncations when asked;
 * candidate filter — `_candidate_filter`: meet tier, envelope overlap,
   containment-necessary envelopes and the PBSM reference point.
+
+Every derived column is ONE SQL-text expression (``F.expr``) over the
+sqlcells formulas, and each run of derived columns one projection: a
+Column tree costs a driver→JVM round trip per operator node, which made
+plan building, not execution, the larger part of a small join.
 
 Semantics preserved (verified against the brute-force oracle, the same test
 design as GeoWaveSparkSpatialJoinIT.java:227-254):
@@ -39,7 +45,7 @@ design as GeoWaveSparkSpatialJoinIT.java:227-254):
   (TieredSpatialJoin.java:364-373).
 
 Scale design (100 TB point side):
-* point-side key generation is pure Column arithmetic — whole-stage codegen,
+* point-side key generation is pure JVM arithmetic — whole-stage codegen,
   zero Python;
 * only columns needed are read (Parquet/Iceberg column pruning: image_id +
   phash — the multi-KB `bytes` column is never scanned);
@@ -56,13 +62,22 @@ Scale design (100 TB point side):
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import cells, geom, sqlcells
 from ..functions import geo_udfs
 
 _BOX = ("x0", "y0", "x1", "y1")
+_D360 = sqlcells._dbl(360.0)
+# one row per covering cell of a driver-covered geometry (see _cover_rows)
+_CELL_SCHEMA = pa.schema([
+    ("key", pa.int64()), ("id", pa.string()),
+    *[(n, pa.float64()) for n in _BOX],
+    ("is_box", pa.bool_()), ("tier", pa.int32()), ("row", pa.int32()),
+])
 
 # broadcast the polygon side when it has at most this many rows (each
 # polygon explodes to <= 80 covering cells; 100k x ~100B cells ~ 1GB upper
@@ -107,15 +122,14 @@ def add_point_cols(
     )
 
 
-def _point_keys_expr(tiers: list[int]) -> Column:
-    """array of packed keys of the point's cell at each polygon tier."""
-    return F.array(
-        *[
-            F.lit(int(cells.TIER_OFFSETS[t]))
-            + sqlcells.cell_at_tier_expr(F.col("_cell31"), t)
-            for t in sorted(tiers)
-        ]
+def _point_keys(pts: DataFrame, tiers: list[int], *cols) -> DataFrame:
+    """``cols`` plus ``key``: one row per polygon tier, keyed by the packed
+    key of the point's cell (``_cell31``) at that tier."""
+    keys = ", ".join(
+        f"{int(cells.TIER_OFFSETS[t])}L + {sqlcells.cell_at_tier_expr('`_cell31`', t)}"
+        for t in sorted(tiers)
     )
+    return pts.select(*cols, F.expr(f"explode(array({keys})) AS key"))
 
 
 def polygon_cover_local(
@@ -123,7 +137,7 @@ def polygon_cover_local(
     max_cells: int = cells.JOIN_MAX_CELLS,
     buffer: float = 0.0,
     bounds=None,
-) -> tuple[list[tuple], list[int]]:
+) -> tuple[pa.Table, list[int]]:
     """Driver-side cover for a small polygon set (the broadcast path).
 
     The reference broadcasts its index strategy and plans query ranges on
@@ -132,7 +146,7 @@ def polygon_cover_local(
     small side locally with numpy: no Spark job, no Python workers, and the
     cover is computed exactly once.
 
-    Returns (cell_rows, tiers) as :func:`_cover_rows` does; covers are
+    Returns (cells, tiers) as :func:`_cover_rows` does; covers are
     trimmed to the geometry unless buffered.
     """
     return _cover_rows(rows, max_cells=max_cells, buffer=buffer, bounds=bounds)
@@ -145,7 +159,7 @@ def _cover_rows(
     trim: bool = True,
     bounds=None,
     coarser: bool = False,
-) -> tuple[list[tuple], list[int]]:
+) -> tuple[pa.Table, list[int]]:
     """The broadcast side's covering cells, shared by every broadcast join.
 
     Each WKT is parsed once.  Its cover is the adaptive-tier cover of its
@@ -164,14 +178,16 @@ def _cover_rows(
     removes cells the true geometry doesn't touch (closed cell rectangles
     keep edge contact).
 
-    Returns (cell_rows, tiers): cell_rows =
-    (key, id, wkt, x0, y0, x1, y1, is_box, tier) per covering cell, with
-    the geometry's own (unbuffered) bbox and own cover tier; tiers = the
-    sorted distinct own tiers.  A geometry with an empty cover has no rows.
+    Returns (cells, tiers): cells = an Arrow table with one row per
+    covering cell, columns key (int64), id (string), x0, y0, x1, y1
+    (float64: the geometry's own, unbuffered bbox), is_box (bool), tier
+    (int32: its own cover tier) and row (int32: its index in ``rows``) —
+    ready for ``createDataFrame``, which makes it a LocalRelation; tiers =
+    the sorted distinct own tiers.  A geometry with an empty cover has no
+    rows.
     """
-    out: list[tuple] = []
-    tiers: set[int] = set()
-    for gid, wkt in rows:
+    keys, geo = [], []
+    for i, (_gid, wkt) in enumerate(rows):
         g = geom.geometry_from_wkt(wkt)
         tp, cover = geo_udfs._geometry_cover(
             g, max_cells=max_cells, buffer=buffer, trim=trim, closed=True,
@@ -179,57 +195,57 @@ def _cover_rows(
         )
         if not cover.size:
             continue
-        tiers.add(tp)
-        x0, y0, x1, y1 = (float(v) for v in g.bbox)
-        isb = bool(g.is_box())
-        for t in range(tp, -1 if coarser else tp - 1, -1):
-            tc = cover if t == tp else np.unique(cells.cell_at_tier(cover, tp, t))
-            out.extend(
-                (k, gid, wkt, x0, y0, x1, y1, isb, tp)
-                for k in cells.pack_key(t, tc).tolist()
-            )
-    return out, sorted(tiers)
+        keys.append(np.concatenate([
+            cells.pack_key(t, cover if t == tp else np.unique(cells.cell_at_tier(cover, tp, t)))
+            for t in range(tp, -1 if coarser else tp - 1, -1)
+        ]))
+        geo.append((i, *(float(v) for v in g.bbox), bool(g.is_box()), tp))
+    if not geo:
+        return _CELL_SCHEMA.empty_table(), []
+    idx, x0, y0, x1, y1, isb, tier = (np.asarray(c) for c in zip(*geo))
+    take = np.repeat(np.arange(len(geo)), [k.size for k in keys])
+    table = pa.table({
+        "key": np.concatenate(keys),
+        "id": pa.array([rows[i][0] for i in idx], pa.string()).take(take),
+        "x0": x0[take], "y0": y0[take], "x1": x1[take], "y1": y1[take],
+        "is_box": isb[take], "tier": tier[take], "row": idx[take],
+    }, schema=_CELL_SCHEMA)
+    return table, sorted(set(tier.tolist()))
 
 
-def _box_contains_pred(lon: Column, lat: Column, bounds=None) -> Column:
-    """JVM-only boundary-inclusive point-in-box, antimeridian-aware.
+def _box_contains_pred(lon: str, lat: str, bounds=None) -> str:
+    """JVM-only boundary-inclusive point-in-box (SQL text over the box
+    columns x0..y1), antimeridian-aware.
 
-    Mirrors the oracle SQL predicate exactly; the +360 clause is harmless
-    for x1 <= 180 boxes only because workload boxes with x1 == 180 also
-    have x0 == -180 (see entry_queries._SQL_PIP_PRED discussion).  Custom
-    ``bounds`` (projected CRS) have no wrap — the +360 retest is dropped
-    (it would false-positive in metre coordinates).
+    Mirrors the oracle SQL predicate exactly: every box is retested at the
+    point's lon + 360, as the Arrow refine (geo_udfs.st_contains_point)
+    does.  Custom ``bounds`` (projected CRS) have no wrap — the +360
+    retest is dropped (it would false-positive in metre coordinates).
     """
-    base = (
-        (lat >= F.col("y0")) & (lat <= F.col("y1"))
-        & (lon >= F.col("x0")) & (lon <= F.col("x1"))
-    )
-    if bounds is not None:
-        return base
-    lon2 = lon + F.lit(360.0)
-    return (
-        (lat >= F.col("y0"))
-        & (lat <= F.col("y1"))
-        & (
-            ((lon >= F.col("x0")) & (lon <= F.col("x1")))
-            | ((lon2 >= F.col("x0")) & (lon2 <= F.col("x1")))
-        )
-    )
+    def in_x(x: str) -> str:
+        return f"({x} >= `x0` AND {x} <= `x1`)"
+
+    lon_ok = in_x(lon)
+    if bounds is None:
+        lon_ok = f"({lon_ok} OR {in_x(f'({lon} + {_D360})')})"
+    return f"({lat} >= `y0` AND {lat} <= `y1` AND {lon_ok})"
 
 
-def _box_dist_expr(lon: Column, lat: Column, bounds=None) -> Column:
-    """JVM-only planar distance to a box (0 inside), antimeridian copy via
-    least() — same IEEE op sequence as the oracle's formula.  Custom
-    ``bounds`` drop the +360 copy (no wrap in a projected frame)."""
+def _box_dist_expr(lon: str, lat: str, bounds=None) -> str:
+    """JVM-only planar distance to a box (0 inside), SQL text over the box
+    columns x0..y1; antimeridian copy via least() — same IEEE op sequence
+    as the oracle's formula.  Custom ``bounds`` drop the +360 copy (no
+    wrap in a projected frame)."""
+    zero = sqlcells._dbl(0.0)
 
-    def d(px: Column) -> Column:
-        ddx = F.greatest(F.col("x0") - px, px - F.col("x1"), F.lit(0.0))
-        ddy = F.greatest(F.col("y0") - lat, lat - F.col("y1"), F.lit(0.0))
-        return F.sqrt(ddx * ddx + ddy * ddy)
+    def d(px: str) -> str:
+        ddx = f"GREATEST(`x0` - {px}, {px} - `x1`, {zero})"
+        ddy = f"GREATEST(`y0` - {lat}, {lat} - `y1`, {zero})"
+        return f"SQRT({ddx} * {ddx} + {ddy} * {ddy})"
 
     if bounds is not None:
         return d(lon)
-    return F.least(d(lon), d(lon + F.lit(360.0)))
+    return f"LEAST({d(lon)}, {d(f'({lon} + {_D360})')})"
 
 
 def tiered_spatial_join(
@@ -293,11 +309,10 @@ def _refine_box(
     j: DataFrame, predicate: str, radius: float, lon_col: str, lat_col: str,
     bounds=None,
 ) -> DataFrame:
+    lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
     if predicate == "intersects":
-        return j.filter(_box_contains_pred(F.col(lon_col), F.col(lat_col), bounds))
-    return j.filter(
-        _box_dist_expr(F.col(lon_col), F.col(lat_col), bounds) <= F.lit(float(radius))
-    )
+        return j.filter(F.expr(_box_contains_pred(lon, lat, bounds)))
+    return j.filter(F.expr(f"{_box_dist_expr(lon, lat, bounds)} <= {sqlcells._dbl(radius)}"))
 
 
 def _refine_general(
@@ -324,14 +339,14 @@ def _broadcast_join(
 ) -> DataFrame:
     """Small polygon side: driver-side cover + broadcast hash join.
 
-    Box polygons refine with pure Column SQL (whole-stage codegen, zero
+    Box polygons refine with pure SQL (whole-stage codegen, zero
     Python); general polygons fall back to the pandas predicate UDF.  The
     point side is scanned once per polygon class present (boxes / general)
     — one scan in the overwhelmingly common homogeneous case.
     """
     spark = pts.sparkSession
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
-    cell_rows, tiers = polygon_cover_local(
+    cover, tiers = polygon_cover_local(
         rows, max_cells=max_cells, buffer=buffer, bounds=bounds
     )
     if not tiers:
@@ -348,41 +363,24 @@ def _broadcast_join(
 
     # prune to the join's working set BEFORE the explode — payload columns
     # must never be replicated |tiers|× (semi/anti join back for full rows)
-    pt_keys = pts.select(point_id, lon_col, lat_col, "_cell31", *carry_cols).withColumn(
-        "key", F.explode(_point_keys_expr(tiers))
-    )
-    box_rows = [r for r in cell_rows if r[7]]
-    gen_rows = [r for r in cell_rows if not r[7]]
+    pt_keys = _point_keys(pts, tiers, point_id, lon_col, lat_col, "_cell31", *carry_cols)
+    is_box = cover.column("is_box")
+    boxes, general = cover.filter(is_box), cover.filter(pc.invert(is_box))
     parts = []
-    if box_rows:
+    if boxes.num_rows:
         # box refine needs only the bbox — no WKT in the broadcast at all
-        right = F.broadcast(
-            spark.createDataFrame(
-                [(k, pid, x0, y0, x1, y1) for k, pid, _w, x0, y0, x1, y1, *_ in box_rows],
-                "key long, polygon_id string, x0 double, y0 double, x1 double, y1 double",
-            ).withColumnRenamed("polygon_id", polygon_id)
-        )
+        right = _local(spark, boxes.select(["key", "id", *_BOX]), {"id": polygon_id})
         j = pt_keys.join(right, "key")
         if not loose:
             j = _refine_box(j, predicate, radius, lon_col, lat_col, bounds)
         parts.append(j.select(point_id, polygon_id, *carry_cols))
-    if gen_rows:
+    if general.num_rows:
         # WKT is broadcast ONCE per polygon (joined by id after the cell
         # match), never duplicated into the per-cell rows — keeps the
         # broadcast payload at sum(len(wkt)), not 80x that
-        cells_bc = F.broadcast(
-            spark.createDataFrame(
-                [(k, pid) for k, pid, *_ in gen_rows], "key long, polygon_id string"
-            ).withColumnRenamed("polygon_id", polygon_id)
-        )
-        wkts_bc = F.broadcast(
-            spark.createDataFrame(
-                sorted({(pid, w) for _k, pid, w, *_ in gen_rows}),
-                "polygon_id string, wkt string",
-            )
-            .withColumnRenamed("polygon_id", polygon_id)
-            .withColumnRenamed("wkt", wkt_col)
-        )
+        cells_bc = _local(spark, general.select(["key", "id"]), {"id": polygon_id})
+        wkts = sorted({rows[i] for i in general.column("row").to_pylist()})
+        wkts_bc = _local(spark, _string_table(wkts, (polygon_id, wkt_col)))
         j = pt_keys.join(cells_bc, "key").join(wkts_bc, polygon_id)
         if not loose:
             j = _refine_general(j, predicate, radius, lon_col, lat_col, wkt_col, bounds)
@@ -402,7 +400,7 @@ def _shuffle_join(
     pts, polygons, predicate, radius, buffer, lon_col, lat_col,
     point_id, polygon_id, wkt_col, max_cells, loose, salt, bounds=None,
 ) -> DataFrame:
-    """Large polygon side: one Arrow bbox UDF + pure-Column span-based
+    """Large polygon side: one Arrow bbox UDF + pure-SQL span-based
     tiering (<= 4 covering cells per polygon, the reference's
     estimated-count <= 2^d insert rule) + shuffle equi-join on the packed
     key, with optional polygon-replication salting on top of AQE skew-join
@@ -410,7 +408,7 @@ def _shuffle_join(
 
     Scale design: the ONLY Python on the polygon side is the per-row WKT →
     bbox extraction (st_bbox); the seam split, tier assignment, cell
-    explosion and key packing are whole-stage-codegen Column math, so a
+    explosion and key packing are whole-stage-codegen SQL math, so a
     10^8-polygon side runs at scan speed.  Points sit at the finest tier,
     so a pair always meets at the polygon's tier — each polygon emits its
     own-tier cells only, and each point emits one key per DISTINCT polygon
@@ -429,9 +427,7 @@ def _shuffle_join(
         pc, polygon_id, "_r", [], extra_cols=(wkt_col,), bounds=bounds
     ).select(polygon_id, wkt_col, "key")
 
-    pt_keys = pts.select(point_id, lon_col, lat_col, "_cell31").withColumn(
-        "key", F.explode(_point_keys_expr(tiers))
-    )
+    pt_keys = _point_keys(pts, tiers, point_id, lon_col, lat_col, "_cell31")
     # force a sort-merge join: BOTH sides are big by contract here (the
     # build-side probe already routed broadcastable polygon sets to
     # _broadcast_join), but Catalyst's size estimate of the un-exploded
@@ -441,10 +437,10 @@ def _shuffle_join(
     if salt > 1:
         # replicate polygon cells `salt` ways; point rows pick one replica —
         # breaks single-hot-cell skew beyond what AQE splitting can do
-        pt_keys = pt_keys.withColumn("_salt", F.pmod(F.xxhash64(point_id), F.lit(salt)))
-        right = poly_cells.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
+        pt_keys = pt_keys.withColumn(
+            "_salt", F.expr(f"pmod(xxhash64({sqlcells.sql_ident(point_id)}), {int(salt)})")
         )
+        right = poly_cells.withColumn("_salt", F.expr(f"explode(sequence(0, {int(salt) - 1}))"))
         joined = pt_keys.join(right, ["key", "_salt"])
     else:
         joined = pt_keys.join(poly_cells, "key")
@@ -481,7 +477,7 @@ def tiered_extent_join(
       normalized span (the estimated-count insert rule of
       TieredSFCIndexStrategy.getEstimatedIdCount — span-based, so the
       covering block is provably <= 2x2 = the default 2^d duplication
-      budget), and explodes into those <= 4 cells — pure Column math;
+      budget), and explodes into those <= 4 cells — pure SQL math;
     * a pair (extent@te, polygon@tp) must meet at min(te, tp): the
       polygon's broadcast cell list carries its cover TRUNCATED to every
       tier <= tp (driver-side, tiny), covering the te <= tp direction; the
@@ -504,23 +500,20 @@ def tiered_extent_join(
         # (bbox-intersect pairs, same id columns) matches this join's
         pb, _ = _with_bbox(polygons, polygon_id, wkt_col)
         return tiered_extent_join_shuffle(
-            extents, pb, left_id=extent_id, right_id=polygon_id,
-            lcols=(x0, y0, x1, y1), rcols=tuple(f"_bb.{n}" for n in _BOX),
+            extents, pb.select(polygon_id, "_bb.*"), left_id=extent_id, right_id=polygon_id,
+            lcols=(x0, y0, x1, y1),
         )
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
     # polygon side: full bbox cover (untrimmed — the reference point below
     # is a bbox-intersection corner) at its adaptive tier + truncations to
     # every coarser tier (reprojectToTier, coarser direction), each row
     # carrying the polygon's OWN tier for the meet-tier restriction
-    cell_rows, poly_tiers = _cover_rows(rows, trim=False, coarser=True)
+    cover, poly_tiers = _cover_rows(rows, trim=False, coarser=True)
     if not poly_tiers:
         return _empty_pairs(extents, extent_id, polygons, polygon_id)
-    right = F.broadcast(
-        spark.createDataFrame(
-            [(k, pid, tp, x0_, y0_, x1_, y1_)
-             for k, pid, _w, x0_, y0_, x1_, y1_, _b, tp in cell_rows],
-            "key long, _pid string, _rte int, _rx0 double, _ry0 double, _rx1 double, _ry1 double",
-        ).withColumnRenamed("_pid", polygon_id)
+    right = _local(
+        spark, cover.select(["key", "id", "tier", *_BOX]),
+        {"id": polygon_id, "tier": "_rte", **{n: f"_r{n}" for n in _BOX}},
     )
     # extent side: own-tier cover + covers re-derived at each coarser
     # polygon tier ((id, key) rows unique by construction); the candidate
@@ -531,6 +524,20 @@ def tiered_extent_join(
     return _candidate_filter(lk.join(right, "key")).select(extent_id, polygon_id)
 
 
+def _local(spark, table: pa.Table, rename: dict[str, str] | None = None) -> DataFrame:
+    """A driver-built Arrow table as a broadcast LocalRelation (no Spark
+    job to materialize it, unlike a frame over a Python row list)."""
+    if rename:
+        table = table.rename_columns([rename.get(c, c) for c in table.column_names])
+    return F.broadcast(spark.createDataFrame(table))
+
+
+def _string_table(pairs, names: tuple[str, str]) -> pa.Table:
+    """(id, wkt) pairs as a two-column Arrow table of strings."""
+    cols = list(zip(*pairs)) or [(), ()]
+    return pa.table([pa.array(c, pa.string()) for c in cols], names=list(names))
+
+
 def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str) -> DataFrame:
     """The empty (left_id, right_id) result, typed like a real one."""
     return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
@@ -538,52 +545,51 @@ def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str)
 
 def _prefixed(df: DataFrame, id_col: str, bbox_cols, p: str) -> DataFrame:
     """(id, {p}x0, {p}y0, {p}x1, {p}y1) from the caller's bbox columns."""
-    return df.select(id_col, *[F.col(c).alias(f"{p}{n}") for c, n in zip(bbox_cols, _BOX)])
+    return df.select(
+        id_col, *[F.expr(f"{sqlcells.sql_ident(c)} AS `{p}{n}`") for c, n in zip(bbox_cols, _BOX)]
+    )
 
 
 def _with_bbox(df: DataFrame, id_col: str, wkt_col: str, bbox_cols=None):
-    """(frame, [x0, y0, x1, y1] Columns): the caller's envelope columns
+    """(frame, [x0, y0, x1, y1] as SQL text): the caller's envelope columns
     when given, else one Arrow st_bbox pass over the WKT."""
     if bbox_cols is not None:
-        return df, [F.col(c) for c in bbox_cols]
+        return df, [sqlcells.sql_ident(c) for c in bbox_cols]
     df = df.select(id_col, wkt_col).withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
-    return df, [F.col(f"_bb.{n}") for n in _BOX]
+    return df, [f"`_bb`.`{n}`" for n in _BOX]
 
 
 def _seam_split(
     df: DataFrame, bbox, p: str, pad: float = 0.0, bounds=None, keep=(),
 ) -> DataFrame:
-    """Envelopes (``bbox`` Columns, padded by ``pad``) → in-range images
+    """Envelopes (``bbox`` SQL texts, padded by ``pad``) → in-range images
     {p}x0..{p}y1, one row per image, numbered by ``_seg``; ``keep`` names
     the columns carried along.
 
-    LongitudeDefinition wrap semantics: an envelope crossing +180 splits
+    LongitudeDefinition wrap semantics: an envelope reaching +180 splits
     into [x0, 180] (_seg 0) and [-180, x1 - 360] (_seg 1), so its cover
-    reaches both sides of the seam; the exact refines test the point's
-    lon + 360 (the pairwise kernels the right geometry's -360 image), so
-    recall and exactness both hold.  An envelope crossing -180 clamps: the
+    reaches both sides of the seam (one ending exactly at +180 keeps the
+    seam column, where points at lon ±180 lie); the exact refines test
+    the point's lon + 360 (the pairwise kernels the right geometry's -360
+    image), so recall and exactness both hold.  An envelope crossing -180 clamps: the
     refines shift only that one way, so no pair exists across that edge
     to keep — and a world-spanning envelope (both edges) clamps to ONE
     world image.  Custom ``bounds`` (a projected frame) have no seam: one
     unclamped row each.
     """
-    x0, y0, x1, y1 = bbox
-    x0, y0, x1, y1 = x0 - pad, y0 - pad, x1 + pad, y1 + pad
+    d = sqlcells._dbl
+    x0, y0 = (f"({c} - {d(pad)})" for c in bbox[:2])
+    x1, y1 = (f"({c} + {d(pad)})" for c in bbox[2:])
     if bounds is not None:
-        seg, lo, hi = F.lit(0), x0, x1
+        seg, lo, hi = "0", x0, x1
     else:
-        split = (x1 > 180.0) & (x0 > -180.0)
-        df = df.withColumn(
-            "_seg",
-            F.explode(F.when(split, F.array(F.lit(0), F.lit(1))).otherwise(F.array(F.lit(0)))),
-        )
-        seg, east = F.col("_seg"), F.col("_seg") == 1
-        lo = F.when(east, F.lit(-180.0)).otherwise(F.greatest(x0, F.lit(-180.0)))
-        hi = F.when(east, x1 - 360.0).otherwise(F.least(x1, F.lit(180.0)))
-    return df.select(
-        *keep, seg.alias("_seg"), lo.alias(f"{p}x0"), y0.alias(f"{p}y0"),
-        hi.alias(f"{p}x1"), y1.alias(f"{p}y1"),
-    )
+        split = f"{x1} >= {d(180.0)} AND {x0} > {d(-180.0)}"
+        df = df.withColumn("_seg", F.expr(f"explode(IF({split}, array(0, 1), array(0)))"))
+        seg = "`_seg`"
+        lo = f"IF(`_seg` = 1, {d(-180.0)}, GREATEST({x0}, {d(-180.0)}))"
+        hi = f"IF(`_seg` = 1, {x1} - {_D360}, LEAST({x1}, {d(180.0)}))"
+    exprs = zip((seg, lo, y0, hi, y1), ("_seg", *(f"{p}{n}" for n in _BOX)))
+    return df.select(*keep, *(F.expr(f"{e} AS `{name}`") for e, name in exprs))
 
 
 def _tier_pass(df: DataFrame, p: str, bounds=None) -> tuple[DataFrame, list[int], bool]:
@@ -594,42 +600,42 @@ def _tier_pass(df: DataFrame, p: str, bounds=None) -> tuple[DataFrame, list[int]
     whether any envelope was seam-split (``_seg`` > 0).
 
     Returns (materialized side, sorted tiers, any split)."""
-    df = df.withColumn(f"{p}te", _extent_tier_expr(p, bounds)).localCheckpoint()
-    aggs = [F.collect_set(f"{p}te")]
+    df = df.withColumn(f"{p}te", F.expr(_extent_tier_expr(p, bounds))).localCheckpoint()
+    aggs = [f"collect_set(`{p}te`)"]
     if "_seg" in df.columns:
-        aggs.append(F.max("_seg"))
-    row = df.agg(*aggs).first()
+        aggs.append("max(`_seg`)")
+    row = df.selectExpr(*aggs).first()
     return df, sorted(row[0] or []), len(row) > 1 and bool(row[1])
 
 
-def _extent_tier_expr(p: str, bounds=None) -> Column:
-    """Span-based adaptive tier of the envelope {p}x0..{p}y1: tier t is
-    the finest grid whose cell >= the extent's span, so the cover is
-    always <= 2x2 cells (see `_extent_multitier_keys`)."""
+def _extent_tier_expr(p: str, bounds=None) -> str:
+    """Span-based adaptive tier of the envelope {p}x0..{p}y1 (SQL text):
+    tier t is the finest grid whose cell >= the extent's span, so the
+    cover is always <= 2x2 cells (see `_extent_multitier_keys`)."""
+    d = sqlcells._dbl
     wx = 360.0 if bounds is None else float(bounds[2] - bounds[0])
     wy = 180.0 if bounds is None else float(bounds[3] - bounds[1])
-    sx = (F.col(f"{p}x1") - F.col(f"{p}x0")) / F.lit(wx)
-    sy = (F.col(f"{p}y1") - F.col(f"{p}y0")) / F.lit(wy)
-    span = F.greatest(sx, sy, F.lit(0.0))
+    sx = f"((`{p}x1` - `{p}x0`) / {d(wx)})"
+    sy = f"((`{p}y1` - `{p}y0`) / {d(wy)})"
+    span = f"GREATEST({sx}, {sy}, {d(0.0)})"
+    t = cells.MAX_TIER
     return (
-        F.when(span <= 0.0, F.lit(cells.MAX_TIER))
-        .otherwise(
-            F.least(F.greatest(F.floor(-F.log2(span)).cast("int"), F.lit(0)), F.lit(cells.MAX_TIER))
-        )
+        f"CASE WHEN {span} <= {d(0.0)} THEN {t} "
+        f"ELSE LEAST(GREATEST(CAST(FLOOR(-LOG2({span})) AS INT), 0), {t}) END"
     )
 
 
-def _with_tier_scale(df: DataFrame) -> DataFrame:
-    """Grid size at the emission tier: _rd = 2^_kt (double), _rm = last
-    grid index."""
-    df = df.withColumn("_rd", F.pow(F.lit(2.0), F.col("_kt").cast("double")))
-    return df.withColumn("_rm", F.col("_rd").cast("long") - 1)
+# grid size at the emission tier _kt: _rd = 2^_kt (double), _rm = last index
+_TIER_SCALE = {
+    "_rd": "POW(2.0D, CAST(`_kt` AS DOUBLE))",
+    "_rm": "CAST(POW(2.0D, CAST(`_kt` AS DOUBLE)) AS BIGINT) - 1",
+}
 
 
-def _grid(norm: Column, lo: Column) -> Column:
+def _grid(norm: str, lo: str) -> str:
     """Grid coordinate of a normalized position at tier _kt, clamped to
-    [lo, last index] (needs `_with_tier_scale`)."""
-    return F.least(F.greatest(F.floor(norm * F.col("_rd")), lo), F.col("_rm")).cast("long")
+    [lo, last index] (needs the `_TIER_SCALE` columns)."""
+    return f"CAST(LEAST(GREATEST(FLOOR({norm} * `_rd`), {lo}), `_rm`) AS BIGINT)"
 
 
 def _extent_multitier_keys(
@@ -638,11 +644,11 @@ def _extent_multitier_keys(
     bounds=None,
 ) -> DataFrame:
     """Extent rows (envelope {p}x0..{p}y1) → one row per (extent, emission
-    tier, covering cell) — the one Column extent keyer of every tiered
-    join.  The emission tiers are the row's OWN tier {p}te (added here
-    when absent) plus every strictly-coarser tier present on the partner
-    side; an empty ``partner_tiers`` emits own-tier cells only.  The cover
-    is computed DIRECTLY at each emission tier.
+    tier, covering cell) — the one extent keyer of every tiered join.  The
+    emission tiers are the row's OWN tier {p}te (added here when absent)
+    plus every strictly-coarser tier present on the partner side; an empty
+    ``partner_tiers`` emits own-tier cells only.  The cover is computed
+    DIRECTLY at each emission tier.
 
     Because the cover is re-derived per tier (not truncated from the own-
     tier cover), (id, key) rows are unique by construction — two own-tier
@@ -655,40 +661,46 @@ def _extent_multitier_keys(
     """
     te = f"{p}te"
     if te not in ex.columns:
-        ex = ex.withColumn(te, _extent_tier_expr(p, bounds))
+        ex = ex.withColumn(te, F.expr(_extent_tier_expr(p, bounds)))
+    emit = f"array(`{te}`)"
     if partner_tiers:
-        tier_arr = F.array(*[F.lit(int(t)) for t in sorted(set(partner_tiers))])
-        emit = F.array_append(F.filter(tier_arr, lambda t: t < F.col(te)), F.col(te))
-    else:
-        emit = F.array(F.col(te))
-    ex = _with_tier_scale(ex.withColumn("_kt", F.explode(emit)))
-    x0, y0, x1, y1 = (F.col(f"{p}{n}") for n in _BOX)
+        coarse = ", ".join(str(int(t)) for t in sorted(set(partner_tiers)))
+        emit = f"array_append(filter(array({coarse}), t -> t < `{te}`), `{te}`)"
+    ex = ex.withColumn("_kt", F.expr(f"explode({emit})"))
+    x0, y0, x1, y1 = (f"`{p}{n}`" for n in _BOX)
     # norm_lon_upper on BOTH bounds: identical to norm_lon everywhere
     # except exactly +180, where the wrap would put the lower bound in
     # cell 0 while the upper clamps to r-1 — a degenerate seam box would
     # otherwise cover the whole row (2^31 cells at the point tier)
+    nx, ny = sqlcells.norm_lon_upper, sqlcells.norm_lat
+    offs = ", ".join(f"{int(o)}L" for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1])
     ex = (
-        ex.withColumn("_gx0", _grid(sqlcells.norm_lon_upper(x0, bounds), F.lit(0)))
-        .withColumn("_gy0", _grid(sqlcells.norm_lat(y0, bounds), F.lit(0)))
+        ex.withColumns({c: F.expr(e) for c, e in _TIER_SCALE.items()})
+        .withColumns({
+            "_gx0": F.expr(_grid(nx(x0, bounds), "0")),
+            "_gy0": F.expr(_grid(ny(y0, bounds), "0")),
+        })
+        .withColumns({
+            "_gx1": F.expr(_grid(nx(x1, bounds), "`_gx0`")),
+            "_gy1": F.expr(_grid(ny(y1, bounds), "`_gy0`")),
+        })
+        .withColumn("_gx", F.expr("explode(sequence(`_gx0`, `_gx1`))"))
+        .withColumn("_gy", F.expr("explode(sequence(`_gy0`, `_gy1`))"))
+        .withColumn("_cell", F.expr(sqlcells.interleave("`_gx`", "`_gy`")))
     )
-    offs = F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-    return (
-        ex.withColumn("_gx1", _grid(sqlcells.norm_lon_upper(x1, bounds), F.col("_gx0")))
-        .withColumn("_gy1", _grid(sqlcells.norm_lat(y1, bounds), F.col("_gy0")))
-        .withColumn("_gx", F.explode(F.sequence(F.col("_gx0"), F.col("_gx1"))))
-        .withColumn("_gy", F.explode(F.sequence(F.col("_gy0"), F.col("_gy1"))))
-        .withColumn("_cell", sqlcells.interleave(F.col("_gx"), F.col("_gy")))
-        .withColumn("key", (F.element_at(offs, F.col("_kt") + 1) + F.col("_cell")).cast("long"))
-        .select(id_col, *[f"{p}{n}" for n in _BOX], *extra_cols, te, "_kt", "_cell", "key")
+    return ex.select(
+        id_col, *[f"{p}{n}" for n in _BOX], *extra_cols, te, "_kt", "_cell",
+        F.expr(f"CAST(element_at(array({offs}), `_kt` + 1) + `_cell` AS BIGINT) AS key"),
     )
 
 
-def _ref_point_filter(j: DataFrame, px: Column, py: Column) -> DataFrame:
+def _ref_point_filter(j: DataFrame, px: str, py: str) -> DataFrame:
     """PBSM reference-point dedup filter (Patel & DeWitt, SIGMOD'96 §4.3):
     keep a joined row iff the cell at tier ``_kt`` containing the bbox
-    intersection's lower-left corner (px, py) is THIS join cell ``_cell``.
-    Each truly-intersecting pair passes in exactly one (tier, cell), so
-    the join emits it exactly once — no pair-level dropDuplicates shuffle.
+    intersection's lower-left corner (px, py: SQL text) is THIS join cell
+    ``_cell``.  Each truly-intersecting pair passes in exactly one (tier,
+    cell), so the join emits it exactly once — no pair-level
+    dropDuplicates shuffle.
 
     Uses the SAME normalization as the cover generation (norm_lon_upper so
     px == +180 lands in the last column, matching the cover's clamp).
@@ -704,17 +716,15 @@ def _ref_point_filter(j: DataFrame, px: Column, py: Column) -> DataFrame:
     each large normalization expression exactly once, so the whole filter
     stays inside whole-stage codegen even when the optimizer folds it into
     the join condition."""
-    j = _with_tier_scale(j)
-    gxp = _grid(sqlcells.norm_lon_upper(px), F.lit(0))
-    gyp = _grid(sqlcells.norm_lat(py), F.lit(0))
-    return j.filter(
-        (gxp == sqlcells.compact_x(F.col("_cell")))
-        & (gyp == sqlcells.compact_y(F.col("_cell")))
-    )
+    gxp = _grid(sqlcells.norm_lon_upper(px), "0")
+    gyp = _grid(sqlcells.norm_lat(py), "0")
+    cx, cy = sqlcells.compact_x("`_cell`"), sqlcells.compact_y("`_cell`")
+    j = j.withColumns({c: F.expr(e) for c, e in _TIER_SCALE.items()})
+    return j.filter(F.expr(f"{gxp} = {cx} AND {gyp} = {cy}"))
 
 
 def _candidate_filter(
-    j: DataFrame, predicate: str = "intersects", seam: Column | None = None,
+    j: DataFrame, predicate: str = "intersects", seam: str | None = None,
     ref_point: bool = True,
 ) -> DataFrame:
     """The one candidate filter of the extent and geometry joins, over
@@ -731,28 +741,30 @@ def _candidate_filter(
     * ``ref_point``: the PBSM reference point keeps each candidate pair in
       exactly one (tier, cell) — no pair-level dropDuplicates.
 
-    ``seam`` flags rows whose envelopes are not comparable in plain
-    coordinates (an unwrapped antimeridian geometry, x1 > 180): they skip
-    both envelope tests and are left to the exact refine, and a pair that
-    meets only the right geometry's -360 image takes its reference corner
-    against that image, so seam pairs are neither dropped nor duplicated.
+    ``seam`` (SQL text) flags rows whose envelopes are not comparable in
+    plain coordinates (an unwrapped antimeridian geometry, x1 > 180): they
+    skip both envelope tests and are left to the exact refine, and a pair
+    that meets only the right geometry's -360 image takes its reference
+    corner against that image, so seam pairs are neither dropped nor
+    duplicated.
     """
-    def tested(name: str) -> Column:
+    def tested(name: str) -> str:
         cond = _box_predicate(name)
-        return cond if seam is None else cond | seam
+        return cond if seam is None else f"({cond} OR ({seam}))"
 
-    keep = (F.col("_kt") == F.least(F.col("_lte"), F.col("_rte"))) & tested("intersects")
+    keep = f"`_kt` = LEAST(`_lte`, `_rte`) AND {tested('intersects')}"
     if predicate in ("within", "covers", "contains", "equals"):
-        keep = keep & tested(predicate)
-    j = j.filter(keep)
+        keep = f"{keep} AND {tested(predicate)}"
+    j = j.filter(F.expr(keep))
     if not ref_point:
         return j
-    l0, m0, l1, _ = (F.col(f"_l{n}") for n in _BOX)
-    r0, s0, _, _ = (F.col(f"_r{n}") for n in _BOX)
-    px = F.greatest(l0, r0)
+    px = "GREATEST(`_lx0`, `_rx0`)"
     if seam is not None:
-        px = F.when(seam & (l1 < r0), F.greatest(l0, r0 - 360.0)).otherwise(px)
-    return _ref_point_filter(j, px, F.greatest(m0, s0))
+        px = (
+            f"(CASE WHEN ({seam}) AND `_lx1` < `_rx0` "
+            f"THEN GREATEST(`_lx0`, `_rx0` - {_D360}) ELSE {px} END)"
+        )
+    return _ref_point_filter(j, px, "GREATEST(`_ly0`, `_ry0`)")
 
 
 def tiered_extent_join_shuffle(
@@ -818,16 +830,40 @@ def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
     return j.filter(geo_udfs.PREDICATES[predicate].udf(la, ra))
 
 
-def _box_predicate(predicate: str) -> Column | None:
-    """JVM Column twin of ``predicate`` for box × box candidate rows, left
+class _Sql(str):
+    """SQL text that composes under the operators geo_udfs' box algebra
+    applies (<=, <, &, |, ~), so the algebra renders as one predicate."""
+
+    def _op(self, op: str, other) -> "_Sql":
+        return _Sql(f"({self} {op} {other})")
+
+    def __le__(self, other):
+        return self._op("<=", other)
+
+    def __lt__(self, other):
+        return self._op("<", other)
+
+    def __and__(self, other):
+        return self._op("AND", other)
+
+    def __or__(self, other):
+        return self._op("OR", other)
+
+    def __invert__(self):
+        return _Sql(f"(NOT {self})")
+
+
+def _box_predicate(predicate: str) -> str | None:
+    """SQL twin of ``predicate`` for box × box candidate rows, left
     (_lx0.._ly1) against right (_rx0.._ry1): geo_udfs' interval algebra
-    over Columns.  None when the predicate has no interval form
+    rendered as SQL text.  None when the predicate has no interval form
     (dwithin).  For any geometries the containment-family entries are
     NECESSARY envelope conditions."""
     if predicate == "crosses":
-        return F.lit(False)  # area × area never crosses
-    left, right = (tuple(F.col(f"{p}{n}") for n in _BOX) for p in ("_l", "_r"))
-    return geo_udfs._box_relation(predicate, left, right)
+        return "false"  # area × area never crosses
+    left, right = (tuple(_Sql(f"`{p}{n}`") for n in _BOX) for p in ("_l", "_r"))
+    rel = geo_udfs._box_relation(predicate, left, right)
+    return None if rel is None else str(rel)
 
 
 def geometry_join(
@@ -877,7 +913,7 @@ def geometry_join(
       `radius` for dwithin) + truncations to every coarser tier — the
       reprojectToTier direction where the right side is coarser;
     * left (big) side: bbox via one Arrow-batched UDF, span-based adaptive
-      tier (<= 4 cells, pure Column math), keys at its own tier plus
+      tier (<= 4 cells, pure SQL math), keys at its own tier plus
       truncations to each coarser right-side tier;
     * equi-join on the packed key → JVM candidate filter (meet tier,
       envelopes) → exact pairwise refine (st_intersects_wkt /
@@ -905,7 +941,7 @@ def geometry_join(
     # coarser tier; exactly-once emission needs FULL bbox covers: the PBSM
     # reference point is a bbox-intersection corner, which a
     # geometry-trimmed cover may not contain
-    cell_rows, r_tiers = _cover_rows(
+    cover, r_tiers = _cover_rows(
         rows, max_cells=max_cells, buffer=buffer, trim=not exactly_once, coarser=True
     )
     if not r_tiers:
@@ -913,25 +949,19 @@ def geometry_join(
     # right bboxes pre-buffered for dwithin; _rbox: this right geometry IS
     # its bbox (axis-aligned box, no holes, in range), so box×box
     # candidates can refine JVM-side (interval algebra)
-    b = buffer
-    right_rows = [
-        (k, rid, x0 - b, y0 - b, x1 + b, y1 + b, isb and x1 <= 180.0, tp)
-        for k, rid, _w, x0, y0, x1, y1, isb, tp in cell_rows
-    ]
-    right_cells = F.broadcast(
-        spark.createDataFrame(
-            right_rows,
-            "key long, _rid string, _rx0 double, _ry0 double, _rx1 double, _ry1 double, _rbox boolean, _rte int",
-        )
-    )
-    right_wkts = F.broadcast(
-        spark.createDataFrame(list(rows), "_rid string, _rwkt string")
-    )
+    rbox = pc.and_(cover.column("is_box"), pc.less_equal(cover.column("x1"), 180.0))
+    right_cells = _local(spark, pa.table({
+        "key": cover.column("key"), "_rid": cover.column("id"),
+        **{f"_r{n}": pc.add(cover.column(n), sign * buffer)
+           for n, sign in zip(_BOX, (-1, -1, 1, 1))},
+        "_rbox": rbox, "_rte": cover.column("tier"),
+    }))
+    right_wkts = _local(spark, _string_table(rows, ("_rid", "_rwkt")))
 
     lb, bbox = _with_bbox(left, left_id, left_wkt, left_bbox_cols)
     lb = lb.select(
         left_id, F.col(left_wkt).alias("_lwkt"),
-        *[c.alias(f"_l{n}") for c, n in zip(bbox, _BOX)],
+        *[F.expr(f"{c} AS `_l{n}`") for c, n in zip(bbox, _BOX)],
     )
     lk = _extent_multitier_keys(lb, left_id, "_l", r_tiers, extra_cols=("_lwkt",))
     # the meet-tier rule cuts the cross-tier duplicate candidates BEFORE
@@ -944,7 +974,7 @@ def geometry_join(
     # pairwise refine, which tests the right geometry's -360 image
     j = _candidate_filter(
         lk.join(right_cells, "key"), predicate,
-        seam=(F.col("_rx1") > 180.0) | (F.col("_lx1") > 180.0),
+        seam=f"`_rx1` > {sqlcells._dbl(180.0)} OR `_lx1` > {sqlcells._dbl(180.0)}",
         ref_point=exactly_once,
     )
 
@@ -955,12 +985,12 @@ def geometry_join(
         # stage (the common case — box workloads stay 100% JVM); only
         # candidates with a non-box right geometry take the Arrow refine.
         # Which rids are boxes is known driver-side — no runtime probe.
-        j_box = j.filter(F.col("_rbox")).filter(box_pred).select(
+        j_box = j.filter(F.expr(f"`_rbox` AND {box_pred}")).select(
             F.col(left_id), F.col("_rid").alias(right_id)
         )
         if not exactly_once:
             j_box = j_box.dropDuplicates([left_id, right_id])
-        if all(r[6] for r in right_rows):  # every right geometry is a box
+        if pc.all(rbox).as_py():  # every right geometry is a box
             return j_box
         j_gen = _pairwise_refine(
             j.filter(~F.col("_rbox")).join(right_wkts, "_rid"), predicate, radius

@@ -82,9 +82,9 @@ def time_binned_counts(
     from .. import sqlcells
 
     df = add_st_cols(points, ts_col, lon_col, lat_col, unit)
-    cell = sqlcells.cell_at_tier_expr(F.col("_cell31"), tier)
+    cell = F.expr(f"{sqlcells.cell_at_tier_expr('`_cell31`', tier)} AS cell")
     return (
-        df.select(F.col("_bin").alias("bin"), cell.alias("cell"))
+        df.select(F.col("_bin").alias("bin"), cell)
         .groupBy("bin", "cell")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -88,9 +88,9 @@ def subsample_cells(
     scan-order-dependent, so we pin min(id) for reproducibility.
     """
     pts = add_point_cols(points, lon_col, lat_col)
-    cell = sqlcells.cell_at_tier_expr(F.col("_cell31"), tier)
+    cell = F.expr(f"{sqlcells.cell_at_tier_expr('`_cell31`', tier)} AS cell")
     return (
-        pts.select(cell.alias("cell"), F.col(id_col))
+        pts.select(cell, F.col(id_col))
         .groupBy("cell")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n"))
     )
@@ -408,8 +408,8 @@ def hotspot_cells(
     r = 1 << tier
     pts = add_point_cols(points, lon_col, lat_col)  # phash-only tables work
     g = pts.select(
-        sqlcells.grid_coord(sqlcells.norm_lon(F.col(lon_col)), tier).alias("gx"),
-        sqlcells.grid_coord(sqlcells.norm_lat(F.col(lat_col)), tier).alias("gy"),
+        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lon(sqlcells.sql_ident(lon_col)), tier)} AS gx"),
+        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lat(sqlcells.sql_ident(lat_col)), tier)} AS gy"),
     )
     counts = g.groupBy("gx", "gy").agg(F.count(F.lit(1)).cast("long").alias("n"))
     counts = counts.localCheckpoint()  # feeds 3 consumers below, compute once

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import sqlcells
-from .spatial_join import add_point_cols
 
 
 def pyramid_levels_for_resolution(
@@ -55,20 +54,16 @@ def assign_tiles(
     lat_col: str = "lat",
     point_id: str = "image_id",
 ) -> DataFrame:
-    """(image_id, level, tile_x, tile_y) for each pyramid level — JVM-only."""
-    pts = add_point_cols(points, lon_col, lat_col)
-    structs = [
-        F.struct(
-            F.lit(lvl).alias("level"),
-            sqlcells.tile_x_expr(F.col(lon_col), lvl).alias("tile_x"),
-            sqlcells.tile_y_expr(F.col(lat_col), lvl).alias("tile_y"),
-        )
+    """(image_id, level, tile_x, tile_y) for each pyramid level — JVM-only,
+    one SQL expression for all levels."""
+    pts = sqlcells._with_phash_coords(points, lon_col, lat_col)
+    lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
+    structs = ", ".join(
+        f"struct({int(lvl)} AS level, {sqlcells.tile_x_expr(lon, lvl)} AS tile_x, "
+        f"{sqlcells.tile_y_expr(lat, lvl)} AS tile_y)"
         for lvl in levels
-    ]
-    return (
-        pts.withColumn("_t", F.explode(F.array(*structs)))
-        .select(point_id, "_t.level", "_t.tile_x", "_t.tile_y")
     )
+    return pts.select(point_id, F.expr(f"inline(array({structs}))"))
 
 
 def tile_assignment_oracle_numpy(lon: np.ndarray, lat: np.ndarray, level: int):
@@ -175,10 +170,11 @@ def assemble_tiles(
     The shuffle key is the tile key — identical to the reference's
     groupBy(partition+sort key) mosaic (KDERunner.java:551-623).
     """
-    pts = add_point_cols(images, lon_col, lat_col)
-    pts = pts.withColumn("level", F.lit(level)).withColumn(
-        "tile_x", sqlcells.tile_x_expr(F.col(lon_col), level)
-    ).withColumn("tile_y", sqlcells.tile_y_expr(F.col(lat_col), level))
+    pts = sqlcells._with_phash_coords(images, lon_col, lat_col).withColumns({
+        "level": F.lit(level),
+        "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells.sql_ident(lon_col), level)),
+        "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells.sql_ident(lat_col), level)),
+    })
     # normalize the coordinate column names for the pandas mosaic fn —
     # non-default lon_col/lat_col must not KeyError inside the workers
     pts = pts.select(
@@ -298,49 +294,45 @@ def mosaic_tiles(
     affine with per-band nodata merge.  Unlike ``assemble_tiles`` (a
     point-heat summary raster), the output tiles contain the mosaicked
     source imagery."""
-    pts = add_point_cols(images, lon_col, lat_col)
+    pts = sqlcells._with_phash_coords(images, lon_col, lat_col)
+    d = sqlcells._dbl
     if footprint_cols is None:
         # TRUE extents — never clamped: _mosaic's world-to-screen affine
         # maps the FULL source image over the footprint, so clamping here
         # would squeeze edge-adjacent imagery instead of cropping it
-        hw = F.col("w").cast("double") * F.lit(deg_per_px) / F.lit(2.0)
-        hh = F.col("h").cast("double") * F.lit(deg_per_px) / F.lit(2.0)
-        pts = (
-            pts.withColumn("_fx0", F.col(lon_col) - hw)
-            .withColumn("_fx1", F.col(lon_col) + hw)
-            .withColumn("_fy0", F.col(lat_col) - hh)
-            .withColumn("_fy1", F.col(lat_col) + hh)
-        )
+        lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
+        hw = f"(CAST(`w` AS DOUBLE) * {d(deg_per_px)} / {d(2.0)})"
+        hh = f"(CAST(`h` AS DOUBLE) * {d(deg_per_px)} / {d(2.0)})"
+        fp = {"_fx0": f"{lon} - {hw}", "_fx1": f"{lon} + {hw}",
+              "_fy0": f"{lat} - {hh}", "_fy1": f"{lat} + {hh}"}
     else:
-        x0c, y0c, x1c, y1c = footprint_cols
-        pts = (
-            pts.withColumn("_fx0", F.col(x0c)).withColumn("_fy0", F.col(y0c))
-            .withColumn("_fx1", F.col(x1c)).withColumn("_fy1", F.col(y1c))
-        )
-    nx, ny = 1 << (level + 1), 1 << level
+        fp = {n: sqlcells.sql_ident(c) for n, c in zip(("_fx0", "_fy0", "_fx1", "_fy1"), footprint_cols)}
+    pts = pts.withColumns({n: F.expr(e) for n, e in fp.items()})
+    nx = 1 << (level + 1)
+
+    def tx(c: str) -> str:
+        return sqlcells.tile_x_expr(c, level)
+
     # tile fan-out: tile_*_expr clamps out-of-range coordinates to the edge
     # tile, so the main sequence crops naturally; a footprint crossing the
     # antimeridian ALSO covers tiles on the far side (±360-shifted range)
-    tx0 = sqlcells.tile_x_expr(F.col("_fx0"), level)
-    tx1 = sqlcells.tile_x_expr(F.col("_fx1"), level)
-    ty0 = sqlcells.tile_y_expr(F.col("_fy0"), level)
-    ty1 = sqlcells.tile_y_expr(F.col("_fy1"), level)
-    empty = F.array().cast("array<bigint>")
-    wrap_hi = F.when(
-        F.col("_fx1") > 180.0,
-        F.sequence(F.lit(0).cast("long"), sqlcells.tile_x_expr(F.col("_fx1") - 360.0, level)),
-    ).otherwise(empty)
-    wrap_lo = F.when(
-        F.col("_fx0") < -180.0,
-        F.sequence(sqlcells.tile_x_expr(F.col("_fx0") + 360.0, level), F.lit(nx - 1).cast("long")),
-    ).otherwise(empty)
+    empty = "CAST(array() AS ARRAY<BIGINT>)"
+    wrap_hi = (
+        f"IF(`_fx1` > {d(180.0)}, sequence(0L, {tx(f'(`_fx1` - {d(360.0)})')}), {empty})"
+    )
+    wrap_lo = (
+        f"IF(`_fx0` < {d(-180.0)}, sequence({tx(f'(`_fx0` + {d(360.0)})')}, {nx - 1}L), {empty})"
+    )
+    ty0, ty1 = (sqlcells.tile_y_expr(c, level) for c in ("`_fy0`", "`_fy1`"))
     pts = (
-        pts.withColumn("level", F.lit(level))
-        .withColumn(
-            "tile_x",
-            F.explode(F.array_distinct(F.concat(F.sequence(tx0, tx1), wrap_hi, wrap_lo))),
-        )
-        .withColumn("tile_y", F.explode(F.sequence(ty0, ty1)))
+        pts.withColumns({
+            "level": F.lit(level),
+            "tile_x": F.expr(
+                f"explode(array_distinct(concat(sequence({tx('`_fx0`')}, {tx('`_fx1`')}), "
+                f"{wrap_hi}, {wrap_lo})))"
+            ),
+        })
+        .withColumn("tile_y", F.expr(f"explode(sequence({ty0}, {ty1}))"))
     )
     cols = ["level", "tile_x", "tile_y", "image_id", "bytes", "fmt",
             "_fx0", "_fy0", "_fx1", "_fy1"]

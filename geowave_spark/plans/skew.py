@@ -29,9 +29,8 @@ def cell_histogram(
     """Top-N (cell, count) at a coarse tier — the PartitionStatistics /
     RowRangeHistogramStatistics analog, computed with one aggregation."""
     pts = add_point_cols(points, lon_col, lat_col)
-    cell = sqlcells.cell_at_tier_expr(F.col("_cell31"), tier)
     rows = (
-        pts.select(cell.alias("cell"))
+        pts.select(F.expr(f"{sqlcells.cell_at_tier_expr('`_cell31`', tier)} AS cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.col("n").desc())

@@ -324,7 +324,9 @@ def write_indexed_hier(
     is_point = F.coalesce(
         (F.col(x0) == F.col(x1)) & (F.col(y0) == F.col(y1)), F.lit(False)
     )
-    pt_code = sqlcells.cell_expr(F.col(x0), F.col(y0), cells.MAX_TIER)
+    pt_code = F.expr(
+        sqlcells.cell_expr(sqlcells.sql_ident(x0), sqlcells.sql_ident(y0), cells.MAX_TIER)
+    )
     xz_code = xz_code_udf()(F.col(x0), F.col(y0), F.col(x1), F.col(y1))
     # split by kind instead of when(is_point, ...): pandas UDFs inside a
     # CASE branch are extracted and evaluated on EVERY row, so the old
@@ -571,22 +573,20 @@ def write_indexed_st(
 
     bits = cells3.ST_BIAS[bias]
     trunc = _TRUNC_UNIT[unit]
-    eus = st.epoch_us_expr(ts_col)
-    start = F.expr(
-        f"timestampdiff(MICROSECOND, {st.EPOCH_NTZ}, date_trunc('{trunc}', {ts_col}))"
-    )
-    nxt = F.expr(
-        f"timestampdiff(MICROSECOND, {st.EPOCH_NTZ}, "
-        f"date_trunc('{trunc}', {ts_col}) + INTERVAL 1 {trunc})"
-    )
-    frac = (eus - start).cast("double") / (nxt - start).cast("double")
-    gx = sqlcells.grid_coord(sqlcells.norm_lon(F.col(lon_col)), bits[0])
-    gy = sqlcells.grid_coord(sqlcells.norm_lat(F.col(lat_col)), bits[1])
+
+    def us(ts: str) -> str:
+        return f"timestampdiff(MICROSECOND, {st.EPOCH_NTZ}, {ts})"
+
+    bin0 = f"date_trunc('{trunc}', {ts_col})"
+    start, nxt = us(bin0), us(f"{bin0} + INTERVAL 1 {trunc}")
+    frac = f"(CAST(({us(ts_col)} - {start}) AS DOUBLE) / CAST(({nxt} - {start}) AS DOUBLE))"
+    gx = sqlcells.grid_coord(sqlcells.norm_lon(sqlcells.sql_ident(lon_col)), bits[0])
+    gy = sqlcells.grid_coord(sqlcells.norm_lat(sqlcells.sql_ident(lat_col)), bits[1])
     gt = sqlcells.grid_coord(frac, bits[2])
-    out = (
-        df.withColumn("_bin", st.time_bin_expr(ts_col, unit))
-        .withColumn("_stkey", cells3.st_key_expr(gx, gy, gt, bits))
-    )
+    out = df.withColumns({
+        "_bin": st.time_bin_expr(ts_col, unit),
+        "_stkey": cells3.st_key_expr(F.expr(gx), F.expr(gy), F.expr(gt), bits),
+    })
     _sorted_layout(out, n_files, "_bin", "_stkey").write.mode("overwrite").parquet(path)
 
 

@@ -1,14 +1,21 @@
-"""Pure Spark-Column builders for the cell-index hot path.
+"""SQL-text builders for the cell-index hot path.
 
 The reference computes SFC keys per feature in JVM code inside its RDD
 flatMap (GeoWaveIndexedRDD.java:148-223).  We go one better for Spark: the
 POINT side of every operator (the 10^12-row image table) computes its Morton
-cell id entirely with built-in Column bit arithmetic — shiftleft / AND / OR
+cell id entirely with built-in bit arithmetic — shiftleft / AND / OR
 chains — so the whole key-generation stage stays inside Tungsten whole-stage
 codegen.  No Python is involved for points at any scale; pandas UDFs are
 reserved for the (small) polygon side and for exact geometry refinement.
 
-Mirrors cells.py exactly (property-tested against it in tests/test_cells.py).
+Every cell, grid, tile and phash formula here is written ONCE, as SQL
+text → SQL text: operands are SQL expressions (a quoted column name, or
+another helper's output) and callers wrap each derived column in one
+``F.expr``.  Building a Column tree costs a driver→JVM round trip per
+operator node; parsing one SQL string costs a few per projection.
+
+Mirrors cells.py exactly (property-tested against it in
+tests/test_cells.py and tests/test_sql_builders.py).
 """
 
 from __future__ import annotations
@@ -23,97 +30,7 @@ _M8 = 0x00FF00FF00FF00FF
 _M4 = 0x0F0F0F0F0F0F0F0F
 _M2 = 0x3333333333333333
 _M1 = 0x5555555555555555
-
-
-def part1by1(col: Column) -> Column:
-    """Spread the low 32 bits into even bit positions (JVM-side Morton half)."""
-    x = col.cast("long").bitwiseAND(F.lit(0xFFFFFFFF))
-    x = (x.bitwiseOR(F.shiftleft(x, 16))).bitwiseAND(F.lit(_M16))
-    x = (x.bitwiseOR(F.shiftleft(x, 8))).bitwiseAND(F.lit(_M8))
-    x = (x.bitwiseOR(F.shiftleft(x, 4))).bitwiseAND(F.lit(_M4))
-    x = (x.bitwiseOR(F.shiftleft(x, 2))).bitwiseAND(F.lit(_M2))
-    x = (x.bitwiseOR(F.shiftleft(x, 1))).bitwiseAND(F.lit(_M1))
-    return x
-
-
-def interleave(x: Column, y: Column) -> Column:
-    return part1by1(x).bitwiseOR(F.shiftleft(part1by1(y), 1))
-
-
-def compact1by1(col: Column) -> Column:
-    """Inverse of :func:`part1by1` — gather the even bits (JVM-side).
-
-    NOTE on codegen size: the expression doubles its operand per step, so
-    pass an ATTRIBUTE (e.g. ``F.col("_cell")``), never a large expression;
-    inverting an equality against a large interleave operand this way is
-    how the extent joins keep their reference-point predicate inside the
-    JVM's 64KB generated-method limit (see _ref_point_filter)."""
-    x = col.bitwiseAND(F.lit(_M1))
-    x = (x.bitwiseOR(F.shiftrightunsigned(x, 1))).bitwiseAND(F.lit(_M2))
-    x = (x.bitwiseOR(F.shiftrightunsigned(x, 2))).bitwiseAND(F.lit(_M4))
-    x = (x.bitwiseOR(F.shiftrightunsigned(x, 4))).bitwiseAND(F.lit(_M8))
-    x = (x.bitwiseOR(F.shiftrightunsigned(x, 8))).bitwiseAND(F.lit(_M16))
-    x = (x.bitwiseOR(F.shiftrightunsigned(x, 16))).bitwiseAND(F.lit(0xFFFFFFFF))
-    return x
-
-
-def compact_x(cell: Column) -> Column:
-    """Morton cell → x grid coordinate (even bits)."""
-    return compact1by1(cell)
-
-
-def compact_y(cell: Column) -> Column:
-    """Morton cell → y grid coordinate (odd bits)."""
-    return compact1by1(F.shiftrightunsigned(cell, 1))
-
-
-def norm_lon(lon: Column, bounds=None) -> Column:
-    """x normalization Column twin: world frame wraps (LongitudeDefinition
-    .java:52-67); custom ``bounds`` clamp — BasicDimensionDefinition, the
-    reference's custom-CRS index math (see cells.norm_lon)."""
-    if bounds is not None:
-        x = (lon - F.lit(float(bounds[0]))) / F.lit(float(bounds[2] - bounds[0]))
-        return F.least(F.greatest(x, F.lit(0.0)), F.lit(1.0))
-    x = (lon + F.lit(180.0)) / F.lit(360.0)
-    return x - F.floor(x)  # antimeridian wrap (LongitudeDefinition.java:52-67)
-
-
-def norm_lat(lat: Column, bounds=None) -> Column:
-    if bounds is not None:
-        x = (lat - F.lit(float(bounds[1]))) / F.lit(float(bounds[3] - bounds[1]))
-        return F.least(F.greatest(x, F.lit(0.0)), F.lit(1.0))
-    x = (lat + F.lit(90.0)) / F.lit(180.0)
-    return F.least(F.greatest(x, F.lit(0.0)), F.lit(1.0))  # clamp
-
-
-def norm_lon_upper(lon: Column, bounds=None) -> Column:
-    """Upper-bound lon normalization: +180 maps to 1.0, not wrapped to 0
-    (twin of cells.norm_lon_upper); clamped custom bounds have no seam."""
-    if bounds is not None:
-        return norm_lon(lon, bounds)
-    return F.when(lon == 180.0, F.lit(1.0)).otherwise(norm_lon(lon))
-
-
-def grid_coord(norm: Column, tier: int) -> Column:
-    r = 1 << tier
-    g = F.floor(norm * F.lit(float(r))).cast("long")
-    return F.least(F.greatest(g, F.lit(0)), F.lit(r - 1))
-
-
-def cell_expr(lon: Column, lat: Column, tier: int = MAX_TIER, bounds=None) -> Column:
-    """Point → Z-order cell id at ``tier`` — pure Column arithmetic.
-
-    NOTE: as a single expression this duplicates its input subtree 32×
-    (each spread step references its operand twice), which can push
-    generated code past the JVM 64KB method limit when lon/lat are
-    themselves complex expressions.  Hot paths should use
-    :func:`add_cell_column`, which materializes each step as a named
-    column (linear-size codegen).
-    """
-    return interleave(
-        grid_coord(norm_lon(lon, bounds), tier), grid_coord(norm_lat(lat, bounds), tier)
-    )
-
+_M32 = 0xFFFFFFFF
 
 _SPREAD_STEPS = [(16, _M16), (8, _M8), (4, _M4), (2, _M2), (1, _M1)]
 
@@ -123,12 +40,104 @@ def _dbl(v: float) -> str:
     return f"({float(v)!r}D)"
 
 
-def _norm_sql(c: str, lo: float, span: float, wrap: bool) -> str:
-    """SQL twin of norm_lon / norm_lat: wrapped (world lon) or clamped."""
-    x = f"(({c} - {_dbl(lo)}) / {_dbl(span)})"
-    if wrap:
-        return f"({x} - FLOOR({x}))"
+def _low32(c: str) -> str:
+    return f"(CAST({c} AS BIGINT) & {_M32})"
+
+
+def _spread(c: str, sh: int, m: int) -> str:
+    """One Morton spread step: ``(c | c << sh) & m``."""
+    return f"(({c} | shiftleft({c}, {sh})) & {m})"
+
+
+def part1by1(c: str) -> str:
+    """Spread the low 32 bits into even bit positions (JVM-side Morton half).
+
+    The text copies its operand 32 times (each step references its input
+    twice): pass a column name, not a large expression."""
+    x = _low32(c)
+    for sh, m in _SPREAD_STEPS:
+        x = _spread(x, sh, m)
+    return x
+
+
+def interleave(x: str, y: str) -> str:
+    return f"({part1by1(x)} | shiftleft({part1by1(y)}, 1))"
+
+
+def compact1by1(c: str) -> str:
+    """Inverse of :func:`part1by1` — gather the even bits (JVM-side).
+
+    NOTE on codegen size: the expression doubles its operand per step, so
+    pass an ATTRIBUTE (e.g. ``"`_cell`"``), never a large expression;
+    inverting an equality against a large interleave operand this way is
+    how the extent joins keep their reference-point predicate inside the
+    JVM's 64KB generated-method limit (see _ref_point_filter)."""
+    x = f"({c} & {_M1})"
+    for sh, m in ((1, _M2), (2, _M4), (4, _M8), (8, _M16), (16, _M32)):
+        x = f"(({x} | shiftrightunsigned({x}, {sh})) & {m})"
+    return x
+
+
+def compact_x(cell: str) -> str:
+    """Morton cell → x grid coordinate (even bits)."""
+    return compact1by1(cell)
+
+
+def compact_y(cell: str) -> str:
+    """Morton cell → y grid coordinate (odd bits)."""
+    return compact1by1(f"shiftrightunsigned({cell}, 1)")
+
+
+def _lin(c: str, lo: float, span: float) -> str:
+    return f"(({c} - {_dbl(lo)}) / {_dbl(span)})"
+
+
+def _clamp01(x: str) -> str:
     return f"LEAST(GREATEST({x}, {_dbl(0.0)}), {_dbl(1.0)})"
+
+
+def norm_lon(lon: str, bounds=None) -> str:
+    """x normalization: world frame wraps (LongitudeDefinition.java:52-67);
+    custom ``bounds`` clamp — BasicDimensionDefinition, the reference's
+    custom-CRS index math (see cells.norm_lon)."""
+    if bounds is not None:
+        return _clamp01(_lin(lon, bounds[0], float(bounds[2] - bounds[0])))
+    x = _lin(lon, -180.0, 360.0)
+    return f"({x} - FLOOR({x}))"  # antimeridian wrap
+
+
+def norm_lat(lat: str, bounds=None) -> str:
+    if bounds is not None:
+        return _clamp01(_lin(lat, bounds[1], float(bounds[3] - bounds[1])))
+    return _clamp01(_lin(lat, -90.0, 180.0))
+
+
+def norm_lon_upper(lon: str, bounds=None) -> str:
+    """Upper-bound lon normalization: +180 maps to 1.0, not wrapped to 0
+    (twin of cells.norm_lon_upper); clamped custom bounds have no seam."""
+    if bounds is not None:
+        return norm_lon(lon, bounds)
+    return f"(CASE WHEN {lon} = {_dbl(180.0)} THEN {_dbl(1.0)} ELSE {norm_lon(lon)} END)"
+
+
+def grid_coord(norm: str, tier: int) -> str:
+    """Cell index of a normalized position on the 2^tier grid, clamped."""
+    r = 1 << tier
+    return f"LEAST(GREATEST(CAST(FLOOR({norm} * {_dbl(r)}) AS BIGINT), 0), {r - 1})"
+
+
+def cell_expr(lon: str, lat: str, tier: int = MAX_TIER, bounds=None) -> str:
+    """Point → Z-order cell id at ``tier`` as one expression.
+
+    NOTE: this copies each grid coordinate 32× (each spread step
+    references its operand twice), which can push generated code past the
+    JVM 64KB method limit when lon/lat are themselves complex expressions.
+    Hot paths should use :func:`add_cell_column`, which materializes each
+    step as a named column (linear-size codegen).
+    """
+    return interleave(
+        grid_coord(norm_lon(lon, bounds), tier), grid_coord(norm_lat(lat, bounds), tier)
+    )
 
 
 def add_cell_column(
@@ -141,42 +150,30 @@ def add_cell_column(
     copying its expression subtree, so whole-stage codegen sees a linear
     chain (Catalyst's CollapseProject keeps non-cheap multi-referenced
     aliases un-inlined).  This is what keeps the 10^12-row key-generation
-    stage inside a single compiled WholeStageCodegen span.  The steps are
-    SQL text, six projections in all — a few driver→JVM calls where a
-    Column per operator costs hundreds.  Bit-identical to
-    ``cell_expr`` / ``cells.latlon_to_cell``.
+    stage inside a single compiled WholeStageCodegen span.  Six
+    projections in all.  Bit-identical to ``cell_expr`` /
+    ``cells.latlon_to_cell``.
     """
-    if bounds is None:
-        nx = _norm_sql(sql_ident(lon_col), -180.0, 360.0, wrap=True)
-        ny = _norm_sql(sql_ident(lat_col), -90.0, 180.0, wrap=False)
-    else:
-        nx = _norm_sql(sql_ident(lon_col), bounds[0], float(bounds[2] - bounds[0]), wrap=False)
-        ny = _norm_sql(sql_ident(lat_col), bounds[1], float(bounds[3] - bounds[1]), wrap=False)
-    r = 1 << tier
-
-    def grid(n):
-        g = f"CAST(FLOOR({n} * {_dbl(r)}) AS BIGINT)"
-        return f"(LEAST(GREATEST({g}, 0), {r - 1}) & {0xFFFFFFFF})"
-
-    def spread(c, sh, m):
-        return f"(({c} | shiftleft({c}, {sh})) & {m})"
-
+    nx = norm_lon(sql_ident(lon_col), bounds)
+    ny = norm_lat(sql_ident(lat_col), bounds)
     # temp names carry the output name so the helper is re-entrant and can
     # never clobber a caller's column that happens to be called _gx etc.
     px, py = f"_{out}_px", f"_{out}_py"
     qx, qy = sql_ident(px), sql_ident(py)
-    df = df.withColumns({px: F.expr(grid(nx)), py: F.expr(grid(ny))})
+    df = df.withColumns({
+        px: F.expr(_low32(grid_coord(nx, tier))), py: F.expr(_low32(grid_coord(ny, tier))),
+    })
     for sh, m in _SPREAD_STEPS[:-1]:
-        df = df.withColumns({px: F.expr(spread(qx, sh, m)), py: F.expr(spread(qy, sh, m))})
+        df = df.withColumns({px: F.expr(_spread(qx, sh, m)), py: F.expr(_spread(qy, sh, m))})
     sh, m = _SPREAD_STEPS[-1]
-    df = df.withColumns({out: F.expr(f"{spread(qx, sh, m)} | shiftleft({spread(qy, sh, m)}, 1)")})
+    df = df.withColumns({out: F.expr(f"{_spread(qx, sh, m)} | shiftleft({_spread(qy, sh, m)}, 1)")})
     return df.drop(px, py)
 
 
-def cell_at_tier_expr(cell31: Column, to_tier: int, from_tier: int = MAX_TIER) -> Column:
+def cell_at_tier_expr(cell31: str, to_tier: int, from_tier: int = MAX_TIER) -> str:
     """Reproject a finest-tier cell to a coarser tier (prefix shift) —
-    the Column twin of TieredSFCIndexStrategy.reprojectToTier."""
-    return F.shiftrightunsigned(cell31, 2 * (from_tier - to_tier))
+    the twin of TieredSFCIndexStrategy.reprojectToTier."""
+    return f"shiftrightunsigned({cell31}, {2 * (from_tier - to_tier)})"
 
 
 def bbox_refine_pred(lon: Column, lat: Column, bbox) -> Column:
@@ -250,32 +247,18 @@ def ranges_pred(col: str, ranges) -> Column:
     return F.expr(ranges_sql(col, ranges))
 
 
-def tier_of_key(key: Column) -> Column:
-    """Tier of a packed key (Column twin of cells.unpack_key's tier part).
-
-    Exact integer when-chain over the 32 tier offsets — used for
-    distributed tier discovery without collecting keys to the driver
-    (TieredSpatialJoin.java:173-207's tier pre-pass)."""
-    from .cells import TIER_OFFSETS
-
-    expr = F.lit(0)
-    for t in range(1, MAX_TIER + 1):
-        expr = F.when(key >= F.lit(int(TIER_OFFSETS[t])), F.lit(t)).otherwise(expr)
-    return expr
-
-
 # ---------------------------------------------------------------------------
 # phash → deterministic lon/lat (FIXTURES.md §1), JVM-side
 # ---------------------------------------------------------------------------
 
-def lon_from_phash(phash: Column) -> Column:
-    hi = F.shiftrightunsigned(phash, 32).bitwiseAND(F.lit(0xFFFFFFFF))
-    return hi.cast("double") / F.lit(4294967296.0) * F.lit(360.0) - F.lit(180.0)
+def lon_from_phash(phash: str) -> str:
+    hi = f"CAST((shiftrightunsigned({phash}, 32) & {_M32}) AS DOUBLE)"
+    return f"({hi} / {_dbl(4294967296.0)} * {_dbl(360.0)} - {_dbl(180.0)})"
 
 
-def lat_from_phash(phash: Column) -> Column:
-    lo = phash.bitwiseAND(F.lit(0xFFFFFFFF))
-    return lo.cast("double") / F.lit(4294967296.0) * F.lit(180.0) - F.lit(90.0)
+def lat_from_phash(phash: str) -> str:
+    lo = f"CAST(({phash} & {_M32}) AS DOUBLE)"
+    return f"({lo} / {_dbl(4294967296.0)} * {_dbl(180.0)} - {_dbl(90.0)})"
 
 
 def _with_phash_coords(
@@ -287,8 +270,9 @@ def _with_phash_coords(
     to derive from) passes through unchanged."""
     if lon_col in df.columns or not phash_col:
         return df
-    return df.withColumn(lon_col, lon_from_phash(F.col(phash_col))).withColumn(
-        lat_col, lat_from_phash(F.col(phash_col))
+    p = sql_ident(phash_col)
+    return df.withColumns(
+        {lon_col: F.expr(lon_from_phash(p)), lat_col: F.expr(lat_from_phash(p))}
     )
 
 
@@ -297,16 +281,12 @@ def _with_phash_coords(
 # KDERunner.java:234-238) — JVM-side
 # ---------------------------------------------------------------------------
 
-def tile_x_expr(lon: Column, level: int) -> Column:
-    nx = 1 << (level + 1)
-    t = F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(float(nx))).cast("long")
-    return F.least(F.greatest(t, F.lit(0)), F.lit(nx - 1))
+def tile_x_expr(lon: str, level: int) -> str:
+    return grid_coord(_lin(lon, -180.0, 360.0), level + 1)
 
 
-def tile_y_expr(lat: Column, level: int) -> Column:
-    ny = 1 << level
-    t = F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(float(ny))).cast("long")
-    return F.least(F.greatest(t, F.lit(0)), F.lit(ny - 1))
+def tile_y_expr(lat: str, level: int) -> str:
+    return grid_coord(_lin(lat, -90.0, 180.0), level)
 
 
 # ---------------------------------------------------------------------------

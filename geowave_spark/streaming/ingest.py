@@ -179,8 +179,10 @@ def streaming_tile_counts(
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
         stream.withWatermark(ts_col, watermark)
-        .withColumn("tile_x", sqlcells.tile_x_expr(F.col(lon_col), level))
-        .withColumn("tile_y", sqlcells.tile_y_expr(F.col(lat_col), level))
+        .withColumns({
+            "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells.sql_ident(lon_col), level)),
+            "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells.sql_ident(lat_col), level)),
+        })
         .groupBy(F.window(F.col(ts_col), window), "tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(

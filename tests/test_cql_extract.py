@@ -180,3 +180,27 @@ def test_cql_query_indexed_st_matches_full_scan(spark, tmp_path):
     full = cql.cql_filter(spark.read.parquet(path), expr, geometry=("lon", "lat"))
     assert _sorted_ids(routed) == _sorted_ids(full)
     assert routed.count() > 0
+
+
+def test_reversed_bbox_reads_as_one_wrapped_box(spark, tmp_path):
+    """A reversed BBOX (x0 > x1) is the wrapped box from x0 east to x1:
+    the (lon, lat) path, the WKT path and the index-routed query select
+    the same rows as a Python oracle."""
+    pts = [(1, 175.0, 5.0), (2, -175.0, 5.0), (3, 0.0, 5.0), (4, 175.0, 20.0)]
+    df = spark.createDataFrame(
+        [(i, x, y, f"POINT ({x} {y})") for i, x, y in pts],
+        "id long, lon double, lat double, wkt string",
+    )
+    x0, y0, x1, y1 = 170.0, 0.0, -170.0, 10.0
+    expr = f"BBOX(wkt, {x0}, {y0}, {x1}, {y1})"
+    want = [i for i, x, y in pts if y0 <= y <= y1 and (x >= x0 or x <= x1)]
+    assert want == [1, 2]
+
+    def ids(frame):
+        return sorted(r["id"] for r in frame.collect())
+
+    path = str(tmp_path / "rev.parquet")
+    indexed.write_indexed(df.drop("wkt"), path, n_files=2, phash_col=None)
+    assert ids(cql.cql_filter(df, expr, geometry=("lon", "lat"))) == want
+    assert ids(cql.cql_filter(df, expr, geometry="wkt")) == want
+    assert ids(indexed.cql_query_indexed(spark, path, expr)) == want

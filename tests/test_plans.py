@@ -58,6 +58,27 @@ def test_general_polygon_join_uses_pandas_refine_only(spark, sf_dir):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_broadcast_sides_are_local_relations(spark, sf_dir):
+    """Every driver-built broadcast side (the box cells, the general
+    polygons' cells and their WKTs) is a LocalTableScan, which needs no
+    Spark job of its own — never an RDD scan over Python rows."""
+    ev = eq._events(spark, sf_dir)
+    polys = spark.createDataFrame(
+        [("box", "POLYGON ((0 0, 30 0, 30 25, 0 25, 0 0))"),
+         ("tri", "POLYGON ((0 0, 30 0, 15 25, 0 0))")], ["polygon_id", "wkt"],
+    )
+    out = spatial_join.tiered_spatial_join(ev, polys, point_id="event_id")
+    out.collect()
+    lines = _plan(out).splitlines()
+    below = [
+        lines[i + 1].lstrip(" :+-") for i, line in enumerate(lines)
+        if line.lstrip(" :+-").startswith("BroadcastExchange")
+    ]
+    assert len(below) >= 3, below  # the final AQE plan lists each stage twice
+    assert all(n.startswith("LocalTableScan") for n in below), below
+    assert "ExistingRDD" not in "\n".join(lines) and "RDDScan" not in "\n".join(lines)
+
+
 def test_box_geometry_join_is_jvm_only(spark, sf_dir):
     """geometry_join with left_is_box over an all-box right side refines
     entirely in codegen: no Python of any kind in the plan, and results

@@ -100,8 +100,8 @@ def test_hotspot_cells_phash_only_table(spark):
 
     with_coords = base.select(
         "event_id",
-        sqlcells.lon_from_phash(F.col("phash")).alias("lon"),
-        sqlcells.lat_from_phash(F.col("phash")).alias("lat"),
+        F.expr(sqlcells.lon_from_phash("phash")).alias("lon"),
+        F.expr(sqlcells.lat_from_phash("phash")).alias("lat"),
     )
     full = stats.hotspot_cells(with_coords, tier=4)
     got = stats.hotspot_cells(base, tier=4)  # phash-only: must not crash

@@ -87,6 +87,29 @@ def test_antimeridian_polygon_matches(tables):
     assert_same_pairs(got, want)
 
 
+def test_box_ending_at_the_seam_meets_points_at_lon_180_on_every_path(spark):
+    """A box ending exactly at +180 holds the points at lon +180 and (by
+    its lon + 360 retest, the JVM box refine's and the oracles' rule) at
+    lon -180: the broadcast path, the shuffle path and the brute-force
+    oracle agree.  The triangle touches +180 at one vertex only."""
+    pts = spark.createDataFrame(
+        [("p", -180.0, 5.0), ("q", 175.0, 5.0), ("r", 180.0, 5.0), ("s", -179.0, 5.0)],
+        "image_id string, lon double, lat double",
+    )
+    polys = spark.createDataFrame(
+        [("a", "POLYGON ((170 0, 180 0, 180 10, 170 10, 170 0))"),
+         ("b", "POLYGON ((170 0, 180 0, 175 10, 170 0))")],
+        "polygon_id string, wkt string",
+    )
+    want = [("p", "a"), ("q", "a"), ("q", "b"), ("r", "a")]
+    for got in (
+        sj.tiered_spatial_join(pts, polys, broadcast_polygons=True),
+        sj.tiered_spatial_join(pts, polys, broadcast_polygons=False),
+        sj.brute_force_join(pts, polys),
+    ):
+        assert sorted(map(tuple, got.collect())) == want
+
+
 def test_loose_mode_is_cover_superset(spark, tables):
     """loose=True (IndexOnlySpatialQuery semantics) returns every exact
     match plus only cover-level false positives."""

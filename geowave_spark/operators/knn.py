@@ -39,10 +39,6 @@ from .. import cells, sqlcells
 from ..functions import geo_udfs
 from .spatial_join import _point_keys, add_point_cols
 
-def _tier_offsets_expr() -> Column:
-    return F.array(*[F.lit(int(o)) for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1]])
-
-
 def _tier_expr(maxd: Column, bounds=None) -> Column:
     """Coarsest tier whose cell side >= max_distance (world: 180/2^t; a
     custom ``bounds`` frame uses its smaller axis span, so the 3x3 ring
@@ -76,15 +72,11 @@ def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bo
     q = queries.withColumn("_tier", _tier_expr(F.col(maxd_col), bounds))
     # per-row grid resolution r = 2^tier (exact in double up to 2^31)
     q = q.withColumn("_r", F.pow(F.lit(2.0), F.col("_tier").cast("double")).cast("long"))
-
-    def grid(norm: str) -> Column:
-        return F.expr(
-            f"CAST(LEAST(GREATEST(FLOOR({norm} * CAST(`_r` AS DOUBLE)), 0), `_r` - 1) AS BIGINT)"
-        )
-
+    nlon = sqlcells.norm_lon(sqlcells.sql_ident(q_lon), bounds)
+    nlat = sqlcells.norm_lat(sqlcells.sql_ident(q_lat), bounds)
     q = q.withColumns({
-        "_qx": grid(sqlcells.norm_lon(sqlcells.sql_ident(q_lon), bounds)),
-        "_qy": grid(sqlcells.norm_lat(sqlcells.sql_ident(q_lat), bounds)),
+        "_qx": F.expr(sqlcells._grid_at(nlon, "`_r`")),
+        "_qy": F.expr(sqlcells._grid_at(nlat, "`_r`")),
     })
     # 3x3 ring: lon wraps (pmod) in the world frame, clamps under custom
     # bounds (no antimeridian in a projected frame); lat always clamps
@@ -101,9 +93,7 @@ def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bo
         .filter((F.col("_ny") >= 0) & (F.col("_ny") < F.col("_r")))
         .filter((F.col("_nx") >= 0) & (F.col("_nx") < F.col("_r")))
         .withColumn(
-            "key",
-            F.element_at(_tier_offsets_expr(), F.col("_tier") + 1)
-            + F.expr(sqlcells.interleave("`_nx`", "`_ny`")),
+            "key", F.expr(sqlcells._tier_key("`_tier`", sqlcells.interleave("`_nx`", "`_ny`")))
         )
         .dropDuplicates([query_id, "key"])
         .select(query_id, q_lon, q_lat, maxd_col, "_tier", "key", *extra)

@@ -625,17 +625,10 @@ def _extent_tier_expr(p: str, bounds=None) -> str:
     )
 
 
-# grid size at the emission tier _kt: _rd = 2^_kt (double), _rm = last index
-_TIER_SCALE = {
-    "_rd": "POW(2.0D, CAST(`_kt` AS DOUBLE))",
-    "_rm": "CAST(POW(2.0D, CAST(`_kt` AS DOUBLE)) AS BIGINT) - 1",
-}
-
-
 def _grid(norm: str, lo: str) -> str:
-    """Grid coordinate of a normalized position at tier _kt, clamped to
-    [lo, last index] (needs the `_TIER_SCALE` columns)."""
-    return f"CAST(LEAST(GREATEST(FLOOR({norm} * `_rd`), {lo}), `_rm`) AS BIGINT)"
+    """Grid coordinate of a normalized position at the emission tier _kt,
+    clamped to [lo, last index]."""
+    return sqlcells._grid_at(norm, "shiftleft(1L, `_kt`)", lo)
 
 
 def _extent_multitier_keys(
@@ -673,10 +666,8 @@ def _extent_multitier_keys(
     # cell 0 while the upper clamps to r-1 — a degenerate seam box would
     # otherwise cover the whole row (2^31 cells at the point tier)
     nx, ny = sqlcells.norm_lon_upper, sqlcells.norm_lat
-    offs = ", ".join(f"{int(o)}L" for o in cells.TIER_OFFSETS[: cells.MAX_TIER + 1])
     ex = (
-        ex.withColumns({c: F.expr(e) for c, e in _TIER_SCALE.items()})
-        .withColumns({
+        ex.withColumns({
             "_gx0": F.expr(_grid(nx(x0, bounds), "0")),
             "_gy0": F.expr(_grid(ny(y0, bounds), "0")),
         })
@@ -690,7 +681,7 @@ def _extent_multitier_keys(
     )
     return ex.select(
         id_col, *[f"{p}{n}" for n in _BOX], *extra_cols, te, "_kt", "_cell",
-        F.expr(f"CAST(element_at(array({offs}), `_kt` + 1) + `_cell` AS BIGINT) AS key"),
+        F.expr(f"{sqlcells._tier_key('`_kt`', '`_cell`')} AS key"),
     )
 
 
@@ -719,7 +710,6 @@ def _ref_point_filter(j: DataFrame, px: str, py: str) -> DataFrame:
     gxp = _grid(sqlcells.norm_lon_upper(px), "0")
     gyp = _grid(sqlcells.norm_lat(py), "0")
     cx, cy = sqlcells.compact_x("`_cell`"), sqlcells.compact_y("`_cell`")
-    j = j.withColumns({c: F.expr(e) for c, e in _TIER_SCALE.items()})
     return j.filter(F.expr(f"{gxp} = {cx} AND {gyp} = {cy}"))
 
 
@@ -832,7 +822,7 @@ def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
 
 class _Sql(str):
     """SQL text that composes under the operators geo_udfs' box algebra
-    applies (<=, <, &, |, ~), so the algebra renders as one predicate."""
+    applies (<=, <, &, ~), so the algebra renders as one predicate."""
 
     def _op(self, op: str, other) -> "_Sql":
         return _Sql(f"({self} {op} {other})")
@@ -845,9 +835,6 @@ class _Sql(str):
 
     def __and__(self, other):
         return self._op("AND", other)
-
-    def __or__(self, other):
-        return self._op("OR", other)
 
     def __invert__(self):
         return _Sql(f"(NOT {self})")

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .cells import MAX_TIER
+from .cells import MAX_TIER, TIER_OFFSETS
 
 _M16 = 0x0000FFFF0000FFFF
 _M8 = 0x00FF00FF00FF00FF
@@ -122,8 +122,13 @@ def norm_lon_upper(lon: str, bounds=None) -> str:
 
 def grid_coord(norm: str, tier: int) -> str:
     """Cell index of a normalized position on the 2^tier grid, clamped."""
-    r = 1 << tier
-    return f"LEAST(GREATEST(CAST(FLOOR({norm} * {_dbl(r)}) AS BIGINT), 0), {r - 1})"
+    return _grid_at(norm, f"{1 << tier}L")
+
+
+def _grid_at(norm: str, r: str, lo: str = "0") -> str:
+    """Cell index of a normalized position on a grid of ``r`` (SQL text,
+    a BIGINT that may vary per row) cells a side, clamped to [lo, r - 1]."""
+    return f"LEAST(GREATEST(CAST(FLOOR({norm} * CAST({r} AS DOUBLE)) AS BIGINT), {lo}), {r} - 1)"
 
 
 def cell_expr(lon: str, lat: str, tier: int = MAX_TIER, bounds=None) -> str:
@@ -174,6 +179,13 @@ def cell_at_tier_expr(cell31: str, to_tier: int, from_tier: int = MAX_TIER) -> s
     """Reproject a finest-tier cell to a coarser tier (prefix shift) —
     the twin of TieredSFCIndexStrategy.reprojectToTier."""
     return f"shiftrightunsigned({cell31}, {2 * (from_tier - to_tier)})"
+
+
+def _tier_key(tier: str, cell: str) -> str:
+    """Tier-packed key of ``cell`` at the per-row ``tier`` (twin of
+    cells.pack_key)."""
+    offs = ", ".join(f"{int(o)}L" for o in TIER_OFFSETS[: MAX_TIER + 1])
+    return f"CAST(element_at(array({offs}), {tier} + 1) + {cell} AS BIGINT)"
 
 
 def bbox_refine_pred(lon: Column, lat: Column, bbox) -> Column:

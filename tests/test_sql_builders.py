@@ -178,11 +178,12 @@ def _join_inputs(spark):
     return pts, polys, ext
 
 
-# The plan builders once cost one py4j command (or several) per Column
-# operator: about 5,600 for this extent join, 2,700 for the shuffle point
-# join and 800 for the broadcast one (450, 580 and 330 as SQL text).  The bounds leave room for the
-# Spark jobs the builds run (polygon collect, localCheckpoint, tier
-# aggregate), whose command counts vary with the session.
+# Built from Column trees, one py4j command (or several) per operator,
+# these plans cost about 5,600 commands for the extent join, 2,700 for the
+# shuffle point join and 800 for the broadcast one; as SQL text about 450,
+# 580 and 330.  The bounds leave room for the Spark jobs the builds run
+# (polygon collect, localCheckpoint, tier aggregate), whose command counts
+# vary with the session.
 @pytest.mark.parametrize("build, bound", [
     (lambda pts, polys, ext: sj.tiered_extent_join_shuffle(
         ext, ext.withColumnRenamed("left_id", "right_id"), "left_id", "right_id"), 800),

@@ -205,10 +205,9 @@ def _pairwise_udf(name: str, group, null, combine):
 def _box_covers(a, b, strict: bool = False):
     """Box a covers box b, or, ``strict``, b lies in a's open interior.
 
-    Boxes are (x0, y0, x1, y1) of numpy arrays, floats, Spark Columns or
-    SQL text (spatial_join._Sql): every operator used here exists on all
-    four, so the numpy fast paths and the JVM candidate filter share this
-    one interval algebra."""
+    Boxes are (x0, y0, x1, y1) of numpy arrays, floats or Spark Columns:
+    every operator used here exists on all three, so the numpy fast paths
+    and the JVM candidate filter share this one interval algebra."""
     lt = operator.lt if strict else operator.le
     return lt(a[0], b[0]) & lt(a[1], b[1]) & lt(b[2], a[2]) & lt(b[3], a[3])
 

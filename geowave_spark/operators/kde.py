@@ -44,8 +44,8 @@ def _smear(pts: DataFrame, level: int, lon_col: str, lat_col: str, offsets) -> D
     )
     return (
         pts.select(
-            F.expr(f"{sqlcells.tile_x_expr(sqlcells.sql_ident(lon_col), level)} AS _cx"),
-            F.expr(f"{sqlcells.tile_y_expr(sqlcells.sql_ident(lat_col), level)} AS _cy"),
+            F.expr(f"{sqlcells.tile_x_expr(sqlcells._col_ref(lon_col), level)} AS _cx"),
+            F.expr(f"{sqlcells.tile_y_expr(sqlcells._col_ref(lat_col), level)} AS _cy"),
         )
         .withColumn("_o", F.explode(offs))
         .select(

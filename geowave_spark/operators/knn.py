@@ -72,8 +72,8 @@ def _column_ring(queries: DataFrame, query_id, maxd_col, q_lon, q_lat, extra, bo
     q = queries.withColumn("_tier", _tier_expr(F.col(maxd_col), bounds))
     # per-row grid resolution r = 2^tier (exact in double up to 2^31)
     q = q.withColumn("_r", F.pow(F.lit(2.0), F.col("_tier").cast("double")).cast("long"))
-    nlon = sqlcells.norm_lon(sqlcells.sql_ident(q_lon), bounds)
-    nlat = sqlcells.norm_lat(sqlcells.sql_ident(q_lat), bounds)
+    nlon = sqlcells.norm_lon(sqlcells._col_ref(q_lon), bounds)
+    nlat = sqlcells.norm_lat(sqlcells._col_ref(q_lat), bounds)
     q = q.withColumns({
         "_qx": F.expr(sqlcells._grid_at(nlon, "`_r`")),
         "_qy": F.expr(sqlcells._grid_at(nlat, "`_r`")),

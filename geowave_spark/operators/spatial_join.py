@@ -31,7 +31,9 @@ Every tiered join takes the same five decisions through one helper each:
 Every derived column is ONE SQL-text expression (``F.expr``) over the
 sqlcells formulas, and each run of derived columns one projection: a
 Column tree costs a driver→JVM round trip per operator node, which made
-plan building, not execution, the larger part of a small join.
+plan building, not execution, the larger part of a small join.  The box
+relations of the candidate filter stay Columns, built once per filter
+over geo_udfs' shared interval algebra.
 
 Semantics preserved (verified against the brute-force oracle, the same test
 design as GeoWaveSparkSpatialJoinIT.java:227-254):
@@ -64,7 +66,7 @@ from __future__ import annotations
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import cells, geom, sqlcells
@@ -206,7 +208,7 @@ def _cover_rows(
     take = np.repeat(np.arange(len(geo)), [k.size for k in keys])
     table = pa.table({
         "key": np.concatenate(keys),
-        "id": pa.array([rows[i][0] for i in idx], pa.string()).take(take),
+        "id": _strings([rows[i][0] for i in idx]).take(take),
         "x0": x0[take], "y0": y0[take], "x1": x1[take], "y1": y1[take],
         "is_box": isb[take], "tier": tier[take], "row": idx[take],
     }, schema=_CELL_SCHEMA)
@@ -309,7 +311,7 @@ def _refine_box(
     j: DataFrame, predicate: str, radius: float, lon_col: str, lat_col: str,
     bounds=None,
 ) -> DataFrame:
-    lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
+    lon, lat = sqlcells._col_ref(lon_col), sqlcells._col_ref(lat_col)
     if predicate == "intersects":
         return j.filter(F.expr(_box_contains_pred(lon, lat, bounds)))
     return j.filter(F.expr(f"{_box_dist_expr(lon, lat, bounds)} <= {sqlcells._dbl(radius)}"))
@@ -438,7 +440,7 @@ def _shuffle_join(
         # replicate polygon cells `salt` ways; point rows pick one replica —
         # breaks single-hot-cell skew beyond what AQE splitting can do
         pt_keys = pt_keys.withColumn(
-            "_salt", F.expr(f"pmod(xxhash64({sqlcells.sql_ident(point_id)}), {int(salt)})")
+            "_salt", F.expr(f"pmod(xxhash64({sqlcells._col_ref(point_id)}), {int(salt)})")
         )
         right = poly_cells.withColumn("_salt", F.expr(f"explode(sequence(0, {int(salt) - 1}))"))
         joined = pt_keys.join(right, ["key", "_salt"])
@@ -500,8 +502,8 @@ def tiered_extent_join(
         # (bbox-intersect pairs, same id columns) matches this join's
         pb, _ = _with_bbox(polygons, polygon_id, wkt_col)
         return tiered_extent_join_shuffle(
-            extents, pb.select(polygon_id, "_bb.*"), left_id=extent_id, right_id=polygon_id,
-            lcols=(x0, y0, x1, y1),
+            extents, pb, left_id=extent_id, right_id=polygon_id,
+            lcols=(x0, y0, x1, y1), rcols=tuple(f"_bb.{n}" for n in _BOX),
         )
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
     # polygon side: full bbox cover (untrimmed — the reference point below
@@ -525,17 +527,25 @@ def tiered_extent_join(
 
 
 def _local(spark, table: pa.Table, rename: dict[str, str] | None = None) -> DataFrame:
-    """A driver-built Arrow table as a broadcast LocalRelation (no Spark
-    job to materialize it, unlike a frame over a Python row list)."""
+    """A driver-built Arrow table as a broadcast LocalRelation: its rows
+    are never pickled through Python workers, as a frame over a Python
+    row list's are (the broadcast still runs one JVM-side collect job)."""
     if rename:
         table = table.rename_columns([rename.get(c, c) for c in table.column_names])
     return F.broadcast(spark.createDataFrame(table))
 
 
+def _strings(values) -> pa.Array:
+    """Values as an Arrow string array, each as ``str`` renders it: a
+    caller's id of any type reads as a string id, as it did through a
+    ``string`` schema field."""
+    return pa.array([None if v is None else str(v) for v in values], pa.string())
+
+
 def _string_table(pairs, names: tuple[str, str]) -> pa.Table:
     """(id, wkt) pairs as a two-column Arrow table of strings."""
     cols = list(zip(*pairs)) or [(), ()]
-    return pa.table([pa.array(c, pa.string()) for c in cols], names=list(names))
+    return pa.table([_strings(c) for c in cols], names=list(names))
 
 
 def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str) -> DataFrame:
@@ -546,7 +556,7 @@ def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str)
 def _prefixed(df: DataFrame, id_col: str, bbox_cols, p: str) -> DataFrame:
     """(id, {p}x0, {p}y0, {p}x1, {p}y1) from the caller's bbox columns."""
     return df.select(
-        id_col, *[F.expr(f"{sqlcells.sql_ident(c)} AS `{p}{n}`") for c, n in zip(bbox_cols, _BOX)]
+        id_col, *[F.expr(f"{sqlcells._col_ref(c)} AS `{p}{n}`") for c, n in zip(bbox_cols, _BOX)]
     )
 
 
@@ -554,7 +564,7 @@ def _with_bbox(df: DataFrame, id_col: str, wkt_col: str, bbox_cols=None):
     """(frame, [x0, y0, x1, y1] as SQL text): the caller's envelope columns
     when given, else one Arrow st_bbox pass over the WKT."""
     if bbox_cols is not None:
-        return df, [sqlcells.sql_ident(c) for c in bbox_cols]
+        return df, [sqlcells._col_ref(c) for c in bbox_cols]
     df = df.select(id_col, wkt_col).withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
     return df, [f"`_bb`.`{n}`" for n in _BOX]
 
@@ -738,14 +748,14 @@ def _candidate_filter(
     corner against that image, so seam pairs are neither dropped nor
     duplicated.
     """
-    def tested(name: str) -> str:
+    def tested(name: str) -> Column:
         cond = _box_predicate(name)
-        return cond if seam is None else f"({cond} OR ({seam}))"
+        return cond if seam is None else cond | F.expr(seam)
 
-    keep = f"`_kt` = LEAST(`_lte`, `_rte`) AND {tested('intersects')}"
+    keep = F.expr("`_kt` = LEAST(`_lte`, `_rte`)") & tested("intersects")
     if predicate in ("within", "covers", "contains", "equals"):
-        keep = f"{keep} AND {tested(predicate)}"
-    j = j.filter(F.expr(keep))
+        keep = keep & tested(predicate)
+    j = j.filter(keep)
     if not ref_point:
         return j
     px = "GREATEST(`_lx0`, `_rx0`)"
@@ -820,37 +830,16 @@ def _pairwise_refine(j: DataFrame, predicate: str, radius: float) -> DataFrame:
     return j.filter(geo_udfs.PREDICATES[predicate].udf(la, ra))
 
 
-class _Sql(str):
-    """SQL text that composes under the operators geo_udfs' box algebra
-    applies (<=, <, &, ~), so the algebra renders as one predicate."""
-
-    def _op(self, op: str, other) -> "_Sql":
-        return _Sql(f"({self} {op} {other})")
-
-    def __le__(self, other):
-        return self._op("<=", other)
-
-    def __lt__(self, other):
-        return self._op("<", other)
-
-    def __and__(self, other):
-        return self._op("AND", other)
-
-    def __invert__(self):
-        return _Sql(f"(NOT {self})")
-
-
-def _box_predicate(predicate: str) -> str | None:
-    """SQL twin of ``predicate`` for box × box candidate rows, left
+def _box_predicate(predicate: str) -> Column | None:
+    """JVM Column twin of ``predicate`` for box × box candidate rows, left
     (_lx0.._ly1) against right (_rx0.._ry1): geo_udfs' interval algebra
-    rendered as SQL text.  None when the predicate has no interval form
+    over Columns.  None when the predicate has no interval form
     (dwithin).  For any geometries the containment-family entries are
     NECESSARY envelope conditions."""
     if predicate == "crosses":
-        return "false"  # area × area never crosses
-    left, right = (tuple(_Sql(f"`{p}{n}`") for n in _BOX) for p in ("_l", "_r"))
-    rel = geo_udfs._box_relation(predicate, left, right)
-    return None if rel is None else str(rel)
+        return F.lit(False)  # area × area never crosses
+    left, right = (tuple(F.col(f"{p}{n}") for n in _BOX) for p in ("_l", "_r"))
+    return geo_udfs._box_relation(predicate, left, right)
 
 
 def geometry_join(
@@ -972,7 +961,7 @@ def geometry_join(
         # stage (the common case — box workloads stay 100% JVM); only
         # candidates with a non-box right geometry take the Arrow refine.
         # Which rids are boxes is known driver-side — no runtime probe.
-        j_box = j.filter(F.expr(f"`_rbox` AND {box_pred}")).select(
+        j_box = j.filter(F.col("_rbox") & box_pred).select(
             F.col(left_id), F.col("_rid").alias(right_id)
         )
         if not exactly_once:

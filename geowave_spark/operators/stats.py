@@ -408,8 +408,8 @@ def hotspot_cells(
     r = 1 << tier
     pts = add_point_cols(points, lon_col, lat_col)  # phash-only tables work
     g = pts.select(
-        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lon(sqlcells.sql_ident(lon_col)), tier)} AS gx"),
-        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lat(sqlcells.sql_ident(lat_col)), tier)} AS gy"),
+        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lon(sqlcells._col_ref(lon_col)), tier)} AS gx"),
+        F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lat(sqlcells._col_ref(lat_col)), tier)} AS gy"),
     )
     counts = g.groupBy("gx", "gy").agg(F.count(F.lit(1)).cast("long").alias("n"))
     counts = counts.localCheckpoint()  # feeds 3 consumers below, compute once

@@ -57,7 +57,7 @@ def assign_tiles(
     """(image_id, level, tile_x, tile_y) for each pyramid level — JVM-only,
     one SQL expression for all levels."""
     pts = sqlcells._with_phash_coords(points, lon_col, lat_col)
-    lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
+    lon, lat = sqlcells._col_ref(lon_col), sqlcells._col_ref(lat_col)
     structs = ", ".join(
         f"struct({int(lvl)} AS level, {sqlcells.tile_x_expr(lon, lvl)} AS tile_x, "
         f"{sqlcells.tile_y_expr(lat, lvl)} AS tile_y)"
@@ -172,8 +172,8 @@ def assemble_tiles(
     """
     pts = sqlcells._with_phash_coords(images, lon_col, lat_col).withColumns({
         "level": F.lit(level),
-        "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells.sql_ident(lon_col), level)),
-        "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells.sql_ident(lat_col), level)),
+        "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells._col_ref(lon_col), level)),
+        "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells._col_ref(lat_col), level)),
     })
     # normalize the coordinate column names for the pandas mosaic fn —
     # non-default lon_col/lat_col must not KeyError inside the workers
@@ -300,13 +300,13 @@ def mosaic_tiles(
         # TRUE extents — never clamped: _mosaic's world-to-screen affine
         # maps the FULL source image over the footprint, so clamping here
         # would squeeze edge-adjacent imagery instead of cropping it
-        lon, lat = sqlcells.sql_ident(lon_col), sqlcells.sql_ident(lat_col)
+        lon, lat = sqlcells._col_ref(lon_col), sqlcells._col_ref(lat_col)
         hw = f"(CAST(`w` AS DOUBLE) * {d(deg_per_px)} / {d(2.0)})"
         hh = f"(CAST(`h` AS DOUBLE) * {d(deg_per_px)} / {d(2.0)})"
         fp = {"_fx0": f"{lon} - {hw}", "_fx1": f"{lon} + {hw}",
               "_fy0": f"{lat} - {hh}", "_fy1": f"{lat} + {hh}"}
     else:
-        fp = {n: sqlcells.sql_ident(c) for n, c in zip(("_fx0", "_fy0", "_fx1", "_fy1"), footprint_cols)}
+        fp = {n: sqlcells._col_ref(c) for n, c in zip(("_fx0", "_fy0", "_fx1", "_fy1"), footprint_cols)}
     pts = pts.withColumns({n: F.expr(e) for n, e in fp.items()})
     nx = 1 << (level + 1)
 

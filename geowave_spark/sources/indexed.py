@@ -325,7 +325,7 @@ def write_indexed_hier(
         (F.col(x0) == F.col(x1)) & (F.col(y0) == F.col(y1)), F.lit(False)
     )
     pt_code = F.expr(
-        sqlcells.cell_expr(sqlcells.sql_ident(x0), sqlcells.sql_ident(y0), cells.MAX_TIER)
+        sqlcells.cell_expr(sqlcells._col_ref(x0), sqlcells._col_ref(y0), cells.MAX_TIER)
     )
     xz_code = xz_code_udf()(F.col(x0), F.col(y0), F.col(x1), F.col(y1))
     # split by kind instead of when(is_point, ...): pandas UDFs inside a
@@ -580,8 +580,8 @@ def write_indexed_st(
     bin0 = f"date_trunc('{trunc}', {ts_col})"
     start, nxt = us(bin0), us(f"{bin0} + INTERVAL 1 {trunc}")
     frac = f"(CAST(({us(ts_col)} - {start}) AS DOUBLE) / CAST(({nxt} - {start}) AS DOUBLE))"
-    gx = sqlcells.grid_coord(sqlcells.norm_lon(sqlcells.sql_ident(lon_col)), bits[0])
-    gy = sqlcells.grid_coord(sqlcells.norm_lat(sqlcells.sql_ident(lat_col)), bits[1])
+    gx = sqlcells.grid_coord(sqlcells.norm_lon(sqlcells._col_ref(lon_col)), bits[0])
+    gy = sqlcells.grid_coord(sqlcells.norm_lat(sqlcells._col_ref(lat_col)), bits[1])
     gt = sqlcells.grid_coord(frac, bits[2])
     out = df.withColumns({
         "_bin": st.time_bin_expr(ts_col, unit),

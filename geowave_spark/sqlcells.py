@@ -231,6 +231,29 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+def _col_ref(name: str) -> str:
+    """A caller's column name as SQL text, read the way ``F.col`` reads it:
+    dots outside backticks separate struct-field parts (``"bb.x0"`` is
+    field x0 of struct bb) and backticks quote a part, ```` `` ```` inside
+    them a literal backtick."""
+    parts, cur, quoted, i = [], [], False, 0
+    while i < len(name):
+        ch = name[i]
+        if ch == "`" and quoted and name[i + 1:i + 2] == "`":
+            cur.append("`")
+            i += 1
+        elif ch == "`":
+            quoted = not quoted
+        elif ch == "." and not quoted:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+        i += 1
+    parts.append("".join(cur))
+    return ".".join(sql_ident(p) for p in parts)
+
+
 def or_sql(terms: list[str]) -> str:
     """Balanced OR of SQL predicate texts.  Log-depth parentheses keep the
     parsed tree shallow for any term count: a left-deep chain of a few
@@ -282,7 +305,7 @@ def _with_phash_coords(
     to derive from) passes through unchanged."""
     if lon_col in df.columns or not phash_col:
         return df
-    p = sql_ident(phash_col)
+    p = _col_ref(phash_col)
     return df.withColumns(
         {lon_col: F.expr(lon_from_phash(p)), lat_col: F.expr(lat_from_phash(p))}
     )

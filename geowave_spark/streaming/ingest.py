@@ -180,8 +180,8 @@ def streaming_tile_counts(
     return (
         stream.withWatermark(ts_col, watermark)
         .withColumns({
-            "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells.sql_ident(lon_col), level)),
-            "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells.sql_ident(lat_col), level)),
+            "tile_x": F.expr(sqlcells.tile_x_expr(sqlcells._col_ref(lon_col), level)),
+            "tile_y": F.expr(sqlcells.tile_y_expr(sqlcells._col_ref(lat_col), level)),
         })
         .groupBy(F.window(F.col(ts_col), window), "tile_x", "tile_y")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -110,6 +110,42 @@ def test_box_ending_at_the_seam_meets_points_at_lon_180_on_every_path(spark):
         assert sorted(map(tuple, got.collect())) == want
 
 
+def test_numeric_ids_read_as_string_ids_on_the_broadcast_paths(spark):
+    """A polygon side keyed by a BIGINT id (a SQL table's first column, say)
+    joins on every driver-built broadcast side — the box cells, the
+    general-polygon cells and WKTs, the extent join's cover and
+    geometry_join's cells and WKTs — and the id comes back as its string."""
+    from geowave_spark.operators.spatial_join import geometry_join, tiered_extent_join
+
+    pts = spark.createDataFrame(
+        [("p", 5.0, 5.0), ("q", 25.0, 2.0), ("r", 60.0, 60.0)],
+        "image_id string, lon double, lat double",
+    )
+    rows = [(1, "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0))"),
+            (2, "POLYGON ((20 0, 30 0, 25 10, 20 0))")]
+    polys = spark.createDataFrame(rows, "polygon_id long, wkt string")
+    got = sj.tiered_spatial_join(pts, polys, broadcast_polygons=True)
+    assert dict(got.dtypes)["polygon_id"] == "string"
+    assert sorted(map(tuple, got.collect())) == [("p", "1"), ("q", "2")]
+
+    ext = spark.createDataFrame(
+        [("a", 1.0, 1.0, 2.0, 2.0), ("b", 24.0, 1.0, 26.0, 3.0), ("c", 50.0, 50.0, 51.0, 51.0)],
+        "extent_id string, x0 double, y0 double, x1 double, y1 double",
+    )
+    got = tiered_extent_join(ext, polys)
+    assert sorted(map(tuple, got.collect())) == [("a", "1"), ("b", "2")]
+
+    left = spark.createDataFrame(
+        [("a", "POLYGON ((1 1, 2 1, 2 2, 1 2, 1 1))"),
+         ("b", "POLYGON ((24 1, 26 1, 26 3, 24 3, 24 1))")],
+        "left_id string, wkt string",
+    )
+    right = polys.withColumnRenamed("polygon_id", "right_id")
+    for left_is_box in (False, True):
+        got = geometry_join(left, right, left_is_box=left_is_box)
+        assert sorted(map(tuple, got.collect())) == [("a", "1"), ("b", "2")]
+
+
 def test_loose_mode_is_cover_superset(spark, tables):
     """loose=True (IndexOnlySpatialQuery semantics) returns every exact
     match plus only cover-level false positives."""

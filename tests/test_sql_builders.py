@@ -135,6 +135,21 @@ def test_tile_coords_match_numpy_twin(spark):
     assert got == sorted(want)
 
 
+def test_struct_field_column_names_resolve_as_fields(spark):
+    """A dotted bbox column name names a struct field, as ``F.col`` reads
+    it, and a backticked one a top-level column whose name holds a dot."""
+    ext = _extents(np.random.default_rng(17), 40)
+    flat = spark.createDataFrame(ext, "left_id long, x0 double, y0 double, x1 double, y1 double")
+    nested = flat.selectExpr("left_id", "struct(x0, y0, x1, y1) AS bb")
+    dotted = flat.toDF("left_id", "b.x0", "b.y0", "b.x1", "b.y1")
+    right = flat.withColumnRenamed("left_id", "right_id")
+    want = sorted(map(tuple, sj.tiered_extent_join_shuffle(flat, right).collect()))
+    for df, names in ((nested, ("bb.x0", "bb.y0", "bb.x1", "bb.y1")),
+                      (dotted, ("`b.x0`", "`b.y0`", "`b.x1`", "`b.y1`"))):
+        got = sj.tiered_extent_join_shuffle(df, right, lcols=names)
+        assert sorted(map(tuple, got.collect())) == want
+
+
 # --- build cost ----------------------------------------------------------------
 
 
@@ -180,7 +195,7 @@ def _join_inputs(spark):
 
 # Built from Column trees, one py4j command (or several) per operator,
 # these plans cost about 5,600 commands for the extent join, 2,700 for the
-# shuffle point join and 800 for the broadcast one; as SQL text about 450,
+# shuffle point join and 800 for the broadcast one; as SQL text about 510,
 # 580 and 330.  The bounds leave room for the Spark jobs the builds run
 # (polygon collect, localCheckpoint, tier aggregate), whose command counts
 # vary with the session.

@@ -175,12 +175,11 @@ class GeometryFrame:
         right_wkt: str = "wkt",
         broadcast: bool | None = None,
     ) -> DataFrame:
-        """Geometry × geometry join; build side picked by the shared
-        row-count + WKT-byte probe unless forced."""
+        """Geometry × geometry join; the build side is picked inside
+        ``geometry_join`` (the shared row-count + WKT-byte probe) unless
+        ``broadcast=False`` forces the shuffle join."""
         pred = predicate or ("dwithin" if radius else "intersects")
-        if broadcast is None:
-            broadcast = spatial_join.probe_broadcastable(right, right_wkt)
-        if broadcast:
+        if broadcast is not False:
             return spatial_join.geometry_join(
                 self.df, right, predicate=pred, radius=radius,
                 left_id=self.id_col, right_id=right_id,

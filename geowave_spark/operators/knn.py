@@ -330,10 +330,9 @@ def knn_geometry(
     )
     pts = points.select(point_id, p_lon, p_lat)
     # the query side only SHRINKS across rounds, so one probe decides the
-    # plan for the whole loop: broadcast rounds carry (lon, lat) through
-    # the join (no second scan of the point table per round — round-3
-    # review); an oversized query side falls back to the id re-join
-    carry = probe_broadcastable(remaining, "wkt")
+    # join path for the whole loop; either path carries (lon, lat) through
+    # the join, so no round scans the point table a second time
+    broadcast = probe_broadcastable(remaining, "wkt")
     results = None
     d = float(init_distance)
     while True:
@@ -341,17 +340,11 @@ def knn_geometry(
         # own exact-distance refine — the kernel below computes the exact
         # distance once and applies the <= d gate itself (the non-loose
         # join would run the same Arrow kernel a second time per round)
-        if carry:
-            pairs = tiered_spatial_join(
-                pts, remaining, predicate="dwithin", radius=d,
-                point_id=point_id, lon_col=p_lon, lat_col=p_lat, loose=True,
-                broadcast_polygons=True, carry_cols=(p_lon, p_lat),
-            )
-        else:
-            pairs = tiered_spatial_join(
-                pts, remaining, predicate="dwithin", radius=d,
-                point_id=point_id, lon_col=p_lon, lat_col=p_lat, loose=True,
-            ).join(pts, point_id)
+        pairs = tiered_spatial_join(
+            pts, remaining, predicate="dwithin", radius=d,
+            point_id=point_id, lon_col=p_lon, lat_col=p_lat, loose=True,
+            broadcast_polygons=broadcast, carry_cols=(p_lon, p_lat),
+        )
         cand = (
             pairs.join(F.broadcast(remaining), "polygon_id")
             .withColumn(

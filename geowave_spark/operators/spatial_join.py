@@ -16,17 +16,21 @@ we collapse the whole thing into ONE Catalyst plan:
     dropDuplicates per (point, polygon) only when a seam split can emit a
     pair twice                               (DedupeFilter semantics)
 
-Every tiered join takes the same five decisions through one helper each:
+Every tiered join takes the same decisions through one helper each:
+* placement — `probe_broadcastable`, inside the join unless the caller
+  forces a path; callers do not probe;
 * extent keying — `_extent_multitier_keys`: span-based own tier plus every
   coarser partner tier, cover re-derived per tier (SQL text);
-* seam split — `_seam_split`: envelopes crossing +180 become two in-range
-  images (none under custom ``bounds``);
-* tier discovery — `_tier_pass`: one localCheckpoint and one aggregate
+* envelopes — `_envelopes`: envelopes crossing +180 become two in-range
+  images (not under custom ``bounds``, nor for extents);
+* tier discovery — `_shuffle_side`: one localCheckpoint and one aggregate
   per side for the tier set and the split flag;
 * driver cover — `_cover_rows`: the broadcast side's cells, one WKT parse
   per geometry, with coarser-tier truncations when asked;
 * candidate filter — `_candidate_filter`: meet tier, envelope overlap,
   containment-necessary envelopes and the PBSM reference point.
+The shuffle joins share only `_shuffle_side` (envelopes + tier discovery)
+and `_extent_pairs` (keying, key join, candidate filter).
 
 Every derived column is ONE SQL-text expression (``F.expr``) over the
 sqlcells formulas, and each run of derived columns one projection: a
@@ -126,12 +130,16 @@ def add_point_cols(
 
 def _point_keys(pts: DataFrame, tiers: list[int], *cols) -> DataFrame:
     """``cols`` plus ``key``: one row per polygon tier, keyed by the packed
-    key of the point's cell (``_cell31``) at that tier."""
+    key of the point's cell (``_cell31``) at that tier; a struct-field
+    name (``"p.lon"``) keeps its top-level column, which the refines read."""
     keys = ", ".join(
         f"{int(cells.TIER_OFFSETS[t])}L + {sqlcells.cell_at_tier_expr('`_cell31`', t)}"
         for t in sorted(tiers)
     )
-    return pts.select(*cols, F.expr(f"explode(array({keys})) AS key"))
+    roots = [
+        sqlcells.sql_ident(sqlcells._col_parts(c)[0]) if isinstance(c, str) else c for c in cols
+    ]
+    return pts.select(*roots, F.expr(f"explode(array({keys})) AS key"))
 
 
 def polygon_cover_local(
@@ -282,7 +290,7 @@ def tiered_spatial_join(
     ``carry_cols``: extra POINT-side columns to keep on the output rows
     (e.g. an event-time column for a downstream windowed aggregation on an
     unbounded stream, where a join-back by id would be a stream-stream
-    self-join).  Broadcast path only.
+    self-join), on either path; ``broadcast_polygons`` forces a path.
     """
     if predicate not in ("intersects", "dwithin"):
         raise ValueError(f"unknown predicate {predicate!r}")
@@ -299,11 +307,10 @@ def tiered_spatial_join(
             point_id, polygon_id, wkt_col, max_cells, loose, carry_cols,
             bounds=bounds,
         )
-    if carry_cols:
-        raise ValueError("carry_cols is only supported on the broadcast path")
     return _shuffle_join(
         pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-        point_id, polygon_id, wkt_col, max_cells, loose, salt, bounds=bounds,
+        point_id, polygon_id, wkt_col, max_cells, loose, salt, carry_cols,
+        bounds=bounds,
     )
 
 
@@ -400,7 +407,8 @@ def _broadcast_join(
 
 def _shuffle_join(
     pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-    point_id, polygon_id, wkt_col, max_cells, loose, salt, bounds=None,
+    point_id, polygon_id, wkt_col, max_cells, loose, salt, carry_cols=(),
+    bounds=None,
 ) -> DataFrame:
     """Large polygon side: one Arrow bbox UDF + pure-SQL span-based
     tiering (<= 4 covering cells per polygon, the reference's
@@ -418,18 +426,16 @@ def _shuffle_join(
     TieredSpatialJoin.java:173-207).  Building the plan runs one
     localCheckpoint and one aggregate.
     """
-    pb, bbox = _with_bbox(polygons, polygon_id, wkt_col)
-    pc, tiers, any_split = _tier_pass(
-        _seam_split(pb, bbox, "_r", pad=buffer, bounds=bounds, keep=(polygon_id, wkt_col)),
-        "_r", bounds,
+    pc, tiers, any_split = _shuffle_side(
+        polygons, polygon_id, "_r", wkt_col=wkt_col, pad=buffer, keep=(wkt_col,), bounds=bounds
     )
     if not tiers:
-        return _empty_pairs(pts, point_id, polygons, polygon_id)
+        return _empty_pairs(pts, point_id, polygons, polygon_id, carry_cols)
     poly_cells = _extent_multitier_keys(
         pc, polygon_id, "_r", [], extra_cols=(wkt_col,), bounds=bounds
     ).select(polygon_id, wkt_col, "key")
 
-    pt_keys = _point_keys(pts, tiers, point_id, lon_col, lat_col, "_cell31")
+    pt_keys = _point_keys(pts, tiers, point_id, lon_col, lat_col, "_cell31", *carry_cols)
     # force a sort-merge join: BOTH sides are big by contract here (the
     # build-side probe already routed broadcastable polygon sets to
     # _broadcast_join), but Catalyst's size estimate of the un-exploded
@@ -449,7 +455,7 @@ def _shuffle_join(
 
     if not loose:
         joined = _refine_general(joined, predicate, radius, lon_col, lat_col, wkt_col, bounds)
-    out = joined.select(point_id, polygon_id)
+    out = joined.select(point_id, polygon_id, *carry_cols)
     # points meet each polygon at most once (one cell per tier) — dedupe is
     # only needed when a wrapped polygon was split into two images whose
     # covers can share a cell
@@ -497,13 +503,12 @@ def tiered_extent_join(
     spark = extents.sparkSession
     if not probe_broadcastable(polygons, wkt_col):
         # build-side guard (same as geometry_join's): never materialize an
-        # unbounded polygon side on the driver — derive its bboxes and
-        # route to the BIG×BIG shuffle twin, whose output contract
-        # (bbox-intersect pairs, same id columns) matches this join's
-        pb, _ = _with_bbox(polygons, polygon_id, wkt_col)
-        return tiered_extent_join_shuffle(
-            extents, pb, left_id=extent_id, right_id=polygon_id,
-            lcols=(x0, y0, x1, y1), rcols=tuple(f"_bb.{n}" for n in _BOX),
+        # unbounded polygon side on the driver — both sides shuffle as in
+        # tiered_extent_join_shuffle (bbox-intersect pairs, same id columns)
+        return _extent_pairs(
+            _shuffle_side(extents, extent_id, "_l", bbox_cols=(x0, y0, x1, y1), seam=False),
+            _shuffle_side(polygons, polygon_id, "_r", wkt_col=wkt_col, seam=False),
+            extent_id, polygon_id,
         )
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
     # polygon side: full bbox cover (untrimmed — the reference point below
@@ -521,7 +526,8 @@ def tiered_extent_join(
     # polygon tier ((id, key) rows unique by construction); the candidate
     # filter emits each pair exactly once — no pair-level dropDuplicates
     lk = _extent_multitier_keys(
-        _prefixed(extents, extent_id, (x0, y0, x1, y1), "_l"), extent_id, "_l", poly_tiers
+        _envelopes(extents, extent_id, "_l", bbox_cols=(x0, y0, x1, y1), seam=False),
+        extent_id, "_l", poly_tiers,
     )
     return _candidate_filter(lk.join(right, "key")).select(extent_id, polygon_id)
 
@@ -548,33 +554,21 @@ def _string_table(pairs, names: tuple[str, str]) -> pa.Table:
     return pa.table([_strings(c) for c in cols], names=list(names))
 
 
-def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str) -> DataFrame:
-    """The empty (left_id, right_id) result, typed like a real one."""
-    return left.select(left_id).limit(0).crossJoin(right.select(right_id).limit(0))
+def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str, carry=()):
+    """The empty (left_id, right_id, *carry left columns) result, typed like a real one."""
+    out = left.select(left_id, *carry).limit(0).crossJoin(right.select(right_id).limit(0))
+    return out.select(left_id, right_id, *carry)
 
 
-def _prefixed(df: DataFrame, id_col: str, bbox_cols, p: str) -> DataFrame:
-    """(id, {p}x0, {p}y0, {p}x1, {p}y1) from the caller's bbox columns."""
-    return df.select(
-        id_col, *[F.expr(f"{sqlcells._col_ref(c)} AS `{p}{n}`") for c, n in zip(bbox_cols, _BOX)]
-    )
-
-
-def _with_bbox(df: DataFrame, id_col: str, wkt_col: str, bbox_cols=None):
-    """(frame, [x0, y0, x1, y1] as SQL text): the caller's envelope columns
-    when given, else one Arrow st_bbox pass over the WKT."""
-    if bbox_cols is not None:
-        return df, [sqlcells._col_ref(c) for c in bbox_cols]
-    df = df.select(id_col, wkt_col).withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
-    return df, [f"`_bb`.`{n}`" for n in _BOX]
-
-
-def _seam_split(
-    df: DataFrame, bbox, p: str, pad: float = 0.0, bounds=None, keep=(),
+def _envelopes(
+    df: DataFrame, id_col: str, p: str, *, wkt_col: str | None = None, bbox_cols=None,
+    pad: float = 0.0, bounds=None, keep=(), seam: bool = True,
 ) -> DataFrame:
-    """Envelopes (``bbox`` SQL texts, padded by ``pad``) → in-range images
-    {p}x0..{p}y1, one row per image, numbered by ``_seg``; ``keep`` names
-    the columns carried along.
+    """(id_col, *keep, _seg, {p}x0..{p}y1): the envelopes — the caller's
+    ``bbox_cols``, else one Arrow st_bbox pass over ``wkt_col`` — padded
+    by ``pad``, one row per in-range image, numbered by ``_seg``.
+    ``seam=False`` (extents) projects each envelope as it is, unpadded:
+    one row, no ``_seg``.
 
     LongitudeDefinition wrap semantics: an envelope reaching +180 splits
     into [x0, 180] (_seg 0) and [-180, x1 - 360] (_seg 1), so its cover
@@ -587,7 +581,13 @@ def _seam_split(
     world image.  Custom ``bounds`` (a projected frame) have no seam: one
     unclamped row each.
     """
-    d = sqlcells._dbl
+    if bbox_cols is None:
+        df = df.select(id_col, wkt_col).withColumn("_bb", geo_udfs.st_bbox(F.col(wkt_col)))
+        bbox_cols = [f"_bb.{n}" for n in _BOX]
+    bbox = [sqlcells._col_ref(c) for c in bbox_cols]
+    keep, d = (id_col, *keep), sqlcells._dbl
+    if not seam:
+        return df.select(*keep, *(F.expr(f"{c} AS `{p}{n}`") for c, n in zip(bbox, _BOX)))
     x0, y0 = (f"({c} - {d(pad)})" for c in bbox[:2])
     x1, y1 = (f"({c} + {d(pad)})" for c in bbox[2:])
     if bounds is not None:
@@ -602,20 +602,39 @@ def _seam_split(
     return df.select(*keep, *(F.expr(f"{e} AS `{name}`") for e, name in exprs))
 
 
-def _tier_pass(df: DataFrame, p: str, bounds=None) -> tuple[DataFrame, list[int], bool]:
-    """Tag each envelope {p}x0..{p}y1 with its own tier {p}te, materialize
-    the side once (localCheckpoint: MEMORY_AND_DISK, ContextCleaner-
-    reclaimed) so the bbox UDF runs once, and read back in ONE aggregate
-    its distinct tiers (<= 32 rows after map-side partial aggregation) and
-    whether any envelope was seam-split (``_seg`` > 0).
+def _shuffle_side(
+    df: DataFrame, id_col: str, p: str, *, wkt_col: str | None = None, bbox_cols=None,
+    pad: float = 0.0, seam: bool = True, keep=(), bounds=None,
+) -> tuple[DataFrame, list[int], bool]:
+    """One side of a shuffle join: its `_envelopes`, each tagged with its
+    own tier {p}te.  The side is materialized once (localCheckpoint:
+    MEMORY_AND_DISK, ContextCleaner-reclaimed) so the bbox UDF runs once,
+    and ONE aggregate reads back its distinct tiers (<= 32 rows after
+    map-side partial aggregation) and whether any envelope was seam-split
+    (``_seg`` > 0).
 
     Returns (materialized side, sorted tiers, any split)."""
-    df = df.withColumn(f"{p}te", F.expr(_extent_tier_expr(p, bounds))).localCheckpoint()
+    df = _envelopes(
+        df, id_col, p, wkt_col=wkt_col, bbox_cols=bbox_cols, pad=pad, bounds=bounds,
+        keep=keep, seam=seam,
+    ).withColumn(f"{p}te", F.expr(_extent_tier_expr(p, bounds))).localCheckpoint()
     aggs = [f"collect_set(`{p}te`)"]
-    if "_seg" in df.columns:
+    if seam:
         aggs.append("max(`_seg`)")
     row = df.selectExpr(*aggs).first()
-    return df, sorted(row[0] or []), len(row) > 1 and bool(row[1])
+    return df, sorted(row[0] or []), seam and bool(row[1])
+
+
+def _extent_pairs(lhs, rhs, left_id: str, right_id: str, predicate="intersects") -> DataFrame:
+    """Candidate (left_id, right_id) pairs of two `_shuffle_side` results
+    (prefixes _l, _r): each side keyed at its own tier plus the partner's
+    coarser tiers, met on the packed key, kept by `_candidate_filter`."""
+    (lc, l_tiers, _), (rc, r_tiers, _) = lhs, rhs
+    if not l_tiers or not r_tiers:
+        return _empty_pairs(lc, left_id, rc, right_id)
+    lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
+    rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
+    return _candidate_filter(lk.join(rk, "key"), predicate).select(left_id, right_id)
 
 
 def _extent_tier_expr(p: str, bounds=None) -> str:
@@ -791,13 +810,11 @@ def tiered_extent_join_shuffle(
     dropDuplicates (the reference pays a DedupeFilter + distinct here;
     at 10^8+ output pairs that distinct is the dominant shuffle).
     """
-    lc, l_tiers, _ = _tier_pass(_prefixed(left, left_id, lcols, "_l"), "_l")
-    rc, r_tiers, _ = _tier_pass(_prefixed(right, right_id, rcols, "_r"), "_r")
-    if not l_tiers or not r_tiers:
-        return _empty_pairs(left, left_id, right, right_id)
-    lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
-    rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
-    return _candidate_filter(lk.join(rk, "key")).select(left_id, right_id)
+    return _extent_pairs(
+        _shuffle_side(left, left_id, "_l", bbox_cols=lcols, seam=False),
+        _shuffle_side(right, right_id, "_r", bbox_cols=rcols, seam=False),
+        left_id, right_id,
+    )
 
 
 def semi_join_matches(points: DataFrame, pairs: DataFrame, point_id: str = "image_id") -> DataFrame:
@@ -934,10 +951,9 @@ def geometry_join(
     }))
     right_wkts = _local(spark, _string_table(rows, ("_rid", "_rwkt")))
 
-    lb, bbox = _with_bbox(left, left_id, left_wkt, left_bbox_cols)
-    lb = lb.select(
-        left_id, F.col(left_wkt).alias("_lwkt"),
-        *[F.expr(f"{c} AS `_l{n}`") for c, n in zip(bbox, _BOX)],
+    lb = _envelopes(
+        left, left_id, "_l", wkt_col=left_wkt, bbox_cols=left_bbox_cols,
+        keep=(F.col(left_wkt).alias("_lwkt"),), seam=False,
     )
     lk = _extent_multitier_keys(lb, left_id, "_l", r_tiers, extra_cols=("_lwkt",))
     # the meet-tier rule cuts the cross-tier duplicate candidates BEFORE
@@ -1016,7 +1032,7 @@ def geometry_join_shuffle(
 
     Unwrapped antimeridian WKTs (x1 > 180, the LongitudeDefinition
     convention) are handled like the broadcast path: the envelope is SPLIT
-    into its [-180,180] images (`_seam_split`) so the cell cover reaches
+    into its [-180,180] images (`_envelopes`) so the cell cover reaches
     both sides of the wrap; exactness then comes from the pairwise refine,
     which also evaluates the -360-shifted image.  The containment-family
     envelope conditions are tested on the images: a pair related by a
@@ -1026,18 +1042,15 @@ def geometry_join_shuffle(
         raise ValueError(f"unknown predicate {predicate!r}")
     buffer = radius if predicate == "dwithin" else 0.0
 
-    def side(df, id_col, wkt_col, p, pad, bbox_cols=None):
-        df, bbox = _with_bbox(df, id_col, wkt_col, bbox_cols)
-        keep = (id_col, F.col(wkt_col).alias(f"{p}wkt"))
-        return _tier_pass(_seam_split(df, bbox, p, pad=pad, keep=keep), p)
-
-    lc, l_tiers, l_split = side(left, left_id, left_wkt, "_l", buffer, left_bbox_cols)
-    rc, r_tiers, r_split = side(right, right_id, right_wkt, "_r", 0.0)
-    if not l_tiers or not r_tiers:
-        return _empty_pairs(left, left_id, right, right_id)
-    lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
-    rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
-    pairs = _candidate_filter(lk.join(rk, "key"), predicate).select(left_id, right_id)
+    lhs = _shuffle_side(
+        left, left_id, "_l", wkt_col=left_wkt, bbox_cols=left_bbox_cols, pad=buffer,
+        keep=(F.col(left_wkt).alias("_lwkt"),),
+    )
+    rhs = _shuffle_side(
+        right, right_id, "_r", wkt_col=right_wkt, keep=(F.col(right_wkt).alias("_rwkt"),)
+    )
+    (lc, _, l_split), (rc, _, r_split) = lhs, rhs
+    pairs = _extent_pairs(lhs, rhs, left_id, right_id, predicate)
     if l_split or r_split:
         # two images of one geometry can each pass the reference point
         pairs = pairs.dropDuplicates([left_id, right_id])

@@ -141,35 +141,24 @@ def st_join(
     lat_col: str = "lat",
 ) -> DataFrame:
     """Spatio-temporal join: spatial tiered join + per-pair time-window
-    refine.  The polygon side carries (t0_us, t1_us); the time test rides
-    the same broadcast join (zero extra shuffle) by joining the pair output
-    back to the windows.
+    refine.  The polygon side carries (t0_us, t1_us); the event time rides
+    THROUGH the join as a carried point column (either join path: no
+    second scan of points, no point_id shuffle) and is tested against the
+    windows joined back by polygon id.
 
     Semantics: pairs where the point is inside the polygon AND
     t0_us <= ts < t1_us — the reference's SpatialTemporalQuery shape
     (spatial constraint × temporal constraint range).
     """
-    from .spatial_join import probe_broadcastable, tiered_spatial_join
+    from .spatial_join import tiered_spatial_join
 
-    polys = polygons_with_time.select(polygon_id, "wkt")
     windows = polygons_with_time.select(polygon_id, "t0_us", "t1_us")
-    if probe_broadcastable(polys, "wkt"):
-        # the event time rides THROUGH the broadcast join as a carried
-        # point column — no second scan of points, no point_id shuffle
-        pairs = tiered_spatial_join(
-            points.withColumn("_ts_us", epoch_us_expr(ts_col)), polys,
-            point_id=point_id, polygon_id=polygon_id,
-            lon_col=lon_col, lat_col=lat_col,
-            broadcast_polygons=True, carry_cols=("_ts_us",),
-        )
-    else:
-        # shuffle path can't carry columns — join the time back by id
-        pairs = tiered_spatial_join(
-            points, polys,
-            point_id=point_id, polygon_id=polygon_id,
-            lon_col=lon_col, lat_col=lat_col,
-            broadcast_polygons=False,
-        ).join(points.select(point_id, epoch_us_expr(ts_col).alias("_ts_us")), point_id)
+    pairs = tiered_spatial_join(
+        points.withColumn("_ts_us", epoch_us_expr(ts_col)),
+        polygons_with_time.select(polygon_id, "wkt"),
+        point_id=point_id, polygon_id=polygon_id,
+        lon_col=lon_col, lat_col=lat_col, carry_cols=("_ts_us",),
+    )
     return (
         pairs.join(F.broadcast(windows), polygon_id)
         .filter((F.col("_ts_us") >= F.col("t0_us")) & (F.col("_ts_us") < F.col("t1_us")))

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .cells import MAX_TIER, TIER_OFFSETS
 
@@ -159,8 +160,8 @@ def add_cell_column(
     projections in all.  Bit-identical to ``cell_expr`` /
     ``cells.latlon_to_cell``.
     """
-    nx = norm_lon(sql_ident(lon_col), bounds)
-    ny = norm_lat(sql_ident(lat_col), bounds)
+    nx = norm_lon(_col_ref(lon_col), bounds)
+    ny = norm_lat(_col_ref(lat_col), bounds)
     # temp names carry the output name so the helper is re-entrant and can
     # never clobber a caller's column that happens to be called _gx etc.
     px, py = f"_{out}_px", f"_{out}_py"
@@ -231,11 +232,11 @@ def sql_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _col_ref(name: str) -> str:
-    """A caller's column name as SQL text, read the way ``F.col`` reads it:
-    dots outside backticks separate struct-field parts (``"bb.x0"`` is
-    field x0 of struct bb) and backticks quote a part, ```` `` ```` inside
-    them a literal backtick."""
+def _col_parts(name: str) -> list[str]:
+    """A caller's column name split the way ``F.col`` reads it: dots
+    outside backticks separate struct-field parts (``"bb.x0"`` is field x0
+    of struct bb) and backticks quote a part, ```` `` ```` inside them a
+    literal backtick."""
     parts, cur, quoted, i = [], [], False, 0
     while i < len(name):
         ch = name[i]
@@ -251,7 +252,24 @@ def _col_ref(name: str) -> str:
             cur.append(ch)
         i += 1
     parts.append("".join(cur))
-    return ".".join(sql_ident(p) for p in parts)
+    return parts
+
+
+def _col_ref(name: str) -> str:
+    """A caller's column name as SQL text, read the way ``F.col`` reads it
+    (see :func:`_col_parts`)."""
+    return ".".join(sql_ident(p) for p in _col_parts(name))
+
+
+def _has_col(df, name: str) -> bool:
+    """Whether ``name`` resolves in ``df``, read the way ``F.col`` reads it
+    (a dotted name through struct fields) — from the schema alone, no job."""
+    dtype = df.schema
+    for part in _col_parts(name):
+        if not isinstance(dtype, StructType) or part not in dtype.fieldNames():
+            return False
+        dtype = dtype[part].dataType
+    return True
 
 
 def or_sql(terms: list[str]) -> str:
@@ -303,7 +321,7 @@ def _with_phash_coords(
     absent — the one place the point layouts and joins fill in image
     coordinates; a frame that already has ``lon_col`` (or no phash column
     to derive from) passes through unchanged."""
-    if lon_col in df.columns or not phash_col:
+    if _has_col(df, lon_col) or not phash_col:
         return df
     p = _col_ref(phash_col)
     return df.withColumns(

@@ -195,6 +195,23 @@ def streaming_tile_counts(
     )
 
 
+def _require_broadcastable(op: str, build: DataFrame, wkt_col: str, batch_twin: str) -> None:
+    """The streaming joins' one build-side guard: pin the broadcast path.
+    Auto-routing would send an oversized build side into the shuffle join,
+    whose batch-only operations (merge-hint sort-merge join,
+    dropDuplicates, limit, localCheckpoint) raise on a streaming frame at
+    query start — fail here with the real reason instead."""
+    from ..operators import spatial_join
+
+    if not spatial_join.probe_broadcastable(build, wkt_col):
+        raise ValueError(
+            f"{op}: build side too large to broadcast (probe_broadcastable "
+            "failed) — the streaming join supports the broadcast build only; "
+            f"pre-filter it or run the batch {batch_twin} on micro-batches "
+            "via foreachBatch"
+        )
+
+
 def streaming_spatial_join(
     stream: DataFrame,
     polygons: DataFrame,
@@ -225,17 +242,7 @@ def streaming_spatial_join(
         raise ValueError("stream side must be a streaming DataFrame")
     if polygons.isStreaming:
         raise ValueError("polygon side must be a batch DataFrame (broadcast build)")
-    # pin the broadcast path: auto-routing would send an oversized polygon
-    # side into _shuffle_join, whose batch-only operations (merge-hint
-    # sort-merge join, dropDuplicates, limit) raise AnalysisException on a
-    # streaming frame at query start — fail here with the real reason
-    if not spatial_join.probe_broadcastable(polygons, wkt_col):
-        raise ValueError(
-            "streaming_spatial_join: polygon side too large to broadcast "
-            "(probe_broadcastable failed) — the streaming join supports the "
-            "broadcast build only; pre-filter the polygon set or run the "
-            "batch tiered_spatial_join on micro-batches via foreachBatch"
-        )
+    _require_broadcastable("streaming_spatial_join", polygons, wkt_col, "tiered_spatial_join")
     return spatial_join.tiered_spatial_join(
         stream, polygons, predicate=predicate, radius=radius,
         lon_col=lon_col, lat_col=lat_col, point_id=point_id,
@@ -276,13 +283,7 @@ def streaming_geometry_join(
         raise ValueError("stream side must be a streaming DataFrame")
     if right.isStreaming:
         raise ValueError("right side must be a batch DataFrame (broadcast build)")
-    if not spatial_join.probe_broadcastable(right, right_wkt):
-        raise ValueError(
-            "streaming_geometry_join: right side too large to broadcast "
-            "(probe_broadcastable failed) — pre-filter the geometry set or "
-            "run the batch geometry_join_shuffle on micro-batches via "
-            "foreachBatch"
-        )
+    _require_broadcastable("streaming_geometry_join", right, right_wkt, "geometry_join_shuffle")
     if right.limit(1).count() == 0:
         raise ValueError(
             "streaming_geometry_join: empty right side (the batch empty-"
@@ -316,11 +317,7 @@ def streaming_zone_counts(
     from ..operators import spatial_join
 
     stream = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    if not spatial_join.probe_broadcastable(polygons, wkt_col):
-        raise ValueError(
-            "streaming_zone_counts: polygon side too large to broadcast — "
-            "the streaming join supports the broadcast build only"
-        )
+    _require_broadcastable("streaming_zone_counts", polygons, wkt_col, "tiered_spatial_join")
     # the event time rides THROUGH the join as a carried point column — a
     # join-back by id would be a stream-stream self-join (illegal without
     # artificial time bounds); carry_cols keeps the plan one stateless map

@@ -10,10 +10,11 @@ primitives:
 2. core points: neighbor count >= min_pts (the point itself included,
    standard DBSCAN);
 3. clusters: connected components over the core-core neighbor graph by
-   iterative min-label propagation (each round: label = min(label over
-   core neighbors ∪ self); converges in O(graph diameter) rounds, each a
-   shuffle join — the Spark analog of the reference's merge iterations),
-   with per-round localCheckpoint to cut lineage;
+   ``dedup.label_components``, the engine's one min-label propagation
+   (each round: label = min(label over core neighbors ∪ self); converges
+   in O(graph diameter) rounds, each a shuffle join — the Spark analog of
+   the reference's merge iterations); a component deeper than
+   ``max_iter`` hops raises RuntimeError;
 4. border points: non-core points adopt the smallest cluster label among
    their core neighbors; noise keeps label NULL.
 
@@ -25,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .dedup import label_components
 from .knn import distance_candidates
 
 
@@ -79,37 +81,15 @@ def dbscan(
         .localCheckpoint()
     )
 
-    labels = core.withColumn("label", F.col("id"))
-    changed = 0
-    for _ in range(max_iter):
-        prop = (
-            cc.join(labels.withColumnRenamed("id", "id_b").withColumnRenamed("label", "_nl"), "id_b")
-            .groupBy("id_a")
-            .agg(F.min("_nl").alias("_minl"))
-            .withColumnRenamed("id_a", "id")
-        )
-        new_labels = (
-            labels.join(prop, "id", "left")
-            .select("id", F.least(F.col("label"), F.coalesce(F.col("_minl"), F.col("label"))).alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"dbscan: label propagation did not converge in {max_iter} rounds "
-            "(component hop-diameter exceeds max_iter); raise max_iter"
-        )
-
-    core_labels = labels.withColumnRenamed("label", "cluster")
+    labels = label_components(
+        core.select(F.col("id").alias("doc_id")),
+        # one orientation per edge: label_components adds the reverse
+        cc.filter(F.col("id_a") < F.col("id_b")).select(
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+        ),
+        max_iter,
+    )
+    core_labels = labels.select(F.col("doc_id").alias("id"), F.col("canonical_id").alias("cluster"))
     # the inner join with core_labels already restricts id_b to core ids
     # (labels is built from core) — no separate membership join needed
     border = (

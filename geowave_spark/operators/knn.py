@@ -23,6 +23,13 @@ JVM-side Column math, so neither side ever reaches the driver.  The point
 side is JVM Column arithmetic in both: Morton keys from bit ops, inside
 whole-stage codegen.  maxDistance + maxNeighbors semantics exactly as
 NNMapReduce.java:168-169,199.
+
+True k-nearest (no fixed radius) grows the radius round by round, and
+both of its callers run the same loop, ``_grow``: ``knn_adaptive``
+(point queries, one ``distance_candidates`` call per round) and
+``knn_geometry`` (geometry queries, one buffered-cover join per round).
+Each round ends in one Arrow read of the open queries' top-k rows, and
+completeness is decided on the driver.
 """
 
 from __future__ import annotations
@@ -236,6 +243,50 @@ def knn_join(
     )
 
 
+def _grow(
+    open_q: pa.Table, query_id, point_id, candidates, k, init_distance, max_distance
+) -> pa.Table:
+    """The one radius-growth loop under knn_adaptive and knn_geometry.
+
+    Per round, ``candidates(open_q, d)`` gives the (query_id, point_id,
+    dist) pairs within d of the still-open queries; their per-query top-k
+    rows come back in ONE ``toArrow()``.  A query is COMPLETE once it has
+    >= k neighbors with dist <= d (the candidate cover provably reaches
+    radius d, so no unseen point can be closer); completeness is decided
+    on the driver, so a round costs no checkpoint, count or anti-join job.
+    Otherwise d *= 4 and only the open queries rejoin (bounded by
+    O(log(max/init)) rounds); at the cap the leftovers' rows are emitted
+    as found.  Returns (query_id, point_id, dist, rank), rank <= k, ties
+    by point id."""
+    # every table that may reach createDataFrame is kept in one chunk:
+    # Spark's Arrow-table reader ends at an empty record batch that follows
+    # a non-empty one, silently dropping every later row (a round that
+    # completes no query, or a partition whose queries all completed,
+    # leaves such a batch)
+    open_q = open_q.combine_chunks()
+    w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
+    results = []
+    d = float(init_distance)
+    while True:
+        topk = (
+            candidates(open_q, d)
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(query_id, point_id, "dist", "rank")
+            .toArrow()
+        )
+        vc = pc.value_counts(topk[query_id])
+        done_ids = vc.field("values").filter(pc.greater_equal(vc.field("counts"), k))
+        done = pc.is_in(topk[query_id], value_set=done_ids)
+        # at the cap: emit whatever the final round found for leftovers too
+        results.append(topk if d >= max_distance else topk.filter(done))
+        open_q = open_q.filter(pc.invert(pc.is_in(open_q[query_id], value_set=done_ids)))
+        if d >= max_distance or open_q.num_rows == 0:
+            break
+        d = min(d * 4.0, float(max_distance))
+    return pa.concat_tables(results).combine_chunks()
+
+
 def knn_adaptive(
     points: DataFrame,
     queries: DataFrame,
@@ -252,51 +303,27 @@ def knn_adaptive(
     """True k-nearest (no fixed radius): iterative ring growth.
 
     The reference's NNProcessor semantics when maxNeighbors dominates:
-    per round, run the within-distance candidate join at radius d for the
-    still-unfilled queries; a query is COMPLETE once it has >= k neighbors
-    with dist <= d (the ring provably covers radius d, so no unseen point
-    can be closer); otherwise d *= 4 and only the unfilled queries rejoin
-    (bounded by O(log(max/init)) rounds).
-
-    The query side is read once (Arrow) and every round is planned on the
-    driver: one ``distance_candidates`` call on the open queries, then ONE
-    collect of their per-query top-k rows.  Completeness is decided on
-    the driver from those rows, so a round costs no checkpoint, count or
-    anti-join job, and the answer — at most k rows per query — returns as
-    a LocalRelation that no later action recomputes.  The point table is
-    re-scanned per round.
+    each :func:`_grow` round runs the within-distance candidate join at
+    radius d for the still-unfilled queries.  The query side is read once
+    (Arrow) and every round is one ``distance_candidates`` call on the
+    open queries, planned on the driver; the answer — at most k rows per
+    query — returns as a LocalRelation that no later action recomputes.
+    The point table is re-scanned per round.
 
     Output: (query_id, point_id, dist, rank) with rank <= k, ties by id.
     """
-    remaining = queries.select(query_id, q_lon, q_lat).toArrow()
-    w = Window.partitionBy(query_id).orderBy(F.col("dist").asc(), F.col(point_id).asc())
-    results = []
-    d = float(init_distance)
-    while True:
-        q = remaining.append_column(
-            "max_distance", pa.array(np.full(remaining.num_rows, d), pa.float64())
+    def candidates(open_q: pa.Table, d: float) -> DataFrame:
+        q = open_q.append_column(
+            "max_distance", pa.array(np.full(open_q.num_rows, d), pa.float64())
         )
-        cand = distance_candidates(
+        return distance_candidates(
             points, q, point_id, query_id, "max_distance", q_lon, q_lat, p_lon, p_lat
         )
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(query_id, point_id, "dist", "rank")
-            .toArrow()
-        )
-        vc = pc.value_counts(topk[query_id])
-        done_ids = vc.field("values").filter(pc.greater_equal(vc.field("counts"), k))
-        done = pc.is_in(topk[query_id], value_set=done_ids)
-        # at the cap: emit whatever the final round found for leftovers too
-        results.append(topk if d >= max_distance else topk.filter(done))
-        remaining = remaining.filter(
-            pc.invert(pc.is_in(remaining[query_id], value_set=done_ids))
-        )
-        if d >= max_distance or remaining.num_rows == 0:
-            break
-        d = min(d * 4.0, float(max_distance))
-    return points.sparkSession.createDataFrame(pa.concat_tables(results))
+
+    open_q = queries.select(query_id, q_lon, q_lat).toArrow()
+    return points.sparkSession.createDataFrame(
+        _grow(open_q, query_id, point_id, candidates, k, init_distance, max_distance)
+    )
 
 
 def knn_geometry(
@@ -314,28 +341,29 @@ def knn_geometry(
     """k nearest POINTS per query GEOMETRY (LINESTRING / POLYGON / MULTI*)
     — the reference's NN join runs over arbitrary SimpleFeatures with JTS
     planar distance (NNMapReduce.java:94-260), not just point pairs; this
-    is that generalization, with knn_adaptive's iterative radius growth.
+    is that generalization, on knn_adaptive's radius-growth loop
+    (:func:`_grow`).
 
-    Per round: buffered-cover dwithin join at radius d (candidates only),
-    exact geometry distance refine (st_distance_point, vectorized per
-    distinct query geometry), per-query top-k window; queries with >= k
-    neighbors inside d are provably complete (the buffered cover reaches
-    radius d), the rest re-join at 4d.  Output: (query_id, point_id,
+    Only the query ids reach the driver.  Per round: the open queries'
+    geometries (a semi-join to a LocalRelation of their ids), a
+    buffered-cover dwithin join at radius d (candidates only), then the
+    exact geometry distance (st_distance_point, vectorized per distinct
+    query geometry) and the <= d gate.  Output: (query_id, point_id,
     dist, rank), ties by point id.
     """
     from .spatial_join import probe_broadcastable, tiered_spatial_join
 
-    remaining = queries.select(
-        F.col(query_id).alias("polygon_id"), F.col(wkt_col).alias("wkt")
-    )
+    spark = points.sparkSession
+    geoms = queries.select(F.col(query_id).alias("polygon_id"), F.col(wkt_col).alias("wkt"))
     pts = points.select(point_id, p_lon, p_lat)
     # the query side only SHRINKS across rounds, so one probe decides the
     # join path for the whole loop; either path carries (lon, lat) through
     # the join, so no round scans the point table a second time
-    broadcast = probe_broadcastable(remaining, "wkt")
-    results = None
-    d = float(init_distance)
-    while True:
+    broadcast = probe_broadcastable(geoms, "wkt")
+
+    def candidates(open_q: pa.Table, d: float) -> DataFrame:
+        ids = spark.createDataFrame(open_q.rename_columns(["polygon_id"]))
+        remaining = geoms.join(F.broadcast(ids), "polygon_id", "left_semi")
         # loose=True: the join emits buffered-cover candidates WITHOUT its
         # own exact-distance refine — the kernel below computes the exact
         # distance once and applies the <= d gate itself (the non-loose
@@ -345,39 +373,19 @@ def knn_geometry(
             point_id=point_id, lon_col=p_lon, lat_col=p_lat, loose=True,
             broadcast_polygons=broadcast, carry_cols=(p_lon, p_lat),
         )
-        cand = (
+        return (
             pairs.join(F.broadcast(remaining), "polygon_id")
             .withColumn(
                 "dist", geo_udfs.st_distance_point(F.col("wkt"), F.col(p_lon), F.col(p_lat))
             )
             .filter(F.col("dist") <= F.lit(d))
+            .select(F.col("polygon_id").alias(query_id), point_id, "dist")
         )
-        w = Window.partitionBy("polygon_id").orderBy(
-            F.col("dist").asc(), F.col(point_id).asc()
-        )
-        # checkpointed for the same reason as knn_adaptive: the final
-        # action must not re-execute every round's join + Arrow refine
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .localCheckpoint()
-        )
-        counts = topk.groupBy("polygon_id").agg(F.count(F.lit(1)).alias("_n"))
-        done_qids = counts.filter(F.col("_n") >= k).select("polygon_id")
-        done = topk.join(done_qids, "polygon_id", "left_semi").select(
-            F.col("polygon_id").alias(query_id), F.col(point_id), "dist", "rank"
-        )
-        results = done if results is None else results.unionByName(done)
-        remaining = remaining.join(done_qids, "polygon_id", "left_anti").localCheckpoint()
-        if d >= max_distance or remaining.limit(1).count() == 0:
-            if d >= max_distance:
-                leftovers = topk.join(done_qids, "polygon_id", "left_anti").select(
-                    F.col("polygon_id").alias(query_id), F.col(point_id), "dist", "rank"
-                )
-                results = results.unionByName(leftovers)
-            break
-        d = min(d * 4.0, float(max_distance))
-    return results
+
+    open_q = queries.select(query_id).toArrow()
+    return spark.createDataFrame(
+        _grow(open_q, query_id, point_id, candidates, k, init_distance, max_distance)
+    )
 
 
 def knn_oracle_numpy(

@@ -915,20 +915,43 @@ def geometry_join(
 
     Output: (left_id, right_id) pairs.
     """
-    if predicate not in GEOMETRY_JOIN_PREDICATES:
-        raise ValueError(f"unknown predicate {predicate!r}")
-    buffer = radius if predicate == "dwithin" else 0.0
-    spark = left.sparkSession
     if not probe_broadcastable(right, right_wkt):
         # build-side guard: never materialize an unbounded right side on
         # the driver — route oversized builds to the keyed-shuffle twin
-        # (same output contract) instead of OOMing below
+        # (same output contract) instead of OOMing in the broadcast build
         return geometry_join_shuffle(
             left, right, predicate=predicate, radius=radius,
             left_id=left_id, right_id=right_id,
             left_wkt=left_wkt, right_wkt=right_wkt,
             left_bbox_cols=left_bbox_cols,
         )
+    return _geometry_join_broadcast(
+        left, right, predicate, radius, left_id, right_id, left_wkt, right_wkt,
+        max_cells, left_bbox_cols, left_is_box, exactly_once,
+    )
+
+
+def _geometry_join_broadcast(
+    left: DataFrame,
+    right: DataFrame,
+    predicate: str,
+    radius: float,
+    left_id: str,
+    right_id: str,
+    left_wkt: str,
+    right_wkt: str,
+    max_cells: int = cells.JOIN_MAX_CELLS,
+    left_bbox_cols: tuple[str, str, str, str] | None = None,
+    left_is_box: bool = False,
+    exactly_once: bool = False,
+) -> DataFrame:
+    """``geometry_join``'s broadcast build, for a right side the caller
+    has already found broadcastable (``streaming_geometry_join`` guards it
+    itself, so the probe runs once)."""
+    if predicate not in GEOMETRY_JOIN_PREDICATES:
+        raise ValueError(f"unknown predicate {predicate!r}")
+    buffer = radius if predicate == "dwithin" else 0.0
+    spark = left.sparkSession
     rows = [(r[0], r[1]) for r in right.select(right_id, right_wkt).collect()]
     # boundary-closed covers (see _cover_rows) + truncations to every
     # coarser tier; exactly-once emission needs FULL bbox covers: the PBSM

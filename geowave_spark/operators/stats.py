@@ -22,7 +22,7 @@ Spark twins of the reference's ingest-maintained statistics and query paths:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -381,6 +381,52 @@ def sketch_stats(df: DataFrame, col: str, probes_k: int = 20) -> DataFrame:
     return cms.unionByName(hll).unionByName(est)
 
 
+def _gi_star(counts: DataFrame, targets: DataFrame) -> DataFrame:
+    """The one Gi* ring statistic under both hotspot grids.
+
+    ``counts``: (k1, k2, n) — one row per occupied cell, computed once
+    (the caller's localCheckpoint); ``targets``: (k1, k2, t1, t2) — every
+    cell's ring members' keys, self included, built by the caller from
+    ``counts``.  Returns (k1, k2, n, ring_sum, ring_cnt, gi_mu): the ring's
+    occupied members joined by key, then the Gi* z-score in integer
+    micro-units, binary weights, mean/std over the OCCUPIED-cell
+    population (a 1-row aggregate joined back by broadcast)."""
+    k1, k2 = counts.columns[:2]
+    t1, t2 = targets.columns[2:]
+    stats = counts.agg(
+        F.count(F.lit(1)).cast("long").alias("_nn"),
+        F.sum("n").cast("long").alias("_s1"),
+        F.sum(F.col("n") * F.col("n")).cast("long").alias("_s2"),
+    )
+    ring = (
+        targets.join(
+            counts.select(F.col(k1).alias(t1), F.col(k2).alias(t2), F.col("n").alias("_nb")),
+            [t1, t2],
+        )
+        .groupBy(k1, k2)
+        .agg(
+            F.sum("_nb").cast("long").alias("ring_sum"),
+            F.count(F.lit(1)).cast("long").alias("ring_cnt"),
+        )
+    )
+    j = ring.join(counts, [k1, k2]).join(F.broadcast(stats))
+    # identical op sequence to the SQL oracle — IEEE-exact cross-engine
+    nn = F.col("_nn").cast("double")
+    mean = F.col("_s1").cast("double") / nn
+    var = F.col("_s2").cast("double") / nn - mean * mean
+    sd = F.sqrt(var)
+    w = F.col("ring_cnt").cast("double")
+    denom = sd * F.sqrt((nn * w - w * w) / (nn - F.lit(1.0)))
+    z = (F.col("ring_sum").cast("double") - w * mean) / denom
+    gi = F.when(denom > 0.0, F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long"))
+    return j.select(k1, k2, "n", "ring_sum", "ring_cnt", gi.alias("gi_mu"))
+
+
+def _offsets(pairs) -> Column:
+    """The ring offsets as one array of (d1, d2) structs to explode."""
+    return F.array(*[F.struct(F.lit(a).alias("d1"), F.lit(b).alias("d2")) for a, b in pairs])
+
+
 def hotspot_cells(
     points: DataFrame,
     tier: int = 6,
@@ -401,9 +447,10 @@ def hotspot_cells(
     billions of empty ocean cells would drown every statistic).
 
     Plan shape (all JVM): one groupBy (cell counts) -> 9-way offset
-    explode of the occupied cells -> self-equi-join on (gx, gy) ->
-    groupBy; the global mean/std is a 1-row aggregate joined back by
-    broadcast.  No driver collect, no Python.
+    explode of the occupied cells (this grid's part) -> the shared
+    :func:`_gi_star`: self-equi-join on (gx, gy) -> groupBy, the global
+    mean/std a 1-row aggregate joined back by broadcast.  No driver
+    collect, no Python.
     """
     r = 1 << tier
     pts = add_point_cols(points, lon_col, lat_col)  # phash-only tables work
@@ -412,26 +459,16 @@ def hotspot_cells(
         F.expr(f"{sqlcells.grid_coord(sqlcells.norm_lat(sqlcells._col_ref(lat_col)), tier)} AS gy"),
     )
     counts = g.groupBy("gx", "gy").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    counts = counts.localCheckpoint()  # feeds 3 consumers below, compute once
-    stats = counts.agg(
-        F.count(F.lit(1)).cast("long").alias("_nn"),
-        F.sum("n").cast("long").alias("_s1"),
-        F.sum(F.col("n") * F.col("n")).cast("long").alias("_s2"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-            for dx in (-1, 0, 1)
-            for dy in (-1, 0, 1)
-        ]
-    )
+    counts = counts.localCheckpoint()  # feeds 3 consumers, compute once
     nb = (
-        counts.select("gx", "gy", F.explode(offsets).alias("_o"))
+        counts.select("gx", "gy", F.explode(_offsets(
+            (dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)
+        )).alias("_o"))
         .select(
             "gx",
             "gy",
-            F.pmod(F.col("gx") + F.col("_o.dx"), F.lit(r)).alias("_tx"),
-            (F.col("gy") + F.col("_o.dy")).alias("_ty"),  # out-of-range never joins
+            F.pmod(F.col("gx") + F.col("_o.d1"), F.lit(r)).alias("_tx"),
+            (F.col("gy") + F.col("_o.d2")).alias("_ty"),  # out-of-range never joins
         )
     )
     if r <= 2:
@@ -439,30 +476,7 @@ def hotspot_cells(
         # onto the SAME neighbor column, double-counting ring members —
         # dedupe only here, so real tiers pay no extra exchange
         nb = nb.dropDuplicates(["gx", "gy", "_tx", "_ty"])
-    ring = (
-        nb.join(
-            counts.select(
-                F.col("gx").alias("_tx"), F.col("gy").alias("_ty"), F.col("n").alias("_nb")
-            ),
-            ["_tx", "_ty"],
-        )
-        .groupBy("gx", "gy")
-        .agg(
-            F.sum("_nb").cast("long").alias("ring_sum"),
-            F.count(F.lit(1)).cast("long").alias("ring_cnt"),
-        )
-    )
-    j = ring.join(counts, ["gx", "gy"]).join(F.broadcast(stats))
-    # identical op sequence to the SQL oracle — IEEE-exact cross-engine
-    nn = F.col("_nn").cast("double")
-    mean = F.col("_s1").cast("double") / nn
-    var = F.col("_s2").cast("double") / nn - mean * mean
-    sd = F.sqrt(var)
-    w = F.col("ring_cnt").cast("double")
-    denom = sd * F.sqrt((nn * w - w * w) / (nn - F.lit(1.0)))
-    z = (F.col("ring_sum").cast("double") - w * mean) / denom
-    gi = F.when(denom > 0.0, F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long"))
-    return j.select("gx", "gy", "n", "ring_sum", "ring_cnt", gi.alias("gi_mu"))
+    return _gi_star(counts, nb)
 
 
 def hotspot_hex(
@@ -478,11 +492,11 @@ def hotspot_hex(
     has no diagonal-vs-edge anisotropy (the reason H3 is the standard
     aggregation grid for movement analytics).
 
-    Plan shape mirrors hotspot_cells: one groupBy (hex counts) → 7-way
-    offset explode → self-equi-join on (hq, hr) → groupBy; global
-    mean/std broadcast back.  No lon wrap: the hex lattice is planar
-    (documented; the |lon|→180 seam splits a hexagon, matching the plain
-    equirectangular-plane semantics of the oracle twin).
+    Plan shape: one groupBy (hex counts) → 7-way offset explode (this
+    grid's part) → the shared :func:`_gi_star`, as in hotspot_cells.  No
+    lon wrap: the hex lattice is planar (documented; the |lon|→180 seam
+    splits a hexagon, matching the plain equirectangular-plane semantics
+    of the oracle twin).
     """
     from .. import cells_hex
 
@@ -493,47 +507,16 @@ def hotspot_hex(
         *cells_hex.stage_exprs(lon_col, lat_col, size, out="_hc", q_out="hq", r_out="hr"),
     ).select("hq", "hr")
     counts = g.groupBy("hq", "hr").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    counts = counts.localCheckpoint()  # feeds 3 consumers below
-    stats = counts.agg(
-        F.count(F.lit(1)).cast("long").alias("_nn"),
-        F.sum("n").cast("long").alias("_s1"),
-        F.sum(F.col("n") * F.col("n")).cast("long").alias("_s2"),
-    )
-    offsets = F.array(
-        *[
-            F.struct(F.lit(dq).alias("dq"), F.lit(dr).alias("dr"))
-            for dq, dr in ((0, 0), *cells_hex.NEIGHBOR_OFFSETS)
-        ]
-    )
-    nb = counts.select("hq", "hr", F.explode(offsets).alias("_o")).select(
+    counts = counts.localCheckpoint()  # feeds 3 consumers, compute once
+    nb = counts.select(
+        "hq", "hr", F.explode(_offsets(((0, 0), *cells_hex.NEIGHBOR_OFFSETS))).alias("_o")
+    ).select(
         "hq",
         "hr",
-        (F.col("hq") + F.col("_o.dq")).alias("_tq"),
-        (F.col("hr") + F.col("_o.dr")).alias("_tr"),
+        (F.col("hq") + F.col("_o.d1")).alias("_tq"),
+        (F.col("hr") + F.col("_o.d2")).alias("_tr"),
     )
-    ring = (
-        nb.join(
-            counts.select(
-                F.col("hq").alias("_tq"), F.col("hr").alias("_tr"), F.col("n").alias("_nb")
-            ),
-            ["_tq", "_tr"],
-        )
-        .groupBy("hq", "hr")
-        .agg(
-            F.sum("_nb").cast("long").alias("ring_sum"),
-            F.count(F.lit(1)).cast("long").alias("ring_cnt"),
-        )
-    )
-    j = ring.join(counts, ["hq", "hr"]).join(F.broadcast(stats))
-    nn = F.col("_nn").cast("double")
-    mean = F.col("_s1").cast("double") / nn
-    var = F.col("_s2").cast("double") / nn - mean * mean
-    sd = F.sqrt(var)
-    w = F.col("ring_cnt").cast("double")
-    denom = sd * F.sqrt((nn * w - w * w) / (nn - F.lit(1.0)))
-    z = (F.col("ring_sum").cast("double") - w * mean) / denom
-    gi = F.when(denom > 0.0, F.floor(z * F.lit(1e6) + F.lit(0.5)).cast("long"))
-    return j.select("hq", "hr", "n", "ring_sum", "ring_cnt", gi.alias("gi_mu"))
+    return _gi_star(counts, nb)
 
 
 def zonal_statistics(

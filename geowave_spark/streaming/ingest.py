@@ -289,10 +289,10 @@ def streaming_geometry_join(
             "streaming_geometry_join: empty right side (the batch empty-"
             "schema guard uses limit(0), which is illegal on a stream)"
         )
-    return spatial_join.geometry_join(
-        stream, right, predicate=predicate, radius=radius,
-        left_id=left_id, right_id=right_id,
-        left_wkt=left_wkt, right_wkt=right_wkt,
+    # the guard above probed the right side; the broadcast build itself
+    # runs without a second probe
+    return spatial_join._geometry_join_broadcast(
+        stream, right, predicate, radius, left_id, right_id, left_wkt, right_wkt,
         exactly_once=True,
     )
 

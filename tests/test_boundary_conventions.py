@@ -95,3 +95,34 @@ def test_hilbert_xz_hier_boundary_rows(spark, tmp_path):
     indexed.write_indexed_hier(ext, pr, n_files=2)
     got = sorted(r[0] for r in indexed.hier_range_lookup(spark, pr, BBOX).select("extent_id").collect())
     assert got == ["touch"]
+
+
+def test_cell_range_predicate_merges_runs(spark):
+    pred, n_ranges = indexed.cell_range_predicate((10.0, 10.0, 30.0, 30.0), max_cells=64)
+    from geowave_spark import cells
+
+    tier = cells.tier_for_bbox((10.0, 10.0, 30.0, 30.0), max_dup=64, closed=True)
+    n_cells = len(cells.cells_for_bbox_at_tier((10.0, 10.0, 30.0, 30.0), tier, closed=True))
+    assert n_ranges < n_cells  # Z-order runs merged into BETWEEN ranges
+    # and the predicate still selects exactly the bbox rows end-to-end
+    df = spark.createDataFrame(
+        [(1, 15.0, 15.0), (2, 50.0, 50.0)], "id long, lon double, lat double"
+    )
+    from geowave_spark.operators.stats import range_lookup
+
+    assert [r["id"] for r in range_lookup(df, (10.0, 10.0, 30.0, 30.0)).collect()] == [1]
+
+
+def test_hier_write_all_points_stays_jvm(spark, tmp_path):
+    """An all-points table through the hier layout must not evaluate the
+    XZ Arrow UDF (the CASE-extraction trap) — and still round-trip."""
+    df = spark.createDataFrame(
+        [(i, float(i), float(i), float(i), float(i)) for i in range(8)],
+        "rid long, x0 double, y0 double, x1 double, y1 double",
+    )
+    path = str(tmp_path / "hier_pts")
+    indexed.write_indexed_hier(df, path, n_files=2)
+    out = indexed.hier_range_lookup(spark, path, (0.0, 0.0, 3.5, 3.5))
+    assert sorted(r["rid"] for r in out.collect()) == [0, 1, 2, 3]
+    got = spark.read.parquet(path)
+    assert got.filter(F.col("kind") != 0).count() == 0

@@ -7,6 +7,7 @@ import os
 import sys
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -54,3 +55,23 @@ def test_dbscan_dense_grid(spark):
     assert all(out[i][0] == 25 for i in range(25, 50))
     assert all(out[1000 + j][0] is None for j in range(3))
     _check(spark, df, eps=0.3, min_pts=4)
+
+
+def test_dbscan_custom_column_names(spark):
+    rows = [(i, float(i % 3) * 0.1, float(i % 3) * 0.1) for i in range(12)]
+    a = spark.createDataFrame(rows, "event_id long, lon double, lat double")
+    b = spark.createDataFrame(rows, "event_id long, x double, y double")
+    ra = sorted(map(tuple, dbscan.dbscan(a, 0.5, 3).collect()))
+    rb = sorted(map(tuple, dbscan.dbscan(b, 0.5, 3, lon_col="x", lat_col="y").collect()))
+    assert ra == rb and len(ra) == 12
+
+
+def test_dbscan_max_iter_not_converged_raises(spark):
+    """A chain component needs one propagation round per hop: with
+    max_iter=1 its labels cannot settle, and dbscan must say so instead
+    of returning a split cluster."""
+    rows = [(i, i * 0.1, 0.0) for i in range(6)]
+    chain = spark.createDataFrame(rows, "event_id long, lon double, lat double")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dbscan.dbscan(chain, eps=0.15, min_pts=2, max_iter=1)
+    assert {r["cluster"] for r in dbscan.dbscan(chain, eps=0.15, min_pts=2).collect()} == {0}

@@ -70,3 +70,11 @@ def test_cluster_output_is_linear(clique):
     assert n_comp <= 6
     keep = dedup.dedup_keep_best(clique, threshold=0.5)
     assert keep.count() == n_comp
+
+
+def test_simhash_pairs_pigeonhole_guards(spark):
+    docs = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="pigeonhole"):
+        dedup.simhash_pairs(docs, max_hamming=4, bands=4)
+    with pytest.raises(ValueError, match="bands"):
+        dedup.simhash_pairs(docs, max_hamming=3, bands=64, bits=60)

@@ -1,5 +1,5 @@
 """H3-style hexagonal cells (cells_hex): twin equality, nearest-center
-correctness, k-rings, and the hex Gi* hotspot operator."""
+correctness and k-rings (the hex Gi* hotspot is in test_hotspot.py)."""
 
 from __future__ import annotations
 
@@ -117,48 +117,3 @@ def test_parent_axial_hierarchy():
     n_child = len(set(zip(q.tolist(), r.tolist())))
     n_parent = len(set(zip(pq.tolist(), pr.tolist())))
     assert 2.5 < n_child / n_parent < 5.5
-
-
-def test_hotspot_hex_brute_force(spark):
-    """Engine hex Gi* == a numpy brute-force recomputation on a small
-    deterministic point set."""
-    from geowave_spark.operators import stats as stats_ops
-
-    lon, lat = _random_lonlat(2000)
-    df = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
-    got = stats_ops.hotspot_hex(df).toPandas().sort_values(["hq", "hr"]).reset_index(drop=True)
-
-    q, r = cells_hex.axial_np(lon, lat)
-    from collections import Counter
-
-    counts = Counter(zip(q.tolist(), r.tolist()))
-    nn = len(counts)
-    s1 = sum(counts.values())
-    s2 = sum(v * v for v in counts.values())
-    mean = s1 / nn
-    var = s2 / nn - mean * mean
-    sd = np.sqrt(var)
-    rows = []
-    for (cq, cr), n in counts.items():
-        ring = [
-            counts.get((cq + dq, cr + dr))
-            for dq, dr in ((0, 0), *cells_hex.NEIGHBOR_OFFSETS)
-        ]
-        ring = [v for v in ring if v is not None]
-        w = float(len(ring))
-        denom = sd * np.sqrt((nn * w - w * w) / (nn - 1.0))
-        z = (sum(ring) - w * mean) / denom
-        gi = int(np.floor(z * 1e6 + 0.5)) if denom > 0 else None
-        rows.append((cq, cr, n, sum(ring), len(ring), gi))
-    want = (
-        pd.DataFrame(rows, columns=["hq", "hr", "n", "ring_sum", "ring_cnt", "gi_mu"])
-        .sort_values(["hq", "hr"])
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(want)
-    for c in ["hq", "hr", "n", "ring_sum", "ring_cnt"]:
-        assert (got[c].to_numpy() == want[c].to_numpy()).all(), c
-    assert (
-        got["gi_mu"].fillna(-1).astype(np.int64).to_numpy()
-        == want["gi_mu"].fillna(-1).astype(np.int64).to_numpy()
-    ).all()

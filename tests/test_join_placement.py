@@ -203,6 +203,29 @@ def test_streaming_geometry_join_rejects_unbroadcastable_right(spark, monkeypatc
         singest.streaming_geometry_join(stream, right)
 
 
+
+def test_streaming_geometry_join_probes_once(spark, monkeypatch):
+    """The streaming guard's probe is the only one: the broadcast build
+    behind it does not probe the right side again."""
+    from geowave_spark.streaming import ingest as singest
+
+    stream = _rate_stream(spark, F.col("value").alias("left_id"), F.lit("POINT (1 1)").alias("wkt"))
+    right = spark.createDataFrame(
+        [("r", "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))")], "right_id string, wkt string"
+    )
+    calls = []
+    probe = spatial_join.probe_broadcastable
+
+    def counted(*a, **k):
+        calls.append(1)
+        return probe(*a, **k)
+
+    monkeypatch.setattr(spatial_join, "probe_broadcastable", counted)
+    out = singest.streaming_geometry_join(stream, right)
+    assert out.isStreaming and out.columns == ["left_id", "right_id"]
+    assert len(calls) == 1
+
+
 def test_streaming_zone_counts_rejects_unbroadcastable_polygons(spark, monkeypatch):
     from geowave_spark.streaming import ingest as singest
 

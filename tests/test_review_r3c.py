@@ -1,5 +1,5 @@
-"""Round-3 third-batch review regressions: codec edge cases, phash-only
-hotspots, schema hygiene, store column overrides."""
+"""Round-3 third-batch review regressions: codec edge cases, schema
+hygiene, store column overrides."""
 
 from __future__ import annotations
 
@@ -78,34 +78,6 @@ def test_png_interlaced_rejected():
     )
     with pytest.raises(ValueError, match="unsupported"):
         codec.decode_png(data)
-
-
-def test_hotspot_cells_phash_only_table(spark):
-    """hotspot_cells must accept phash-only tables like every other
-    operator (lon/lat derived via add_point_cols)."""
-    from pyspark.sql import functions as F
-
-    from geowave_spark.operators import stats
-
-    # phash packs (hi=lon, lo=lat) 32-bit fractions (FIXTURES.md §1)
-    base = spark.range(200).select(
-        F.col("id").alias("event_id"),
-        (F.pmod(F.xxhash64("id"), F.lit(2**32))).alias("_hi"),
-        (F.pmod(F.xxhash64("id", F.lit(1)), F.lit(2**32))).alias("_lo"),
-    ).select(
-        "event_id",
-        (F.shiftleft(F.col("_hi"), 32) + F.col("_lo")).alias("phash"),
-    )
-    from geowave_spark import sqlcells
-
-    with_coords = base.select(
-        "event_id",
-        F.expr(sqlcells.lon_from_phash("phash")).alias("lon"),
-        F.expr(sqlcells.lat_from_phash("phash")).alias("lat"),
-    )
-    full = stats.hotspot_cells(with_coords, tier=4)
-    got = stats.hotspot_cells(base, tier=4)  # phash-only: must not crash
-    assert got.count() == full.count() > 0
 
 
 def test_range_lookup_preserves_caller_schema(spark, sf_dir):

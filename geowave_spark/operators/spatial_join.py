@@ -25,12 +25,17 @@ Every tiered join takes the same decisions through one helper each:
   images (not under custom ``bounds``, nor for extents);
 * tier discovery — `_shuffle_side`: one localCheckpoint and one aggregate
   per side for the tier set and the split flag;
-* driver cover — `_cover_rows`: the broadcast side's cells, one WKT parse
-  per geometry, with coarser-tier truncations when asked;
+* driver cover — `polygon_cover_local`: the broadcast side's cells, one
+  WKT parse per geometry, trimmed and with coarser-tier truncations when
+  asked — the one cover of all three broadcast builds;
 * candidate filter — `_candidate_filter`: meet tier, envelope overlap,
-  containment-necessary envelopes and the PBSM reference point.
-The shuffle joins share only `_shuffle_side` (envelopes + tier discovery)
-and `_extent_pairs` (keying, key join, candidate filter).
+  containment-necessary envelopes and the PBSM reference point;
+* empty result — `_empty_pairs`, typed like the path's real result.
+The geometry and extent joins have one body per placement,
+`_geometry_join_broadcast` and `_geometry_join_shuffle` (two
+`_shuffle_side`s met by `_extent_pairs`); the extent joins run them with
+``refine=False``: without a refine, the envelope test is the whole
+predicate.
 
 Every derived column is ONE SQL-text expression (``F.expr``) over the
 sqlcells formulas, and each run of derived columns one projection: a
@@ -78,7 +83,7 @@ from ..functions import geo_udfs
 
 _BOX = ("x0", "y0", "x1", "y1")
 _D360 = sqlcells._dbl(360.0)
-# one row per covering cell of a driver-covered geometry (see _cover_rows)
+# one row per covering cell of a driver-covered geometry (see polygon_cover_local)
 _CELL_SCHEMA = pa.schema([
     ("key", pa.int64()), ("id", pa.string()),
     *[(n, pa.float64()) for n in _BOX],
@@ -144,33 +149,19 @@ def _point_keys(pts: DataFrame, tiers: list[int], *cols) -> DataFrame:
 
 def polygon_cover_local(
     rows: list[tuple[str, str]],
-    max_cells: int = cells.JOIN_MAX_CELLS,
     buffer: float = 0.0,
+    trim: bool = True,
     bounds=None,
+    coarser: bool = False,
 ) -> tuple[pa.Table, list[int]]:
-    """Driver-side cover for a small polygon set (the broadcast path).
+    """Driver-side cover of a small geometry set: the one cover of every
+    broadcast join.
 
     The reference broadcasts its index strategy and plans query ranges on
     the driver (RDDUtils.broadcastIndexStrategy:255-263;
     TieredSFCIndexStrategy.getQueryRanges) — our equivalent plans the whole
     small side locally with numpy: no Spark job, no Python workers, and the
     cover is computed exactly once.
-
-    Returns (cells, tiers) as :func:`_cover_rows` does; covers are
-    trimmed to the geometry unless buffered.
-    """
-    return _cover_rows(rows, max_cells=max_cells, buffer=buffer, bounds=bounds)
-
-
-def _cover_rows(
-    rows: list[tuple[str, str]],
-    max_cells: int = cells.JOIN_MAX_CELLS,
-    buffer: float = 0.0,
-    trim: bool = True,
-    bounds=None,
-    coarser: bool = False,
-) -> tuple[pa.Table, list[int]]:
-    """The broadcast side's covering cells, shared by every broadcast join.
 
     Each WKT is parsed once.  Its cover is the adaptive-tier cover of its
     bbox (buffered by ``buffer``), trimmed to the cells the geometry
@@ -200,8 +191,7 @@ def _cover_rows(
     for i, (_gid, wkt) in enumerate(rows):
         g = geom.geometry_from_wkt(wkt)
         tp, cover = geo_udfs._geometry_cover(
-            g, max_cells=max_cells, buffer=buffer, trim=trim, closed=True,
-            bounds=bounds,
+            g, buffer=buffer, trim=trim, closed=True, bounds=bounds
         )
         if not cover.size:
             continue
@@ -268,7 +258,6 @@ def tiered_spatial_join(
     point_id: str = "image_id",
     polygon_id: str = "polygon_id",
     wkt_col: str = "wkt",
-    max_cells: int = cells.JOIN_MAX_CELLS,
     broadcast_polygons: bool | None = None,
     loose: bool = False,
     salt: int = 0,
@@ -304,13 +293,11 @@ def tiered_spatial_join(
     if broadcast_polygons:
         return _broadcast_join(
             pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-            point_id, polygon_id, wkt_col, max_cells, loose, carry_cols,
-            bounds=bounds,
+            point_id, polygon_id, wkt_col, loose, carry_cols, bounds=bounds,
         )
     return _shuffle_join(
         pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-        point_id, polygon_id, wkt_col, max_cells, loose, salt, carry_cols,
-        bounds=bounds,
+        point_id, polygon_id, wkt_col, loose, salt, carry_cols, bounds=bounds,
     )
 
 
@@ -343,8 +330,7 @@ def _refine_general(
 
 def _broadcast_join(
     pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-    point_id, polygon_id, wkt_col, max_cells, loose, carry_cols=(),
-    bounds=None,
+    point_id, polygon_id, wkt_col, loose, carry_cols=(), bounds=None,
 ) -> DataFrame:
     """Small polygon side: driver-side cover + broadcast hash join.
 
@@ -355,20 +341,9 @@ def _broadcast_join(
     """
     spark = pts.sparkSession
     rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
-    cover, tiers = polygon_cover_local(
-        rows, max_cells=max_cells, buffer=buffer, bounds=bounds
-    )
+    cover, tiers = polygon_cover_local(rows, buffer=buffer, bounds=bounds)
     if not tiers:
-        # keep the carry_cols in the empty-result schema — downstream
-        # selects must not break only on the empty-polygon execution.
-        # filter(False) instead of limit(0): the point side may be a
-        # STREAMING frame (streaming_spatial_join), where limit is illegal
-        return (
-            pts.select(point_id, *carry_cols)
-            .filter(F.lit(False))
-            .withColumn(polygon_id, F.lit(None).cast("string"))
-            .select(point_id, polygon_id, *carry_cols)
-        )
+        return _empty_pairs(pts, point_id, polygon_id, carry=carry_cols)
 
     # prune to the join's working set BEFORE the explode — payload columns
     # must never be replicated |tiers|× (semi/anti join back for full rows)
@@ -407,8 +382,7 @@ def _broadcast_join(
 
 def _shuffle_join(
     pts, polygons, predicate, radius, buffer, lon_col, lat_col,
-    point_id, polygon_id, wkt_col, max_cells, loose, salt, carry_cols=(),
-    bounds=None,
+    point_id, polygon_id, wkt_col, loose, salt, carry_cols=(), bounds=None,
 ) -> DataFrame:
     """Large polygon side: one Arrow bbox UDF + pure-SQL span-based
     tiering (<= 4 covering cells per polygon, the reference's
@@ -430,7 +404,7 @@ def _shuffle_join(
         polygons, polygon_id, "_r", wkt_col=wkt_col, pad=buffer, keep=(wkt_col,), bounds=bounds
     )
     if not tiers:
-        return _empty_pairs(pts, point_id, polygons, polygon_id, carry_cols)
+        return _empty_pairs(pts, point_id, polygon_id, pc.schema[polygon_id].dataType, carry_cols)
     poly_cells = _extent_multitier_keys(
         pc, polygon_id, "_r", [], extra_cols=(wkt_col,), bounds=bounds
     ).select(polygon_id, wkt_col, "key")
@@ -487,49 +461,31 @@ def tiered_extent_join(
       covering block is provably <= 2x2 = the default 2^d duplication
       budget), and explodes into those <= 4 cells — pure SQL math;
     * a pair (extent@te, polygon@tp) must meet at min(te, tp): the
-      polygon's broadcast cell list carries its cover TRUNCATED to every
-      tier <= tp (driver-side, tiny), covering the te <= tp direction; the
-      extent additionally emits its cells truncated to each polygon tier
-      < te, covering the tp < te direction;
-    * equi-join on the packed key, exact bbox-intersects refine
+      polygon's broadcast cell list carries its full bbox cover TRUNCATED
+      to every tier <= tp (driver-side, tiny), covering the te <= tp
+      direction; the extent additionally emits its cells at each polygon
+      tier < te, covering the tp < te direction;
+    * equi-join on the packed key, exact bbox-intersects test
       (boundary-inclusive, JTS-intersects semantics) and the PBSM
       reference point, which emits each pair exactly once
       (`_candidate_filter`).
+
+    This is `geometry_join`'s exactly-once plan on either placement with
+    the refine cut off: without a refine the envelope test is the whole
+    predicate, so envelopes compare in plain coordinates (an unwrapped
+    antimeridian polygon, x1 > 180, meets only extents that overlap it
+    as written).  An oversized polygon side shuffles both sides, as in
+    `tiered_extent_join_shuffle`.
 
     Output: (extent_id, polygon_id).  Verified against the brute-force
     bbox-intersect oracle — the same test design as the reference's
     GeoWaveSparkSpatialJoinIT brute-force comparison.
     """
-    spark = extents.sparkSession
-    if not probe_broadcastable(polygons, wkt_col):
-        # build-side guard (same as geometry_join's): never materialize an
-        # unbounded polygon side on the driver — both sides shuffle as in
-        # tiered_extent_join_shuffle (bbox-intersect pairs, same id columns)
-        return _extent_pairs(
-            _shuffle_side(extents, extent_id, "_l", bbox_cols=(x0, y0, x1, y1), seam=False),
-            _shuffle_side(polygons, polygon_id, "_r", wkt_col=wkt_col, seam=False),
-            extent_id, polygon_id,
-        )
-    rows = [(r[0], r[1]) for r in polygons.select(polygon_id, wkt_col).collect()]
-    # polygon side: full bbox cover (untrimmed — the reference point below
-    # is a bbox-intersection corner) at its adaptive tier + truncations to
-    # every coarser tier (reprojectToTier, coarser direction), each row
-    # carrying the polygon's OWN tier for the meet-tier restriction
-    cover, poly_tiers = _cover_rows(rows, trim=False, coarser=True)
-    if not poly_tiers:
-        return _empty_pairs(extents, extent_id, polygons, polygon_id)
-    right = _local(
-        spark, cover.select(["key", "id", "tier", *_BOX]),
-        {"id": polygon_id, "tier": "_rte", **{n: f"_r{n}" for n in _BOX}},
-    )
-    # extent side: own-tier cover + covers re-derived at each coarser
-    # polygon tier ((id, key) rows unique by construction); the candidate
-    # filter emits each pair exactly once — no pair-level dropDuplicates
-    lk = _extent_multitier_keys(
-        _envelopes(extents, extent_id, "_l", bbox_cols=(x0, y0, x1, y1), seam=False),
-        extent_id, "_l", poly_tiers,
-    )
-    return _candidate_filter(lk.join(right, "key")).select(extent_id, polygon_id)
+    args = (extents, polygons, "intersects", 0.0, extent_id, polygon_id, None, wkt_col,
+            (x0, y0, x1, y1))
+    if probe_broadcastable(polygons, wkt_col):
+        return _geometry_join_broadcast(*args, exactly_once=True, refine=False)
+    return _geometry_join_shuffle(*args, refine=False)
 
 
 def _local(spark, table: pa.Table, rename: dict[str, str] | None = None) -> DataFrame:
@@ -554,10 +510,17 @@ def _string_table(pairs, names: tuple[str, str]) -> pa.Table:
     return pa.table([_strings(c) for c in cols], names=list(names))
 
 
-def _empty_pairs(left: DataFrame, left_id: str, right: DataFrame, right_id: str, carry=()):
-    """The empty (left_id, right_id, *carry left columns) result, typed like a real one."""
-    out = left.select(left_id, *carry).limit(0).crossJoin(right.select(right_id).limit(0))
-    return out.select(left_id, right_id, *carry)
+def _empty_pairs(left: DataFrame, left_id: str, right_id: str, right_type="string", carry=()):
+    """The empty (left_id, right_id, *carry left columns) result, typed
+    like a real one: ``right_type`` is the right id's type, ``string`` on
+    the broadcast paths (their ids pass through the driver's cover table).
+    filter(False), not limit(0): the left side may be a STREAMING frame,
+    where limit is illegal."""
+    return (
+        left.select(left_id, *carry).filter(F.lit(False))
+        .withColumn(right_id, F.lit(None).cast(right_type))
+        .select(left_id, right_id, *carry)
+    )
 
 
 def _envelopes(
@@ -631,7 +594,7 @@ def _extent_pairs(lhs, rhs, left_id: str, right_id: str, predicate="intersects")
     coarser tiers, met on the packed key, kept by `_candidate_filter`."""
     (lc, l_tiers, _), (rc, r_tiers, _) = lhs, rhs
     if not l_tiers or not r_tiers:
-        return _empty_pairs(lc, left_id, rc, right_id)
+        return _empty_pairs(lc, left_id, right_id, rc.schema[right_id].dataType)
     lk = _extent_multitier_keys(lc, left_id, "_l", r_tiers)
     rk = _extent_multitier_keys(rc, right_id, "_r", l_tiers).drop("_kt", "_cell")
     return _candidate_filter(lk.join(rk, "key"), predicate).select(left_id, right_id)
@@ -810,10 +773,8 @@ def tiered_extent_join_shuffle(
     dropDuplicates (the reference pays a DedupeFilter + distinct here;
     at 10^8+ output pairs that distinct is the dominant shuffle).
     """
-    return _extent_pairs(
-        _shuffle_side(left, left_id, "_l", bbox_cols=lcols, seam=False),
-        _shuffle_side(right, right_id, "_r", bbox_cols=rcols, seam=False),
-        left_id, right_id,
+    return _geometry_join_shuffle(
+        left, right, "intersects", 0.0, left_id, right_id, None, None, lcols, rcols, refine=False
     )
 
 
@@ -868,7 +829,6 @@ def geometry_join(
     right_id: str = "right_id",
     left_wkt: str = "wkt",
     right_wkt: str = "wkt",
-    max_cells: int = cells.JOIN_MAX_CELLS,
     left_bbox_cols: tuple[str, str, str, str] | None = None,
     left_is_box: bool = False,
     exactly_once: bool = False,
@@ -915,20 +875,15 @@ def geometry_join(
 
     Output: (left_id, right_id) pairs.
     """
-    if not probe_broadcastable(right, right_wkt):
-        # build-side guard: never materialize an unbounded right side on
-        # the driver — route oversized builds to the keyed-shuffle twin
-        # (same output contract) instead of OOMing in the broadcast build
-        return geometry_join_shuffle(
-            left, right, predicate=predicate, radius=radius,
-            left_id=left_id, right_id=right_id,
-            left_wkt=left_wkt, right_wkt=right_wkt,
-            left_bbox_cols=left_bbox_cols,
-        )
-    return _geometry_join_broadcast(
-        left, right, predicate, radius, left_id, right_id, left_wkt, right_wkt,
-        max_cells, left_bbox_cols, left_is_box, exactly_once,
-    )
+    if predicate not in GEOMETRY_JOIN_PREDICATES:
+        raise ValueError(f"unknown predicate {predicate!r}")
+    args = (left, right, predicate, radius, left_id, right_id, left_wkt, right_wkt, left_bbox_cols)
+    if probe_broadcastable(right, right_wkt):
+        return _geometry_join_broadcast(*args, left_is_box, exactly_once)
+    # build-side guard: never materialize an unbounded right side on the
+    # driver — oversized builds take the keyed-shuffle twin (same output
+    # contract) instead of OOMing in the broadcast build
+    return _geometry_join_shuffle(*args)
 
 
 def _geometry_join_broadcast(
@@ -938,30 +893,32 @@ def _geometry_join_broadcast(
     radius: float,
     left_id: str,
     right_id: str,
-    left_wkt: str,
+    left_wkt: str | None,
     right_wkt: str,
-    max_cells: int = cells.JOIN_MAX_CELLS,
     left_bbox_cols: tuple[str, str, str, str] | None = None,
     left_is_box: bool = False,
     exactly_once: bool = False,
+    refine: bool = True,
 ) -> DataFrame:
-    """``geometry_join``'s broadcast build, for a right side the caller
-    has already found broadcastable (``streaming_geometry_join`` guards it
-    itself, so the probe runs once)."""
-    if predicate not in GEOMETRY_JOIN_PREDICATES:
-        raise ValueError(f"unknown predicate {predicate!r}")
+    """The broadcast geometry and extent joins, for a right side the
+    caller has already found broadcastable (``streaming_geometry_join``
+    guards it itself, so the probe runs once).
+
+    ``refine=False`` (the extent join) stops at the candidate filter:
+    without a refine the envelope test is the whole predicate, so the left
+    side carries no WKT and no row is exempted from it at the seam."""
     buffer = radius if predicate == "dwithin" else 0.0
     spark = left.sparkSession
     rows = [(r[0], r[1]) for r in right.select(right_id, right_wkt).collect()]
-    # boundary-closed covers (see _cover_rows) + truncations to every
-    # coarser tier; exactly-once emission needs FULL bbox covers: the PBSM
-    # reference point is a bbox-intersection corner, which a
-    # geometry-trimmed cover may not contain
-    cover, r_tiers = _cover_rows(
-        rows, max_cells=max_cells, buffer=buffer, trim=not exactly_once, coarser=True
+    # boundary-closed covers + truncations to every coarser tier;
+    # exactly-once emission needs FULL bbox covers: the PBSM reference
+    # point is a bbox-intersection corner, which a geometry-trimmed cover
+    # may not contain
+    cover, r_tiers = polygon_cover_local(
+        rows, buffer=buffer, trim=not exactly_once, coarser=True
     )
     if not r_tiers:
-        return _empty_pairs(left, left_id, right, right_id)
+        return _empty_pairs(left, left_id, right_id)
     # right bboxes pre-buffered for dwithin; _rbox: this right geometry IS
     # its bbox (axis-aligned box, no holes, in range), so box×box
     # candidates can refine JVM-side (interval algebra)
@@ -972,13 +929,13 @@ def _geometry_join_broadcast(
            for n, sign in zip(_BOX, (-1, -1, 1, 1))},
         "_rbox": rbox, "_rte": cover.column("tier"),
     }))
-    right_wkts = _local(spark, _string_table(rows, ("_rid", "_rwkt")))
 
+    lwkt = ("_lwkt",) if refine else ()
     lb = _envelopes(
         left, left_id, "_l", wkt_col=left_wkt, bbox_cols=left_bbox_cols,
-        keep=(F.col(left_wkt).alias("_lwkt"),), seam=False,
+        keep=tuple(F.col(left_wkt).alias(c) for c in lwkt), seam=False,
     )
-    lk = _extent_multitier_keys(lb, left_id, "_l", r_tiers, extra_cols=("_lwkt",))
+    lk = _extent_multitier_keys(lb, left_id, "_l", r_tiers, extra_cols=lwkt)
     # the meet-tier rule cuts the cross-tier duplicate candidates BEFORE
     # the Arrow refine with zero extra exchange (a measured dedupe-exchange
     # here costs more than the duplicate refines it saves); only the <= 4
@@ -987,12 +944,15 @@ def _geometry_join_broadcast(
     # Either side unwrapped across the antimeridian (x1 > 180): envelopes
     # are not comparable in plain coordinates, exactness comes from the
     # pairwise refine, which tests the right geometry's -360 image
+    seam = f"`_rx1` > {sqlcells._dbl(180.0)} OR `_lx1` > {sqlcells._dbl(180.0)}"
     j = _candidate_filter(
-        lk.join(right_cells, "key"), predicate,
-        seam=f"`_rx1` > {sqlcells._dbl(180.0)} OR `_lx1` > {sqlcells._dbl(180.0)}",
+        lk.join(right_cells, "key"), predicate, seam=seam if refine else None,
         ref_point=exactly_once,
     )
+    if not refine:
+        return j.select(F.col(left_id), F.col("_rid").alias(right_id))
 
+    right_wkts = _local(spark, _string_table(rows, ("_rid", "_rwkt")))
     box_pred = _box_predicate(predicate) if left_is_box else None
     if box_pred is not None:
         # box×box candidates never touch Python OR the WKT column: the
@@ -1063,17 +1023,42 @@ def geometry_join_shuffle(
     """
     if predicate not in GEOMETRY_JOIN_PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}")
+    return _geometry_join_shuffle(
+        left, right, predicate, radius, left_id, right_id, left_wkt, right_wkt, left_bbox_cols
+    )
+
+
+def _geometry_join_shuffle(
+    left: DataFrame,
+    right: DataFrame,
+    predicate: str,
+    radius: float,
+    left_id: str,
+    right_id: str,
+    left_wkt: str | None,
+    right_wkt: str | None,
+    left_bbox_cols: tuple[str, str, str, str] | None = None,
+    right_bbox_cols: tuple[str, str, str, str] | None = None,
+    refine: bool = True,
+) -> DataFrame:
+    """The shuffle geometry and extent joins: two `_shuffle_side`s met by
+    `_extent_pairs`.  ``refine=False`` (the extent joins) returns those
+    candidate pairs: without a refine the envelope test is the whole
+    predicate, so the sides keep no WKT and are not seam-split."""
     buffer = radius if predicate == "dwithin" else 0.0
 
-    lhs = _shuffle_side(
-        left, left_id, "_l", wkt_col=left_wkt, bbox_cols=left_bbox_cols, pad=buffer,
-        keep=(F.col(left_wkt).alias("_lwkt"),),
-    )
-    rhs = _shuffle_side(
-        right, right_id, "_r", wkt_col=right_wkt, keep=(F.col(right_wkt).alias("_rwkt"),)
-    )
-    (lc, _, l_split), (rc, _, r_split) = lhs, rhs
+    def side(df, id_col, p, wkt_col, bbox_cols, pad):
+        keep = (F.col(wkt_col).alias(f"{p}wkt"),) if refine else ()
+        return _shuffle_side(
+            df, id_col, p, wkt_col=wkt_col, bbox_cols=bbox_cols, pad=pad, seam=refine, keep=keep
+        )
+
+    lhs = side(left, left_id, "_l", left_wkt, left_bbox_cols, buffer)
+    rhs = side(right, right_id, "_r", right_wkt, right_bbox_cols, 0.0)
     pairs = _extent_pairs(lhs, rhs, left_id, right_id, predicate)
+    if not refine:
+        return pairs
+    (lc, _, l_split), (rc, _, r_split) = lhs, rhs
     if l_split or r_split:
         # two images of one geometry can each pass the reference point
         pairs = pairs.dropDuplicates([left_id, right_id])

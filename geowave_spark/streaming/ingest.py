@@ -283,6 +283,8 @@ def streaming_geometry_join(
         raise ValueError("stream side must be a streaming DataFrame")
     if right.isStreaming:
         raise ValueError("right side must be a batch DataFrame (broadcast build)")
+    if predicate not in spatial_join.GEOMETRY_JOIN_PREDICATES:
+        raise ValueError(f"unknown predicate {predicate!r}")
     _require_broadcastable("streaming_geometry_join", right, right_wkt, "geometry_join_shuffle")
     if right.limit(1).count() == 0:
         raise ValueError(

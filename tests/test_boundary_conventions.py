@@ -126,3 +126,43 @@ def test_hier_write_all_points_stays_jvm(spark, tmp_path):
     assert sorted(r["rid"] for r in out.collect()) == [0, 1, 2, 3]
     got = spark.read.parquet(path)
     assert got.filter(F.col("kind") != 0).count() == 0
+
+
+def test_dwithin_exact_radius_on_cell_line(spark):
+    """A partner at EXACTLY distance radius whose position falls on a
+    tier cell line past the buffered bbox's upper edge: the open cover
+    dropped its candidate cell; closed covers keep it."""
+    from geowave_spark.operators import spatial_join
+
+    # box upper lon edge at 10.0, radius 1.25 -> buffered edge 11.25 is a
+    # tier-5 cell line; the point sits exactly there
+    polys = spark.createDataFrame(
+        [("p1", "POLYGON ((0 0, 10 0, 10 5.625, 0 5.625, 0 0))")],
+        "polygon_id string, wkt string",
+    )
+    pts = spark.createDataFrame(
+        [("x1", 11.25, 2.0), ("x2", 13.0, 2.0)],
+        "image_id string, lon double, lat double",
+    )
+    got = spatial_join.tiered_spatial_join(
+        pts, polys, predicate="dwithin", radius=1.25
+    )
+    rows = {r["image_id"] for r in got.collect()}
+    assert rows == {"x1"}
+
+    # same family through the general geometry join (extent side)
+    left = spark.createDataFrame(
+        [("x1", "POINT (11.25 2.0)"), ("x2", "POINT (13.0 2.0)")],
+        "left_id string, left_wkt string",
+    )
+    right = spark.createDataFrame(
+        [("p1", "POLYGON ((0 0, 10 0, 10 5.625, 0 5.625, 0 0))")],
+        "right_id string, right_wkt string",
+    )
+    got2 = spatial_join.geometry_join(
+        left, right, predicate="dwithin", radius=1.25,
+        left_id="left_id", right_id="right_id",
+        left_wkt="left_wkt", right_wkt="right_wkt",
+    )
+    rows2 = {(r[0], r[1]) for r in got2.collect()}
+    assert rows2 == {("x1", "p1")}

@@ -330,3 +330,78 @@ def test_crosses_corner_diagonal_vectorized_matches_scalar():
     for wkt, want in cases.items():
         assert geom.crosses_pair(W(wkt), box) == want, wkt
     assert got.tolist() == list(cases.values())
+
+
+# --- concave-hole cover witnesses, dashed-line gaps, the strict clip kernel ---
+
+# outer 10x10 box with a U-shaped hole: bottom bar y in [1,3] across
+# x in [1,9], two arms up to y=9 at x in [1,3] and [7,9]; the notch
+# x in (3,7), y in (3,9) is SOLID material of the polygon.  The hole
+# ring's vertex mean is (5, 5.5) — inside the notch, NOT in the hole.
+U_HOLE = (
+    "POLYGON ((0 0, 10 0, 10 10, 0 10, 0 0), "
+    "(1 1, 9 1, 9 9, 7 9, 7 3, 3 3, 3 9, 1 9, 1 1))"
+)
+
+
+def test_covers_concave_hole_centroid_in_solid():
+    """gb sits wholly in the notch (solid); the old vertex-mean 'centroid'
+    witness landed inside gb and falsely broke the cover."""
+    ga = W(U_HOLE)
+    gb = W("POLYGON ((4 4, 6 4, 6 6, 4 6, 4 4))")
+    assert geom.covers_pair(ga, gb)
+    assert geom.within_pair(gb, ga)
+    assert geom.contains_pair(ga, gb)
+
+
+def test_covers_concave_hole_exact_fill_still_rejected():
+    """gb equal to the U hole itself: every boundary sample lies on gb's
+    own boundary, so only a guaranteed hole-INTERIOR witness rejects it
+    (the vertex mean was in the notch and proved nothing)."""
+    ga = W(U_HOLE)
+    gb = W(
+        "POLYGON ((1 1, 9 1, 9 9, 7 9, 7 3, 3 3, 3 9, 1 9, 1 1))"
+    )
+    assert not geom.covers_pair(ga, gb)
+
+
+def test_ring_interior_point_is_interior():
+    ring = W(U_HOLE).rings[1]
+    pt = geom._ring_interior_point(ring)
+    assert pt is not None
+    hole_poly = geom.Polygon([ring])
+    x, y = pt
+    assert bool(hole_poly.contains(np.array([x]), np.array([y]))[0])
+    S = hole_poly.segments()
+    on = geom._on_segment_exact(
+        np.array([[x]]), np.array([[y]]),
+        S[None, :, 0], S[None, :, 1], S[None, :, 2], S[None, :, 3],
+    ).any()
+    assert not bool(on)
+
+
+def test_line_covers_dashed_line_gap():
+    """gb bridges the gaps of a dashed ga while every vertex/midpoint
+    sample happens to land on a dash — the cut-midpoint subdivision at
+    ga's endpoints exposes the gap."""
+    ga = W("MULTILINESTRING ((0 0, 1 0), (1.9 0, 2.1 0), (3 0, 4 0))")
+    gb = W("LINESTRING (0 0, 4 0)")
+    assert not geom.covers_pair(ga, gb)
+    # and the true cover still holds
+    assert geom.covers_pair(W("LINESTRING (0 0, 4 0)"), W("LINESTRING (1 0, 3 0)"))
+    # dash covered by the full line
+    assert geom.covers_pair(gb, ga)
+
+
+def test_segment_box_clip_mid_strict_kernel():
+    A = np.array(
+        [
+            [-1.0, -1.0, 3.0, 3.0],   # through corners -> interior
+            [-1.0, 1.0, 2.0, 1.0],    # along top edge -> boundary only
+            [-1.0, -1.0, 0.0, 0.0],   # endpoint at corner -> no interior
+            [5.0, 5.0, 6.0, 6.0],     # disjoint
+            [0.25, 0.25, 0.75, 0.75],  # fully inside
+        ]
+    )
+    got = geom.segment_box_clip_mid_strict(A, 0.0, 0.0, 1.0, 1.0)
+    assert got.tolist() == [True, False, False, False, True]
